@@ -36,38 +36,6 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # entry that has NEVER received a driver row inside the bound.
 DRIVER_QUERY_CAP = 50
 
-# Queries whose COMPUTED PATH was rewritten in an optimization round after
-# their latest driver CORRECTNESS row: {query: round_the_rewrite_landed}.
-# A driver row older than the rewrite round verified the PRE-rewrite code,
-# so for rotation purposes such a query is never-verified at its current
-# semantics (same rationale as the oracle-landed-after-row rule). The
-# fronting self-retires: once the driver takes a row in round >= the
-# rewrite round, the normal least-recently-verified ordering resumes.
-# Round 15 (optimization): dedup_exact window form (q25/q56/q70/q87/q98/
-# q100/q107/q125/q160 ride it), language_id argmax (q22/q23 + the same
-# capstones), the q73 window count, and the q172 fixed-point fix — none
-# landed in the r15 50-slot sample (r15 verdict item 1).
-# Round 16 (optimization): dedup_lines window form (q69/q70), the
-# pretrain gate fusion + cut re-layout (q87), the corpus-prep scored
-# persist removal (q56/q70 — rides the r15 window dedup, so its last
-# pre-15 rows are stale either way).
-_REWRITTEN_IN_ROUND = {
-    "q22_text_features": 15,
-    "q23_language_id": 15,
-    "q25_exact_dup_groups": 15,
-    "q56_corpus_prep": 15,
-    "q69_line_dedup": 16,
-    "q70_web_corpus_pipeline": 16,
-    "q73_corpus_report": 15,
-    "q87_pretrain_capstone": 16,
-    "q98_tokenizer_capstone": 15,
-    "q100_unigram_capstone": 15,
-    "q107_recipe_v2_capstone": 15,
-    "q125_corpus_funnel": 15,
-    "q160_retrieval_prep_capstone": 15,
-    "q172_gap_fill_linear": 15,
-}
-
 
 def _scan_history() -> dict[str, tuple[int, object]]:
     """ONE pass over the CORRECTNESS_r*.json files: per query, the
@@ -253,11 +221,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     eff_last = {
         k: (0 if k in unchecked_oracle else v) for k, v in last.items()
     }
-    # rewritten-after-latest-row (see _REWRITTEN_IN_ROUND): the existing
-    # driver row predates the rewrite, so the current code is unverified
-    for k, rewrite_round in _REWRITTEN_IN_ROUND.items():
-        if eff_last.get(k, 0) and eff_last[k] < rewrite_round:
-            eff_last[k] = 0
     reg_index = {k: i for i, k in enumerate(QUERIES)}
     ordered_keys = sorted(
         QUERIES,

@@ -525,11 +525,9 @@ def connected_components_star(
     the minimum of its neighborhood (large-star), then every node re-links
     its smaller neighbors — and itself — to their minimum (small-star).
     The edge set converges to stars centered at each component's minimum
-    id in O(log) rounds REGARDLESS OF DIAMETER — the regime where
-    `connected_components`' min-label propagation (rounds = diameter)
-    cannot finish: a path-graph-shaped chain of near-dup merges, a
-    skew-merged boilerplate cluster at web scale. Returns (id, component),
-    identical labels to the min-label loop.
+    id in O(log) rounds REGARDLESS OF DIAMETER — a path-graph-shaped chain
+    of near-dup merges, a skew-merged boilerplate cluster at web scale.
+    Returns (id, component): every node labelled with the min reachable id.
 
     Per round: two groupBy-min aggregates and two key joins, all on
     (node, node) pairs — O(edges) shuffle bytes, no neighborhood
@@ -540,16 +538,13 @@ def connected_components_star(
     (count, hash-sum) signature of the canonical edge set — one tiny job
     per round, same collision acceptance as the engine's fingerprints.
 
-    For the shallow graphs dedup actually produces (diameter ≤ ~3), the
-    min-label loop converges in fewer, cheaper rounds — use this one
-    directly only when the diameter is unknown or adversarial;
-    `connected_components` already falls back here when its round budget
-    runs out.
+    `connected_components` calls this for graphs above its driver
+    union-find gate.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # every node that appears in any edge gets a label (self-loop-only and
-    # isolated-pair nodes included), matching the min-label loop's domain
+    # isolated-pair nodes included)
     nodes = (
         edges.select(F.explode(F.array(F.col(src), F.col(dst))).alias("id"))
         .distinct()
@@ -629,66 +624,45 @@ def connected_components_star(
     )
 
 
+# Edge count at or under which `connected_components` closes the graph with
+# a driver-side union-find; larger graphs go to `connected_components_star`.
+_DRIVER_EDGE_BOUND = 1_000_000
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 20,
-    driver_edge_bound: int = 1_000_000,
-    edge_count: int | None = None,
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation: every vertex
-    converges to the smallest id reachable from it. Returns (id, component).
+    """Connected components: every vertex is labelled with the smallest id
+    reachable from it. Returns (id, component).
 
-    Iterative — NOT SQL-expressible — so this is the one operator family
-    that runs a driver-side loop over DataFrames. Each round is one shuffle
-    (neighbor-min aggregate); rounds needed = graph diameter, and near-dup
-    graphs are unions of tiny dense clusters (diameter ≤ ~3), so it
-    converges in 2-4 rounds. ``localCheckpoint`` truncates lineage per
-    round — without it the plan doubles each iteration and analysis time
-    explodes. Convergence is detected with a changed-labels count (one
-    tiny job per round).
+    SIZE-GATED (same decision class as Spark's broadcast join threshold):
+    the symmetrized edge list is materialized and counted once; a graph of
+    at most ``_DRIVER_EDGE_BOUND`` edges is closed with a driver-side
+    union-find, a larger one with `connected_components_star`, whose round
+    count is logarithmic in component size regardless of diameter — so
+    every input terminates with correct labels and nothing is ever
+    returned half-converged. Labels are identical either way.
 
-    SIZE-GATED driver shortcut (same decision class as Spark's broadcast
-    join threshold): once the edge list is materialized, if it holds at
-    most ``driver_edge_bound`` edges the components are closed with a
-    driver-side union-find instead of the loop. Driver memory at the
-    default 1M bound is ~300-500 MB peak, NOT the raw 16 bytes/edge: the
-    full edge set lands as ONE Arrow table whose two columns are then
-    boxed to Python lists (~60-100 bytes per int with list/dict
-    overhead), coexisting with the up-to-2M-entry parent dict, and the
-    result ships back through one Arrow batch. That is
+    Driver memory at the 1M bound is ~300-500 MB peak, NOT the raw 16
+    bytes/edge: the full edge set lands as ONE Arrow table whose two
+    columns are then boxed to Python lists (~60-100 bytes per int with
+    list/dict overhead), coexisting with the up-to-2M-entry parent dict,
+    and the result ships back through one Arrow batch. That is
     broadcast-threshold territory, well under a driver budget but not
-    free — lower the bound on a small driver. (A per-partition
-    ``toLocalIterator`` stream was tried for a lower peak and reverted:
-    it schedules one serial job per partition, tripling wall-clock.) Dedup graphs are edge-sparse by construction (capped
-    candidate generation), so in practice this path handles everything up
-    to corpora whose PAIR count reaches millions, while each avoided
-    propagation round saves 2-3 serial jobs. Labels are identical (min
-    reachable id) either way; pass ``driver_edge_bound=0`` to force the
-    distributed loop. Callers that already know the pair count can pass
-    ``edge_count`` to skip the gate's count job (the count runs over the
-    checkpointed blocks — cheap, but it is one extra scheduled job whose
-    result the distributed path discards).
-
-    At 1000-executor scale the distributed loop holds: state is (id,
-    label) pairs partitioned by id. If the fixpoint is not reached within
-    ``max_iter`` rounds (graph diameter > max_iter — a chain-shaped merge
-    cascade), the loop hands the already-materialized edge list to
-    `connected_components_star`, whose round count is logarithmic in
-    component size regardless of diameter — so every connected input
-    terminates with correct labels; nothing is ever returned
-    half-converged.
+    free. (A per-partition ``toLocalIterator`` stream was tried for a
+    lower peak and reverted: it schedules one serial job per partition,
+    tripling wall-clock.) Dedup graphs are edge-sparse by construction
+    (capped candidate generation), so in practice the union-find handles
+    everything up to corpora whose PAIR count reaches millions.
     """
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Materialize the symmetrized edge list ONCE. `edges` is usually the
     # far end of a whole candidate-generation pipeline (shingle -> minhash
     # -> banded self-join); without this checkpoint that entire plan
-    # re-executes inside EVERY propagation round's join (measured: the
-    # corpus-prep capstone spent most of its runtime re-deriving the same
-    # pair table). The checkpointed table is two ints per edge — O(pairs),
-    # a sliver of the corpus at any scale.
+    # re-executes inside the count and again inside the closing pass.
+    # The checkpointed table is two ints per edge — O(pairs), a sliver of
+    # the corpus at any scale.
     # Symmetrize with one explode, NOT a self-union: the union's two
     # branches are two separate physical subtrees, so the whole upstream
     # pair pipeline would execute twice inside this one materialization.
@@ -709,81 +683,38 @@ def connected_components(
         .select("__e.a", "__e.b")
         .localCheckpoint(eager=True)
     )
-    n_bidir = 2 * edge_count if edge_count is not None else bidir.count()
-    if driver_edge_bound and n_bidir <= 2 * driver_edge_bound:
-        # Driver union-find over the materialized edge blocks. Union-by-min
-        # keeps every root the minimum id of its component, so find(v) IS
-        # the min-label the distributed loop converges to. Edges land as
-        # ONE Arrow table (single job, primitive columns — no Row-object
-        # materialization; a toLocalIterator variant was measured 3x
-        # slower end-to-end because it schedules one serial job per
-        # partition), and the result returns through one Arrow batch.
-        parent: dict = {}
+    if bidir.count() > 2 * _DRIVER_EDGE_BOUND:
+        return connected_components_star(bidir, "a", "b")
+    # Driver union-find over the materialized edge blocks. Union-by-min
+    # keeps every root the minimum id of its component, so find(v) IS the
+    # min reachable id. Edges land as ONE Arrow table (single job,
+    # primitive columns — no Row-object materialization), and the result
+    # returns through one Arrow batch.
+    parent: dict = {}
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-        tbl = bidir.where(F.col("a") <= F.col("b")).toArrow()
-        for a, b in zip(
-            tbl.column("a").to_pylist(), tbl.column("b").to_pylist()
-        ):
-            for v in (a, b):
-                if v not in parent:
-                    parent[v] = v
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        t = bidir.schema["a"].dataType.simpleString()
-        import pandas as pd
+    tbl = bidir.where(F.col("a") <= F.col("b")).toArrow()
+    for a, b in zip(
+        tbl.column("a").to_pylist(), tbl.column("b").to_pylist()
+    ):
+        for v in (a, b):
+            if v not in parent:
+                parent[v] = v
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    t = bidir.schema["a"].dataType.simpleString()
+    import pandas as pd
 
-        pdf = pd.DataFrame(
-            {"id": list(parent), "component": [find(v) for v in parent]}
-        )
-        return edges.sparkSession.createDataFrame(pdf, f"id {t}, component {t}")
-    labels = (
-        bidir.select(F.col("a").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"))
-        .localCheckpoint(eager=True)
+    pdf = pd.DataFrame(
+        {"id": list(parent), "component": [find(v) for v in parent]}
     )
-    for _ in range(max_iter):
-        neighbor_min = (
-            bidir.join(labels, bidir["b"] == labels["id"])
-            .groupBy(F.col("a").alias("id2"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # Carry the previous label through the checkpoint so convergence
-        # detection is a scan of the checkpointed blocks — not the extra
-        # shuffle join of new-vs-old labels it used to be per round.
-        new_labels = (
-            labels.join(neighbor_min, labels["id"] == F.col("id2"), "left")
-            .select(
-                "id",
-                F.col("component").alias("__prev"),
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", "component")
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.where(F.col("component") != F.col("__prev")).count()
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            return labels
-    # Round budget exhausted: the graph's diameter exceeds max_iter — the
-    # adversarial regime min-label propagation cannot finish (a chain of
-    # pairwise merges, a web-scale skew-merged cluster). Switch to the
-    # large-star/small-star contraction, whose round count is logarithmic
-    # in component size regardless of diameter; labels are identical (min
-    # reachable id). The heuristic is the round budget itself: diameter is
-    # unknowable up front without doing this same work, dedup graphs are
-    # near-always shallow (converge in 2-4 rounds), so the budget is spent
-    # on the cheap loop first and the contraction is the escape hatch,
-    # not the default.
-    return connected_components_star(bidir, "a", "b")
+    return edges.sparkSession.createDataFrame(pdf, f"id {t}, component {t}")
 
 
 def dedup_near(
@@ -866,7 +797,6 @@ def dedup_incremental(
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
     corpus_shingles: DataFrame | None = None,
-    broadcast_batch: bool = False,
     bloom_prefilter: bool = False,
     bloom_m_bits: int = 1 << 20,
     bloom_k: int = 7,
@@ -905,16 +835,15 @@ def dedup_incremental(
     Ids must be unique within each side; a corpus id may numerically
     collide with a batch id (sides are tagged, never mixed by id).
 
-    ``broadcast_batch=True`` hints the BATCH side of the candidate join
-    (and the final matched-ids anti-join) as the broadcast build side:
-    the corpus shingle stream then never shuffles or sorts on the shingle
-    at all — the q68-decontamination shape, and the right plan whenever
-    one batch's shingle table fits executor memory (a daily crawl
-    delivery against a 100 TB corpus; any streaming micro-batch). Leave
-    False when a batch can be arbitrarily large — the sort-merge plan
-    degrades gracefully, a forced broadcast OOMs. Measured at sf0.1:
-    2.26 s vs 3.00 s same-session (the two shingle-side sort stages and
-    one exchange disappear).
+    The BATCH side of the candidate join (and the final matched-ids
+    anti-join) is the broadcast build side: the corpus shingle stream
+    never shuffles or sorts on the shingle at all — the
+    q68-decontamination shape, right whenever one batch's shingle table
+    fits executor memory (a daily crawl delivery against a 100 TB corpus;
+    any streaming micro-batch). A batch too large to broadcast is not
+    this operator's contract. Measured at sf0.1: 2.26 s vs 3.00 s
+    same-session against a shuffled batch side (the two shingle-side
+    sort stages and one exchange disappear).
     """
     from pyspark.sql.window import Window
 
@@ -1027,13 +956,9 @@ def dedup_incremental(
         # one materialization feeds both sides of the candidate self-join
         .localCheckpoint(eager=False)
     )
-    # batch side is the build side either way: broadcast when the caller
-    # vouches it fits, else shuffle-hash (it is the smaller side by the
-    # operator's daily-ingest contract; SMJ would sort BOTH shingle streams)
-    n_side = attached.where(F.col("is_new"))
-    n = (
-        F.broadcast(n_side) if broadcast_batch else n_side.hint("shuffle_hash")
-    ).alias("n")
+    # the batch side is the broadcast build side (the daily-ingest
+    # contract: it is small); the corpus shingle stream is never shuffled
+    n = F.broadcast(attached.where(F.col("is_new"))).alias("n")
     o = attached.alias("o")
     matched = (
         n.join(
@@ -1061,8 +986,7 @@ def dedup_incremental(
         .select(F.col("doc_n").alias(id_col))
         .distinct()
     )
-    matched = F.broadcast(matched) if broadcast_batch else matched
-    return surv.join(matched, id_col, "left_anti").select(
+    return surv.join(F.broadcast(matched), id_col, "left_anti").select(
         F.col(id_col), F.col("__fp").alias("fp_exact")
     )
 

@@ -30,7 +30,6 @@ def prepare_training_corpus(
     keep_langs: tuple[str, ...] = ("en",),
     near_dup_threshold: float = 0.5,
     max_doc_freq: int | None = 10_000,
-    storage_level: "StorageLevel | None" = None,
     quality_scorer=None,
     c4_clean: bool = False,
 ) -> DataFrame:
@@ -69,23 +68,10 @@ def prepare_training_corpus(
     unchanged); zero extra shuffle when on (the rules are a projection
     fused into the scan).
 
-    ``storage_level`` sets how the composition-boundary materialization is
-    held (see the inline persist note): the default deserialized
-    ``MEMORY_AND_DISK`` (Spark's own ``DataFrame.persist()`` default) is
-    right when the filtered corpus fits cluster memory; pass
-    ``StorageLevel.DISK_ONLY`` for cluster-memory-scale corpora (100 TB in,
-    the filtered+deduped intermediate can itself exceed aggregate executor
-    memory, and eviction churn under MEMORY_AND_DISK costs more than
-    straight disk reads).
+    The composition-boundary materialization (see the inline persist note)
+    is ``DataFrame.persist()``'s default level, ``MEMORY_AND_DISK_DESER``:
+    deserialized in memory, spilling to disk.
     """
-    from pyspark import StorageLevel
-
-    if storage_level is None:
-        # MEMORY_AND_DISK_DESER == DataFrame.persist()'s default: columnar
-        # deserialized in memory, spilling to disk. (Bare MEMORY_AND_DISK in
-        # the StorageLevel enum is the SERIALIZED variant — defaulting to it
-        # would silently change the memory format.)
-        storage_level = StorageLevel.MEMORY_AND_DISK_DESER
     # Persist at the COMPOSITION boundary (the EXACT frame below): the
     # downstream near-dup stage derives it several times (signatures via
     # the shingle checkpoint, the survivor anti-join, the final
@@ -147,7 +133,7 @@ def prepare_training_corpus(
     filtered = scored.where(
         quality_gate & (F.col("lang_pred").isin(*keep_langs))
     )
-    exact = dd.dedup_exact(filtered, id_col, text_col).persist(storage_level)
+    exact = dd.dedup_exact(filtered, id_col, text_col).persist()
     exact.count()
     pairs = dd.minhash_lsh_pairs(
         exact,

@@ -536,12 +536,7 @@ def q60_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 100000).alias("doc_id"), "text"
         )
     )
-    # broadcast_batch: the fixture models a daily-ingest batch — small
-    # relative to the corpus, so its shingle table is the broadcast side
-    # and the corpus never shuffles on the shingle
-    return dd.dedup_incremental(
-        corpus, newb, "doc_id", "text", threshold=0.5, broadcast_batch=True
-    )
+    return dd.dedup_incremental(corpus, newb, "doc_id", "text", threshold=0.5)
 
 
 @_register(
@@ -973,15 +968,15 @@ def q66_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q55_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup collapse: MinHash-LSH pairs → connected
-    components (iterative min-label propagation) → per-component survivor
-    stats. The missing last mile between pair detection and an
+    components (union-find gate / star contraction) → per-component
+    survivor stats. The missing last mile between pair detection and an
     actually-deduplicated corpus.
 
-    The Spark side is iterative (driver loop), but the FIXPOINT is still
-    SQL-expressible: the oracle reruns the q27 pair pipeline and closes it
-    transitively with a DuckDB ``WITH RECURSIVE`` reachability CTE —
-    component label = min reachable id, exactly the min-label-propagation
-    invariant."""
+    The Spark side is iterative (driver union-find), but the FIXPOINT is
+    still SQL-expressible: the oracle reruns the q27 pair pipeline and
+    closes it transitively with a DuckDB ``WITH RECURSIVE`` reachability
+    CTE — component label = min reachable id, exactly the
+    connected_components invariant."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dd.minhash_lsh_pairs(docs, "doc_id", threshold=0.5)
     comp = dd.connected_components(pairs)
@@ -2667,7 +2662,6 @@ def q91_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         threshold=0.5,
-        broadcast_batch=True,
         bloom_prefilter=True,
     )
 
@@ -3431,9 +3425,7 @@ _Q87_SQL = rf"""
 
 
 @_register("q87_pretrain_capstone", _Q87_SQL)
-def q87_pretrain_capstone(
-    spark: SparkSession, sf_dir: str, *, cuts=None
-) -> DataFrame:
+def q87_pretrain_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed "modern pretrain" capstone (plans/pretrain.py::
     pretrain_corpus): C4 line rules → Gopher rule + repetition gates →
     self-trained bigram-LM gate → exact dedup → MinHash-LSH near dedup →
@@ -3475,9 +3467,7 @@ def q87_pretrain_capstone(
     )
     ev = _derived_eval_windows(docs)
     target_ids = docs.where(F.col("lang") == "en").select("doc_id")
-    if cuts is None:
-        return pretrain_corpus(injected, ev, target_ids)
-    return pretrain_corpus(injected, ev, target_ids, cuts=cuts)
+    return pretrain_corpus(injected, ev, target_ids)
 
 
 # q98's oracle: the q56 clean prefix (quality + language gates + exact
@@ -6391,9 +6381,7 @@ def q146_corpus_refresh_capstone(
             (F.col("doc_id") + 100000).alias("doc_id"), "text"
         )
     )
-    surv = dd.dedup_incremental(
-        corpus, newb, "doc_id", "text", threshold=0.5, broadcast_batch=True
-    )
+    surv = dd.dedup_incremental(corpus, newb, "doc_id", "text", threshold=0.5)
     kept = newb.join(
         surv.select("doc_id"), "doc_id", "left_semi"
     ).localCheckpoint(eager=False)
@@ -6546,9 +6534,7 @@ def q150_drift_gated_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 100000).alias("doc_id"), "text"
         )
     )
-    surv = dd.dedup_incremental(
-        corpus, newb, "doc_id", "text", threshold=0.5, broadcast_batch=True
-    )
+    surv = dd.dedup_incremental(corpus, newb, "doc_id", "text", threshold=0.5)
     kept = newb.join(
         surv.select("doc_id"), "doc_id", "left_semi"
     ).localCheckpoint(eager=False)

@@ -49,6 +49,13 @@ stats and selects via TakeOrderedAndProject, 9 shuffles once on the
 shard key. Composition boundaries are lazy-checkpointed (the
 multi-consumer idiom): each materialized frame feeds 2+ downstream
 derivations that would otherwise re-run the whole upstream pipeline.
+
+The seven checkpointed frames (s1, s2, lm, s4, s5, cutdocs, chosen) each
+feed 2+ downstream derivations whose re-execution was MEASURED to cost
+more than the materialization (cut-by-cut A/B at sf0.1, PERF.md "q87
+checkpoint chain"). s0 and s3 stay plain frames: each has one consumer
+(the inline rule gates read s0 once; the window-form dedup_exact scans
+s3 once).
 """
 
 from __future__ import annotations
@@ -74,21 +81,6 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.text impor
 )
 
 
-# Checkpoint boundaries that stay active by default, chosen by cut-by-cut
-# A/B at sf0.1 (round 8, re-run round 16 after the gate fusion — PERF.md
-# "q87 checkpoint chain"): each named frame feeds 2+ downstream
-# derivations whose re-execution was MEASURED to cost more than the
-# materialization. Cuts that lost the A/B (their consumers' lineage
-# overlap collapses to a ReusedExchange, or the frame has one consumer)
-# are omitted; pass ``cuts`` explicitly to re-run the experiment.
-# Round 16: the rule/repetition gates became inline filters (the scorers
-# are projections — the semi-joins consumed each stage's lineage twice),
-# which renamed the gate boundary s0 → s1 (post-rule-gates, the frame the
-# repetition battery fans out over) and left s3 single-consumer (the
-# window-form dedup_exact scans once), so s0/s3 left the default set.
-DEFAULT_CUTS = frozenset({"s1", "s2", "lm", "s4", "s5", "cutdocs", "chosen"})
-
-
 def pretrain_corpus(
     docs: DataFrame,
     eval_docs: DataFrame,
@@ -104,8 +96,6 @@ def pretrain_corpus(
     pack_budget: int = 512,
     pack_shards: int = 32,
     salt: str = "pretrain",
-    cuts: frozenset[str] = DEFAULT_CUTS,
-    stages: dict | None = None,
 ) -> DataFrame:
     """Run the full pretrain pipeline; see the module docstring for the
     stage list. Returns one row per RESAMPLED doc:
@@ -122,16 +112,6 @@ def pretrain_corpus(
     stage — ``None`` keeps exact full-space semantics (SQL-replicable);
     set it for web-scale corpora (see ``prepare_training_corpus``).
     """
-
-    def _cut(name: str, frame: DataFrame) -> DataFrame:
-        if name in cuts:
-            frame = frame.localCheckpoint(eager=False)
-        if stages is not None:
-            # expose the stage boundary for instrumentation (the PERF.md
-            # stage-time decomposition scripts); no plan effect
-            stages[name] = frame
-        return frame
-
     # 1. C4: page gates + line rewrite; downstream sees clean_text.
     # The null-id drop up front preserves the pre-r16 gate semantics: the
     # rule/repetition gates used to be ID-keyed semi-joins, which a null
@@ -150,35 +130,35 @@ def pretrain_corpus(
     # cut moved one stage later to s1, the frame the repetition battery's
     # four internal streams (skeleton, lines, 2-grams, 5-grams) fan out
     # over.
-    s1 = _cut(
-        "s1",
+    s1 = (
         gopher_rules(
             s0, text_col, id_col, min_stopwords=min_stopwords, passthrough=True
         )
         .where(F.col("keep"))
-        .select(id_col, text_col),
+        .select(id_col, text_col)
+        .localCheckpoint(eager=False)
     )
-    s2 = _cut(
-        "s2",
+    s2 = (
         gopher_repetition(s1, text_col, id_col, passthrough=True)
         .where(F.col("keep"))
-        .select(id_col, text_col),
+        .select(id_col, text_col)
+        .localCheckpoint(eager=False)
     )
     # 4. bigram-LM gate: keep ≤ corpus-mean cross-entropy. Docs with no
     # bigrams (<2 words) have no LM row and are dropped by the semi-join
     # — they cannot carry the fluency evidence this gate asks for.
-    lm = _cut("lm", bigram_lm_scores(s2, id_col, text_col))
+    lm = bigram_lm_scores(s2, id_col, text_col).localCheckpoint(eager=False)
     lm_mean = lm.agg(F.round(F.avg("avg_neg_logprob"), 6).alias("__lm_mean"))
     lm_keep = (
         lm.crossJoin(F.broadcast(lm_mean))
         .where(F.col("avg_neg_logprob") <= F.col("__lm_mean"))
         .select(id_col)
     )
-    # s3 is single-consumer since the window-form dedup_exact (r15): the
-    # old join-back consumed it twice, which is why it used to be cut.
-    s3 = _cut("s3", s2.join(lm_keep, [id_col], "left_semi"))
+    # s3 is single-consumer (the window-form dedup_exact scans it once),
+    # so it is not checkpointed
+    s3 = s2.join(lm_keep, [id_col], "left_semi")
     # 5-6. exact then near dedup (min-id survivors, q56 configuration)
-    s4 = _cut("s4", dd.dedup_exact(s3, id_col, text_col))
+    s4 = dd.dedup_exact(s3, id_col, text_col).localCheckpoint(eager=False)
     pairs = dd.minhash_lsh_pairs(
         s4,
         id_col,
@@ -189,21 +169,22 @@ def pretrain_corpus(
         threshold=lsh_threshold,
         max_doc_freq=max_doc_freq,
     )
-    s5 = _cut("s5", dd.dedup_near(s4, pairs, id_col))
+    s5 = dd.dedup_near(s4, pairs, id_col).localCheckpoint(eager=False)
     # 7. ExactSubstr decontamination: locate leaked eval spans in the
     # surviving corpus, cut them token-exactly
     spans = dd.cross_exact_substring_spans(
         s5, eval_docs, id_col, text_col, min_tokens=min_span_tokens, k=13
     )
-    cutdocs = _cut(
-        "cutdocs",
-        dd.remove_token_spans(s5, spans, id_col, text_col).select(
+    cutdocs = (
+        dd.remove_token_spans(s5, spans, id_col, text_col)
+        .select(
             F.col(id_col),
             F.col("clean_text").alias(text_col),
             (F.col("n_tokens") - F.col("n_tokens_removed")).alias(
                 "__n_clean_tokens"
             ),
         )
+        .localCheckpoint(eager=False)
     )
     # 8. DSIR on the decontaminated text; target = the surviving slice
     # of the caller's target ids (scored text and target text must come
@@ -217,18 +198,13 @@ def pretrain_corpus(
         text_col,
         n_buckets=n_buckets,
     )
-    chosen = _cut(
-        "chosen",
-        gumbel_top_k(
-            weights.where(F.col("n_grams") > 0).select(
-                id_col, "log_importance"
-            ),
-            id_col,
-            "log_importance",
-            k=resample_k,
-            salt=salt,
-        )
-    )
+    chosen = gumbel_top_k(
+        weights.where(F.col("n_grams") > 0).select(id_col, "log_importance"),
+        id_col,
+        "log_importance",
+        k=resample_k,
+        salt=salt,
+    ).localCheckpoint(eager=False)
     # 9. pack the selection by post-cut token counts
     # the joined frame has counts but NO text column; text_col=None makes
     # that contract explicit (pack_sequences validates it)

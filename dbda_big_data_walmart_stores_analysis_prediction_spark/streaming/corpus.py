@@ -78,9 +78,6 @@ def streaming_corpus_ingest(
             text_col,
             threshold=threshold,
             max_doc_freq=max_doc_freq,
-            # a micro-batch is broadcast-sized by definition; the corpus
-            # side then never shuffles on the shingle
-            broadcast_batch=True,
             # optional sketch-accelerated exact stage (operators/sketches):
             # per-batch the bitset rebuilds from the corpus scan, so the
             # local win is nil — the flag exists for deployments that

@@ -48,53 +48,46 @@ def test_connected_components_chain_and_islands(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_budget_exhaustion_falls_back_to_star(spark):
-    # a 4-chain needs >1 min-label round; with max_iter=1 the loop's
-    # budget runs out and the large-star/small-star contraction must
-    # finish the job with CORRECT labels — never a RuntimeError, never
-    # partially-propagated labels returned as if converged
-    # (driver_edge_bound=0 forces the distributed path — the size gate
-    # would otherwise close this tiny graph driver-side)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long"
-    )
-    comp = {
-        r["id"]: r["component"]
-        for r in dd.connected_components(
-            edges, max_iter=1, driver_edge_bound=0
-        ).collect()
+def _cc_paths(monkeypatch, edges):
+    """Labels from the public call through the driver union-find (the
+    default gate) and through the star contraction (gate forced to 0)."""
+    union_find = {
+        r["id"]: r["component"] for r in dd.connected_components(edges).collect()
     }
-    assert comp == {1: 1, 2: 1, 3: 1, 4: 1}
+    monkeypatch.setattr(dd, "_DRIVER_EDGE_BOUND", 0)
+    star = {
+        r["id"]: r["component"] for r in dd.connected_components(edges).collect()
+    }
+    return union_find, star
 
 
-def test_connected_components_star_path_graph_beyond_diameter_budget(spark):
-    # a path graph of length 40 has diameter 40 — double the min-label
-    # loop's default 20-round budget, the exact regime the contraction
-    # exists for; its round count is logarithmic so max_iter=60 is ample.
-    # Ids descend so the min label (0) sits at the FAR end of every walk.
+def test_connected_components_star_path_graph_beyond_diameter_budget(
+    spark, monkeypatch
+):
+    # a path graph of length 40 has diameter 40 — the regime the
+    # contraction exists for; its round count is logarithmic in component
+    # size. Ids descend so the min label (0) sits at the FAR end of every
+    # walk.
     n = 40
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
+    expect = {i: 0 for i in range(n + 1)}
     comp = {
         r["id"]: r["component"]
         for r in dd.connected_components_star(path).collect()
     }
-    assert comp == {i: 0 for i in range(n + 1)}
-    # and the public API resolves the same graph via the fallback chain
-    # (driver gate off, tiny round budget -> star contraction)
-    via_cc = {
-        r["id"]: r["component"]
-        for r in dd.connected_components(
-            path, max_iter=2, driver_edge_bound=0
-        ).collect()
-    }
-    assert via_cc == comp
+    assert comp == expect
+    # and the public API resolves the same graph on both sides of its
+    # driver-edge gate
+    union_find, star = _cc_paths(monkeypatch, path)
+    assert star == union_find == expect
 
 
 def test_connected_components_star_matches_min_label_on_mixed_graph(spark):
-    # chains, a clique, islands, self-loops, reversed duplicates — star
-    # contraction and the min-label loop must label identically
+    # chains, a clique, islands, self-loops, reversed duplicates — the
+    # star contraction called directly must give every vertex the minimum
+    # id of its component, the same labels the public call returns
     edges = spark.createDataFrame(
         [(5, 4), (4, 3), (3, 2), (2, 1), (7, 7), (10, 11), (11, 10),
          (20, 21), (21, 22), (20, 22), (30, 31)],
@@ -104,52 +97,30 @@ def test_connected_components_star_matches_min_label_on_mixed_graph(spark):
         r["id"]: r["component"]
         for r in dd.connected_components_star(edges).collect()
     }
-    loop = {
-        r["id"]: r["component"]
-        for r in dd.connected_components(edges, driver_edge_bound=0).collect()
+    public = {
+        r["id"]: r["component"] for r in dd.connected_components(edges).collect()
     }
-    assert star == loop
-    assert star[5] == 1 and star[7] == 7 and star[22] == 20
+    assert star == public
+    assert star[5] == 1 and star[7] == 7 and star[22] == 20 and star[31] == 30
 
 
-def test_connected_components_edge_count_gate(spark):
-    """The caller-supplied edge_count must steer the gate exactly like the
-    counted value: a count within the bound takes the union-find path, a
-    count above it forces the distributed loop — labels identical, and a
-    self-loop (1 bidir row, counted as 2 by the 2*edge_count estimate —
-    deliberately conservative) doesn't break either path."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 7), (10, 11)], "doc_a long, doc_b long"
-    )
-    expect = {1: 1, 2: 1, 3: 1, 7: 7, 10: 10, 11: 10}
-    via_uf = {
-        r["id"]: r["component"]
-        for r in dd.connected_components(edges, edge_count=4).collect()
-    }
-    # edge_count far above the bound: gate declines without counting
-    via_dist = {
-        r["id"]: r["component"]
-        for r in dd.connected_components(
-            edges, driver_edge_bound=1, edge_count=100
-        ).collect()
-    }
-    assert via_uf == expect and via_dist == expect
-
-
-def test_connected_components_driver_and_distributed_paths_agree(spark):
-    # identical labels from the size-gated union-find and the min-label
-    # loop, on a graph with chains, a dense clique, islands, a self-loop,
-    # and reversed edge directions
+def test_connected_components_driver_and_distributed_paths_agree(
+    spark, monkeypatch
+):
+    # identical labels from the size-gated union-find and the star
+    # contraction, on a graph with chains, a dense clique, islands, a
+    # self-loop, and reversed edge directions
     edges = spark.createDataFrame(
         [(5, 4), (4, 3), (3, 2), (2, 1), (7, 7), (10, 11), (11, 10),
-         (20, 21), (21, 22), (20, 22)],
+         (20, 21), (21, 22), (20, 22), (30, 31)],
         "doc_a long, doc_b long",
     )
-    fast = {r["id"]: r["component"] for r in dd.connected_components(edges).collect()}
-    slow = {r["id"]: r["component"]
-            for r in dd.connected_components(edges, driver_edge_bound=0).collect()}
-    assert fast == slow
-    assert fast[5] == 1 and fast[7] == 7 and fast[22] == 20
+    expect = {
+        1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 7: 7, 10: 10, 11: 10,
+        20: 20, 21: 20, 22: 20, 30: 30, 31: 30,
+    }
+    union_find, star = _cc_paths(monkeypatch, edges)
+    assert star == union_find == expect
 
 
 def test_dedup_near_collapses_clusters(spark):

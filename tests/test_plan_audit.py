@@ -211,11 +211,6 @@ def test_driver_rotation_least_recently_verified_first():
     # latest row predates its oracle counts as never-verified (round 0)
     for k in entry_mod._latest_row_rows_only() & set(entry_mod.oracle_sql()):
         last[k] = 0
-    # ... and so does a query whose computed path was rewritten after its
-    # latest driver row (the optimization-round refronting rule)
-    for k, rewrite_round in entry_mod._REWRITTEN_IN_ROUND.items():
-        if last.get(k, 0) and last[k] < rewrite_round:
-            last[k] = 0
     ordered = list(entry_mod.queries())
     cap = entry_mod.DRIVER_QUERY_CAP
     oracled = set(entry_mod.oracle_sql())
@@ -267,10 +262,9 @@ def test_driver_rotation_crashed_latest_outranks_green_ties(monkeypatch):
     fake = {k: (6, k == victim) for k in registry}
     monkeypatch.setattr(entry_mod, "_driver_history", lambda: fake)
     # the fake history has every hash check run at round 6 — silence the
-    # real files' fresh-oracle refronting AND the rewritten-after-row
-    # refronting so the crash tie-break is what this test isolates
+    # real files' fresh-oracle refronting so the crash tie-break is what
+    # this test isolates
     monkeypatch.setattr(entry_mod, "_latest_row_rows_only", lambda: set())
-    monkeypatch.setattr(entry_mod, "_REWRITTEN_IN_ROUND", {})
     ordered = list(entry_mod.queries())
     # the crashed rows-only entry fronts ahead of every green oracled tie
     assert ordered[0] == victim, ordered[:3]

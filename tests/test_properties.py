@@ -336,7 +336,7 @@ def test_connected_components_matches_union_find(spark, edges):
     for a, b in edges:
         union(a, b)
     expect = {x: find(x) for x in parent}
-    # min-label: component id must be the smallest member, so normalize
+    # component id must be the smallest member, so normalize
     # union-find roots to min-of-component
     comp_members = {}
     for x, r in expect.items():
