@@ -39,6 +39,10 @@ import time
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
 
+from dbda_big_data_walmart_stores_analysis_prediction_spark.plans import (  # noqa: E402
+    QUERIES,
+)
+
 # Headline set: one representative per operator family (agg, join tree,
 # window, top-k, date parts, describe, histogram, events/JSON, text, dedup,
 # similarity, sessionization, multimodal). Kept explicit so timings stay
@@ -89,288 +93,27 @@ HEADLINE = [
     "q67_markup_stripping",
 ]
 
-# Every-operator-measured long tail: sub-second relational queries plus the
-# round-5/6 additions. Measured identically but kept OUT of the headline
-# total so `value` stays comparable across rounds; their timings appear in
-# the same per-query dict and sum under `longtail_total`.
-# Since round 11 every registered query has a row (r10 verdict item 5).
-# Solver-bearing entries (q76 logistic fit, q84/q85 BPE merge loop, q95
-# unigram EM) time the full user-facing call — iteration rounds included —
-# while their distributed engine-plan halves stay separately visible as
-# q22 / q88 / q94.
-LONGTAIL = [
-    "q33_rollup_pricing",
-    "q34_intersect_except",
-    "q41_full_outer_reconcile",
-    "q42_rank_family",
-    "q43_string_functions",
-    "q44_median_imputation",
-    "q46_cube_order_stats",
-    "q48_pivot_status_by_priority",
-    "q52_merge_upsert",
-    "q57_grouping_sets_sql",
-    "q58_array_agg",
-    "q59_event_dedup",
-    "q68_ngram_decontamination",
-    "q69_line_dedup",
-    # round-5 capstone: full web-crawl pipeline (clean -> filter -> dedup);
-    # Spark ~6.8s vs the DuckDB oracle's ~210s at sf0.1 (the recursive-CTE
-    # closure over the composed CTE chain is where single-node dies)
-    "q70_web_corpus_pipeline",
-    "q71_temperature_mix",
-    "q72_semantic_dedup",
-    "q73_corpus_report",
-    "q74_doc_chunking",
-    "q75_exact_substring_spans",
-    "q77_cross_exact_substring",
-    "q78_bigram_lm_scores",
-    "q79_decontaminated_corpus",
-    "q80_dsir_importance",
-    "q81_gopher_rules",
-    "q82_dsir_resample",
-    "q83_c4_rules",
-    "q86_gopher_repetition",
-    # round-7 capstone: the composed pretrain pipeline (C4 -> Gopher ->
-    # bigram-LM -> exact+near dedup -> ExactSubstr span-cut -> DSIR
-    # resample -> packing), hash-checked end to end against one oracle
-    "q87_pretrain_capstone",
-    # round-8: the distributed word-count stage of BPE training (the
-    # non-iterative half of q84/q85), now its own oracled query
-    "q88_bpe_word_counts",
-    # round-8: NFKC folding path (the one deliberate pandas-UDF projection)
-    "q89_nfkc_fold",
-    # round-8: Bloom-sketch dedup prefilter (bitset build + broadcast probe)
-    "q90_bloom_dedup_probe",
-    # round-8: Bloom-accelerated incremental dedup + Count-Min heavy hitters
-    "q91_bloom_incremental_dedup",
-    "q92_cms_heavy_hitters",
-    # round-8: oracle-portable HLL (the estimate itself hash-checks)
-    "q93_hll_distinct",
-    # round-8: unigram tokenizer's distributed seed stage (q95 trains EM,
-    # excluded for the same solver-round reason as q84/q85)
-    "q94_unigram_seed_counts",
-    # round-8: theta-sketch cross-source overlap audit
-    "q96_theta_overlap",
-    # round-8: deterministic fixed-size per-group eval sampling
-    "q97_eval_sample_per_group",
-    # round-9 capstone: composed tokenizer pipeline (clean -> BPE train ->
-    # encode -> pack). q98 is the zero-merge oracled point; q99 is the
-    # shipped-tokenizer configuration (n_merges=60) — unlike q84/q85 its
-    # wall-clock row is wanted DESPITE the bounded driver merge loop,
-    # because the measured artifact is the full composition a user ships
-    # (judge-ordered in the round-9 verdict, same rationale as q87).
-    "q98_tokenizer_capstone",
-    "q99_tokenizer_capstone_merged",
-    # round-10: the unigram-LM twin of the tokenizer capstone — q100 at
-    # the oracled single-char point (em_iters=0: no solver rounds at
-    # all), q101 at the trained configuration (same judge-ordered
-    # full-composition rationale as q99).
-    "q100_unigram_capstone",
-    "q101_unigram_capstone_trained",
-    # round-10: training-objective rewrites — T5 span corruption (one
-    # exchange: the window hash reused by the groupBy) and the FIM
-    # prefix-suffix-middle projection (zero shuffle)
-    "q102_span_corruption",
-    "q103_fim_transform",
-    # round-10: epoch-weighted upsampling (zero-shuffle explode) and the
-    # per-bin loading manifest (single shard exchange, q63-spliced oracle)
-    "q104_epoch_repeat_mix",
-    "q105_bin_manifest",
-    # round-10: strict-capacity FFD packing (the one applyInPandas
-    # operator — rows-only, pinned by the pure-Python FFD twin)
-    "q106_ffd_packing",
-    # round-11 capstone: recipe v2 — clean -> decontam -> epoch mix ->
-    # trained-tokenizer encode -> pack, composed end to end. q107 is the
-    # oracled zero-merge point, q108 the trained configuration.
-    "q107_recipe_v2_capstone",
-    "q108_recipe_v2_trained",
-    # round-11: greedy per-domain token-budget selection and the
-    # cluster-anchored leakage-safe train/val/test split
-    "q109_budget_selection",
-    "q110_leakage_safe_split",
-    # round-11 sweep: the previously-unbenched registry tail, so every
-    # registered query carries wall-clock history. Relational tail —
-    # all sub-second single-agg/join plans:
-    "q03_null_counts",
-    "q04_mode_orderpriority",
-    "q05_median_acctbal_by_nation",
-    "q06_revenue_by_segment",
-    "q10_customers_without_orders",
-    "q11_customers_with_urgent_orders",
-    "q12_union_priority_classes",
-    "q14_conditional_bucketing",
-    "q17_quartiles_by_priority",
-    "q18_correlation_matrix",
-    "q19_outlier_count",
-    "q28_simhash",
-    "q54_attribution_join",
-    # seeded sampling / sketch / multimodal rows-only entries:
-    "q35_bernoulli_sample",
-    "q36_random_split",
-    "q40_frame_sampling",
-    "q49_stratified_sample",
-    "q53_approx_distinct",
-    # solver-bearing calls (see module comment above):
-    "q76_quality_model_scores",
-    "q84_bpe_merges",
-    "q85_bpe_tokens",
-    "q95_unigram_tokens",
-    # round-11: deterministic spherical k-means (fixed-iteration Lloyd,
-    # literal-centroid assignment) and the paper-exact cluster-bounded
-    # SemDeDup it enables
-    "q111_kmeans_clusters",
-    "q112_semdedup_kmeans",
-    # round-11: embedding-driven curation — SemDeDup survivors joined to
-    # documents, temperature-mixed over the discovered clusters
-    "q113_semantic_curation",
-    # round-11: the WordPiece tokenizer family (zero-merge oracled vocab +
-    # encode, likelihood-scored trained configuration), the
-    # length-bucketed SFT loader, and the snapshot content diff
-    "q114_wordpiece_vocab",
-    "q115_wordpiece_tokens",
-    "q116_wordpiece_trained",
-    "q117_length_bucket_batches",
-    "q118_snapshot_diff",
-    # round-11: diff-gated re-encode — unchanged docs carry the previous
-    # encoding, only the delta pays the Arrow stage
-    "q119_incremental_encode",
-    # round-11: SFT/preference prep — chat-template assembly with
-    # loss-mask spans, and chosen/rejected pair construction
-    "q120_chat_assembly",
-    "q121_preference_pairs",
-    # round-11 capstone: the SFT loader chain — assemble -> WordPiece
-    # train/encode -> length-bucket batches. q122 is the oracled
-    # zero-merge point, q123 the trained configuration.
-    "q122_sft_loader_capstone",
-    "q123_sft_loader_trained",
-    # round-11: eval-leakage audit on assembled conversations (the q68
-    # 13-gram machinery applied through the chat template)
-    "q124_sft_decontamination",
-    # round-11: stage-by-stage doc/token funnel over the q56 clean chain
-    "q125_corpus_funnel",
-    # round-11: hard-negative mining for preference pairs (q121 x q30)
-    "q126_hard_negatives",
-    # round-11: cross-source KMV overlap matrix (one-scan S x S audit),
-    # length-curriculum staging, the per-source tokenizer fit report,
-    # and the mixture planner + its repeat_by_weight composition
-    "q127_source_overlap_matrix",
-    "q128_curriculum_schedule",
-    "q129_tokenizer_audit",
-    "q130_mixture_plan",
-    "q131_planned_mixture_realized",
-    # round-11: JL random projection (oracled exact-fold point) and the
-    # vocabulary coverage curve over the shared word_counts head
-    "q132_random_projection",
-    "q133_vocab_coverage_curve",
-    # round-11: per-domain percentile calibration and the corpus
-    # word-distribution drift monitor (KL/JS/TVD vs the q118 refresh)
-    "q134_calibrated_scores",
-    "q135_word_distribution_drift",
-    # round-11 capstone: the curation loader — calibrate -> budget-select
-    # -> curriculum-stage, hash-checked through all three operators
-    "q136_curation_loader_capstone",
-    # corpus-internal memorization audit + int8 embedding quantization
-    "q137_memorization_report",
-    "q138_int8_quantization",
-    "q139_knn_quantized",
-    # BPE vocabulary extension — q140 the oracled single-merge
-    # zero-base point, q149 the trained 30+20 configuration
-    "q140_bpe_vocab_extension",
-    # sequence-length sizing sweep (one scan, all budgets)
-    "q141_packing_budget_sweep",
-    # ANN serving capstone: kmeans cells + int8 codes + probe-and-rerank
-    "q142_ann_serving_capstone",
-    # in-engine ANN evaluation (quantized vs exact recall)
-    "q143_ann_recall",
-    # tokenizer A/B report (two counts-only encode scans + domain join)
-    "q144_tokenizer_ab_report",
-    # embedding drift monitor (per-label mean-vector cosine + norm ratio)
-    "q145_embedding_drift",
-    # maintenance capstone: incremental dedup -> merge-upsert -> diff audit
-    "q146_corpus_refresh_capstone",
-    # corpus boilerplate table (top duplicated grams with text)
-    "q147_top_duplicated_grams",
-    # ANN quality monitor: LSH recall vs the exact baseline per round
-    "q148_lsh_recall_monitor",
-    # round-12: the trained BPE extension configuration (q140's oracled
-    # point moved to the zero-base single-merge identity)
-    "q149_bpe_extension_trained",
-    # round-12 additions: maintenance gates, the winnowing family, the
-    # lexical retrieval family, and the quantile-engine consumers
-    "q150_drift_gated_refresh",
-    "q151_winnow_pairs",
-    "q152_bm25_topk",
-    "q153_mad_outliers",
-    "q154_quantile_binning",
-    "q155_skew_report",
-    "q156_tfidf_cosine_pairs",
-    "q157_incremental_term_stats",
-    "q158_winnow_keep_longest",
-    "q159_vector_drift_gate",
-    "q160_retrieval_prep_capstone",
-    "q161_group_quantile_bins",
-    # round-13: the skew loop closed (q155's suggested_salt consumed)
-    "q162_adaptive_salted_join",
-    # round-13: true-binary byte features (q39 hardened past ASCII)
-    "q163_binary_blob_features",
-    # round-13: per-group HLL distinct (register-table price per segment)
-    "q164_hll_distinct_by",
-    # round-13: per-source robust (MAD) outlier fences
-    "q165_group_mad_outliers",
-    # round-13: high-cardinality grouped median (one exchange, one sort)
-    "q166_group_median_highcard",
-    "q167_group_quantiles_highcard",
-    # round-13: time-series gap fill (dense spine + one-window fills)
-    "q168_gap_fill_series",
-    # round-13: interval x interval overlap join (canonical-bin dedup)
-    "q169_session_incident_overlap",
-    # round-13: exact-threshold Jaccard via prefix filtering (PPJoin)
-    "q170_jaccard_prefix_pairs",
-    # round-14: high-cardinality per-group MAD fences (stacked windows,
-    # one exchange — q166's shape extended to the robust fence)
-    "q171_group_mad_highcard",
-    # round-14: linear-interpolation gap fill (q168's sensor-semantics
-    # sibling, now DuckDB-oracled including leading/trailing holes)
-    "q172_gap_fill_linear",
-    # round-14: event-sequence analytics — ordered conversion funnel
-    # (stacked windows, one exchange) and the weekly cohort retention
-    # matrix (window cohort + partition-reusing dedup)
-    "q173_conversion_funnel",
-    "q174_cohort_retention",
-    # round-14: RFM segmentation (one shared quantile scan resolves all
-    # nine boundaries; fixed-point monetary) and the session-gapped
-    # event transition matrix (one lead window + tiny aggregate)
-    "q175_rfm_segments",
-    "q176_event_transitions",
-    # round-14: exact fixed-point spike detection over the zero-filled
-    # spine (the anomaly DECISION is hash-checkable, not just a score)
-    "q177_series_spike_detection",
-    # round-14: exact-integer least-squares volume trend (q177's trend
-    # sibling) and churn-by-cohort (q174's matrix collapsed)
-    "q178_volume_trend_slope",
-    "q179_churn_by_cohort",
-    # round-14: transition matrix generalized to 3-step paths
-    "q180_event_path_trigrams",
-    # round-15: the quantile fence monitor (exact-fence batch twin of
-    # the streaming composition) and the versioned-pointer snapshot
-    # refresh + retention flows (write+commit+read end to end).
-    #
-    # MEASUREMENT CONTRACT (declared, r15 verdict item 7): q182-q184 (and
-    # q108's tokenizer artifact) model "refresh an EXISTING lake" — each
-    # bootstraps its snapshot/artifact once per (process, sf_dir) and the
-    # timed reps measure the refresh/upsert/commit/diff/read work over
-    # it, BY DESIGN. The bench's unmeasured warm-up rep is what pays the
-    # bootstrap (tests/test_northstar.py::
-    # test_q182_snapshot_bootstrap_amortized_to_warmup pins the reuse),
-    # so the recorded seconds are the steady-state maintenance operation,
-    # never a fresh corpus-sized write. The timed region still performs
-    # real slice writes + manifest commits + snapshot reads each rep, and
-    # the DuckDB oracles cover the refreshed output.
-    "q181_quantile_fence_monitor",
-    "q182_pointer_snapshot_refresh",
-    "q183_partition_retention",
-    "q184_lake_maintenance_capstone",
-]
+# Every-operator-measured long tail: every registered query outside the
+# headline, in registration order. Measured identically but kept OUT of
+# the headline total so `value` stays comparable across rounds; their
+# timings appear in the same per-query dict and sum under
+# `longtail_total`. Solver-bearing entries (q76 logistic fit, q84/q85 BPE
+# merge loop, q95 unigram EM) time the full user-facing call — iteration
+# rounds included — while their distributed engine-plan halves stay
+# separately visible as q22 / q88 / q94.
+#
+# MEASUREMENT CONTRACT (declared, r15 verdict item 7): q182-q184 (and
+# q108's tokenizer artifact) model "refresh an EXISTING lake" — each
+# bootstraps its snapshot/artifact once per (process, sf_dir) and the
+# timed reps measure the refresh/upsert/commit/diff/read work over
+# it, BY DESIGN. The bench's unmeasured warm-up rep is what pays the
+# bootstrap (tests/test_northstar.py::
+# test_q182_snapshot_bootstrap_amortized_to_warmup pins the reuse),
+# so the recorded seconds are the steady-state maintenance operation,
+# never a fresh corpus-sized write. The timed region still performs
+# real slice writes + manifest commits + snapshot reads each rep, and
+# the DuckDB oracles cover the refreshed output.
+LONGTAIL = [n for n in QUERIES if n not in HEADLINE]
 
 _TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -421,9 +164,6 @@ def _duckdb_anchor(sf_dir: str) -> float:
 def _run_chunk(names: list[str], sf_dir: str) -> dict[str, float]:
     """Measure ``names`` in THIS process (one fresh JVM per invocation)."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark import get_spark
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans import (
-        QUERIES,
-    )
 
     # Shuffle partitioning is sized to the data, not the core count: the
     # bench tables are tens of MB, where 8 post-shuffle partitions beat 32

@@ -28,18 +28,173 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.star_queries i
 )
 
 # Shared DuckDB CTE fragments (kept in one place so every oracle uses the
-# exact same normalization / shingle / hash text).
+# exact same normalization / shingle / hash text). A stage that more than
+# one oracle uses is a ``_sql_*`` builder: it returns named CTEs over a
+# source relation, every CTE name carrying the caller's prefix ``p``, so a
+# per-operator oracle and each composite that replays the stage are built
+# from the same text.
 _SQL_NORM = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 _SQL_HEX = "('0x' || substring(md5({x}), 1, 15))::BIGINT"
 _SQL_SHINGLES = (
     r"list_distinct([array_to_string(w[i:i+2], ' ') "
     r"FOR i IN range(1, greatest(len(w) - 2, 1) + 1)])"
 )
-_SQL_SH_TABLE = f"""
-    norm AS (SELECT doc_id, {_SQL_NORM} AS t FROM documents),
-    words AS (SELECT doc_id, regexp_split_to_array(t, '\\s+') AS w FROM norm),
-    sh AS (SELECT DISTINCT doc_id AS doc, unnest({_SQL_SHINGLES}) AS sh FROM words)
+
+
+def _as(mat: bool) -> str:
+    """``AS`` for a builder's CTE; ``AS MATERIALIZED`` where a composite
+    (q87) reads a multiply-referenced stage CTE that DuckDB would
+    otherwise inline and recompute per reference."""
+    return "AS MATERIALIZED" if mat else "AS"
+
+
+def _sql_shingle_ctes(
+    src: str = "documents", p: str = "", mat: bool = False
+) -> str:
+    """Word-3-gram shingle set per doc over ``src`` (doc_id, text), ending
+    in ``{p}sh`` (doc, sh). The default call is q26's text verbatim (the
+    bench's DuckDB anchor)."""
+    return f"""
+    {p}norm AS (SELECT doc_id, {_SQL_NORM} AS t FROM {src}),
+    {p}words AS (SELECT doc_id, regexp_split_to_array(t, '\\s+') AS w FROM {p}norm),
+    {p}sh {_as(mat)} (SELECT DISTINCT doc_id AS doc, unnest({_SQL_SHINGLES}) AS sh FROM {p}words)
 """
+
+
+def _sql_lsh_pairs_ctes(sh: str, p: str = "") -> str:
+    """MinHash (16 XOR-family perms) → 4-band LSH candidates → exact-Jaccard
+    verification over the shingle relation ``sh`` (doc, sh), ending in
+    ``{p}pairs`` (doc_a, doc_b, jaccard) with jaccard ≥ 0.5."""
+    jac = "round(shared / (sa.sz + sb.sz - shared), 6)"
+    return f"""
+    {p}seeds AS (SELECT i, {_SQL_HEX.format(x="'perm:' || i")} AS c
+              FROM (SELECT unnest(range(16)) AS i)),
+    {p}sigs AS (
+      SELECT doc, i, min(xor({_SQL_HEX.format(x="sh")}, c)) AS m
+      FROM {sh}, {p}seeds GROUP BY doc, i
+    ),
+    {p}bands AS (
+      SELECT doc, i // 4 AS band,
+             {_SQL_HEX.format(x="string_agg(m::VARCHAR, ',' ORDER BY i)")} AS bh
+      FROM {p}sigs GROUP BY doc, i // 4
+    ),
+    {p}cand AS (
+      SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+      FROM {p}bands a JOIN {p}bands b
+        ON a.band = b.band AND a.bh = b.bh AND a.doc < b.doc
+    ),
+    {p}sz AS (SELECT doc, count(*) AS sz FROM {sh} GROUP BY doc),
+    {p}shared AS (
+      SELECT c.doc_a, c.doc_b, count(*) AS shared
+      FROM {p}cand c
+      JOIN {sh} a ON a.doc = c.doc_a
+      JOIN {sh} b ON b.doc = c.doc_b AND b.sh = a.sh
+      GROUP BY c.doc_a, c.doc_b
+    ),
+    {p}pairs AS (
+      SELECT doc_a, doc_b, {jac} AS jaccard
+      FROM {p}shared
+      JOIN {p}sz sa ON sa.doc = doc_a
+      JOIN {p}sz sb ON sb.doc = doc_b
+      WHERE {jac} >= 0.5
+    )"""
+
+
+def _sql_closure_ctes(pairs: str, a: str, b: str, p: str = "") -> str:
+    """Connected components of the pair relation ``pairs`` (``a``, ``b``)
+    closed with a recursive reachability CTE (the query needs ``WITH
+    RECURSIVE``), ending in ``{p}comp`` (id, component): component = min
+    reachable id, exactly the ``dd.connected_components`` invariant."""
+    return f"""
+    {p}edges AS (
+      SELECT {a} AS u, {b} AS v FROM {pairs}
+      UNION
+      SELECT {b} AS u, {a} AS v FROM {pairs}
+    ),
+    {p}reach(u, v) AS (
+      SELECT u, v FROM {p}edges
+      UNION
+      SELECT r.u, e.v FROM {p}reach r JOIN {p}edges e ON r.v = e.u
+    ),
+    {p}comp AS (SELECT u AS id, least(u, min(v)) AS component FROM {p}reach GROUP BY u)"""
+
+
+def _sql_exact_dedup_ctes(src: str, p: str = "") -> str:
+    """Exact-duplicate groups over ``src`` (doc_id, text): ``{p}fp``
+    (doc_id, fpx) and ``{p}fpkeep`` (fpx, keep = min-id survivor, n)."""
+    return f"""
+    {p}fp AS (SELECT doc_id, {_SQL_HEX.format(x=_SQL_NORM)} AS fpx FROM {src}),
+    {p}fpkeep AS (SELECT fpx, min(doc_id) AS keep, count(*) AS n
+                  FROM {p}fp GROUP BY fpx)"""
+
+
+def _sql_quality_ctes(src: str, p: str = "") -> str:
+    """The q22 text features and heuristic quality score over ``src``
+    (doc_id, text), ending in ``{p}q`` (the ``{p}g`` features plus
+    quality_score)."""
+    return f"""
+    {p}f AS (
+      SELECT doc_id,
+        length(text)::DOUBLE AS n_chars,
+        len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens,
+        len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]'))::BIGINT AS n_bpe_tokens,
+        length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g'))::DOUBLE AS n_punct,
+        length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE AS n_digit,
+        length(regexp_replace(text, '[^ ]', '', 'g'))::DOUBLE AS n_space
+      FROM {src}
+    ),
+    {p}g AS (
+      SELECT doc_id, n_tokens, n_bpe_tokens,
+        CASE WHEN n_tokens > 0 THEN (n_chars - n_space) / n_tokens ELSE 0.0 END AS avg_tok,
+        CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END AS punct_ratio,
+        CASE WHEN n_chars > 0 THEN n_digit / n_chars ELSE 0.0 END AS digit_ratio,
+        CASE WHEN n_chars > 0 THEN n_space / n_chars ELSE 0.0 END AS space_ratio
+      FROM {p}f
+    ),
+    {p}q AS (
+      SELECT *,
+        CASE WHEN n_tokens IS NULL THEN 0.0 ELSE
+        floor((least(n_tokens::DOUBLE / 64.0, 1.0) * 0.4
+              + CASE WHEN avg_tok >= 3 AND avg_tok <= 10 THEN 0.3 ELSE 0.0 END
+              + greatest(0.0, 0.15 - punct_ratio) * 2.0 / 3.0 * 1.0
+              + greatest(0.0, 0.2 - digit_ratio)) * 10000 + 0.5) / 10000
+        END AS quality_score
+      FROM {p}g
+    )"""
+
+
+def _sql_langid_ctes(src: str, p: str = "") -> str:
+    """Stopword-voting language ID over ``src`` (doc_id, text, ...), ending
+    in ``{p}p``: every non-text column of ``src``, the four hit counts and
+    lang_pred (alphabetical tie-break)."""
+    top = "greatest(hits_de, hits_en, hits_es, hits_fr)"
+    return f"""
+    {p}w AS (SELECT * EXCLUDE (text),
+                  list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')) AS words
+           FROM {src}),
+    {p}h AS (SELECT * EXCLUDE (words),
+      len(list_intersect(words, ['der','die','und','das','in','von','zu','mit','ist','den']))::BIGINT AS hits_de,
+      len(list_intersect(words, ['the','and','of','to','a','in','is','it','that','for']))::BIGINT AS hits_en,
+      len(list_intersect(words, ['el','la','de','que','y','en','un','es','se','no']))::BIGINT AS hits_es,
+      len(list_intersect(words, ['le','la','et','les','des','en','un','du','une','est']))::BIGINT AS hits_fr
+      FROM {p}w),
+    {p}p AS (SELECT *,
+      CASE WHEN coalesce({top}, 0) = 0 THEN 'und'
+           WHEN hits_de = {top} THEN 'de'
+           WHEN hits_en = {top} THEN 'en'
+           WHEN hits_es = {top} THEN 'es'
+           ELSE 'fr' END AS lang_pred
+      FROM {p}h)"""
+
+
+# The simulated benchmark set every decontamination oracle shares: a
+# 30-word window from every 13th doc, re-idded clear of the corpus range
+# (the SQL twin of ``_derived_eval_windows``).
+_SQL_EVAL_WINDOWS = """SELECT doc_id + 300000 AS doc_id,
+             array_to_string(regexp_split_to_array(trim(text), '\\s+')[4:33], ' ') AS text
+      FROM documents WHERE doc_id % 13 = 0"""
+
+
 _SQL_SIMHASH = f"""
     toks AS (SELECT DISTINCT doc_id AS doc,
                     unnest(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS tok
@@ -61,36 +216,16 @@ _SQL_SIMHASH = f"""
 
 @_register(
     "q22_text_features",
-    f"""
-    WITH f AS (
-      SELECT doc_id,
-        length(text)::DOUBLE AS n_chars,
-        len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens,
-        len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]'))::BIGINT AS n_bpe_tokens,
-        length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g'))::DOUBLE AS n_punct,
-        length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE AS n_digit,
-        length(regexp_replace(text, '[^ ]', '', 'g'))::DOUBLE AS n_space
-      FROM documents
-    ), g AS (
-      SELECT doc_id, n_tokens, n_bpe_tokens,
-        CASE WHEN n_tokens > 0 THEN (n_chars - n_space) / n_tokens ELSE 0.0 END AS avg_tok,
-        CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END AS punct_ratio,
-        CASE WHEN n_chars > 0 THEN n_digit / n_chars ELSE 0.0 END AS digit_ratio,
-        CASE WHEN n_chars > 0 THEN n_space / n_chars ELSE 0.0 END AS space_ratio
-      FROM f
-    )
+    "\n    WITH "
+    + _sql_quality_ctes("documents")
+    + """
     SELECT doc_id, n_tokens, n_bpe_tokens,
       round(avg_tok, 4) AS avg_token_len,
       round(punct_ratio, 4) AS punct_ratio,
       round(digit_ratio, 4) AS digit_ratio,
       round(space_ratio, 4) AS space_ratio,
-      CASE WHEN n_tokens IS NULL THEN 0.0 ELSE
-        floor((least(n_tokens::DOUBLE / 64.0, 1.0) * 0.4
-            + CASE WHEN avg_tok >= 3 AND avg_tok <= 10 THEN 0.3 ELSE 0.0 END
-            + greatest(0.0, 0.15 - punct_ratio) * 2.0 / 3.0 * 1.0
-            + greatest(0.0, 0.2 - digit_ratio)) * 10000 + 0.5) / 10000
-        END AS quality_score
-    FROM g
+      quality_score
+    FROM q
     """,
 )
 def q22_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,24 +245,10 @@ def q22_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q23_language_id",
-    """
-    WITH w AS (SELECT doc_id, lang,
-                      list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')) AS words
-               FROM documents),
-    h AS (SELECT doc_id, lang,
-      len(list_intersect(words, ['der','die','und','das','in','von','zu','mit','ist','den']))::BIGINT AS hits_de,
-      len(list_intersect(words, ['the','and','of','to','a','in','is','it','that','for']))::BIGINT AS hits_en,
-      len(list_intersect(words, ['el','la','de','que','y','en','un','es','se','no']))::BIGINT AS hits_es,
-      len(list_intersect(words, ['le','la','et','les','des','en','un','du','une','est']))::BIGINT AS hits_fr
-      FROM w)
-    SELECT doc_id, lang, hits_de, hits_en, hits_es, hits_fr,
-      CASE WHEN coalesce(greatest(hits_de, hits_en, hits_es, hits_fr), 0) = 0
-           THEN 'und'
-           WHEN hits_de = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'de'
-           WHEN hits_en = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'en'
-           WHEN hits_es = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'es'
-           ELSE 'fr' END AS lang_pred
-    FROM h
+    "\n    WITH "
+    + _sql_langid_ctes("documents")
+    + """
+    SELECT doc_id, lang, hits_de, hits_en, hits_es, hits_fr, lang_pred FROM p
     """,
 )
 def q23_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,19 +287,58 @@ def q62_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.repetition_scores(docs, "text", 5)
 
 
+def _sql_pack_ctes(
+    src: str,
+    salt: str,
+    p: str = "",
+    idc: str = "doc_id",
+    shards: int = 32,
+    budget: int = 512,
+) -> str:
+    """Deterministic token-budget packing of ``src`` ({idc}, n_tokens, ...):
+    ``shards``-way md5('{salt}:id') shards, ordered by that hash inside
+    each shard, packed greedily into ``budget``-token bins. Ends in
+    ``{p}bin``: the ``src`` columns plus hv, shard, prior and bin_id."""
+    hv = _SQL_HEX.format(x=f"'{salt}:' || CAST({idc} AS VARCHAR)")
+    return f"""
+    {p}s AS (SELECT *, {hv} AS hv FROM {src}),
+    {p}p AS (SELECT *, (hv % {shards})::BIGINT AS shard,
+        coalesce(sum(n_tokens) OVER (PARTITION BY hv % {shards} ORDER BY hv, {idc}
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior
+      FROM {p}s),
+    {p}bin AS (SELECT *, (prior // {budget})::BIGINT AS bin_id FROM {p}p)"""
+
+
+def _sql_manifest(src: str, idc: str = "doc_id") -> str:
+    """Per-bin loading manifest over a ``_sql_pack_ctes`` result: each
+    bin's ids in concatenation order with their in-bin token offsets,
+    comma-joined (the q58 sorted-array oracle idiom)."""
+    order = f"ORDER BY hv, {idc}"
+    return f"""
+    m AS (SELECT *, prior - min(prior) OVER (PARTITION BY shard, bin_id) AS off
+          FROM {src})
+    SELECT shard, bin_id,
+      count(*)::BIGINT AS n_docs,
+      sum(n_tokens)::BIGINT AS bin_tokens,
+      string_agg(coalesce({idc}::VARCHAR, '?'), ',' {order}) AS doc_ids,
+      string_agg(coalesce(off::VARCHAR, '?'), ',' {order}) AS doc_offsets
+    FROM m GROUP BY shard, bin_id
+    """
+
+
+# q63's packing input, shared with the q105 manifest
+_Q63_CTES = """
+    t AS (SELECT doc_id,
+        len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens
+      FROM documents),""" + _sql_pack_ctes("t", "pack")
+
+
 @_register(
     "q63_sequence_packing",
-    f"""
-    WITH b AS (SELECT doc_id,
-        len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens,
-        {_SQL_HEX.format(x="'pack:' || CAST(doc_id AS VARCHAR)")} AS hv
-      FROM documents),
-    s AS (SELECT doc_id, n_tokens, hv, (hv % 32)::BIGINT AS shard FROM b),
-    p AS (SELECT doc_id, shard, n_tokens, hv,
-        coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY hv, doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior
-      FROM s)
-    SELECT doc_id, shard, (prior // 512)::BIGINT AS bin_id, n_tokens FROM p
+    "\n    WITH "
+    + _Q63_CTES
+    + """
+    SELECT doc_id, shard, bin_id, n_tokens FROM bin
     """,
 )
 def q63_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -359,11 +519,7 @@ def _sql_gram_overlap(train_sql: str, out_train_col: str) -> str:
     must yield ``(doc_id, text)``; output is
     ``({out_train_col}, doc_eval, n_shared)``."""
     return f"""
-    gr_ev AS (
-      SELECT doc_id + 300000 AS doc_id,
-             array_to_string(regexp_split_to_array(trim(text), '\\s+')[4:33], ' ') AS text
-      FROM documents WHERE doc_id % 13 = 0
-    ),
+    gr_ev AS ({_SQL_EVAL_WINDOWS}),
     gr_nt AS (SELECT doc_id, {_SQL_NORM} AS t FROM ({train_sql})),
     gr_wt AS (SELECT doc_id, regexp_split_to_array(t, '\\s+') AS w FROM gr_nt),
     gr_sht AS (SELECT DISTINCT doc_id AS doc, unnest({_SQL_SHINGLES13}) AS sh FROM gr_wt),
@@ -469,10 +625,9 @@ def q24_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, text FROM documents
       UNION ALL
       SELECT doc_id + 10000, text FROM documents WHERE doc_id < 50
-    ),
-    h AS (SELECT {_SQL_HEX.format(x=_SQL_NORM)} AS fp_exact, doc_id FROM u)
-    SELECT fp_exact, count(*) AS n_docs, min(doc_id) AS keep_id
-    FROM h GROUP BY fp_exact HAVING count(*) > 1
+    ),{_sql_exact_dedup_ctes("u")}
+    SELECT fpx AS fp_exact, n AS n_docs, keep AS keep_id
+    FROM fpkeep WHERE n > 1
     """,
 )
 def q25_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,7 +697,7 @@ def q60_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "q26_jaccard_pairs",
     f"""
-    WITH {_SQL_SH_TABLE},
+    WITH {_sql_shingle_ctes()},
     sz AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
     shared AS (
       SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS shared
@@ -567,37 +722,8 @@ def q26_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "q27_minhash_lsh_pairs",
     f"""
-    WITH {_SQL_SH_TABLE},
-    seeds AS (SELECT i, {_SQL_HEX.format(x="'perm:' || i")} AS c
-              FROM (SELECT unnest(range(16)) AS i)),
-    sigs AS (
-      SELECT doc, i, min(xor({_SQL_HEX.format(x="sh")}, c)) AS m
-      FROM sh, seeds GROUP BY doc, i
-    ),
-    bands AS (
-      SELECT doc, i // 4 AS band,
-             {_SQL_HEX.format(x="string_agg(m::VARCHAR, ',' ORDER BY i)")} AS bh
-      FROM sigs GROUP BY doc, i // 4
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bh = b.bh AND a.doc < b.doc
-    ),
-    sz AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS shared
-      FROM cand c
-      JOIN sh a ON a.doc = c.doc_a
-      JOIN sh b ON b.doc = c.doc_b AND b.sh = a.sh
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT doc_a, doc_b,
-           round(shared / (sa.sz + sb.sz - shared), 6) AS jaccard
-    FROM shared
-    JOIN sz sa ON sa.doc = doc_a
-    JOIN sz sb ON sb.doc = doc_b
-    WHERE round(shared / (sa.sz + sb.sz - shared), 6) >= 0.5
+    WITH {_sql_shingle_ctes()},{_sql_lsh_pairs_ctes("sh")}
+    SELECT doc_a, doc_b, jaccard FROM pairs
     """,
 )
 def q27_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -846,64 +972,39 @@ def q54_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "q66_dedup_keep_longest",
-    f"""
-    WITH RECURSIVE {_SQL_SH_TABLE},
-    seeds AS (SELECT i, {_SQL_HEX.format(x="'perm:' || i")} AS c
-              FROM (SELECT unnest(range(16)) AS i)),
-    sigs AS (
-      SELECT doc, i, min(xor({_SQL_HEX.format(x='sh')}, c)) AS m
-      FROM sh, seeds GROUP BY doc, i
-    ),
-    bands AS (
-      SELECT doc, i // 4 AS band,
-             {_SQL_HEX.format(x="string_agg(m::VARCHAR, ',' ORDER BY i)")} AS bh
-      FROM sigs GROUP BY doc, i // 4
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bh = b.bh AND a.doc < b.doc
-    ),
-    sz AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS shared
-      FROM cand c
-      JOIN sh a ON a.doc = c.doc_a
-      JOIN sh b ON b.doc = c.doc_b AND b.sh = a.sh
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM shared
-      JOIN sz sa ON sa.doc = doc_a
-      JOIN sz sb ON sb.doc = doc_b
-      WHERE round(shared / (sa.sz + sb.sz - shared), 6) >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (SELECT u AS id, least(u, min(v)) AS component FROM reach GROUP BY u),
-    ranked AS (
+def _sql_keep_longest(comp: str, p: str = "") -> str:
+    """q66's survivor policy over a component relation ``comp`` (id,
+    component): docs in no component pass through, each component keeps
+    its longest member (n_chars desc, id tiebreak)."""
+    return f"""
+    {p}ranked AS (
       SELECT d.doc_id,
              row_number() OVER (PARTITION BY c.component
                                 ORDER BY d.n_chars DESC, d.doc_id) AS rn
-      FROM documents d JOIN comp c ON c.id = d.doc_id
+      FROM documents d JOIN {comp} c ON c.id = d.doc_id
     )
     SELECT d.doc_id, d.n_chars FROM documents d
-    WHERE d.doc_id NOT IN (SELECT id FROM comp)
+    WHERE d.doc_id NOT IN (SELECT id FROM {comp})
     UNION ALL
     SELECT d.doc_id, d.n_chars FROM documents d
-    JOIN ranked r ON r.doc_id = d.doc_id AND r.rn = 1
-    """,
+    JOIN {p}ranked r ON r.doc_id = d.doc_id AND r.rn = 1
+    """
+
+
+# q55's chain: MinHash-LSH pairs closed into components, ending in
+# ``comp``; q66 and q110 reuse it with their own final projection.
+_Q55_CTES = (
+    _sql_shingle_ctes()
+    + ","
+    + _sql_lsh_pairs_ctes("sh")
+    + ","
+    + _sql_closure_ctes("pairs", "doc_a", "doc_b")
+)
+
+
+@_register(
+    "q66_dedup_keep_longest",
+    "\n    WITH RECURSIVE " + _Q55_CTES + "," + _sql_keep_longest("comp"),
 )
 def q66_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware near-dup collapse (operators/dedup.py::dedup_near_by):
@@ -918,50 +1019,9 @@ def q66_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q55_dedup_clusters",
-    f"""
-    WITH RECURSIVE {_SQL_SH_TABLE},
-    seeds AS (SELECT i, {_SQL_HEX.format(x="'perm:' || i")} AS c
-              FROM (SELECT unnest(range(16)) AS i)),
-    sigs AS (
-      SELECT doc, i, min(xor({_SQL_HEX.format(x="sh")}, c)) AS m
-      FROM sh, seeds GROUP BY doc, i
-    ),
-    bands AS (
-      SELECT doc, i // 4 AS band,
-             {_SQL_HEX.format(x="string_agg(m::VARCHAR, ',' ORDER BY i)")} AS bh
-      FROM sigs GROUP BY doc, i // 4
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bh = b.bh AND a.doc < b.doc
-    ),
-    sz AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS shared
-      FROM cand c
-      JOIN sh a ON a.doc = c.doc_a
-      JOIN sh b ON b.doc = c.doc_b AND b.sh = a.sh
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM shared
-      JOIN sz sa ON sa.doc = doc_a
-      JOIN sz sb ON sb.doc = doc_b
-      WHERE round(shared / (sa.sz + sb.sz - shared), 6) >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (SELECT u AS id, least(u, min(v)) AS component FROM reach GROUP BY u)
+    "\n    WITH RECURSIVE "
+    + _Q55_CTES
+    + """
     SELECT component AS keep_id, count(*) AS cluster_size
     FROM comp GROUP BY component HAVING count(*) > 1
     """,
@@ -991,119 +1051,59 @@ def q55_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "q56_corpus_prep",
-    """
-    WITH RECURSIVE
-    f AS (
-      SELECT doc_id,
-        length(text)::DOUBLE AS n_chars,
-        len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens,
-        length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g'))::DOUBLE AS n_punct,
-        length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE AS n_digit,
-        length(regexp_replace(text, '[^ ]', '', 'g'))::DOUBLE AS n_space
-      FROM documents
-    ),
-    g AS (
-      SELECT doc_id, n_tokens,
-        CASE WHEN n_tokens > 0 THEN (n_chars - n_space) / n_tokens ELSE 0.0 END AS avg_tok,
-        CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END AS punct_ratio,
-        CASE WHEN n_chars > 0 THEN n_digit / n_chars ELSE 0.0 END AS digit_ratio
-      FROM f
-    ),
-    q AS (
-      SELECT doc_id, n_tokens,
-        CASE WHEN n_tokens IS NULL THEN 0.0 ELSE
-        floor((least(n_tokens::DOUBLE / 64.0, 1.0) * 0.4
-              + CASE WHEN avg_tok >= 3 AND avg_tok <= 10 THEN 0.3 ELSE 0.0 END
-              + greatest(0.0, 0.15 - punct_ratio) * 2.0 / 3.0 * 1.0
-              + greatest(0.0, 0.2 - digit_ratio)) * 10000 + 0.5) / 10000
-        END AS quality_score
-      FROM g
-    ),
-    lw AS (SELECT doc_id,
-                  list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')) AS words
-           FROM documents),
-    lh AS (SELECT doc_id,
-      len(list_intersect(words, ['der','die','und','das','in','von','zu','mit','ist','den']))::BIGINT AS hits_de,
-      len(list_intersect(words, ['the','and','of','to','a','in','is','it','that','for']))::BIGINT AS hits_en,
-      len(list_intersect(words, ['el','la','de','que','y','en','un','es','se','no']))::BIGINT AS hits_es,
-      len(list_intersect(words, ['le','la','et','les','des','en','un','du','une','est']))::BIGINT AS hits_fr
-      FROM lw),
-    lp AS (SELECT doc_id,
-      CASE WHEN coalesce(greatest(hits_de, hits_en, hits_es, hits_fr), 0) = 0
-           THEN 'und'
-           WHEN hits_de = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'de'
-           WHEN hits_en = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'en'
-           WHEN hits_es = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'es'
-           ELSE 'fr' END AS lang_pred
-      FROM lh),
+def _sql_clean_ctes(src: str) -> str:
+    """q56's clean stage over ``src`` (doc_id, text): the q22 quality
+    score ≥ 0.3 and q23 English gates, then q25 exact dedup (min-id
+    survivor), ending in ``exact`` (doc_id, text, n_tokens,
+    quality_score, lang_pred)."""
+    return f"""{_sql_quality_ctes(src)},{_sql_langid_ctes(src, "l")},
     filtered AS (
       SELECT d.doc_id, d.text, q.n_tokens, q.quality_score, lp.lang_pred
-      FROM documents d
+      FROM {src} d
       JOIN q ON q.doc_id = d.doc_id
       JOIN lp ON lp.doc_id = d.doc_id
       WHERE q.quality_score >= 0.3 AND lp.lang_pred = 'en'
-    ),
-    fp AS (SELECT doc_id, ('0x' || substring(md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')), 1, 15))::BIGINT AS fpx FROM filtered),
-    keepmin AS (SELECT fpx, min(doc_id) AS keep FROM fp GROUP BY fpx),
+    ),{_sql_exact_dedup_ctes("filtered")},
     exact AS (
       SELECT fl.doc_id, fl.text, fl.n_tokens, fl.quality_score, fl.lang_pred
       FROM filtered fl
       JOIN fp ON fp.doc_id = fl.doc_id
-      JOIN keepmin km ON km.fpx = fp.fpx AND km.keep = fl.doc_id
-    ),
-    norm2 AS (SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS t FROM exact),
-    words AS (SELECT doc_id, regexp_split_to_array(t, '\\s+') AS w FROM norm2),
-    sh AS (SELECT DISTINCT doc_id AS doc, unnest(list_distinct([array_to_string(w[i:i+2], ' ') FOR i IN range(1, greatest(len(w) - 2, 1) + 1)])) AS sh FROM words),
-    seeds AS (SELECT i, ('0x' || substring(md5('perm:' || i), 1, 15))::BIGINT AS c
-              FROM (SELECT unnest(range(16)) AS i)),
-    sigs AS (
-      SELECT doc, i, min(xor(('0x' || substring(md5(sh), 1, 15))::BIGINT, c)) AS m
-      FROM sh, seeds GROUP BY doc, i
-    ),
-    bands AS (
-      SELECT doc, i // 4 AS band,
-             ('0x' || substring(md5(string_agg(m::VARCHAR, ',' ORDER BY i)), 1, 15))::BIGINT AS bh
-      FROM sigs GROUP BY doc, i // 4
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bh = b.bh AND a.doc < b.doc
-    ),
-    sz AS (SELECT doc, count(*) AS sz FROM sh GROUP BY doc),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS shared
-      FROM cand c
-      JOIN sh a ON a.doc = c.doc_a
-      JOIN sh b ON b.doc = c.doc_b AND b.sh = a.sh
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    pairs AS (
-      SELECT doc_a, doc_b FROM shared
-      JOIN sz sa ON sa.doc = doc_a
-      JOIN sz sb ON sb.doc = doc_b
-      WHERE round(shared / (sa.sz + sb.sz - shared), 6) >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (SELECT u AS id, least(u, min(v)) AS component FROM reach GROUP BY u),
-    losers AS (SELECT id FROM comp WHERE id != component)
+      JOIN fpkeep km ON km.fpx = fp.fpx AND km.keep = fl.doc_id
+    )"""
+
+
+def _sql_corpus_prep_ctes(src: str) -> str:
+    """The whole q56 chain over ``src``: the clean stage, then q27
+    MinHash-LSH pairs over ``exact`` closed into q55 components, ending
+    in ``losers`` (every non-minimum component member). Needs ``WITH
+    RECURSIVE``."""
+    return (
+        _sql_clean_ctes(src)
+        + ","
+        + _sql_shingle_ctes("exact")
+        + ","
+        + _sql_lsh_pairs_ctes("sh")
+        + ","
+        + _sql_closure_ctes("pairs", "doc_a", "doc_b")
+        + ",\n    losers AS (SELECT id FROM comp WHERE id != component)"
+    )
+
+
+# q56's per-language rollup of the near-dedup survivors (q56 and q70)
+_SQL_CORPUS_ROLLUP = """
     SELECT lang_pred, count(*) AS n_docs, sum(n_tokens)::BIGINT AS total_tokens,
            round(avg(quality_score), 4) AS avg_quality
     FROM exact
     WHERE doc_id NOT IN (SELECT id FROM losers)
     GROUP BY lang_pred ORDER BY lang_pred
-    """,
+    """
+
+
+@_register(
+    "q56_corpus_prep",
+    "\n    WITH RECURSIVE "
+    + _sql_corpus_prep_ctes("documents")
+    + _SQL_CORPUS_ROLLUP,
 )
 def q56_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone composition (plans/corpus_prep.py): quality + language
@@ -1121,12 +1121,12 @@ def q56_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_summary(prepare_training_corpus(docs))
 
 
-# q70's oracle = the cleaning prelude's CTEs spliced in front of the q56
-# capstone SQL, with the capstone's `documents` scans retargeted at the
-# cleaned CTE. Deriving it from the REGISTERED q56 string keeps one source
-# of truth: any change to the corpus-prep oracle propagates to q70.
-_Q70_PRELUDE = (
-    """
+# q70's oracle = the cleaning prelude (line dedup → markup strip → PII
+# redaction over the injected crawl), with its ``red`` relation as the
+# source of the q56 chain.
+_Q70_SQL = (
+    f"""
+    WITH RECURSIVE
     raw0 AS (
       SELECT doc_id,
         CASE WHEN doc_id % 7 = 0
@@ -1159,7 +1159,7 @@ _Q70_PRELUDE = (
              unnest(range(1, len(string_split(text, chr(10))) + 1)) AS i
       FROM raw
     ),
-    rkeyed AS (SELECT doc_id, i, line, __LINEKEY__ AS k FROM rlines),
+    rkeyed AS (SELECT doc_id, i, line, {_SQL_LINE_KEY} AS k FROM rlines),
     rfreq AS (SELECT k, count(DISTINCT doc_id) AS df FROM rkeyed GROUP BY k),
     ld AS (SELECT doc_id,
                   coalesce(string_agg(CASE WHEN df <= 10 THEN line END,
@@ -1176,18 +1176,12 @@ _Q70_PRELUDE = (
     red AS (SELECT doc_id,
               regexp_replace(
                 regexp_replace(text,
-                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}',
+                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{{2,}}',
                   '<EMAIL>', 'g'),
-                '([0-9]{1,3}[.]){3}[0-9]{1,3}', '<IP>', 'g') AS text
-            FROM ms)
-    """.replace("__LINEKEY__", _SQL_LINE_KEY)
-)
-# retarget the capstone's scans FIRST, then splice the prelude (whose own
-# raw0 CTE legitimately scans `documents` and must not be rewritten)
-_Q70_SQL = (
-    ORACLE_SQL["q56_corpus_prep"]
-    .replace("FROM documents", "FROM red")
-    .replace("WITH RECURSIVE", "WITH RECURSIVE " + _Q70_PRELUDE + ",", 1)
+                '([0-9]{{1,3}}[.]){{3}}[0-9]{{1,3}}', '<IP>', 'g') AS text
+            FROM ms),"""
+    + _sql_corpus_prep_ctes("red")
+    + _SQL_CORPUS_ROLLUP
 )
 
 
@@ -1373,13 +1367,38 @@ def q61_stratified_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sql_temperature_ctes(
+    src: str, strata: str, id_c: str, alpha: float, frac: float, salt: str
+) -> str:
+    """DuckDB CTE fragment replicating ``temperature_mix`` exactly for any
+    (source CTE, stratum, id, alpha, total_frac, salt): data-dependent
+    quotas ∝ n^alpha of ceil(frac·N), round-6 before the ceil (the float
+    firewall), md5 hash-ordered selection, null strata excluded. ONE
+    parameterization serves q71 (documents/lang) and the q113 splice
+    (curated/cluster) — finish with
+    ``SELECT ... FROM tm_r JOIN tm_q USING ({strata}) WHERE rn <= q``."""
+    hv = _SQL_HEX.format(x=f"'{salt}:' || CAST({id_c} AS VARCHAR)")
+    return f""",
+    tm_c AS (SELECT {strata}, count(*) AS n FROM {src}
+             WHERE {strata} IS NOT NULL GROUP BY {strata}),
+    tm_z AS (SELECT sum(pow(n, {alpha})) AS zsum, sum(n) AS grand FROM tm_c),
+    tm_q AS (SELECT {strata},
+                    least(n::DOUBLE,
+                          ceil(round(ceil(grand * {frac}) * pow(n, {alpha})
+                                     / zsum, 6))) AS q
+             FROM tm_c, tm_z),
+    tm_r AS (SELECT {src}.*,
+                    row_number() OVER (PARTITION BY {strata}
+                                       ORDER BY {hv}, {id_c}) AS rn
+             FROM {src} WHERE {strata} IS NOT NULL)"""
+
+
 @_register(
     "q71_temperature_mix",
-    # the temperature arithmetic is generated by _sql_temperature_ctes
-    # (defined below; registration resolves the string lazily via the
-    # placeholder swapped at module end) — ONE fragment serves q71 and
-    # the q113 splice
-    "__Q71_TEMPERATURE_SQL__",
+    "WITH d AS (SELECT doc_id, lang FROM documents)"
+    + _sql_temperature_ctes("d", "lang", "doc_id", 0.5, 0.6, "mix")
+    + """
+    SELECT doc_id, lang FROM tm_r JOIN tm_q USING (lang) WHERE rn <= q""",
 )
 def q71_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-flattened corpus mixing (operators/sampling.py::
@@ -1403,19 +1422,9 @@ def q71_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q72_SQL = (
     "WITH RECURSIVE pairs AS (\n"
     + ORACLE_SQL["q31_embedding_near_dups"]
-    + """
-    ),
-    edges AS (
-      SELECT id_a AS u, id_b AS v FROM pairs
-      UNION
-      SELECT id_b AS u, id_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (SELECT u AS id, least(u, min(v)) AS component FROM reach GROUP BY u),
+    + "\n    ),"
+    + _sql_closure_ctes("pairs", "id_a", "id_b")
+    + """,
     losers AS (SELECT id FROM comp WHERE id != component)
     SELECT vec_id FROM embeddings
     WHERE vec_id NOT IN (SELECT id FROM losers)
@@ -1516,53 +1525,80 @@ def q75_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "q77_cross_exact_substring",
-    r"""
-    WITH ev AS (
-      SELECT doc_id + 300000 AS doc_id,
-             array_to_string(regexp_split_to_array(trim(text), '\s+')[4:33], ' ') AS text
-      FROM documents WHERE doc_id % 13 = 0
-    ),
-    nt AS (SELECT doc_id,
-                  regexp_split_to_array(
-                    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                    '\s+') AS w
-           FROM documents WHERE text IS NOT NULL),
-    ne AS (SELECT doc_id,
-                  regexp_split_to_array(
-                    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                    '\s+') AS w
-           FROM ev WHERE text IS NOT NULL),
-    gt AS (
+def _sql_spans_ctes(src: str, p: str = "") -> str:
+    """Bipartite ExactSubstr: maximal verbatim runs ≥ 20 tokens that
+    ``src`` (doc_id, text) shares with the eval windows, found as 13-gram
+    position matches grouped into diagonal islands. Ends in ``{p}runs``
+    (doc_train, doc_eval, start_train, start_eval, n_tokens)."""
+
+    def grams(name: str, words: str) -> str:
+        return f"""{p}{name} AS (
       SELECT doc_id AS doc, u['pos'] AS pos, u['g'] AS g FROM (
         SELECT doc_id,
-               unnest([{'pos': i - 1,
-                        'g': array_to_string(w[i:i+12], ' ')}
+               unnest([{{'pos': i - 1,
+                        'g': array_to_string(w[i:i+12], ' ')}}
                        FOR i IN range(1, len(w) - 13 + 2)]) AS u
-        FROM nt WHERE len(w) >= 13)
-    ),
-    ge AS (
-      SELECT doc_id AS doc, u['pos'] AS pos, u['g'] AS g FROM (
-        SELECT doc_id,
-               unnest([{'pos': i - 1,
-                        'g': array_to_string(w[i:i+12], ' ')}
-                       FOR i IN range(1, len(w) - 13 + 2)]) AS u
-        FROM ne WHERE len(w) >= 13)
-    ),
-    m AS (SELECT t.doc AS doc_train, e.doc AS doc_eval,
+        FROM {p}{words} WHERE len(w) >= 13)
+    )"""
+
+    return f"""
+    {p}ev AS ({_SQL_EVAL_WINDOWS}),
+    {p}nt AS (SELECT doc_id, regexp_split_to_array({_SQL_NORM}, '\\s+') AS w
+           FROM {src} WHERE text IS NOT NULL),
+    {p}ne AS (SELECT doc_id, regexp_split_to_array({_SQL_NORM}, '\\s+') AS w
+           FROM {p}ev WHERE text IS NOT NULL),
+    {grams("gt", "nt")},
+    {grams("ge", "ne")},
+    {p}m AS (SELECT t.doc AS doc_train, e.doc AS doc_eval,
                  t.pos AS pa, e.pos AS pb, t.pos - e.pos AS diag
-          FROM gt t JOIN ge e ON t.g = e.g),
-    isl AS (SELECT *,
+          FROM {p}gt t JOIN {p}ge e ON t.g = e.g),
+    {p}isl AS (SELECT *,
                    pa - row_number() OVER (PARTITION BY doc_train, doc_eval,
                                            diag ORDER BY pa) AS island
-            FROM m),
-    runs AS (SELECT doc_train, doc_eval, min(pa) AS start_train,
+            FROM {p}m),
+    {p}runs AS (SELECT doc_train, doc_eval, min(pa) AS start_train,
                     min(pb) AS start_eval, count(*) + 12 AS n_tokens
-             FROM isl GROUP BY doc_train, doc_eval, diag, island)
+             FROM {p}isl GROUP BY doc_train, doc_eval, diag, island
+             HAVING count(*) + 12 >= 20)"""
+
+
+def _sql_span_cut_ctes(src: str, spans: str, p: str = "") -> str:
+    """q79's token-exact cut of the ``spans`` relation (doc_train,
+    start_train, n_tokens) out of ``src`` (doc_id, text). Ends in
+    ``{p}reb`` (doc, n_tokens, n_tokens_removed, clean_text), one row per
+    doc with at least one span."""
+    return f"""
+    {p}hit AS (SELECT DISTINCT doc_train AS doc FROM {spans}),
+    {p}ct AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+           FROM {src} JOIN {p}hit ON {p}hit.doc = {src}.doc_id),
+    {p}tok AS (
+      SELECT doc_id AS doc, u['pos'] AS pos, u['w'] AS tk FROM (
+        SELECT doc_id,
+               unnest([{{'pos': i - 1, 'w': w[i]}}
+                       FOR i IN range(1, len(w) + 1)]) AS u
+        FROM {p}ct)
+    ),
+    {p}cov AS (SELECT t.doc, t.pos, min(t.tk) AS tk,
+                   max(CASE WHEN t.pos >= s.start_train
+                             AND t.pos <= s.start_train + s.n_tokens - 1
+                            THEN TRUE ELSE FALSE END) AS cut
+            FROM {p}tok t LEFT JOIN {spans} s ON s.doc_train = t.doc
+            GROUP BY t.doc, t.pos),
+    {p}reb AS (SELECT doc, count(*) AS n_tokens,
+                   sum(CASE WHEN cut THEN 1 ELSE 0 END) AS n_tokens_removed,
+                   coalesce(string_agg(CASE WHEN NOT cut THEN tk END,
+                                       ' ' ORDER BY pos), '') AS clean_text
+            FROM {p}cov GROUP BY doc)"""
+
+
+@_register(
+    "q77_cross_exact_substring",
+    "\n    WITH "
+    + _sql_spans_ctes("documents")
+    + """
     SELECT doc_train, doc_eval, start_train::BIGINT AS start_train,
            start_eval::BIGINT AS start_eval, n_tokens::BIGINT AS n_tokens
-    FROM runs WHERE n_tokens >= 20
+    FROM runs
     """,
 )
 def q77_cross_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1580,35 +1616,38 @@ def q77_cross_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "q78_bigram_lm_scores",
-    r"""
-    WITH nt AS (SELECT doc_id,
-                       regexp_split_to_array(
-                         regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                         '\s+') AS w
-                FROM documents WHERE text IS NOT NULL),
-    bg AS (
+def _sql_bigram_lm_ctes(src: str, p: str = "", mat: bool = False) -> str:
+    """Add-one-smoothed bigram LM trained on ``src`` (doc_id, text) and
+    scored over it. Ends in ``{p}score`` (doc_id, n_bigrams,
+    avg_neg_logprob)."""
+    return f"""
+    {p}nt AS (SELECT doc_id, regexp_split_to_array({_SQL_NORM}, '\\s+') AS w
+           FROM {src} WHERE text IS NOT NULL),
+    {p}bg {_as(mat)} (
       SELECT doc_id AS doc, u['w1'] AS w1, u['w2'] AS w2 FROM (
         SELECT doc_id,
-               unnest([{'w1': w[i], 'w2': w[i+1]}
+               unnest([{{'w1': w[i], 'w2': w[i+1]}}
                        FOR i IN range(1, len(w))]) AS u
-        FROM nt WHERE len(w) >= 2)
+        FROM {p}nt WHERE len(w) >= 2)
     ),
-    uni AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1),
-    bi  AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2),
-    v AS (SELECT count(DISTINCT w) AS V FROM
-            (SELECT w1 AS w FROM bg UNION ALL SELECT w2 AS w FROM bg)),
-    s AS (SELECT d.doc,
+    {p}uni AS (SELECT w1, count(*) AS c1 FROM {p}bg GROUP BY w1),
+    {p}bi  AS (SELECT w1, w2, count(*) AS c2 FROM {p}bg GROUP BY w1, w2),
+    {p}v AS (SELECT count(DISTINCT w) AS V FROM
+            (SELECT w1 AS w FROM {p}bg UNION ALL SELECT w2 AS w FROM {p}bg)),
+    {p}s AS (SELECT d.doc,
                  -ln((coalesce(b.c2, 0) + 1)::DOUBLE
-                     / (coalesce(u.c1, 0) + v.V)) AS nlp
-          FROM bg d
-          LEFT JOIN bi b USING (w1, w2)
-          LEFT JOIN uni u USING (w1), v)
-    SELECT doc AS doc_id, count(*) AS n_bigrams,
-           round(avg(nlp), 4) AS avg_neg_logprob
-    FROM s GROUP BY doc
-    """,
+                     / (coalesce(u.c1, 0) + {p}v.V)) AS nlp
+          FROM {p}bg d
+          LEFT JOIN {p}bi b USING (w1, w2)
+          LEFT JOIN {p}uni u USING (w1), {p}v),
+    {p}score AS (SELECT doc AS doc_id, count(*) AS n_bigrams,
+                        round(avg(nlp), 4) AS avg_neg_logprob
+                 FROM {p}s GROUP BY doc)"""
+
+
+@_register(
+    "q78_bigram_lm_scores",
+    "\n    WITH " + _sql_bigram_lm_ctes("documents") + "\n    SELECT * FROM score\n",
 )
 def q78_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality signal (operators/text.py::bigram_lm_scores):
@@ -1621,35 +1660,14 @@ def q78_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # q79's oracle wraps the REGISTERED q77 span SQL as a CTE (the q72/q31
-# splice pattern — one source of truth for the span semantics) and applies
-# the cut: positional tokens, covered-mark via the span ranges, ordered
-# reassembly of the survivors.
+# subquery pattern) and applies the shared span cut, then keeps every doc
+# with its (clean_text, n_tokens, n_tokens_removed).
 _Q79_SQL = (
     "WITH spans AS (\n"
     + ORACLE_SQL["q77_cross_exact_substring"]
+    + "\n    ),"
+    + _sql_span_cut_ctes("documents", "spans")
     + r"""
-    ),
-    hit AS (SELECT DISTINCT doc_train AS doc FROM spans),
-    ct AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-           FROM documents JOIN hit ON hit.doc = documents.doc_id),
-    tok AS (
-      SELECT doc_id AS doc, u['pos'] AS pos, u['w'] AS tk FROM (
-        SELECT doc_id,
-               unnest([{'pos': i - 1, 'w': w[i]}
-                       FOR i IN range(1, len(w) + 1)]) AS u
-        FROM ct)
-    ),
-    cov AS (SELECT t.doc, t.pos, min(t.tk) AS tk,
-                   max(CASE WHEN t.pos >= s.start_train
-                             AND t.pos <= s.start_train + s.n_tokens - 1
-                            THEN TRUE ELSE FALSE END) AS cut
-            FROM tok t LEFT JOIN spans s ON s.doc_train = t.doc
-            GROUP BY t.doc, t.pos),
-    reb AS (SELECT doc, count(*) AS n_tokens,
-                   sum(CASE WHEN cut THEN 1 ELSE 0 END) AS n_tokens_removed,
-                   coalesce(string_agg(CASE WHEN NOT cut THEN tk END,
-                                       ' ' ORDER BY pos), '') AS clean_text
-            FROM cov GROUP BY doc)
     SELECT d.doc_id,
            coalesce(r.clean_text, d.text) AS clean_text,
            coalesce(r.n_tokens,
@@ -2139,37 +2157,46 @@ def q59_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "q80_dsir_importance",
-    r"""
-    WITH nt AS (SELECT doc_id,
-                       list_filter(regexp_split_to_array(
-                         regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                         ' '), x -> x <> '') AS w
-                FROM documents WHERE text IS NOT NULL),
-    g AS (
-      SELECT doc_id AS doc, unnest(w) AS g FROM nt WHERE len(w) >= 1
+def _sql_dsir_ctes(src: str, p: str = "", mat: bool = False) -> str:
+    """DSIR log importance weights of ``src`` (doc_id, text): hashed
+    uni+bigram buckets (4096, add-one smoothing), English ``documents``
+    as the target. Ends in ``{p}w8`` (doc_id, n_grams, log_importance),
+    one row per doc with at least one gram."""
+    return rf"""
+    {p}nt AS (SELECT doc_id,
+                       list_filter(regexp_split_to_array({_SQL_NORM}, ' '),
+                                   x -> x <> '') AS w
+                FROM {src} WHERE text IS NOT NULL),
+    {p}g AS (
+      SELECT doc_id AS doc, unnest(w) AS g FROM {p}nt WHERE len(w) >= 1
       UNION ALL
       SELECT doc_id AS doc,
              unnest([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS g
-      FROM nt WHERE len(w) >= 2
+      FROM {p}nt WHERE len(w) >= 2
     ),
-    b AS (SELECT doc, ('0x' || substring(md5(g), 1, 15))::BIGINT % 4096 AS b
-          FROM g),
-    tgt AS (SELECT b.doc, b.b FROM b
-            JOIN documents d ON d.doc_id = b.doc WHERE d.lang = 'en'),
-    rs AS (SELECT b, count(*) AS cr FROM b GROUP BY b),
-    ts AS (SELECT b, count(*) AS ct FROM tgt GROUP BY b),
-    tot AS (SELECT (SELECT count(*) FROM b) AS nr,
-                   (SELECT count(*) FROM tgt) AS nt),
-    sc AS (SELECT d.doc, count(*) AS n_grams,
-                  sum(ln(coalesce(ts.ct, 0) + 1) - ln(rs.cr + 1)) AS s
-           FROM b d JOIN rs USING (b) LEFT JOIN ts USING (b)
-           GROUP BY d.doc),
-    w8 AS (SELECT doc, n_grams,
-                  round(s + n_grams * (ln(nr + 4096) - ln(nt + 4096)), 4)
-                    AS log_importance
-           FROM sc, tot),
+    {p}b {_as(mat)} (SELECT doc, {_SQL_HEX.format(x="g")} % 4096 AS b
+                     FROM {p}g),
+    {p}tgt AS (SELECT x.doc, x.b FROM {p}b x
+               JOIN documents d ON d.doc_id = x.doc WHERE d.lang = 'en'),
+    {p}rs AS (SELECT b, count(*) AS cr FROM {p}b GROUP BY b),
+    {p}ts AS (SELECT b, count(*) AS ct FROM {p}tgt GROUP BY b),
+    {p}tot AS (SELECT (SELECT count(*) FROM {p}b) AS nr,
+                      (SELECT count(*) FROM {p}tgt) AS nt),
+    {p}sc AS (SELECT d.doc, count(*) AS n_grams,
+                     sum(ln(coalesce(t.ct, 0) + 1) - ln(r.cr + 1)) AS s
+              FROM {p}b d JOIN {p}rs r USING (b) LEFT JOIN {p}ts t USING (b)
+              GROUP BY d.doc),
+    {p}w8 {_as(mat)} (SELECT doc AS doc_id, n_grams,
+                     round(s + n_grams * (ln(nr + 4096) - ln(nt + 4096)), 4)
+                       AS log_importance
+              FROM {p}sc, {p}tot)"""
+
+
+@_register(
+    "q80_dsir_importance",
+    "\n    WITH "
+    + _sql_dsir_ctes("documents")
+    + """,
     w9 AS (SELECT *, round(log_importance / n_grams, 4) AS avg_logratio
            FROM w8),
     mr AS (SELECT round(avg(avg_logratio), 6) AS mean_ratio FROM w9)
@@ -2178,7 +2205,7 @@ def q59_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(w9.log_importance, 0.0) AS log_importance,
            coalesce(w9.avg_logratio, 0.0) AS avg_logratio,
            coalesce(w9.avg_logratio > mr.mean_ratio, FALSE) AS keep
-    FROM documents d LEFT JOIN w9 ON w9.doc = d.doc_id, mr
+    FROM documents d LEFT JOIN w9 ON w9.doc_id = d.doc_id, mr
     """,
 )
 def q80_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2199,22 +2226,11 @@ def q80_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_log_weights(raw, target, "doc_id", "text", n_buckets=4096)
 
 
-@_register(
-    "q81_gopher_rules",
-    r"""
-    WITH raw AS (
-      SELECT doc_id,
-        CASE WHEN doc_id % 9 = 0
-             THEN base || chr(10) || 'see details below...' || chr(10) || '...'
-             ELSE base END AS text
-      FROM (
-        SELECT doc_id,
-          CASE WHEN doc_id % 6 = 0
-               THEN '- alpha beta' || chr(10) || '- gamma delta' || chr(10) || text
-               ELSE base_text END AS base
-        FROM (SELECT doc_id, text AS base_text, text FROM documents))
-    ),
-    m AS (
+def _sql_gopher_ctes(src: str, p: str = "") -> str:
+    """The Gopher quality-rule battery over ``src`` (doc_id, text) with
+    min_stopwords=1. Ends in ``{p}k``: the per-doc metrics and keep."""
+    return rf"""
+    {p}m AS (
       SELECT doc_id,
         (CASE WHEN text IS NULL OR trim(text) = '' THEN 0
               ELSE len(list_filter(regexp_split_to_array(text, '\s+'),
@@ -2237,9 +2253,9 @@ def q80_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
           list_distinct(regexp_split_to_array(lower(trim(text)), '\s+')),
           ['the','be','to','of','and','that','have','with'])), 0)::BIGINT
           AS n_req_stopwords
-      FROM raw
+      FROM {src}
     ),
-    r AS (
+    {p}r AS (
       SELECT doc_id, n_words,
         round(nsc::DOUBLE / greatest(n_words, 1), 4) AS mean_word_len,
         round(n_sym::DOUBLE / greatest(n_words, 1), 4) AS symbol_word_ratio,
@@ -2247,9 +2263,9 @@ def q80_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         round(n_ell::DOUBLE / n_lines, 4) AS ellipsis_line_frac,
         round(n_alpha::DOUBLE / greatest(n_words, 1), 4) AS alpha_word_frac,
         n_req_stopwords
-      FROM m
-    )
-    SELECT *,
+      FROM {p}m
+    ),
+    {p}k AS (SELECT *,
       (n_words >= 50 AND n_words <= 100000
        AND mean_word_len >= 3 AND mean_word_len <= 10
        AND symbol_word_ratio <= 0.1
@@ -2257,7 +2273,27 @@ def q80_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
        AND ellipsis_line_frac <= 0.3
        AND alpha_word_frac >= 0.8
        AND n_req_stopwords >= 1) AS keep
-    FROM r
+      FROM {p}r)"""
+
+
+@_register(
+    "q81_gopher_rules",
+    r"""
+    WITH raw AS (
+      SELECT doc_id,
+        CASE WHEN doc_id % 9 = 0
+             THEN base || chr(10) || 'see details below...' || chr(10) || '...'
+             ELSE base END AS text
+      FROM (
+        SELECT doc_id,
+          CASE WHEN doc_id % 6 = 0
+               THEN '- alpha beta' || chr(10) || '- gamma delta' || chr(10) || text
+               ELSE base_text END AS base
+        FROM (SELECT doc_id, text AS base_text, text FROM documents))
+    ),"""
+    + _sql_gopher_ctes("raw")
+    + """
+    SELECT * FROM k
     """,
 )
 def q81_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2292,24 +2328,30 @@ def q81_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.gopher_rules(injected, min_stopwords=1)
 
 
-# q82's oracle wraps the REGISTERED q80 weight SQL as a CTE (the q79/q72
-# splice pattern — one source of truth for the weight semantics) and
-# applies the deterministic Gumbel-top-k selection.
-_Q82_SQL = (
-    "WITH w AS (\n"
-    + ORACLE_SQL["q80_dsir_importance"]
-    + r"""
-    )
+def _sql_gumbel_select(src: str, salt: str) -> str:
+    """Derandomized Gumbel-top-100 draw over ``src`` (doc_id, n_grams,
+    log_importance): md5('{salt}:id') as the 2^60 uniform, zero-gram docs
+    excluded."""
+    u = _SQL_HEX.format(x=f"'{salt}:' || doc_id::VARCHAR")
+    return f"""
     SELECT doc_id, log_importance,
            round(log_importance
-                 - ln(-ln((('0x' || substring(md5('dsir:' || doc_id::VARCHAR),
-                                              1, 15))::BIGINT + 0.5)
+                 - ln(-ln(({u} + 0.5)
                           / 1152921504606846976.0)), 4) AS gumbel_score
-    FROM w
+    FROM {src}
     WHERE n_grams > 0
     ORDER BY gumbel_score DESC, doc_id
     LIMIT 100
     """
+
+
+# q82's oracle wraps the REGISTERED q80 weight SQL as a CTE (the q79/q72
+# subquery pattern) and applies the shared Gumbel-top-k selection.
+_Q82_SQL = (
+    "WITH w AS (\n"
+    + ORACLE_SQL["q80_dsir_importance"]
+    + "\n    )"
+    + _sql_gumbel_select("w", "dsir")
 )
 
 
@@ -2347,6 +2389,34 @@ _Q83_TAIL = (
 )
 
 
+def _sql_c4_ctes(src: str, p: str = "") -> str:
+    """The C4 line rules and page kills over ``src`` (doc_id, text). Ends
+    in ``{p}r`` (doc_id, clean_text, n_lines, n_lines_kept, n_sentences,
+    bad) for every non-null text."""
+    return rf"""
+    {p}m AS (
+      SELECT doc_id,
+        string_split(text, chr(10)) AS lines,
+        list_filter(string_split(text, chr(10)),
+          l -> regexp_matches(l, '[.!?"'']\s*$')
+               AND len(list_filter(regexp_split_to_array(l, '\s+'),
+                                   x -> x <> '')) >= 3
+               AND NOT contains(lower(l), 'javascript')) AS kept,
+        (contains(lower(text), 'lorem ipsum') OR contains(text, '{{')) AS bad
+      FROM {src} WHERE text IS NOT NULL
+    ),
+    {p}r AS (
+      SELECT doc_id,
+        array_to_string(kept, chr(10)) AS clean_text,
+        len(lines)::BIGINT AS n_lines,
+        len(kept)::BIGINT AS n_lines_kept,
+        len(regexp_extract_all(array_to_string(kept, chr(10)), '[.!?]'))::BIGINT
+          AS n_sentences,
+        bad
+      FROM {p}m
+    )"""
+
+
 @_register(
     "q83_c4_rules",
     rf"""
@@ -2363,28 +2433,9 @@ _Q83_TAIL = (
         || CASE WHEN doc_id % 19 = 0 THEN chr(10) || 'function() {{' ELSE '' END
         AS text
       FROM documents
-    ),
-    m AS (
-      SELECT doc_id,
-        string_split(text, chr(10)) AS lines,
-        list_filter(string_split(text, chr(10)),
-          l -> regexp_matches(l, '[.!?"'']\s*$')
-               AND len(list_filter(regexp_split_to_array(l, '\s+'),
-                                   x -> x <> '')) >= 3
-               AND NOT contains(lower(l), 'javascript')) AS kept,
-        (contains(lower(text), 'lorem ipsum') OR contains(text, '{{')) AS bad
-      FROM raw WHERE text IS NOT NULL
-    ),
-    r AS (
-      SELECT doc_id,
-        array_to_string(kept, chr(10)) AS clean_text,
-        len(lines)::BIGINT AS n_lines,
-        len(kept)::BIGINT AS n_lines_kept,
-        len(regexp_extract_all(array_to_string(kept, chr(10)), '[.!?]'))::BIGINT
-          AS n_sentences,
-        bad
-      FROM m
-    )
+    ),"""
+    + _sql_c4_ctes("raw")
+    + """
     SELECT d.doc_id,
            coalesce(r.clean_text, '') AS clean_text,
            coalesce(r.n_lines, 0) AS n_lines,
@@ -2985,6 +3036,63 @@ def q97_eval_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hash_sample_per_group(docs, "lang", "doc_id", n=3, salt="eval")
 
 
+def _sql_repetition_ctes(src: str, p: str = "", mat: bool = False) -> str:
+    """Gopher's repetition signals over ``src`` (doc_id, text): duplicate
+    line fractions and top-2-gram / duplicate-5-gram char coverage. Ends
+    in ``{p}k``: the four fractions and keep, for every non-blank text."""
+    return rf"""
+    {p}nn {_as(mat)} (SELECT doc_id, text, greatest(length(text), 1) AS chars
+           FROM {src} WHERE text IS NOT NULL AND trim(text) <> ''),
+    {p}l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM {p}nn),
+    {p}lc AS (SELECT doc_id, line, count(*) AS c FROM {p}l GROUP BY 1, 2),
+    {p}ls AS (SELECT doc_id, sum(c) AS n_lines, count(*) AS n_distinct,
+                  sum(CASE WHEN c > 1 THEN (c - 1) * length(line)
+                           ELSE 0 END) AS dup_line_chars
+           FROM {p}lc GROUP BY doc_id),
+    {p}w AS (SELECT doc_id, chars,
+                 list_filter(regexp_split_to_array(
+                   regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
+                   x -> x <> '') AS w
+          FROM {p}nn),
+    {p}g2 AS (SELECT doc_id, unnest([array_to_string(w[i:i+1], ' ')
+                   FOR i IN range(1, greatest(len(w) - 1, 1) + 1)]) AS g
+           FROM {p}w WHERE len(w) >= 1),
+    {p}g5 AS (SELECT doc_id, unnest([array_to_string(w[i:i+4], ' ')
+                   FOR i IN range(1, greatest(len(w) - 4, 1) + 1)]) AS g
+           FROM {p}w WHERE len(w) >= 1),
+    {p}t2 AS (SELECT doc_id, c * length(g) AS top2_chars,
+                  row_number() OVER (PARTITION BY doc_id
+                                     ORDER BY c DESC, g) AS rn
+           FROM (SELECT doc_id, g, count(*) AS c FROM {p}g2
+                 WHERE g <> '' GROUP BY 1, 2)),
+    {p}d5 AS (SELECT doc_id,
+                  sum(CASE WHEN c > 1 THEN c * length(g) ELSE 0 END)
+                    AS dup5_chars
+           FROM (SELECT doc_id, g, count(*) AS c FROM {p}g5
+                 WHERE g <> '' GROUP BY 1, 2)
+           GROUP BY doc_id),
+    {p}m AS (
+      SELECT nn.doc_id,
+        round((ls.n_lines - ls.n_distinct)::DOUBLE / ls.n_lines, 4)
+          AS dup_line_frac,
+        round(coalesce(ls.dup_line_chars, 0)::DOUBLE / nn.chars, 4)
+          AS dup_line_char_frac,
+        round(least(coalesce(t2.top2_chars, 0)::DOUBLE / nn.chars, 1.0), 4)
+          AS top_2gram_char_frac,
+        round(least(coalesce(d5.dup5_chars, 0)::DOUBLE / nn.chars, 1.0), 4)
+          AS dup_5gram_char_frac
+      FROM {p}nn nn
+      LEFT JOIN {p}ls ls ON ls.doc_id = nn.doc_id
+      LEFT JOIN {p}t2 t2 ON t2.doc_id = nn.doc_id AND t2.rn = 1
+      LEFT JOIN {p}d5 d5 ON d5.doc_id = nn.doc_id
+    ),
+    {p}k AS (SELECT *,
+      (dup_line_frac <= 0.3 AND dup_line_char_frac <= 0.2
+       AND top_2gram_char_frac <= 0.2 AND dup_5gram_char_frac <= 0.15)
+        AS keep
+      FROM {p}m)"""
+
+
 @_register(
     "q86_gopher_repetition",
     r"""
@@ -2998,57 +3106,10 @@ def q97_eval_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         || CASE WHEN doc_id % 9 = 0
                 THEN repeat(' one two three four five', 3) ELSE '' END AS text
       FROM documents
-    ),
-    nn AS (SELECT doc_id, text, greatest(length(text), 1) AS chars
-           FROM raw WHERE text IS NOT NULL AND trim(text) <> ''),
-    l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM nn),
-    lc AS (SELECT doc_id, line, count(*) AS c FROM l GROUP BY 1, 2),
-    ls AS (SELECT doc_id, sum(c) AS n_lines, count(*) AS n_distinct,
-                  sum(CASE WHEN c > 1 THEN (c - 1) * length(line)
-                           ELSE 0 END) AS dup_line_chars
-           FROM lc GROUP BY doc_id),
-    w AS (SELECT doc_id, chars,
-                 list_filter(regexp_split_to_array(
-                   regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-                   x -> x <> '') AS w
-          FROM nn),
-    g2 AS (SELECT doc_id, unnest([array_to_string(w[i:i+1], ' ')
-                   FOR i IN range(1, greatest(len(w) - 1, 1) + 1)]) AS g
-           FROM w WHERE len(w) >= 1),
-    g5 AS (SELECT doc_id, unnest([array_to_string(w[i:i+4], ' ')
-                   FOR i IN range(1, greatest(len(w) - 4, 1) + 1)]) AS g
-           FROM w WHERE len(w) >= 1),
-    t2 AS (SELECT doc_id, c * length(g) AS top2_chars,
-                  row_number() OVER (PARTITION BY doc_id
-                                     ORDER BY c DESC, g) AS rn
-           FROM (SELECT doc_id, g, count(*) AS c FROM g2
-                 WHERE g <> '' GROUP BY 1, 2)),
-    d5 AS (SELECT doc_id,
-                  sum(CASE WHEN c > 1 THEN c * length(g) ELSE 0 END)
-                    AS dup5_chars
-           FROM (SELECT doc_id, g, count(*) AS c FROM g5
-                 WHERE g <> '' GROUP BY 1, 2)
-           GROUP BY doc_id),
-    m AS (
-      SELECT nn.doc_id,
-        round((ls.n_lines - ls.n_distinct)::DOUBLE / ls.n_lines, 4)
-          AS dup_line_frac,
-        round(coalesce(ls.dup_line_chars, 0)::DOUBLE / nn.chars, 4)
-          AS dup_line_char_frac,
-        round(least(coalesce(t2.top2_chars, 0)::DOUBLE / nn.chars, 1.0), 4)
-          AS top_2gram_char_frac,
-        round(least(coalesce(d5.dup5_chars, 0)::DOUBLE / nn.chars, 1.0), 4)
-          AS dup_5gram_char_frac
-      FROM nn
-      LEFT JOIN ls ON ls.doc_id = nn.doc_id
-      LEFT JOIN t2 ON t2.doc_id = nn.doc_id AND t2.rn = 1
-      LEFT JOIN d5 ON d5.doc_id = nn.doc_id
-    )
-    SELECT *,
-      (dup_line_frac <= 0.3 AND dup_line_char_frac <= 0.2
-       AND top_2gram_char_frac <= 0.2 AND dup_5gram_char_frac <= 0.15)
-        AS keep
-    FROM m
+    ),"""
+    + _sql_repetition_ctes("raw")
+    + """
+    SELECT * FROM k
     UNION ALL
     SELECT doc_id, 0.0, 0.0, 0.0, 0.0, FALSE
     FROM raw WHERE text IS NULL OR trim(text) = ''
@@ -3083,22 +3144,18 @@ def q86_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.gopher_repetition(injected)
 
 
-# q87's oracle replays the whole composed pretrain pipeline in SQL. Each
-# stage block is the REGISTERED per-operator oracle's CTE body (q83 C4,
-# q81 Gopher, q86 repetition, q78 bigram-LM, q56 exact+near dedup, q77
-# spans, q79 cut, q80 DSIR, q82 Gumbel, q63 packing) retargeted at the
-# previous stage's CTE and prefixed to avoid name clashes — the q70/q79
-# splice discipline, written out explicitly because ten fragments cannot
-# be composed by string surgery on `FROM documents`.
-#
-# DRIFT GUARD: these blocks are COPIES and must track fragment fixes by
-# hand (the r7 q62 trim fix proved they silently drift). Every fragment's
-# load-bearing constants/idioms are pinned in BOTH places by
-# tests/test_oracle_parity.py::test_q87_oracle_fragment_pins — if you
-# correct a per-operator oracle, port the fix to the matching stage block
-# here and keep the pin table in sync.
-_Q87_SQL = rf"""
-    WITH RECURSIVE
+# q87's oracle replays the whole composed pretrain pipeline in SQL. Every
+# stage is the builder its per-operator oracle is generated from (q83 C4,
+# q81 Gopher, q86 repetition, q78 bigram LM, q25 exact dedup, q26/q27/q55
+# near dedup, q77 spans, q79 cut, q80 DSIR, q82 Gumbel, q63 packing), run
+# over the previous stage under its own name prefix; what belongs to q87
+# alone is the injection, the stage filters s0..s5/cut/gsel and the final
+# projection.
+_Q87_SQL = (
+    "\n    WITH RECURSIVE"
+    + ",".join(
+        [
+            rf"""
     inj AS (
       SELECT doc_id,
         text || '.' || chr(10) || 'too short.' || chr(10) || '{_Q83_TAIL}'
@@ -3109,319 +3166,69 @@ _Q87_SQL = rf"""
         || CASE WHEN doc_id % 19 = 0 THEN chr(10) || 'function() {{' ELSE '' END
         AS text
       FROM documents
-    ),
-    -- stage 1: C4 line rules + page gates (q83 semantics). Page kills
-    -- (bad) must test the RAW injected page, so reference inj.text
-    -- explicitly — an unqualified `text` here would silently depend on
-    -- DuckDB resolving the base column over the same-SELECT lateral
-    -- alias `AS text` that carries the CLEANED lines.
-    c4 AS (
-      SELECT doc_id,
-        array_to_string(list_filter(string_split(inj.text, chr(10)),
-          l -> regexp_matches(l, '[.!?"'']\s*$')
-               AND len(list_filter(regexp_split_to_array(l, '\s+'),
-                                   x -> x <> '')) >= 3
-               AND NOT contains(lower(l), 'javascript')), chr(10)) AS text,
-        (contains(lower(inj.text), 'lorem ipsum')
-         OR contains(inj.text, '{{')) AS bad
-      FROM inj WHERE inj.text IS NOT NULL
-    ),
-    s0 AS MATERIALIZED (SELECT doc_id, text FROM c4
-           WHERE NOT bad AND len(regexp_extract_all(text, '[.!?]')) >= 5),
-    -- stage 2: Gopher quality rules, min_stopwords=1 (q81 semantics)
-    gm AS (
-      SELECT doc_id,
-        (CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-              ELSE len(list_filter(regexp_split_to_array(text, '\s+'),
-                                   x -> x <> '')) END)::BIGINT AS n_words,
-        CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             ELSE length(regexp_replace(text, '\s', '', 'g')) END AS nsc,
-        coalesce(len(regexp_extract_all(text, '#|\.\.\.|…')), 0) AS n_sym,
-        greatest(CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-                      ELSE len(string_split(text, chr(10))) END, 1) AS n_lines,
-        CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             ELSE len(list_filter(string_split(text, chr(10)),
-                                  x -> regexp_matches(x, '^\s*[-*•]'))) END AS n_bullet,
-        CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             ELSE len(list_filter(string_split(text, chr(10)),
-                                  x -> regexp_matches(x, '(\.\.\.|…)\s*$'))) END AS n_ell,
-        CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             ELSE len(list_filter(regexp_split_to_array(text, '\s+'),
-                                  x -> regexp_matches(x, '[A-Za-z]'))) END AS n_alpha,
-        coalesce(len(list_intersect(
-          list_distinct(regexp_split_to_array(lower(trim(text)), '\s+')),
-          ['the','be','to','of','and','that','have','with'])), 0)::BIGINT
-          AS n_req_stopwords
-      FROM s0
-    ),
-    gk AS (
-      SELECT doc_id FROM (
-        SELECT doc_id, n_words,
-          round(nsc::DOUBLE / greatest(n_words, 1), 4) AS mwl,
-          round(n_sym::DOUBLE / greatest(n_words, 1), 4) AS swr,
-          round(n_bullet::DOUBLE / n_lines, 4) AS blf,
-          round(n_ell::DOUBLE / n_lines, 4) AS elf,
-          round(n_alpha::DOUBLE / greatest(n_words, 1), 4) AS awf,
-          n_req_stopwords
-        FROM gm)
-      WHERE n_words >= 50 AND n_words <= 100000
-        AND mwl >= 3 AND mwl <= 10 AND swr <= 0.1 AND blf <= 0.9
-        AND elf <= 0.3 AND awf >= 0.8 AND n_req_stopwords >= 1
-    ),
-    s1 AS MATERIALIZED (SELECT s0.* FROM s0 JOIN gk USING (doc_id)),
-    -- stage 3: Gopher repetition signals (q86 semantics)
-    rnn AS MATERIALIZED (SELECT doc_id, text, greatest(length(text), 1) AS chars
-            FROM s1 WHERE text IS NOT NULL AND trim(text) <> ''),
-    rl AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM rnn),
-    rlc AS (SELECT doc_id, line, count(*) AS c FROM rl GROUP BY 1, 2),
-    rls AS (SELECT doc_id, sum(c) AS n_lines, count(*) AS n_distinct,
-                   sum(CASE WHEN c > 1 THEN (c - 1) * length(line)
-                            ELSE 0 END) AS dup_line_chars
-            FROM rlc GROUP BY doc_id),
-    rw AS (SELECT doc_id, chars,
-                  list_filter(regexp_split_to_array(
-                    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-                    x -> x <> '') AS w
-           FROM rnn),
-    rg2 AS (SELECT doc_id, unnest([array_to_string(w[i:i+1], ' ')
-                    FOR i IN range(1, greatest(len(w) - 1, 1) + 1)]) AS g
-            FROM rw WHERE len(w) >= 1),
-    rg5 AS (SELECT doc_id, unnest([array_to_string(w[i:i+4], ' ')
-                    FOR i IN range(1, greatest(len(w) - 4, 1) + 1)]) AS g
-            FROM rw WHERE len(w) >= 1),
-    rt2 AS (SELECT doc_id, c * length(g) AS top2_chars,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY c DESC, g) AS rn
-            FROM (SELECT doc_id, g, count(*) AS c FROM rg2
-                  WHERE g <> '' GROUP BY 1, 2)),
-    rd5 AS (SELECT doc_id,
-                   sum(CASE WHEN c > 1 THEN c * length(g) ELSE 0 END)
-                     AS dup5_chars
-            FROM (SELECT doc_id, g, count(*) AS c FROM rg5
-                  WHERE g <> '' GROUP BY 1, 2)
-            GROUP BY doc_id),
-    rk AS (
-      SELECT rnn.doc_id FROM rnn
-      LEFT JOIN rls ON rls.doc_id = rnn.doc_id
-      LEFT JOIN rt2 ON rt2.doc_id = rnn.doc_id AND rt2.rn = 1
-      LEFT JOIN rd5 ON rd5.doc_id = rnn.doc_id
-      WHERE round((rls.n_lines - rls.n_distinct)::DOUBLE / rls.n_lines, 4) <= 0.3
-        AND round(coalesce(rls.dup_line_chars, 0)::DOUBLE / rnn.chars, 4) <= 0.2
-        AND round(least(coalesce(rt2.top2_chars, 0)::DOUBLE / rnn.chars, 1.0), 4) <= 0.2
-        AND round(least(coalesce(rd5.dup5_chars, 0)::DOUBLE / rnn.chars, 1.0), 4) <= 0.15
-    ),
-    s2 AS MATERIALIZED (SELECT s1.* FROM s1 JOIN rk USING (doc_id)),
-    -- stage 4: self-trained bigram-LM gate at the corpus mean (q78)
-    lnt AS (SELECT doc_id,
-                   regexp_split_to_array(
-                     regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                     '\s+') AS w
-            FROM s2 WHERE text IS NOT NULL),
-    lbg AS MATERIALIZED (
-      SELECT doc_id AS doc, u['w1'] AS w1, u['w2'] AS w2 FROM (
-        SELECT doc_id,
-               unnest([{{'w1': w[i], 'w2': w[i+1]}}
-                       FOR i IN range(1, len(w))]) AS u
-        FROM lnt WHERE len(w) >= 2)
-    ),
-    luni AS (SELECT w1, count(*) AS c1 FROM lbg GROUP BY w1),
-    lbi  AS (SELECT w1, w2, count(*) AS c2 FROM lbg GROUP BY w1, w2),
-    lv AS (SELECT count(DISTINCT w) AS V FROM
-             (SELECT w1 AS w FROM lbg UNION ALL SELECT w2 AS w FROM lbg)),
-    lsc AS (SELECT d.doc,
-                   -ln((coalesce(b.c2, 0) + 1)::DOUBLE
-                       / (coalesce(u.c1, 0) + lv.V)) AS nlp
-            FROM lbg d
-            LEFT JOIN lbi b USING (w1, w2)
-            LEFT JOIN luni u USING (w1), lv),
-    lscore AS (SELECT doc AS doc_id, round(avg(nlp), 4) AS anl
-               FROM lsc GROUP BY doc),
-    lmean AS (SELECT round(avg(anl), 6) AS m FROM lscore),
-    s3 AS MATERIALIZED (SELECT s2.* FROM s2
-           JOIN lscore USING (doc_id), lmean WHERE lscore.anl <= lmean.m),
-    -- stage 5: exact dedup, min-id survivor (q56/q25)
-    efp AS (SELECT doc_id,
-                   ('0x' || substring(md5(regexp_replace(lower(trim(text)),
-                     '\s+', ' ', 'g')), 1, 15))::BIGINT AS fpx
-            FROM s3),
-    ekeep AS (SELECT fpx, min(doc_id) AS keep FROM efp GROUP BY fpx),
-    s4 AS MATERIALIZED (SELECT s3.* FROM s3
-           JOIN efp USING (doc_id)
-           JOIN ekeep ON ekeep.fpx = efp.fpx AND ekeep.keep = s3.doc_id),
-    -- stage 6: MinHash-LSH near dedup, min-id survivor (q56/q27/q55)
-    nnorm AS (SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t FROM s4),
-    nwords AS (SELECT doc_id, regexp_split_to_array(t, '\s+') AS w FROM nnorm),
-    nsh AS MATERIALIZED (SELECT DISTINCT doc_id AS doc,
-                   unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                     FOR i IN range(1, greatest(len(w) - 2, 1) + 1)])) AS sh
-            FROM nwords),
-    nseeds AS (SELECT i, ('0x' || substring(md5('perm:' || i), 1, 15))::BIGINT AS c
-               FROM (SELECT unnest(range(16)) AS i)),
-    nsigs AS (
-      SELECT doc, i, min(xor(('0x' || substring(md5(sh), 1, 15))::BIGINT, c)) AS m
-      FROM nsh, nseeds GROUP BY doc, i
-    ),
-    nbands AS (
-      SELECT doc, i // 4 AS band,
-             ('0x' || substring(md5(string_agg(m::VARCHAR, ',' ORDER BY i)), 1, 15))::BIGINT AS bh
-      FROM nsigs GROUP BY doc, i // 4
-    ),
-    ncand AS (
-      SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-      FROM nbands a JOIN nbands b
-        ON a.band = b.band AND a.bh = b.bh AND a.doc < b.doc
-    ),
-    nsz AS (SELECT doc, count(*) AS sz FROM nsh GROUP BY doc),
-    nshared AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS shared
-      FROM ncand c
-      JOIN nsh a ON a.doc = c.doc_a
-      JOIN nsh b ON b.doc = c.doc_b AND b.sh = a.sh
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    npairs AS (
-      SELECT doc_a, doc_b FROM nshared
-      JOIN nsz sa ON sa.doc = doc_a
-      JOIN nsz sb ON sb.doc = doc_b
-      WHERE round(shared / (sa.sz + sb.sz - shared), 6) >= 0.5
-    ),
-    nedges AS (
-      SELECT doc_a AS u, doc_b AS v FROM npairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM npairs
-    ),
-    nreach(u, v) AS (
-      SELECT u, v FROM nedges
-      UNION
-      SELECT r.u, e.v FROM nreach r JOIN nedges e ON r.v = e.u
-    ),
-    ncomp AS (SELECT u AS id, least(u, min(v)) AS component FROM nreach GROUP BY u),
-    nlosers AS (SELECT id FROM ncomp WHERE id != component),
-    s5 AS MATERIALIZED (SELECT s4.* FROM s4 WHERE doc_id NOT IN (SELECT id FROM nlosers)),
-    -- stage 7: ExactSubstr spans vs the eval set + token-exact cut (q77+q79)
-    ev AS (
-      SELECT doc_id + 300000 AS doc_id,
-             array_to_string(regexp_split_to_array(trim(text), '\s+')[4:33], ' ') AS text
-      FROM documents WHERE doc_id % 13 = 0
-    ),
-    xnt AS (SELECT doc_id,
-                   regexp_split_to_array(
-                     regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                     '\s+') AS w
-            FROM s5 WHERE text IS NOT NULL),
-    xne AS (SELECT doc_id,
-                   regexp_split_to_array(
-                     regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                     '\s+') AS w
-            FROM ev WHERE text IS NOT NULL),
-    xgt AS (
-      SELECT doc_id AS doc, u['pos'] AS pos, u['g'] AS g FROM (
-        SELECT doc_id,
-               unnest([{{'pos': i - 1,
-                        'g': array_to_string(w[i:i+12], ' ')}}
-                       FOR i IN range(1, len(w) - 13 + 2)]) AS u
-        FROM xnt WHERE len(w) >= 13)
-    ),
-    xge AS (
-      SELECT doc_id AS doc, u['pos'] AS pos, u['g'] AS g FROM (
-        SELECT doc_id,
-               unnest([{{'pos': i - 1,
-                        'g': array_to_string(w[i:i+12], ' ')}}
-                       FOR i IN range(1, len(w) - 13 + 2)]) AS u
-        FROM xne WHERE len(w) >= 13)
-    ),
-    xm AS (SELECT t.doc AS doc_train, e.doc AS doc_eval,
-                  t.pos AS pa, e.pos AS pb, t.pos - e.pos AS diag
-           FROM xgt t JOIN xge e ON t.g = e.g),
-    xisl AS (SELECT *,
-                    pa - row_number() OVER (PARTITION BY doc_train, doc_eval,
-                                            diag ORDER BY pa) AS island
-             FROM xm),
-    xruns AS (SELECT doc_train, min(pa) AS start_train, count(*) + 12 AS n_tokens
-              FROM xisl GROUP BY doc_train, doc_eval, diag, island
-              HAVING count(*) + 12 >= 20),
-    xhit AS (SELECT DISTINCT doc_train AS doc FROM xruns),
-    xct AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-            FROM s5 JOIN xhit ON xhit.doc = s5.doc_id),
-    xtok AS (
-      SELECT doc_id AS doc, u['pos'] AS pos, u['w'] AS tk FROM (
-        SELECT doc_id,
-               unnest([{{'pos': i - 1, 'w': w[i]}}
-                       FOR i IN range(1, len(w) + 1)]) AS u
-        FROM xct)
-    ),
-    xcov AS (SELECT t.doc, t.pos, min(t.tk) AS tk,
-                    max(CASE WHEN t.pos >= s.start_train
-                              AND t.pos <= s.start_train + s.n_tokens - 1
-                             THEN TRUE ELSE FALSE END) AS cut
-             FROM xtok t LEFT JOIN xruns s ON s.doc_train = t.doc
-             GROUP BY t.doc, t.pos),
-    xreb AS (SELECT doc, count(*) AS n_tokens,
-                    sum(CASE WHEN cut THEN 1 ELSE 0 END) AS n_removed,
-                    coalesce(string_agg(CASE WHEN NOT cut THEN tk END,
-                                        ' ' ORDER BY pos), '') AS clean_text
-             FROM xcov GROUP BY doc),
+    )""",
+            # stage 1: C4 line rules + page gates (q83)
+            _sql_c4_ctes("inj", "c"),
+            """
+    s0 AS MATERIALIZED (SELECT doc_id, clean_text AS text FROM cr
+                        WHERE NOT bad AND n_sentences >= 5)""",
+            # stage 2: Gopher quality rules, min_stopwords=1 (q81)
+            _sql_gopher_ctes("s0", "g"),
+            """
+    s1 AS MATERIALIZED (SELECT s0.* FROM s0 JOIN gk USING (doc_id)
+                        WHERE gk.keep)""",
+            # stage 3: Gopher repetition signals (q86)
+            _sql_repetition_ctes("s1", "r", mat=True),
+            """
+    s2 AS MATERIALIZED (SELECT s1.* FROM s1 JOIN rk USING (doc_id)
+                        WHERE rk.keep)""",
+            # stage 4: self-trained bigram-LM gate at the corpus mean (q78)
+            _sql_bigram_lm_ctes("s2", "l", mat=True),
+            """
+    lmean AS (SELECT round(avg(avg_neg_logprob), 6) AS m FROM lscore),
+    s3 AS MATERIALIZED (SELECT s2.* FROM s2 JOIN lscore USING (doc_id), lmean
+                        WHERE lscore.avg_neg_logprob <= lmean.m)""",
+            # stage 5: exact dedup, min-id survivor (q25)
+            _sql_exact_dedup_ctes("s3", "e"),
+            """
+    s4 AS MATERIALIZED (SELECT s3.* FROM s3 JOIN efp USING (doc_id)
+                        JOIN efpkeep k ON k.fpx = efp.fpx AND k.keep = s3.doc_id)""",
+            # stage 6: MinHash-LSH near dedup, min-id survivor (q27/q55)
+            _sql_shingle_ctes("s4", "n", mat=True),
+            _sql_lsh_pairs_ctes("nsh", "n"),
+            _sql_closure_ctes("npairs", "doc_a", "doc_b", "n"),
+            """
+    s5 AS MATERIALIZED (SELECT s4.* FROM s4 WHERE doc_id NOT IN
+                        (SELECT id FROM ncomp WHERE id != component))""",
+            # stage 7: ExactSubstr spans vs the eval set + token-exact cut
+            # (q77 + q79)
+            _sql_spans_ctes("s5", "x"),
+            _sql_span_cut_ctes("s5", "xruns", "x"),
+            r"""
     cut AS MATERIALIZED (SELECT s5.doc_id,
                    coalesce(r.clean_text, s5.text) AS text,
                    (coalesce(r.n_tokens,
                              len(regexp_split_to_array(trim(s5.text), '\s+')))
-                    - coalesce(r.n_removed, 0))::BIGINT AS n_clean_tokens
-            FROM s5 LEFT JOIN xreb r ON r.doc = s5.doc_id),
-    -- stage 8: DSIR weights on the decontaminated text (q80) + Gumbel (q82)
-    dnt AS (SELECT doc_id,
-                   list_filter(regexp_split_to_array(
-                     regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                     ' '), x -> x <> '') AS w
-            FROM cut WHERE text IS NOT NULL),
-    dg AS (
-      SELECT doc_id AS doc, unnest(w) AS g FROM dnt WHERE len(w) >= 1
-      UNION ALL
-      SELECT doc_id AS doc,
-             unnest([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS g
-      FROM dnt WHERE len(w) >= 2
-    ),
-    db AS MATERIALIZED (SELECT doc, ('0x' || substring(md5(g), 1, 15))::BIGINT % 4096 AS b
-           FROM dg),
-    dtgt AS (SELECT db.doc, db.b FROM db
-             JOIN documents d ON d.doc_id = db.doc WHERE d.lang = 'en'),
-    drs AS (SELECT b, count(*) AS cr FROM db GROUP BY b),
-    dts AS (SELECT b, count(*) AS ct FROM dtgt GROUP BY b),
-    dtot AS (SELECT (SELECT count(*) FROM db) AS nr,
-                    (SELECT count(*) FROM dtgt) AS nt),
-    dsc AS (SELECT d.doc, count(*) AS n_grams,
-                   sum(ln(coalesce(dts.ct, 0) + 1) - ln(drs.cr + 1)) AS s
-            FROM db d JOIN drs USING (b) LEFT JOIN dts USING (b)
-            GROUP BY d.doc),
-    dw8 AS MATERIALIZED (SELECT doc AS doc_id, n_grams,
-                   round(s + n_grams * (ln(nr + 4096) - ln(nt + 4096)), 4)
-                     AS log_importance
-            FROM dsc, dtot),
-    gsel AS MATERIALIZED (
-      SELECT doc_id, log_importance,
-             round(log_importance
-                   - ln(-ln((('0x' || substring(md5('pretrain:' || doc_id::VARCHAR),
-                                                1, 15))::BIGINT + 0.5)
-                            / 1152921504606846976.0)), 4) AS gumbel_score
-      FROM dw8 WHERE n_grams > 0
-      ORDER BY gumbel_score DESC, doc_id
-      LIMIT 100
-    ),
-    -- stage 9: deterministic sequence packing of the selection (q63)
-    pb AS (SELECT g.doc_id, c.n_clean_tokens AS n_tokens,
-                  g.log_importance, g.gumbel_score,
-                  ('0x' || substring(md5('pretrain-pack:' || g.doc_id::VARCHAR),
-                                     1, 15))::BIGINT AS hv
-           FROM gsel g JOIN cut c USING (doc_id)),
-    pp AS (SELECT doc_id, (hv % 32)::BIGINT AS shard, n_tokens,
-                  log_importance, gumbel_score,
-                  coalesce(sum(n_tokens) OVER (PARTITION BY hv % 32
-                      ORDER BY hv, doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior
-           FROM pb)
-    SELECT doc_id, shard, (prior // 512)::BIGINT AS bin_id, n_tokens,
-           log_importance, gumbel_score
-    FROM pp
+                    - coalesce(r.n_tokens_removed, 0))::BIGINT AS n_clean_tokens
+            FROM s5 LEFT JOIN xreb r ON r.doc = s5.doc_id)""",
+            # stage 8: DSIR weights on the decontaminated text (q80) +
+            # Gumbel-top-k (q82)
+            _sql_dsir_ctes("cut", "d", mat=True),
+            f"""
+    gsel AS MATERIALIZED ({_sql_gumbel_select("dw8", "pretrain")})""",
+            # stage 9: deterministic sequence packing of the selection (q63)
+            """
+    pk AS (SELECT g.doc_id, c.n_clean_tokens AS n_tokens,
+                  g.log_importance, g.gumbel_score
+           FROM gsel g JOIN cut c USING (doc_id))""",
+            _sql_pack_ctes("pk", "pretrain-pack", "p"),
+        ]
+    )
+    + """
+    SELECT doc_id, shard, bin_id, n_tokens, log_importance, gumbel_score
+    FROM pbin
 """
+)
 
 
 @_register("q87_pretrain_capstone", _Q87_SQL)
@@ -3470,51 +3277,31 @@ def q87_pretrain_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pretrain_corpus(injected, ev, target_ids)
 
 
-# q98's oracle: the q56 clean prefix (quality + language gates + exact
-# dedup — everything up to but excluding the near-dup stage) DERIVED from
-# the registered q56 string (the q70 one-source-of-truth discipline: a
-# fragment fix to the q56 oracle propagates here mechanically, unlike
-# _Q87_SQL's hand-copies), then the zero-merge BPE count identity and the
-# q63 packing arithmetic on the REAL encoded counts. At n_merges=0 every
-# word encodes to its characters plus the </w> marker, so the encoder's
-# n_subword_tokens is exactly chars(word)+1 summed over the normalized
-# words — length(strip spaces) + word count of the normalized text — and
-# the END-TO-END pipeline (train → encode → pack) is SQL-replicable
-# bit-for-bit, real token accounting included.
-_Q98_CLEAN_PREFIX = (
-    ORACLE_SQL["q56_corpus_prep"].split("norm2 AS", 1)[0].rstrip().rstrip(",")
-)
-assert _Q98_CLEAN_PREFIX.rstrip().endswith(")"), (
-    "q56 oracle no longer splits at its norm2 CTE — re-derive the q98 "
-    "clean prefix"
-)
+# q98's oracle: the q56 clean stage (quality + language gates + exact
+# dedup, ``_sql_clean_ctes``), then the zero-merge BPE count identity and
+# the q63 packing arithmetic on the REAL encoded counts. At n_merges=0
+# every word encodes to its characters plus the </w> marker, so the
+# encoder's n_subword_tokens is exactly chars(word)+1 summed over the
+# normalized words — length(strip spaces) + word count of the normalized
+# text — and the END-TO-END pipeline (train → encode → pack) is
+# SQL-replicable bit-for-bit, real token accounting included.
 def _tok_capstone_sql(n_tokens_case: str, salt: str) -> str:
-    """q56-derived clean prefix + the SHARED packing tail of the two
+    """The q56 clean stage + the shared packing tail of the two
     tokenizer-family capstones; ``n_tokens_case`` is the per-doc count
     expression over the normalized text ``t`` — the ONLY piece q98 (BPE
     zero-merge: chars + </w> per word) and q100 (unigram single-char
-    point: chars) differ in, so the packing arithmetic has one source of
-    truth just as the clean prefix does."""
+    point: chars) differ in."""
     return (
-        _Q98_CLEAN_PREFIX
+        "\n    WITH "
+        + _sql_clean_ctes("documents")
         + f""",
-    tnorm AS (SELECT doc_id, {_SQL_NORM} AS t FROM exact),
     tcnt AS (
-      SELECT doc_id,
-        ({n_tokens_case})::BIGINT AS n_tokens
-      FROM tnorm
-    ),
-    tpb AS (SELECT doc_id, n_tokens,
-                   {_SQL_HEX.format(x=f"'{salt}:' || CAST(doc_id AS VARCHAR)")} AS hv
-            FROM tcnt),
-    tpp AS (SELECT doc_id, (hv % 8)::BIGINT AS shard, n_tokens,
-                   coalesce(sum(n_tokens) OVER (PARTITION BY hv % 8
-                       ORDER BY hv, doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0) AS prior
-            FROM tpb)
-    SELECT doc_id, shard, (prior // 2048)::BIGINT AS bin_id, n_tokens
-    FROM tpp
+      SELECT doc_id, ({n_tokens_case})::BIGINT AS n_tokens
+      FROM (SELECT doc_id, {_SQL_NORM} AS t FROM exact)
+    ),"""
+        + _sql_pack_ctes("tcnt", salt, "t", shards=8, budget=2048)
+        + """
+    SELECT doc_id, shard, bin_id, n_tokens FROM tbin
     """
     )
 
@@ -3592,7 +3379,7 @@ def q100_unigram_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     single characters, Viterbi has one segmentation per word regardless
     of the learned probabilities (so ``em_iters=0`` — EM cannot change
     a forced segmentation), and every doc's count is the non-space char
-    total of its normalized text. Oracle = the shared q98 clean prefix
+    total of its normalized text. Oracle = the shared q98 clean stage
     + packing tail with only the count expression (and the pack salt)
     swapped — the packing arithmetic stays one source of truth."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.tokenizer import (
@@ -3837,35 +3624,10 @@ def q104_epoch_repeat_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q105's oracle is spliced mechanically from the registered q63 SQL (the
-# q91/q98 one-source-of-truth pattern): the packing CTEs are REUSED
-# verbatim and only the final projection changes to the per-bin rollup,
-# so the manifest's order/offset semantics cannot drift from the packing
-# oracle they describe.
-_Q63_TAIL = (
-    "SELECT doc_id, shard, (prior // 512)::BIGINT AS bin_id, n_tokens FROM p"
-)
-_q63_sql = ORACLE_SQL["q63_sequence_packing"].rstrip()
-assert _q63_sql.endswith(_Q63_TAIL), (
-    "q63 oracle no longer ends at its packing projection — re-derive the "
-    "q105 manifest splice"
-)
-_Q105_SQL = _q63_sql[: -len(_Q63_TAIL)] + """,
-    r AS (SELECT doc_id, shard, (prior // 512)::BIGINT AS bin_id,
-                 n_tokens, hv, prior
-          FROM p),
-    m AS (SELECT *,
-                 prior - min(prior) OVER (PARTITION BY shard, bin_id) AS off
-          FROM r)
-    SELECT shard, bin_id,
-      count(*)::BIGINT AS n_docs,
-      sum(n_tokens)::BIGINT AS bin_tokens,
-      string_agg(coalesce(doc_id::VARCHAR, '?'), ','
-                 ORDER BY hv, doc_id) AS doc_ids,
-      string_agg(coalesce(off::VARCHAR, '?'), ','
-                 ORDER BY hv, doc_id) AS doc_offsets
-    FROM m GROUP BY shard, bin_id
-    """
+# q105's oracle reuses q63's packing CTEs and only swaps the final
+# projection for the per-bin manifest, so the manifest's order/offset
+# semantics cannot drift from the packing oracle they describe.
+_Q105_SQL = "\n    WITH " + _Q63_CTES + "," + _sql_manifest("bin")
 
 
 @_register("q105_bin_manifest", _Q105_SQL)
@@ -3971,18 +3733,10 @@ def q109_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q110's oracle reuses the REGISTERED q55 SQL verbatim up to its `comp`
-# CTE (MinHash-LSH pairs closed with the recursive-CTE fixpoint) and only
-# swaps the final projection for the split assignment — the q70/q98/q105
-# one-source-of-truth splice, so the cluster semantics cannot drift from
-# the dedup oracle they anchor.
-_Q55_TAIL = "SELECT component AS keep_id"
-_q55_sql = ORACLE_SQL["q55_dedup_clusters"]
-assert _Q55_TAIL in _q55_sql, (
-    "q55 oracle no longer ends at its keep_id projection — re-derive the "
-    "q110 split splice"
-)
-_Q110_SQL = _q55_sql[: _q55_sql.index(_Q55_TAIL)] + f""",
+# q110's oracle is the q55 chain (MinHash-LSH pairs closed into
+# components) with the split assignment as its final projection, so the
+# cluster semantics cannot drift from the dedup oracle they anchor.
+_Q110_SQL = "\n    WITH RECURSIVE " + _Q55_CTES + f""",
     rep AS (
       SELECT d.doc_id, coalesce(c.component, d.doc_id) AS cluster_rep
       FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
@@ -4025,22 +3779,19 @@ def q110_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Recipe v2 capstone (plans/recipe.py): the round-9/10 families composed
 # ---------------------------------------------------------------------------
 
-# q107's oracle is assembled ENTIRELY from already-registered fragments
-# (the q70/q98/q105 one-source-of-truth discipline): the q98 clean
-# prefix (spliced from the registered q56 SQL), the q68 eval-set +
-# 13-gram shingle shapes (_SQL_SHINGLES13/_SQL_NORM), the q104 epoch
+# q107's oracle is assembled ENTIRELY from shared fragments: the q56
+# clean stage (_sql_clean_ctes), the q68 eval windows + 13-gram shingle
+# shapes (_SQL_EVAL_WINDOWS/_SQL_SHINGLES13/_SQL_NORM), the q104 epoch
 # CTEs (_sql_epoch_ctes — CASE arms generated from the SAME weights dict
 # the Spark call uses), the q103 FIM CTEs + reassembly CASE
 # (_sql_fim_ctes/_SQL_FIM_CASE), the q98 zero-merge count
-# (_SQL_BPE0_COUNT), and the q63/q105 packing + manifest arithmetic.
+# (_SQL_BPE0_COUNT), and the q63/q105 packing + manifest arithmetic
+# (_sql_pack_ctes/_sql_manifest).
 _Q107_SQL = (
-    _Q98_CLEAN_PREFIX
+    "\n    WITH "
+    + _sql_clean_ctes("documents")
     + f""",
-    ev AS (
-      SELECT doc_id + 300000 AS doc_id,
-             array_to_string(regexp_split_to_array(trim(text), '\\s+')[4:33], ' ') AS text
-      FROM documents WHERE doc_id % 13 = 0
-    ),
+    ev AS ({_SQL_EVAL_WINDOWS}),
     dnt AS (SELECT doc_id, {_SQL_NORM} AS t FROM exact),
     dwt AS (SELECT doc_id, regexp_split_to_array(t, '\\s+') AS w FROM dnt),
     dsht AS (SELECT DISTINCT doc_id AS doc, unnest({_SQL_SHINGLES13}) AS sh FROM dwt),
@@ -4070,37 +3821,17 @@ _Q107_SQL = (
     rtn AS (SELECT unit_id,
                    regexp_replace(lower(trim(fim_text)), '\\s+', ' ', 'g') AS t
             FROM rfim),
-    rtc AS (SELECT unit_id, ({_SQL_BPE0_COUNT})::BIGINT AS n_tokens FROM rtn),
-    rpb AS (SELECT unit_id, n_tokens,
-                   {_SQL_HEX.format(x="'rv2pack:' || unit_id")} AS hv
-            FROM rtc),
-    rpp AS (SELECT unit_id, (hv % 8)::BIGINT AS shard, n_tokens, hv,
-                   coalesce(sum(n_tokens) OVER (PARTITION BY hv % 8
-                       ORDER BY hv, unit_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0) AS prior
-            FROM rpb),
-    rr AS (SELECT unit_id, shard, (prior // 2048)::BIGINT AS bin_id,
-                  n_tokens, hv, prior
-           FROM rpp),
-    rm AS (SELECT *,
-                  prior - min(prior) OVER (PARTITION BY shard, bin_id) AS off
-           FROM rr)
-    SELECT shard, bin_id,
-      count(*)::BIGINT AS n_docs,
-      sum(n_tokens)::BIGINT AS bin_tokens,
-      string_agg(coalesce(unit_id, '?'), ',' ORDER BY hv, unit_id) AS doc_ids,
-      string_agg(coalesce(off::VARCHAR, '?'), ',' ORDER BY hv, unit_id)
-        AS doc_offsets
-    FROM rm GROUP BY shard, bin_id
-    """
+    rtc AS (SELECT unit_id, ({_SQL_BPE0_COUNT})::BIGINT AS n_tokens FROM rtn),"""
+    + _sql_pack_ctes("rtc", "rv2pack", "r", "unit_id", shards=8, budget=2048)
+    + ","
+    + _sql_manifest("rbin", "unit_id")
 )
 
 
 def _derived_eval_windows(docs: DataFrame) -> DataFrame:
     """The simulated benchmark set every decontamination query shares:
     a 30-word window from every 13th doc, re-idded clear of the corpus
-    range — the Spark twin of `_sql_gram_overlap`'s ``gr_ev`` CTE, one
+    range — the Spark twin of ``_SQL_EVAL_WINDOWS``, one
     source of truth per engine (q68/q77/q79/q87/q107/q108/q124). A
     one-sided edit to the offset or slice bounds here breaks parity for
     ALL of them at once instead of silently for some."""
@@ -4321,18 +4052,7 @@ _SEMDEDUP_CTES = f""",
       FROM feats a JOIN feats b
         ON a.cluster = b.cluster AND a.id < b.id
       WHERE round(list_dot_product(a.nv, b.nv), 6) >= {_SEMDEDUP_TAU}
-    ),
-    edges AS (
-      SELECT id_a AS u, id_b AS v FROM pairs
-      UNION
-      SELECT id_b AS u, id_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (SELECT u AS id, least(u, min(v)) AS component FROM reach GROUP BY u),
+    ),{_sql_closure_ctes("pairs", "id_a", "id_b")},
     labeled AS (
       SELECT f.id, f.cluster, f.cent_cos,
              coalesce(c.component, f.id) AS group_id
@@ -4373,32 +4093,6 @@ def q112_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=_SEMDEDUP_TAU,
         salt=_KMEANS_SALT,
     )
-
-
-def _sql_temperature_ctes(
-    src: str, strata: str, id_c: str, alpha: float, frac: float, salt: str
-) -> str:
-    """DuckDB CTE fragment replicating ``temperature_mix`` exactly for any
-    (source CTE, stratum, id, alpha, total_frac, salt): data-dependent
-    quotas ∝ n^alpha of ceil(frac·N), round-6 before the ceil (the float
-    firewall), md5 hash-ordered selection, null strata excluded. ONE
-    parameterization serves q71 (documents/lang) and the q113 splice
-    (curated/cluster) — finish with
-    ``SELECT ... FROM tm_r JOIN tm_q USING ({strata}) WHERE rn <= q``."""
-    hv = _SQL_HEX.format(x=f"'{salt}:' || CAST({id_c} AS VARCHAR)")
-    return f""",
-    tm_c AS (SELECT {strata}, count(*) AS n FROM {src}
-             WHERE {strata} IS NOT NULL GROUP BY {strata}),
-    tm_z AS (SELECT sum(pow(n, {alpha})) AS zsum, sum(n) AS grand FROM tm_c),
-    tm_q AS (SELECT {strata},
-                    least(n::DOUBLE,
-                          ceil(round(ceil(grand * {frac}) * pow(n, {alpha})
-                                     / zsum, 6))) AS q
-             FROM tm_c, tm_z),
-    tm_r AS (SELECT {src}.*,
-                    row_number() OVER (PARTITION BY {strata}
-                                       ORDER BY {hv}, {id_c}) AS rn
-             FROM {src} WHERE {strata} IS NOT NULL)"""
 
 
 _Q113_SQL = (
@@ -4467,18 +4161,6 @@ def q113_semantic_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixed.select("doc_id", "cluster", "source")
 
 
-# q71's oracle is generated from the SAME _sql_temperature_ctes fragment
-# as the q113 splice (single source of truth for the quota arithmetic);
-# the generator is defined after q71's registration, so the literal is
-# swapped in here.
-_Q71_SQL = (
-    "WITH d AS (SELECT doc_id, lang FROM documents)"
-    + _sql_temperature_ctes("d", "lang", "doc_id", 0.5, 0.6, "mix")
-    + """
-    SELECT doc_id, lang FROM tm_r JOIN tm_q USING (lang) WHERE rn <= q"""
-)
-assert ORACLE_SQL["q71_temperature_mix"] == "__Q71_TEMPERATURE_SQL__"
-ORACLE_SQL["q71_temperature_mix"] = _Q71_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -4634,8 +4316,9 @@ def q117_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q118_SQL = """
-    WITH old AS (SELECT doc_id, text FROM documents),
+# The derived second snapshot (q118/q119/q135), q118's diff CTEs over it
+# and q118's status projection, each named so q119 and q135 compose them.
+_SQL_NEWSNAP = """
     newsnap AS (
       SELECT doc_id,
              CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END AS text
@@ -4644,12 +4327,19 @@ _Q118_SQL = """
       SELECT doc_id + 100000000 AS doc_id,
              'fresh page ' || doc_id::VARCHAR AS text
       FROM documents WHERE doc_id % 13 = 0
-    ),
+    )"""
+_Q118_CTES = (
+    """
+    old AS (SELECT doc_id, text FROM documents),"""
+    + _SQL_NEWSNAP
+    + """,
     j AS (SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
                  o.doc_id IS NOT NULL AS in_old,
                  n.doc_id IS NOT NULL AS in_new,
                  o.text AS t_old, n.text AS t_new
-          FROM old o FULL OUTER JOIN newsnap n ON o.doc_id = n.doc_id)
+          FROM old o FULL OUTER JOIN newsnap n ON o.doc_id = n.doc_id)"""
+)
+_Q118_STATUS = """
     SELECT doc_id,
            CASE WHEN NOT in_old THEN 'added'
                 WHEN NOT in_new THEN 'removed'
@@ -4657,12 +4347,13 @@ _Q118_SQL = """
                 ELSE 'changed' END AS status
     FROM j
 """
+_Q118_SQL = "\n    WITH " + _Q118_CTES + _Q118_STATUS
 
 
 def _derived_new_snapshot(docs: DataFrame) -> DataFrame:
     """The deterministic second snapshot q118/q119 share: every 11th doc
     dropped, every 7th edited (text || ' v2'), a fresh page per 13th —
-    the `newsnap` CTE of ``_Q118_SQL``, one source of truth per engine.
+    ``_SQL_NEWSNAP``, one source of truth per engine.
     The fresh-page offset is 1e8, NOT 1e6: the .bench_scale fixtures
     re-key replicas at ``doc_id + i * 1_000_000`` (gen_scale_bench.py),
     and a 1e6 offset made fresh pages collide with real replica ids
@@ -4709,22 +4400,16 @@ def q118_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff(docs, _derived_new_snapshot(docs), "doc_id", "text")
 
 
-# q119's oracle is spliced mechanically from the registered q118 SQL (the
-# q70/q98 one-source-of-truth discipline): the diff chain becomes a CTE,
-# and the final select joins each surviving doc's status to the zero-merge
-# WordPiece count identity over the NEW snapshot's normalized text (the
-# q115 argument: single-char vocab ⇒ count = non-space chars; the vocab is
-# trained on the new snapshot, so no word can hit [UNK]).
-_q118_prefix, _q118_final = _Q118_SQL.rsplit("SELECT", 1)
-if "FROM j" not in _q118_final:  # real exception: asserts vanish under -O
-    raise RuntimeError(
-        "q118 oracle no longer ends with its status SELECT over j — "
-        "re-derive the q119 splice"
-    )
+# q119's oracle is q118's diff CTEs with q118's status projection as a
+# CTE; the final select joins each surviving doc's status to the
+# zero-merge WordPiece count identity over the NEW snapshot's normalized
+# text (the q115 argument: single-char vocab ⇒ count = non-space chars;
+# the vocab is trained on the new snapshot, so no word can hit [UNK]).
 _Q119_SQL = (
-    _q118_prefix
+    "\n    WITH "
+    + _Q118_CTES
     + f""",
-    st AS (SELECT{_q118_final}),
+    st AS ({_Q118_STATUS}),
     tn AS (SELECT doc_id, {_SQL_NORM} AS t FROM newsnap)
     SELECT st.doc_id,
            (CASE WHEN t IS NULL OR t = '' THEN 0
@@ -4856,8 +4541,9 @@ def q120_chat_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q121_SQL = """
-    WITH s AS (SELECT (doc_id % 37) AS prompt_id, doc_id,
+# q121's CTEs and its pair projection, named so q126 composes them
+_Q121_CTES = """
+    s AS (SELECT (doc_id % 37) AS prompt_id, doc_id,
                       length(text)::DOUBLE AS sc
                FROM documents WHERE text IS NOT NULL),
     r AS (SELECT *,
@@ -4871,11 +4557,13 @@ _Q121_SQL = """
                  max(CASE WHEN rr = 1 THEN doc_id END) AS rejected_id,
                  round(max(CASE WHEN rc = 1 THEN sc END), 6) AS chosen_score,
                  round(max(CASE WHEN rr = 1 THEN sc END), 6) AS rejected_score
-          FROM r GROUP BY prompt_id)
+          FROM r GROUP BY prompt_id)"""
+_Q121_PAIRS = """
     SELECT prompt_id, chosen_id, rejected_id, chosen_score, rejected_score,
            round(chosen_score - rejected_score, 6) AS margin
     FROM p WHERE chosen_id <> rejected_id
 """
+_Q121_SQL = "\n    WITH " + _Q121_CTES + _Q121_PAIRS
 
 
 @_register("q121_preference_pairs", _Q121_SQL)
@@ -5050,21 +4738,12 @@ def q124_sft_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q125's oracle is spliced mechanically from the registered q56 SQL: the
-# ENTIRE CTE chain (scoring, gates, exact dedup, LSH pairs, recursive
-# component closure) is reused verbatim; only the final SELECT is
-# replaced by the four funnel aggregates. A q56 fragment fix propagates
-# here mechanically (the q98/q107 discipline). The split marker is the
-# final SELECT's distinctive head — rsplit("SELECT") would cut at the
-# NOT IN subquery instead.
-_q56_final_idx = ORACLE_SQL["q56_corpus_prep"].rfind("SELECT lang_pred")
-if _q56_final_idx <= 0:  # real exception: asserts vanish under -O
-    raise RuntimeError(
-        "q56 oracle no longer ends with its lang_pred rollup — re-derive "
-        "the q125 funnel splice"
-    )
+# q125's oracle is the whole q56 chain (scoring, gates, exact dedup, LSH
+# pairs, recursive component closure) with the four funnel aggregates in
+# place of q56's per-language rollup.
 _Q125_SQL = (
-    ORACLE_SQL["q56_corpus_prep"][:_q56_final_idx].rstrip().rstrip(",")
+    "\n    WITH RECURSIVE "
+    + _sql_corpus_prep_ctes("documents")
     + """,
     survivors AS (
       SELECT doc_id, n_tokens FROM exact
@@ -5097,8 +4776,8 @@ def q125_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (raw → quality/language gates → exact dedup → near-dup collapse) —
     the observability report behind every ingest decision, and a
     reconciliation check on the chain itself (the final row must agree
-    with the q56 survivor set; the oracle reuses the registered q56 CTE
-    chain verbatim with only the final SELECT swapped)."""
+    with the q56 survivor set; the oracle is the q56 chain builder with
+    only the final SELECT swapped)."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.corpus_prep import (
         corpus_funnel,
     )
@@ -5107,21 +4786,15 @@ def q125_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_funnel(docs)
 
 
-# q126's oracle splices the registered q121 SQL (the preference pairs
-# become a CTE) and replays the q30 brute-force cosine arithmetic over
-# the chosen docs' embeddings — one source of truth for both the pair
-# construction and the similarity math.
-_q121_prefix, _q121_final = _Q121_SQL.rsplit("SELECT", 1)
-if not _q121_final.lstrip().startswith("prompt_id, chosen_id"):
-    # real exception: asserts vanish under -O
-    raise RuntimeError(
-        "q121 oracle no longer ends with its pair SELECT — re-derive the "
-        "q126 splice"
-    )
+# q126's oracle is q121's CTEs with the preference pairs as a CTE, then
+# the q30 brute-force cosine arithmetic over the chosen docs' embeddings —
+# one source of truth for both the pair construction and the similarity
+# math.
 _Q126_SQL = (
-    _q121_prefix
+    "\n    WITH "
+    + _Q121_CTES
     + f""",
-    pp AS (SELECT{_q121_final}),
+    pp AS ({_Q121_PAIRS}),
     qe AS (SELECT p.prompt_id, p.chosen_id, p.rejected_id,
                   e.embedding::DOUBLE[] AS qv
            FROM pp p JOIN embeddings e ON e.vec_id = p.chosen_id),
@@ -5624,52 +5297,56 @@ def q134_calibrated_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.calibrate_scores(docs, "source", "n_chars")
 
 
-# q135's oracle splices the newsnap CTE VERBATIM from the registered
-# q118 SQL (one source of truth for the derived second snapshot) and the
-# q88/q133 word construction, then replicates the smoothed-distribution
-# arithmetic. Import-time guards make a drifted splice a loud error.
-_Q135_NEWSNAP = _Q118_SQL[
-    _Q118_SQL.index("newsnap AS (") : _Q118_SQL.index("j AS (")
-].rstrip().rstrip(",").rstrip()
-if not (
-    _Q135_NEWSNAP.startswith("newsnap AS (")
-    and _Q135_NEWSNAP.endswith(")")
-    and "fresh page" in _Q135_NEWSNAP
-):
-    raise RuntimeError(
-        "q135 splice: the q118 newsnap CTE no longer parses out cleanly — "
-        "update the q135 oracle alongside the q118 SQL"
-    )
+# q135's oracle: the derived second snapshot (``_SQL_NEWSNAP``) and the
+# q88/q133 word construction, then the smoothed-distribution arithmetic
+# (``_sql_word_drift_ctes``, shared with the q150 drift gate).
 _Q135_CAP, _Q135_ALPHA = 100_000, 0.5
-_Q135_WORDS = (
-    "SELECT unnest(list_filter(regexp_split_to_array("
-    + _SQL_NORM
-    + ", ' '), x -> x <> '')) AS word FROM {src} WHERE text IS NOT NULL"
-)
-_Q135_SQL = f"""
-    WITH {_Q135_NEWSNAP},
-    wa0 AS ({_Q135_WORDS.format(src='documents')}),
-    wb0 AS ({_Q135_WORDS.format(src='newsnap')}),
-    wa AS (SELECT word, count(*)::BIGINT AS na FROM wa0 GROUP BY word
+
+
+def _sql_word_drift_ctes(a: str, b: str, p: str) -> str:
+    """Smoothed unigram drift from the words of ``a`` to those of ``b``
+    (relations with a text column): top-``_Q135_CAP`` words per side,
+    add-``_Q135_ALPHA`` smoothing. Ends in ``{p}d`` (vocab_union, kl_ab,
+    kl_ba, js_divergence, tvd)."""
+    words = (
+        "SELECT unnest(list_filter(regexp_split_to_array("
+        + _SQL_NORM
+        + ", ' '), x -> x <> '')) AS word FROM {} WHERE text IS NOT NULL"
+    )
+    al = repr(_Q135_ALPHA)
+    m = "((pa + pb) / 2.0)"
+    return f"""
+    {p}a0 AS ({words.format(a)}),
+    {p}b0 AS ({words.format(b)}),
+    {p}a AS (SELECT word, count(*)::BIGINT AS na FROM {p}a0 GROUP BY word
            ORDER BY na DESC, word LIMIT {_Q135_CAP}),
-    wb AS (SELECT word, count(*)::BIGINT AS nb FROM wb0 GROUP BY word
+    {p}b AS (SELECT word, count(*)::BIGINT AS nb FROM {p}b0 GROUP BY word
            ORDER BY nb DESC, word LIMIT {_Q135_CAP}),
-    j AS (SELECT coalesce(na, 0) AS na, coalesce(nb, 0) AS nb
-          FROM wa FULL OUTER JOIN wb USING (word)),
-    t AS (SELECT sum(na)::DOUBLE AS ta, sum(nb)::DOUBLE AS tb,
-                 count(*)::DOUBLE AS v FROM j),
-    p AS (SELECT (na + {_Q135_ALPHA!r}) / (ta + {_Q135_ALPHA!r} * v) AS pa,
-                 (nb + {_Q135_ALPHA!r}) / (tb + {_Q135_ALPHA!r} * v) AS pb
-          FROM j, t)
-    SELECT count(*)::BIGINT AS vocab_union,
-           round(coalesce(sum(pa * ln(pa / pb)), 0.0), 6) AS kl_ab,
-           round(coalesce(sum(pb * ln(pb / pa)), 0.0), 6) AS kl_ba,
-           round(coalesce((sum(pa * ln(pa / ((pa + pb) / 2.0)))
-                           + sum(pb * ln(pb / ((pa + pb) / 2.0)))) / 2.0,
-                          0.0), 6) AS js_divergence,
-           round(coalesce(sum(abs(pa - pb)) / 2.0, 0.0), 6) AS tvd
-    FROM p
-"""
+    {p}j AS (SELECT coalesce(na, 0) AS na, coalesce(nb, 0) AS nb
+           FROM {p}a FULL OUTER JOIN {p}b USING (word)),
+    {p}t AS (SELECT sum(na)::DOUBLE AS ta, sum(nb)::DOUBLE AS tb,
+                 count(*)::DOUBLE AS v FROM {p}j),
+    {p}p AS (SELECT (na + {al}) / (ta + {al} * v) AS pa,
+                 (nb + {al}) / (tb + {al} * v) AS pb
+          FROM {p}j, {p}t),
+    {p}d AS (
+      SELECT count(*)::BIGINT AS vocab_union,
+             round(coalesce(sum(pa * ln(pa / pb)), 0.0), 6) AS kl_ab,
+             round(coalesce(sum(pb * ln(pb / pa)), 0.0), 6) AS kl_ba,
+             round(coalesce((sum(pa * ln(pa / {m}))
+                             + sum(pb * ln(pb / {m}))) / 2.0,
+                            0.0), 6) AS js_divergence,
+             round(coalesce(sum(abs(pa - pb)) / 2.0, 0.0), 6) AS tvd
+      FROM {p}p)"""
+
+
+_Q135_SQL = (
+    "\n    WITH"
+    + _SQL_NEWSNAP
+    + ","
+    + _sql_word_drift_ctes("documents", "newsnap", "w")
+    + "\n    SELECT * FROM wd\n"
+)
 
 
 @_register("q135_word_distribution_drift", _Q135_SQL)
@@ -6444,13 +6121,11 @@ def q148_lsh_recall_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline actually consumes ("did this refresh change the corpus enough
 # to re-train the tokenizer / re-fit the index cells"). The oracle
 # re-derives the merged corpus through the registered q60 splice (the
-# q146 discipline) and the divergences through the q135 fragments, so the
+# q146 discipline) and the divergences through the q135 builder, so the
 # gate's booleans hash-check end to end.
-assert "{src}" in _Q135_WORDS, (
-    "q135 word fragment shape changed — re-derive the q150 drift splice"
-)
 _Q150_JS_T, _Q150_TVD_T, _Q150_ADD_T = 0.02, 0.05, 0.10
-_Q150_SQL = f"""
+_Q150_SQL = (
+    f"""
     WITH rfgnewb AS (
         SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
         UNION ALL
@@ -6469,26 +6144,9 @@ _Q150_SQL = f"""
         UNION ALL
         SELECT doc_id, text FROM rfgnewb
         WHERE doc_id IN (SELECT doc_id FROM rfgsurv)
-    ),
-    ga0 AS ({_Q135_WORDS.format(src='rfgold')}),
-    gb0 AS ({_Q135_WORDS.format(src='rfgmerged')}),
-    ga AS (SELECT word, count(*)::BIGINT AS na FROM ga0 GROUP BY word
-           ORDER BY na DESC, word LIMIT {_Q135_CAP}),
-    gb AS (SELECT word, count(*)::BIGINT AS nb FROM gb0 GROUP BY word
-           ORDER BY nb DESC, word LIMIT {_Q135_CAP}),
-    gj AS (SELECT coalesce(na, 0) AS na, coalesce(nb, 0) AS nb
-           FROM ga FULL OUTER JOIN gb USING (word)),
-    gt AS (SELECT sum(na)::DOUBLE AS ta, sum(nb)::DOUBLE AS tb,
-                  count(*)::DOUBLE AS v FROM gj),
-    gp AS (SELECT (na + {_Q135_ALPHA!r}) / (ta + {_Q135_ALPHA!r} * v) AS pa,
-                  (nb + {_Q135_ALPHA!r}) / (tb + {_Q135_ALPHA!r} * v) AS pb
-           FROM gj, gt),
-    gdrift AS (
-        SELECT round(coalesce((sum(pa * ln(pa / ((pa + pb) / 2.0)))
-                               + sum(pb * ln(pb / ((pa + pb) / 2.0)))) / 2.0,
-                              0.0), 6) AS js,
-               round(coalesce(sum(abs(pa - pb)) / 2.0, 0.0), 6) AS tvd
-        FROM gp),
+    ),"""
+    + _sql_word_drift_ctes("rfgold", "rfgmerged", "g")
+    + f""",
     gfrac AS (
         SELECT round(
             (SELECT count(*) FROM rfgnewb
@@ -6499,13 +6157,14 @@ _Q150_SQL = f"""
                {_Q150_ADD_T}::DOUBLE AS threshold,
                af > {_Q150_ADD_T} AS triggered FROM gfrac
         UNION ALL
-        SELECT 'word_js', js, {_Q150_JS_T}::DOUBLE,
-               js > {_Q150_JS_T} FROM gdrift
+        SELECT 'word_js', js_divergence, {_Q150_JS_T}::DOUBLE,
+               js_divergence > {_Q150_JS_T} FROM gd
         UNION ALL
         SELECT 'word_tvd', tvd, {_Q150_TVD_T}::DOUBLE,
-               tvd > {_Q150_TVD_T} FROM gdrift
+               tvd > {_Q150_TVD_T} FROM gd
     ) ORDER BY monitor
 """
+)
 
 
 @_register("q150_drift_gated_refresh", _Q150_SQL)
@@ -6966,39 +6625,16 @@ def q157_incremental_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q158: the winnowing survivor composition — q151's fingerprint pairs
 # feeding the shared cluster + keep-longest machinery (q66's policy), so
 # the NEW pair source runs the whole dedup-collapse path end to end. The
-# oracle splices the registered q151 SQL verbatim (import-time guard) and
-# closes components with the same recursive CTE as q55/q66.
+# oracle wraps the registered q151 SQL verbatim (import-time guard), then
+# closes components and keeps the longest member with the q55/q66
+# builders.
 assert ORACLE_SQL["q151_winnow_pairs"].lstrip().startswith("WITH") and (
     "wkept" in ORACLE_SQL["q151_winnow_pairs"]
 ), "q151 oracle shape changed — re-derive the q158 splice"
 _Q158_SQL = f"""
     WITH RECURSIVE wp AS (
         {ORACLE_SQL["q151_winnow_pairs"]}
-    ),
-    wedges AS (
-        SELECT doc_a AS u, doc_b AS v FROM wp
-        UNION
-        SELECT doc_b AS u, doc_a AS v FROM wp
-    ),
-    wreach(u, v) AS (
-        SELECT u, v FROM wedges
-        UNION
-        SELECT r.u, e.v FROM wreach r JOIN wedges e ON r.v = e.u
-    ),
-    wcomp AS (SELECT u AS id, least(u, min(v)) AS component
-              FROM wreach GROUP BY u),
-    wranked AS (
-        SELECT d.doc_id,
-               row_number() OVER (PARTITION BY c.component
-                                  ORDER BY d.n_chars DESC, d.doc_id) AS rn
-        FROM documents d JOIN wcomp c ON c.id = d.doc_id
-    )
-    SELECT doc_id, n_chars FROM documents
-    WHERE doc_id NOT IN (SELECT id FROM wcomp)
-    UNION ALL
-    SELECT d.doc_id, d.n_chars FROM documents d
-    JOIN wranked r ON r.doc_id = d.doc_id AND r.rn = 1
-"""
+    ),{_sql_closure_ctes("wp", "doc_a", "doc_b", "w")},{_sql_keep_longest("wcomp", "w")}"""
 
 
 @_register("q158_winnow_keep_longest", _Q158_SQL)

@@ -9,6 +9,7 @@ themselves, per plans/star_queries.py conventions).
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -22,15 +23,6 @@ ORACLES = entry_mod.oracle_sql()
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def _duck(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
 
 
 def _norm_cell(v):
@@ -59,27 +51,9 @@ def _multiset(rows, colnames):
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, name):
-    sf_dir = SF_SMOKE
-    sdf = QUERIES[name](spark, sf_dir)
-    spark_rows = sdf.collect()
-    spark_cols = sdf.columns
-
-    con = _duck(sf_dir)
-    res = con.execute(ORACLES[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    con.close()
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch {spark_cols} vs {duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    s = _multiset([tuple(r) for r in spark_rows], spark_cols)
-    d = _multiset(duck_rows, duck_cols)
-    mismatches = [(a, b) for a, b in zip(s, d) if a != b]
-    assert s == d, f"{name}: value mismatch, first diffs: {mismatches[:5]}"
+    sdf = QUERIES[name](spark, SF_SMOKE)
+    duck_cols, duck_rows = _run_oracle(SF_SMOKE, name)
+    _compare_engines(name, sdf.columns, sdf.collect(), duck_cols, duck_rows)
 
 
 def test_entry_smoke(spark):
@@ -99,7 +73,7 @@ def _compare_engines(name, spark_cols, spark_rows, duck_cols, duck_rows):
     d = _multiset(duck_rows, duck_cols)
     assert len(s) == len(d), f"{name}: row count {len(s)} vs {len(d)}"
     mismatches = [(a, b) for a, b in zip(s, d) if a != b]
-    assert s == d, f"{name}: adversarial mismatch, first: {mismatches[:3]}"
+    assert s == d, f"{name}: value mismatch, first diffs: {mismatches[:3]}"
 
 
 def _run_oracle(sf_dir, name, dir_tables=()):
@@ -107,8 +81,6 @@ def _run_oracle(sf_dir, name, dir_tables=()):
     ``dir_tables`` are Spark-written DIRECTORIES (glob their parts)."""
     con = duckdb.connect()
     for t in TABLES:
-        import os
-
         path = f"{sf_dir}/{t}.parquet"
         if not os.path.exists(path):
             continue
@@ -563,104 +535,52 @@ def test_oracle_parity_on_adversarial_relational(spark, adversarial_rel_dir, nam
 
 
 # ---------------------------------------------------------------------------
-# q87 capstone-oracle drift guard (round-7 ADVICE): _Q87_SQL hand-duplicates
-# the bodies of ten per-operator oracles, and those copies silently drift
-# when a fragment is corrected (the r7 q62 trim fix had to be re-applied by
-# hand). Each entry pins a load-bearing constant/idiom of one fragment in
-# BOTH the registered per-operator oracle and its q87 copy — a fix that
-# changes a pinned idiom in one place but not the other fails here by name.
+# q87 capstone-oracle composition guard: every stage of _Q87_SQL is built
+# by the same ``_sql_*`` builder as its per-operator oracle. Each row is
+# (builder, per-operator args, q87 args); the builder's output for each
+# arg set must appear verbatim in the matching oracle, so re-inlining a
+# hand copy on either side fails here by name.
 # ---------------------------------------------------------------------------
 
-# fragment query -> list of (pin in the fragment's ORACLE_SQL,
-#                            pin in _Q87_SQL — same constant, possibly
-#                            different local spelling)
-_Q87_FRAGMENT_PINS = {
-    "q83_c4_rules": [
-        ("""[.!?"'']\\s*$""", """[.!?"'']\\s*$"""),  # line-terminal punct
-        ("'javascript'", "'javascript'"),
-        ("lorem ipsum", "lorem ipsum"),
-        ("x -> x <> '')) >= 3", "x -> x <> '')) >= 3"),  # min words/line
-        (">= 5", ">= 5"),  # sentence gate
-    ],
-    "q81_gopher_rules": [
-        ("'the','be','to','of','and','that','have','with'",
-         "'the','be','to','of','and','that','have','with'"),
-        ("n_words >= 50 AND n_words <= 100000",
-         "n_words >= 50 AND n_words <= 100000"),
-        ("mean_word_len >= 3 AND mean_word_len <= 10",
-         "mwl >= 3 AND mwl <= 10"),
-        ("symbol_word_ratio <= 0.1", "swr <= 0.1"),
-        ("bullet_line_frac <= 0.9", "blf <= 0.9"),
-        ("ellipsis_line_frac <= 0.3", "elf <= 0.3"),
-        ("alpha_word_frac >= 0.8", "awf >= 0.8"),
-    ],
-    "q86_gopher_repetition": [
-        ("(c - 1) * length(line)", "(c - 1) * length(line)"),  # dup-line chars
-        ("w[i:i+1]", "w[i:i+1]"),  # 2-gram window
-        ("w[i:i+4]", "w[i:i+4]"),  # 5-gram window
-        ("c * length(g)", "c * length(g)"),  # gram char coverage
-        ("<= 0.15", "<= 0.15"),  # dup-5gram threshold
-    ],
-    "q78_bigram_lm_scores": [
-        ("count(DISTINCT w) AS V", "count(DISTINCT w) AS V"),  # Laplace V
-        ("-ln((coalesce(", "-ln((coalesce("),  # add-one cross-entropy
-    ],
-    "q25_exact_dup_groups": [
-        ("min(doc_id)", "min(doc_id)"),  # min-id survivor rule
-    ],
-    "q27_minhash_lsh_pairs": [
-        ("md5('perm:' || i)", "md5('perm:' || i)"),  # permutation seeds
-        ("i // 4 AS band", "i // 4 AS band"),  # 16 hashes / 4 bands
-        (">= 0.5", ">= 0.5"),  # exact-Jaccard verify threshold
-    ],
-    "q77_cross_exact_substring": [
-        ("w[i:i+12]", "w[i:i+12]"),  # 13-gram slice
-        ("len(w) - 13 + 2", "len(w) - 13 + 2"),  # gram positions
-        ("n_tokens >= 20", "+ 12 >= 20"),  # min span tokens
-    ],
-    "q79_decontaminated_corpus": [
-        ("start_train", "start_train"),  # span coverage join key
-        ("ORDER BY pos", "ORDER BY pos"),  # token-order rebuild
-    ],
-    "q80_dsir_importance": [
-        ("% 4096", "% 4096"),  # hashed-ngram buckets
-        ("+ 4096)", "+ 4096)"),  # add-one bucket smoothing
-    ],
-    "q82_dsir_resample": [
-        ("1152921504606846976.0", "1152921504606846976.0"),  # 2^60 uniform
-        ("ln(-ln((", "ln(-ln(("),  # Gumbel transform
-        ("+ 0.5)", "+ 0.5)"),  # half-open uniform shift
-    ],
-    "q63_sequence_packing": [
-        ("ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING",
-         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"),
-        ("// 512", "// 512"),  # token budget
-        ("% 32", "% 32"),  # shard count
-    ],
+_Q87_STAGE_BUILDERS = {
+    "q25_exact_dup_groups": ("_sql_exact_dedup_ctes", ("u",), ("s3", "e")),
+    "q27_minhash_lsh_pairs": ("_sql_lsh_pairs_ctes", ("sh",), ("nsh", "n")),
+    "q63_sequence_packing": (
+        "_sql_pack_ctes",
+        ("t", "pack"),
+        ("pk", "pretrain-pack", "p"),
+    ),
+    "q77_cross_exact_substring": ("_sql_spans_ctes", ("documents",), ("s5", "x")),
+    "q78_bigram_lm_scores": ("_sql_bigram_lm_ctes", ("documents",), ("s2", "l", True)),
+    "q79_decontaminated_corpus": (
+        "_sql_span_cut_ctes",
+        ("documents", "spans"),
+        ("s5", "xruns", "x"),
+    ),
+    "q80_dsir_importance": ("_sql_dsir_ctes", ("documents",), ("cut", "d", True)),
+    "q81_gopher_rules": ("_sql_gopher_ctes", ("raw",), ("s0", "g")),
+    "q82_dsir_resample": ("_sql_gumbel_select", ("w", "dsir"), ("dw8", "pretrain")),
+    "q83_c4_rules": ("_sql_c4_ctes", ("raw",), ("inj", "c")),
+    "q86_gopher_repetition": ("_sql_repetition_ctes", ("raw",), ("s1", "r", True)),
 }
 
 
-@pytest.mark.parametrize("fragment", sorted(_Q87_FRAGMENT_PINS))
+@pytest.mark.parametrize("fragment", sorted(_Q87_STAGE_BUILDERS))
 def test_q87_oracle_fragment_pins(fragment):
-    """Every pinned idiom must appear in BOTH the per-operator oracle and
-    the q87 capstone copy. If you corrected a fragment oracle and this
-    fails: apply the same correction to the matching stage block of
-    _Q87_SQL (plans/northstar_queries.py) and update the pin here."""
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.northstar_queries import (
-        _Q87_SQL,
+    """The per-operator oracle and q87's stage are generated by one
+    builder: its output for each argument set is in the matching SQL."""
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans import (
+        northstar_queries as nq,
     )
 
-    frag_sql = entry_mod.oracle_sql()[fragment]
-    for frag_pin, q87_pin in _Q87_FRAGMENT_PINS[fragment]:
-        assert frag_pin in frag_sql, (
-            f"{fragment}: pinned idiom {frag_pin!r} no longer in the "
-            "fragment oracle — it changed; port the change to _Q87_SQL "
-            "and update _Q87_FRAGMENT_PINS"
-        )
-        assert q87_pin in _Q87_SQL, (
-            f"{fragment}: q87 copy lost pinned idiom {q87_pin!r} — "
-            "the capstone oracle drifted from the fragment"
-        )
+    name, own_args, q87_args = _Q87_STAGE_BUILDERS[fragment]
+    builder = getattr(nq, name)
+    assert builder(*own_args) in ORACLES[fragment], (
+        f"{fragment}: oracle no longer built by {name}{own_args}"
+    )
+    assert builder(*q87_args) in nq._Q87_SQL, (
+        f"{fragment}: q87 stage no longer built by {name}{q87_args}"
+    )
 
 
 ADVERSARIAL_ORDERS = [
