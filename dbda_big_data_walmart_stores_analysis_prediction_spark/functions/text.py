@@ -79,18 +79,3 @@ def norm_words_col(text: Column | str) -> Column:
     One definition for the same reason as `norm_text_col`: if empty-token
     or separator semantics ever change, every consumer moves together."""
     return F.filter(F.split(norm_text_col(text), " "), lambda x: x != "")
-
-
-def shingles_col(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles of ``text`` as an array<string>.
-
-    Documents shorter than k words yield their full token string as the one
-    shingle (so every doc has a non-empty shingle set).
-    """
-    w = tokens_col(text)
-    n = F.size(w)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(w, i, k), " "),
-    )
-    return F.array_distinct(grams)

@@ -13,7 +13,6 @@ from itertools import combinations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 
 def _refine_ranks(
@@ -178,22 +177,22 @@ def _grouped_quantile_scan(
     sub_buckets: int = 16,
 ) -> tuple[dict, dict]:
     """ONE whole-stage-codegen hash aggregate over
-    ``(name, _log_bucket(v))`` yields, per key, exact moments (count / sum
-    / sum² / min / max folded from the cells on the driver) AND a
-    histogram whose cells carry their exact value spans — so the
+    ``(name, _log_bucket(v))`` yields, per column name, exact moments
+    (count / sum / sum² / min / max folded from the cells on the driver)
+    AND a histogram whose cells carry their exact value spans — so the
     moments pass and the first histogram pass of the old design collapse
     into a single job, and the common case (every rank cell under
     ``collect_limit``) finishes in ONE more job (``_refine_ranks``' final
     collect). Cells with min == max (duplicate spikes) resolve with no
     second job at all.
 
-    Driver state is one row per (key, active bucket) — ≤ ~2k buckets per
-    key for doubles spanning a typical data range (the bucketing is
-    log-spaced: exponents × ``sub_buckets``), so the caller's contract is
-    bounded key cardinality, value rows unbounded. Returns
-    ``(stats, resolve)`` where ``stats[key] = (n, sum, sum2, min, max)``
+    Driver state is one row per (column, active bucket) — ≤ ~2k buckets
+    per column for doubles spanning a typical data range (the bucketing
+    is log-spaced: exponents × ``sub_buckets``). Returns
+    ``(stats, resolve)`` where ``stats[name] = (n, sum, sum2, min, max)``
     and ``resolve(ranks_by_key)`` resolves the requested 0-based global
-    ranks (keys are the melted frame's ``name`` values).
+    ranks (keys are the melted frame's ``name`` strings). Grouped
+    quantiles do not come here: see ``_group_rank_pick``.
     """
     # the bucket code feeds ONLY this one aggregate: the refinement/final
     # pass re-selects bracket rows on the UN-bucketed melted frame by
@@ -212,16 +211,9 @@ def _grouped_quantile_scan(
         F.min("v").alias("mn"),
         F.max("v").alias("mx"),
     )
-    # toArrow, not collect(): group_quartiles can produce (groups x active
-    # cells) result rows, and Row materialization runs ~30k rows/s.
-    # toArrow (not toPandas) because pandas floats nullable int columns —
-    # group KEYS must come back type-exact. Arrow may be unavailable for
-    # exotic key types; Rows and to_pylist dicts share the r["col"] access
-    # pattern, so the fallback is drop-in.
-    try:
-        rows = cell_df.toArrow().to_pylist()
-    except Exception:
-        rows = cell_df.collect()
+    # toArrow, not collect(): (columns x active cells) result rows, and
+    # Row materialization runs ~30k rows/s
+    rows = cell_df.toArrow().to_pylist()
     cells: dict = {}
     stats: dict = {}
     for r in rows:
@@ -290,11 +282,7 @@ def _grouped_quantile_scan(
         # of literal-when-chain recompilation it saved
         for b in pending:
             b["cond"] = (
-                (
-                    F.col("name").isNull()
-                    if b["key"] is None
-                    else F.col("name") == F.lit(b["key"])
-                )
+                (F.col("name") == F.lit(b["key"]))
                 & (F.col("v") >= F.lit(float(b["lo"])))
                 & (F.col("v") <= F.lit(float(b["hi"])))
             )
@@ -307,9 +295,7 @@ def _grouped_quantile_scan(
     return stats, resolve
 
 
-def exact_quantiles(
-    df: DataFrame, col: str, probs: list[float], n_ranges: int = 16
-) -> list[float]:
+def exact_quantiles(df: DataFrame, col: str, probs: list[float]) -> list[float]:
     """Exact linear-interpolated quantiles (``quantile_cont`` semantics) via
     distributed histogram refinement — NOT the builtin ``percentile``
     aggregate.
@@ -321,18 +307,15 @@ def exact_quantiles(
     agg, then 10-30x slowdowns on unrelated follow-up queries). It is also
     the wrong shape at 100 TB — all values funnel into one final buffer.
 
-    See ``exact_quantiles_multi`` for the algorithm. ``n_ranges`` is kept
-    for API compatibility with the earlier range-partition implementation
-    and is ignored.
+    See ``exact_quantiles_multi`` for the algorithm.
     """
-    return exact_quantiles_multi(df, [col], probs, n_ranges)[col]
+    return exact_quantiles_multi(df, [col], probs)[col]
 
 
 def exact_quantiles_multi(
     df: DataFrame,
     columns: list[str],
     probs: list[float],
-    n_ranges: int = 16,
     return_stats: bool = False,
     bins: int = 1024,
     collect_limit: int = 65536,
@@ -368,8 +351,11 @@ def exact_quantiles_multi(
     With ``return_stats=True`` also returns per-column
     ``(n, mean, stddev, min, max)`` assembled from step 1's moments —
     ``describe``-style stats then cost zero extra scans. Returns
-    ``quantiles`` or ``(quantiles, stats)``. ``n_ranges`` is accepted for
-    API compatibility and ignored.
+    ``quantiles`` or ``(quantiles, stats)``.
+
+    Grouped quantiles run on the window rank-pick instead
+    (``_group_rank_pick``); on single global columns neither engine wins
+    everywhere (README design rule 4), so this one stays.
     """
     stack_expr = ", ".join(f"'{c}', cast(`{c}` as double)" for c in columns)
     melted = df.selectExpr(
@@ -515,178 +501,94 @@ def histogram(
     )
 
 
-def group_quartiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    bins: int = 1024,
-    collect_limit: int = 65536,
-    max_depth: int = 6,
-    sub_buckets: int = 16,
+def _rank_targets(p: float, n):
+    """``quantile_cont``'s two 1-based rank targets for prob ``p`` over a
+    group's ``n`` sorted values, and the interpolation weight between
+    them: ``(floor(r) + 1, ceil(r) + 1, r - floor(r))`` at
+    ``r = p·(n − 1)``."""
+    r = F.lit(float(p)) * (n - 1)
+    return (F.floor(r) + 1).cast("long"), (F.ceil(r) + 1).cast("long"), r - F.floor(r)
+
+
+def _interpolate(lo, hi, frac):
+    # interpolation form, NOT avg: (lo+hi)/2 overflows to inf on two
+    # near-max doubles and can differ from quantile_cont's
+    # lo + (hi-lo)*frac in the last ulp
+    return lo + (hi - lo) * frac
+
+
+def _group_rank_pick(
+    df: DataFrame, group_col: str, value_col: str, probs: list[float]
 ) -> DataFrame:
+    """THE grouped exact-quantile engine (``quantile_cont`` semantics), as
+    one lazy plan: ONE exchange on the group key and ONE within-partition
+    sort by value give every row its rank; per group only the rows at the
+    target ranks — rank 1 (min), rank n (max) and each prob's floor/ceil
+    ranks — survive a filter, and ONE conditional aggregate over them
+    picks the values (``min(when(rn == target, v))``), reusing the window's
+    partitioning; interpolation is a projection. Nothing is buffered per
+    group and nothing reaches the driver, at any group cardinality.
+
+    NaN folds into null; nulls sort last and ``n`` counts only the
+    non-null values, so a group whose values are all null/NaN keeps its
+    rank-1 row and comes out as ``n = 0`` with every statistic null.
+    Null group keys are a group like any other.
+
+    Returns ``(__g, n, min, max, __q0, __q1, ...)``, ``__q<i>`` the
+    quantile at ``probs[i]``.
+    """
+    v = F.col(value_col).cast("double")
+    base = df.select(
+        F.col(group_col).alias("__g"), F.when(~F.isnan(v), v).alias("__v")
+    )
+    w = Window.partitionBy("__g").orderBy(F.col("__v").asc_nulls_last())
+    ranked = base.select(
+        "__g",
+        "__v",
+        F.row_number().over(w).alias("__rn"),
+        F.count("__v").over(Window.partitionBy("__g")).alias("__n"),
+    )
+    n = F.col("__n")
+    targets = [_rank_targets(p, n)[:2] for p in probs]
+
+    def at(rank):
+        return F.min(F.when(F.col("__rn") == rank, F.col("__v")))
+
+    aggs = [F.max(n).alias("n"), at(F.lit(1)).alias("min"), at(n).alias("max")]
+    for i, (lo, hi) in enumerate(targets):
+        aggs += [at(lo).alias(f"__lo{i}"), at(hi).alias(f"__hi{i}")]
+    keep = F.col("__rn").isin(F.lit(1), n, *[r for t in targets for r in t])
+    picked = ranked.where(keep).groupBy("__g").agg(*aggs)
+    quantiles = [
+        _interpolate(
+            F.col(f"__lo{i}"), F.col(f"__hi{i}"), _rank_targets(p, F.col("n"))[2]
+        ).alias(f"__q{i}")
+        for i, p in enumerate(probs)
+    ]
+    return picked.select("__g", "n", "min", "max", *quantiles)
+
+
+def group_quartiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """A9: per-group five-number summary (the stats behind the reference's
     seaborn boxplots, ``Scripts/eda.py:103-146``), exact interpolated
-    quartiles via the shared log-bucket scan + refinement engine
-    (``_grouped_quantile_scan`` — see ``exact_quantiles_multi``): ONE
-    codegen hash aggregate replaces the old separate per-group meta job
-    and first histogram pass, so the common case is two jobs total.
+    quartiles off the grouped rank-pick (``_group_rank_pick``): one lazy
+    plan, one exchange + one sort, no driver state.
 
     The earliest form used the builtin ``percentile`` aggregate — per-GROUP
     buffers of every distinct value, i.e. a GC bomb whenever one group is
-    large (and at 100 TB some group always is). Here per-group executor
-    memory is bounded by the log-bucket cell count (exponents ×
-    ``sub_buckets``) and, in refinement rounds, ``bins`` cells. Driver
-    state is one row per (group, active magnitude cell), so this
-    operator's contract is bounded group cardinality (boxplot/EDA scale —
-    thousands, not millions, of groups); value rows per group are
-    unbounded. Null values keep their group visible (n=0 cells), so empty
-    groups still emit a null row.
+    large (and at 100 TB some group always is). A group whose values are
+    all null/NaN still emits its all-null row.
+
+    Output: ``(group, min, q1, median, q3, max)``.
     """
-    v = F.col(value_col).cast("double")
-    v = F.when(~F.isnan(v), v)
-    melted = df.select(F.col(group_col).alias("name"), v.alias("v"))
-
-    probs = [0.25, 0.5, 0.75]
-    cell_stats, resolve = _grouped_quantile_scan(
-        melted, bins, collect_limit, max_depth, sub_buckets
-    )
-    ranks_by_key: dict = {}
-    metas: list[tuple] = []
-    for g, (n, _, _, mn, mx) in cell_stats.items():
-        metas.append((g, n, mn, mx))
-        if n == 0:
-            continue
-        ranks: set[int] = set()
-        for p in probs:
-            rk = (n - 1) * p
-            ranks.add(math.floor(rk))
-            ranks.add(math.ceil(rk))
-        ranks_by_key[g] = ranks
-    resolved = resolve(ranks_by_key)
-
-    out_rows = []
-    for g, n, mn, mx in metas:
-        if n == 0:
-            out_rows.append((g, None, None, None, None, None))
-            continue
-        qs = []
-        for p in probs:
-            rk = (n - 1) * p
-            lo, hi = math.floor(rk), math.ceil(rk)
-            frac = rk - lo
-            vlo, vhi = resolved[g][lo], resolved[g][hi]
-            qs.append(vlo + (vhi - vlo) * frac)
-        out_rows.append((g, mn, qs[0], qs[1], qs[2], mx))
-    gtype = df.schema[group_col].dataType
-    schema = StructType(
-        [StructField(group_col, gtype, True)]
-        + [StructField(c, DoubleType(), True) for c in ("min", "q1", "median", "q3", "max")]
-    )
-    return df.sparkSession.createDataFrame(out_rows, schema)
-
-
-def _group_medians(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    bins: int,
-    collect_limit: int,
-    max_depth: int,
-) -> dict:
-    """Exact per-group medians off ONE grouped log-bucket scan (the
-    shared engine; same bounded-group contract as ``group_quartiles``).
-    Groups with no non-null values are absent from the result."""
-    v = F.col(value_col).cast("double")
-    v = F.when(~F.isnan(v), v)
-    melted = df.select(F.col(group_col).alias("name"), v.alias("v"))
-    cell_stats, resolve = _grouped_quantile_scan(
-        melted, bins, collect_limit, max_depth
-    )
-    ranks_by_key: dict = {}
-    for g, (n, _, _, _mn, _mx) in cell_stats.items():
-        if n == 0:
-            continue
-        rk = (n - 1) * 0.5
-        ranks_by_key[g] = {math.floor(rk), math.ceil(rk)}
-    resolved = resolve(ranks_by_key)
-    meds: dict = {}
-    for g, (n, _, _, _mn, _mx) in cell_stats.items():
-        if n == 0:
-            continue
-        rk = (n - 1) * 0.5
-        lo, hi = math.floor(rk), math.ceil(rk)
-        vlo, vhi = resolved[g][lo], resolved[g][hi]
-        meds[g] = vlo + (vhi - vlo) * (rk - lo)
-    return meds
-
-
-def group_mad_outlier_bounds(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    k: float = 3.0,
-    bins: int = 1024,
-    collect_limit: int = 65536,
-    max_depth: int = 6,
-) -> DataFrame:
-    """PER-GROUP robust (median ± k·1.4826·MAD) outlier fences —
-    ``mad_outlier_bounds`` keyed, the per-domain cleaning rule a mixed
-    corpus actually needs (one global fence lets a long-document domain
-    define "outlier" for a short-document one).
-
-    Two grouped passes of the shared exact-quantile engine (per-group
-    medians, then per-group medians of |x − med_g| with the median
-    table broadcast into the deviation projection — the data rows never
-    shuffle). Same bounded-group-cardinality contract as
-    ``group_quartiles``. Returns ``(group, lo, hi, median, mad)`` as
-    exact doubles; groups with no non-null values are absent (left-join
-    to reattach them as nulls).
-    """
-    meds = _group_medians(df, group_col, value_col, bins, collect_limit, max_depth)
-    gtype = df.schema[group_col].dataType
-    if not meds:
-        return df.sparkSession.createDataFrame(
-            [],
-            StructType(
-                [StructField(group_col, gtype, True)]
-                + [
-                    StructField(c, DoubleType(), True)
-                    for c in ("lo", "hi", "median", "mad")
-                ]
-            ),
-        )
-    med_tab = df.sparkSession.createDataFrame(
-        [(g, float(m)) for g, m in meds.items()],
-        StructType(
-            [StructField("__g", gtype, True), StructField("__med", DoubleType(), False)]
-        ),
-    )
-    dev = (
-        df.join(
-            F.broadcast(med_tab), df[group_col].eqNullSafe(med_tab["__g"])
-        )
-        .select(
-            F.col("__g").alias(group_col),
-            F.abs(F.col(value_col).cast("double") - F.col("__med")).alias(
-                "__dev"
-            ),
-        )
-    )
-    mads = _group_medians(dev, group_col, "__dev", bins, collect_limit, max_depth)
-    rows = []
-    for g, med in meds.items():
-        mad = mads[g]
-        half = k * 1.4826 * mad
-        rows.append((g, med - half, med + half, med, mad))
-    return df.sparkSession.createDataFrame(
-        rows,
-        StructType(
-            [StructField(group_col, gtype, True)]
-            + [
-                StructField(c, DoubleType(), True)
-                for c in ("lo", "hi", "median", "mad")
-            ]
-        ),
+    q = _group_rank_pick(df, group_col, value_col, [0.25, 0.5, 0.75])
+    return q.select(
+        F.col("__g").alias(group_col),
+        "min",
+        F.col("__q0").alias("q1"),
+        F.col("__q1").alias("median"),
+        F.col("__q2").alias("q3"),
+        "max",
     )
 
 
@@ -1063,80 +965,22 @@ def quantile_fence_alerts(
     )
 
 
-def group_median_highcard(
-    df: DataFrame, group_col: str, value_col: str
-) -> DataFrame:
-    """Exact per-group median for UNBOUNDED group cardinality — the
-    complement of the log-bucket engine's shapes. ``group_quartiles`` /
-    ``group_mad_outlier_bounds`` hold one driver row per (group, active
-    cell), so their contract is thousands of groups; per-user / per-URL
-    medians at 100 TB have millions, and the right plan flips: ONE
-    shuffle on the group key + ONE within-partition sort, rank
-    arithmetic over ``row_number`` (the two middle ranks average to
-    ``quantile_cont(0.5)``), nothing buffered per group and no driver
-    state at all. The group-keyed aggregate after the window reuses the
-    window's hash partitioning, so the whole plan carries exactly one
-    exchange (plan-audited).
-
-    Returns ``(group, n, median)`` — ``n`` the non-null (non-NaN) value
-    count; groups with no such values are absent. Null groups are a
-    group like any other.
-    """
-    v = F.col(value_col).cast("double")
-    v = F.when(~F.isnan(v), v)
-    base = df.select(F.col(group_col).alias("__g"), v.alias("__v")).where(
-        F.col("__v").isNotNull()
-    )
-    w = Window.partitionBy("__g").orderBy("__v")
-    wp = Window.partitionBy("__g")
-    ranked = base.select(
-        "__g",
-        "__v",
-        F.row_number().over(w).alias("__rn"),
-        F.count("*").over(wp).alias("__n"),
-    )
-    lo_rn = F.expr("(__n + 1) div 2")
-    hi_rn = F.expr("__n div 2 + 1")
-    mid = ranked.where((F.col("__rn") == lo_rn) | (F.col("__rn") == hi_rn))
-    # interpolation form, NOT avg: (lo+hi)/2 overflows to inf on two
-    # near-max doubles and can differ from quantile_cont's
-    # lo + (hi-lo)*0.5 in the last ulp — both engines (and the
-    # group_quantiles_highcard sibling) use the interpolation form
-    return (
-        mid.groupBy("__g")
-        .agg(
-            F.first("__n").alias("n"),
-            F.min(F.when(F.col("__rn") == lo_rn, F.col("__v"))).alias("__vlo"),
-            F.min(F.when(F.col("__rn") == hi_rn, F.col("__v"))).alias("__vhi"),
-        )
-        .select(
-            F.col("__g").alias(group_col),
-            "n",
-            (
-                F.col("__vlo") + (F.col("__vhi") - F.col("__vlo")) * F.lit(0.5)
-            ).alias("median"),
-        )
-    )
-
-
 def group_quantiles_highcard(
     df: DataFrame,
     group_col: str,
     value_col: str,
     probs: list[float],
 ) -> DataFrame:
-    """``group_median_highcard`` generalized: exact linear-interpolated
-    quantiles (``quantile_cont`` semantics) at UNBOUNDED group
-    cardinality, still ONE exchange + ONE shared sort. Every target's
-    floor/ceil rank rows survive one filter, and a single conditional
-    aggregate picks all of them per group (``min(when(rn == lo_i, v))``
-    — at most 2·len(probs) surviving rows per group, so the aggregate
-    is tiny); interpolation is a projection.
+    """Exact linear-interpolated per-group quantiles (``quantile_cont``
+    semantics) named by percent — a projection of ``_group_rank_pick``:
+    one exchange + one shared sort, any group cardinality (per-user /
+    per-URL at 100 TB). ``probs=[0.5]`` is the grouped median.
 
     Output: ``(group, n, p<percent>...)`` — e.g. ``probs=[0.25, 0.5]``
-    → columns ``p25, p50``. Dyadic probs (quarters, eighths) are
-    recommended for cross-engine oracle exactness of the rank
-    arithmetic; groups with no non-null (non-NaN) values are absent.
+    → columns ``p25, p50``; ``n`` counts the non-null (non-NaN) values.
+    Dyadic probs (quarters, eighths) are recommended for cross-engine
+    oracle exactness of the rank arithmetic; groups with no non-null
+    (non-NaN) values are absent.
     """
     if not probs:
         raise ValueError("group_quantiles_highcard: probs must be non-empty")
@@ -1146,39 +990,12 @@ def group_quantiles_highcard(
             f"group_quantiles_highcard: probs {probs} collide after "
             f"percent naming ({names}); use more-separated probs"
         )
-    v = F.col(value_col).cast("double")
-    v = F.when(~F.isnan(v), v)
-    base = df.select(F.col(group_col).alias("__g"), v.alias("__v")).where(
-        F.col("__v").isNotNull()
+    q = _group_rank_pick(df, group_col, value_col, probs)
+    return q.where(F.col("n") > 0).select(
+        F.col("__g").alias(group_col),
+        "n",
+        *[F.col(f"__q{i}").alias(name) for i, name in enumerate(names)],
     )
-    w = Window.partitionBy("__g").orderBy("__v")
-    wp = Window.partitionBy("__g")
-    ranked = base.select(
-        "__g",
-        "__v",
-        F.row_number().over(w).alias("__rn"),
-        F.count("*").over(wp).alias("__n"),
-    )
-    rk = [F.lit(float(p)) * (F.col("__n") - 1) for p in probs]
-    lo = [(F.floor(r) + 1).cast("long") for r in rk]
-    hi = [(F.ceil(r) + 1).cast("long") for r in rk]
-    keep = None
-    for l, h in zip(lo, hi):
-        cond = (F.col("__rn") == l) | (F.col("__rn") == h)
-        keep = cond if keep is None else (keep | cond)
-    aggs = [F.first("__n").alias("n")]
-    for i, (l, h) in enumerate(zip(lo, hi)):
-        aggs.append(F.min(F.when(F.col("__rn") == l, F.col("__v"))).alias(f"__lo{i}"))
-        aggs.append(F.min(F.when(F.col("__rn") == h, F.col("__v"))).alias(f"__hi{i}"))
-    agg = ranked.where(keep).groupBy("__g").agg(*aggs)
-    outs = []
-    for i, (p, name) in enumerate(zip(probs, names)):
-        r = F.lit(float(p)) * (F.col("n") - 1)
-        frac = r - F.floor(r)
-        outs.append(
-            (F.col(f"__lo{i}") + (F.col(f"__hi{i}") - F.col(f"__lo{i}")) * frac).alias(name)
-        )
-    return agg.select(F.col("__g").alias(group_col), "n", *outs)
 
 
 def group_mad_outlier_bounds_highcard(
@@ -1187,10 +1004,11 @@ def group_mad_outlier_bounds_highcard(
     value_col: str,
     k: float = 3.0,
 ) -> DataFrame:
-    """``group_mad_outlier_bounds`` at UNBOUNDED group cardinality —
-    the per-domain robust fence (median ± k·1.4826·MAD) when the
-    domains are per-user/per-URL millions, where the log-bucket
-    engine's one-driver-row-per-(group, cell) contract breaks.
+    """PER-GROUP robust (median ± k·1.4826·MAD) outlier fences —
+    ``mad_outlier_bounds`` keyed, the per-domain cleaning rule a mixed
+    corpus actually needs (one global fence lets a long-document domain
+    define "outlier" for a short-document one), at any group
+    cardinality.
 
     No joins and no driver state: STACKED windows over one group-keyed
     exchange. Window 1 (ordered by value) ranks rows; window 2 (same
@@ -1200,9 +1018,8 @@ def group_mad_outlier_bounds_highcard(
     ranks deviations; the final group-keyed aggregate picks the MAD's
     middle ranks and reuses the windows' partitioning. Physical shape:
     ONE Exchange + TWO within-partition sorts (value, deviation),
-    plan-audited. Median/MAD use the same two-middle-ranks
-    interpolation as ``group_median_highcard`` (== ``quantile_cont``'s
-    even-n form, overflow-safe).
+    plan-audited. Median and MAD use ``_group_rank_pick``'s rank targets
+    and interpolation at p = 0.5.
 
     Returns ``(group, n, lo, hi, median, mad)`` — exact doubles;
     groups with no non-null (non-NaN) values are absent; null groups
@@ -1215,8 +1032,7 @@ def group_mad_outlier_bounds_highcard(
     )
     w1 = Window.partitionBy("__g").orderBy("__v")
     wp = Window.partitionBy("__g")
-    lo_rn = F.expr("(__n + 1) div 2")
-    hi_rn = F.expr("__n div 2 + 1")
+    lo_rn, hi_rn, frac = _rank_targets(0.5, F.col("__n"))
     ranked = base.select(
         "__g",
         "__v",
@@ -1232,9 +1048,7 @@ def group_mad_outlier_bounds_highcard(
     ).select(
         "__g",
         "__n",
-        (F.col("__vlo") + (F.col("__vhi") - F.col("__vlo")) * F.lit(0.5)).alias(
-            "__med"
-        ),
+        _interpolate(F.col("__vlo"), F.col("__vhi"), frac).alias("__med"),
         "__v",
     )
     w2 = Window.partitionBy("__g").orderBy("__dev")
@@ -1248,7 +1062,9 @@ def group_mad_outlier_bounds_highcard(
         F.row_number().over(w2).alias("__rn2"),
     )
     scale = float(k) * 1.4826
-    mad = F.col("__dlo") + (F.col("__dhi") - F.col("__dlo")) * F.lit(0.5)
+    mad = _interpolate(
+        F.col("__dlo"), F.col("__dhi"), _rank_targets(0.5, F.col("n"))[2]
+    )
     return (
         devs.groupBy("__g")
         .agg(
@@ -1356,72 +1172,29 @@ def group_quantile_bins(
     group_col: str,
     value_col: str,
     n_bins: int = 4,
-    bins: int = 1024,
-    collect_limit: int = 65536,
-    max_depth: int = 6,
     out_col: str = "bin",
 ) -> DataFrame:
     """PER-GROUP quantile discretization (``quantile_bins`` within each
-    group): exact per-group interior boundaries from the shared log-bucket
-    scan, then assignment as a broadcast join on the group plus an array
-    comparison (``bin = 1 + size(filter(bounds, b -> v > b))``) — no
-    ntile, no per-group sort, one corpus scan for the boundaries and one
-    for the assignment. The per-domain length-stratification recipe a
-    curriculum mix runs at 100 TB.
+    group): exact per-group interior boundaries from ``_group_rank_pick``
+    as one array column, broadcast-joined on the group (null-safe) and
+    compared (``bin = 1 + size(filter(bounds, b -> v > b))``) — no
+    ntile, no driver state, one lazy plan. The per-domain
+    length-stratification recipe a curriculum mix runs at 100 TB.
 
-    Same bounded-group-cardinality contract as ``group_quartiles``
-    (driver state is one row per (group, active magnitude cell)). Rows
-    with null/NaN values — and rows of groups with no non-null values —
-    get a null ``out_col`` (default ``bin``; a pre-existing column of
-    that name raises, matching ``quantile_bins``). Value ties share a
-    bin (deterministic under parallel scan; see ``quantile_bins`` on why
-    ntile is banned here).
+    Rows with null/NaN values — and so every row of a group with no
+    non-null values — get a null ``out_col`` (default ``bin``; a
+    pre-existing column of that name raises, matching
+    ``quantile_bins``). Value ties share a bin (deterministic under
+    parallel scan; see ``quantile_bins`` on why ntile is banned here).
     """
     if out_col in df.columns:
         raise ValueError(
             f"group_quantile_bins: output column '{out_col}' already "
             f"exists in the frame ({df.columns}); pass a different out_col"
         )
-    v = F.col(value_col).cast("double")
-    v = F.when(~F.isnan(v), v)
-    melted = df.select(F.col(group_col).alias("name"), v.alias("v"))
-    cell_stats, resolve = _grouped_quantile_scan(
-        melted, bins, collect_limit, max_depth
-    )
     probs = [i / n_bins for i in range(1, n_bins)]
-    ranks_by_key: dict = {}
-    for g, (n, _, _, _mn, _mx) in cell_stats.items():
-        if n == 0:
-            continue
-        ranks: set[int] = set()
-        for p in probs:
-            rk = (n - 1) * p
-            ranks.add(math.floor(rk))
-            ranks.add(math.ceil(rk))
-        ranks_by_key[g] = ranks
-    resolved = resolve(ranks_by_key)
-
-    gtype = df.schema[group_col].dataType
-    btab_rows = []
-    for g, (n, _, _, _mn, _mx) in cell_stats.items():
-        if n == 0:
-            continue
-        bounds = []
-        for p in probs:
-            rk = (n - 1) * p
-            lo, hi = math.floor(rk), math.ceil(rk)
-            frac = rk - lo
-            vlo, vhi = resolved[g][lo], resolved[g][hi]
-            bounds.append(vlo + (vhi - vlo) * frac)
-        btab_rows.append((g, bounds))
-    btab = df.sparkSession.createDataFrame(
-        btab_rows,
-        StructType(
-            [
-                StructField("__g", gtype, True),
-                StructField("__bounds", ArrayType(DoubleType(), False), False),
-            ]
-        ),
+    btab = _group_rank_pick(df, group_col, value_col, probs).select(
+        "__g", F.array(*[f"__q{i}" for i in range(len(probs))]).alias("__bounds")
     )
     joined = df.join(
         F.broadcast(btab), df[group_col].eqNullSafe(btab["__g"]), "left"
@@ -1433,7 +1206,5 @@ def group_quantile_bins(
     )
     return joined.select(
         *[df[c] for c in df.columns],
-        F.when(
-            vv.isNotNull() & F.col("__bounds").isNotNull(), bin_expr
-        ).alias(out_col),
+        F.when(vv.isNotNull(), bin_expr).alias(out_col),
     )

@@ -369,22 +369,6 @@ def _minhash_aggs(n_hashes: int, h_sql: str | None = None) -> list[Column]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
-) -> DataFrame:
-    """MinHash signature per doc via the XOR permutation family
-    (``_minhash_aggs``): one explode + ONE hash aggregate computes all
-    ``n_hashes`` mins (each min() is codegen'd; no per-permutation pass),
-    and each shingle is md5-hashed exactly once — inside `_shingle_rows`
-    (hashed form), so the aggregate's input rows are already 8-byte."""
-    sh = shingle_table(df, id_col, text_col, k, hashed=True)
-    return sh.groupBy("doc").agg(*_minhash_aggs(n_hashes, h_sql="sh"))
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     n_hashes: int = 16,

@@ -730,10 +730,10 @@ def curriculum_stages(
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     s = F.col(score_col).cast("double")
-    # NaN firewall (the group_quartiles rule): engines disagree on NaN
-    # ordering/aggregation, and a NaN score would poison max() and the
-    # floor() into nulls — fold NaN into the null rule ("unknown
-    # difficulty schedules last") instead
+    # NaN firewall (the exact-quantile operators' rule): engines
+    # disagree on NaN ordering/aggregation, and a NaN score would poison
+    # max() and the floor() into nulls — fold NaN into the null rule
+    # ("unknown difficulty schedules last") instead
     s = F.when(~F.isnan(s), s)
     bounds = df.agg(
         F.min(s).alias("__cur_mn"), F.max(s).alias("__cur_mx")

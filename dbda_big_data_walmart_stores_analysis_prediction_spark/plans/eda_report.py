@@ -58,9 +58,9 @@ def eda_report(
 
     ``facet_cols`` adds one more five-number-summary frame per listed
     column (the reference boxplots Weekly_Sales against Month, DayOfWeek,
-    IsHoliday, and Type the same way, ``Scripts/eda.py:100-151``) — each
-    facet is a bounded-cardinality grouping, same contract as
-    ``group_col``.
+    IsHoliday, and Type the same way, ``Scripts/eda.py:100-151``). The
+    five-number-summary frames are lazy: they run when a consumer (the
+    plot layer) collects them.
     """
     from pyspark.sql import functions as F
 

@@ -6873,11 +6873,12 @@ def q160_retrieval_prep_capstone(
 
 
 # q161: per-source length stratification — group_quantile_bins over the
-# documents' n_chars: exact per-source quartile boundaries (shared
-# log-bucket scan, no ntile, no per-group sort) + comparison-rule
-# assignment, summarized per (source, bin). The per-domain curriculum
-# stratifier at 100 TB. Oracle derives the SAME boundaries via grouped
-# quantile_cont and the SAME value-comparison rule.
+# documents' n_chars: exact per-source quartile boundaries (the grouped
+# rank-pick: one exchange + one sort, no ntile, no driver state) +
+# comparison-rule assignment, summarized per (source, bin). The
+# per-domain curriculum stratifier at 100 TB. Oracle derives the SAME
+# boundaries via grouped quantile_cont and the SAME value-comparison
+# rule.
 _Q161_BINS = 4
 _Q161_SQL = f"""
     WITH gq AS (
@@ -6904,10 +6905,10 @@ _Q161_SQL = f"""
 @_register("q161_group_quantile_bins", _Q161_SQL)
 def q161_group_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source length stratification (operators/analytics.py::
-    group_quantile_bins): exact per-group quartile boundaries from ONE
-    log-bucket scan, assignment as a broadcast boundary-array join +
-    comparison (value ties share a bin; no ntile, no per-group sort),
-    then per-(source, bin) count/min/max."""
+    group_quantile_bins): exact per-group quartile boundaries from the
+    grouped rank-pick (one exchange + one within-partition sort), kept
+    lazy as a broadcast boundary-array join + comparison (value ties
+    share a bin; no ntile), then per-(source, bin) count/min/max."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
         group_quantile_bins,
     )
@@ -7134,7 +7135,7 @@ def q164_hll_distinct_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.join(est, "event_type").orderBy("event_type")
 
 
-# q165: per-source robust outlier fences — group_mad_outlier_bounds
+# q165: per-source robust outlier fences — group_mad_outlier_bounds_highcard
 # (q153's MAD fence keyed, q161's per-domain discipline): one global
 # fence lets a long-document domain define "outlier" for a short-
 # document one, so the cleaning rule a mixed corpus ships is per-group.
@@ -7174,16 +7175,18 @@ _Q165_SQL = f"""
 @_register("q165_group_mad_outliers", _Q165_SQL)
 def q165_group_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source robust outlier fences (operators/analytics.py::
-    group_mad_outlier_bounds): per-group median ± 3·1.4826·MAD from two
-    grouped passes of the exact-quantile engine (median table broadcast
-    into the deviation projection — data rows never shuffle), then one
-    pushed-down per-group outlier count against the raw-double fence."""
+    group_mad_outlier_bounds_highcard): per-group median ± 3·1.4826·MAD
+    from stacked windows over one group-keyed exchange (no driver table,
+    no join inside the fence), then one per-group outlier count against
+    the raw-double fence, broadcast back onto the documents."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        group_mad_outlier_bounds,
+        group_mad_outlier_bounds_highcard,
     )
 
     docs = _t(spark, sf_dir, "documents").select("source", "n_chars")
-    fences = group_mad_outlier_bounds(docs, "source", "n_chars", k=_Q165_K)
+    fences = group_mad_outlier_bounds_highcard(
+        docs, "source", "n_chars", k=_Q165_K
+    ).drop("n")
     v = F.col("n_chars").cast("double")
     joined = docs.where(F.col("n_chars").isNotNull()).join(
         F.broadcast(fences.withColumnRenamed("source", "__g")),
@@ -7206,12 +7209,11 @@ def q165_group_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # q166: per-user median event value — the HIGH-CARDINALITY grouped
-# median (group_median_highcard): per-user/per-URL medians at 100 TB
-# have millions of groups, where the log-bucket engine's per-(group,
-# cell) driver state is the wrong contract; the right plan is one
-# shuffle + one within-partition sort + rank arithmetic, no driver
-# state. Oracle: grouped quantile_cont(0.5) — the two-middle-ranks
-# average is exactly its even-n interpolation.
+# median (group_quantiles_highcard at p = 0.5): per-user/per-URL medians
+# at 100 TB have millions of groups; the plan is one shuffle + one
+# within-partition sort + rank arithmetic, no driver state. Oracle:
+# grouped quantile_cont(0.5) — the two-middle-ranks interpolation is
+# exactly its even-n form.
 _Q166_SQL = """
     SELECT user_id,
            count(value)::BIGINT AS n,
@@ -7226,19 +7228,18 @@ _Q166_SQL = """
 @_register("q166_group_median_highcard", _Q166_SQL)
 def q166_group_median_highcard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """High-cardinality grouped median (operators/analytics.py::
-    group_median_highcard): exact per-user median event value via ONE
-    group-keyed exchange + ONE within-partition sort + row_number rank
-    arithmetic — the shape that survives millions of groups, where the
-    bounded-group log-bucket engine cannot (one driver row per (group,
-    cell)). Null users are a group like any other."""
+    group_quantiles_highcard at p = 0.5): exact per-user median event
+    value via ONE group-keyed exchange + ONE within-partition sort +
+    row_number rank arithmetic — the shape that survives millions of
+    groups. Null users are a group like any other."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        group_median_highcard,
+        group_quantiles_highcard,
     )
 
     ev = _t(spark, sf_dir, "events").select("user_id", "value")
-    out = group_median_highcard(ev, "user_id", "value")
+    out = group_quantiles_highcard(ev, "user_id", "value", [0.5])
     return out.select(
-        "user_id", "n", F.round("median", 6).alias("median")
+        "user_id", "n", F.round("p50", 6).alias("median")
     ).orderBy("user_id")
 
 
@@ -7510,16 +7511,14 @@ def q170_jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # q171: per-user robust outlier fences at HIGH cardinality —
-# group_mad_outlier_bounds_highcard completes the per-domain cleaning
-# family at any group count: q165's fences carry the log-bucket
-# engine's bounded-group contract (driver rows per (group, cell));
-# this shape is q166/q167's (one exchange, shared sorts, no driver
-# state) extended to the MAD — stacked windows resolve the per-group
-# median into a projection, so the deviation pass needs NO join and NO
-# broadcast table. Oracle: the same two grouped quantile_cont passes
-# plus the same double fence arithmetic (3.0 * 1.4826 evaluated in
-# DOUBLE in both engines — a DECIMAL product would differ in the last
-# ulp from the Spark-side float scale).
+# group_mad_outlier_bounds_highcard (q165's fence operator), q166/
+# q167's shape (one exchange, shared sorts, no driver state) extended
+# to the MAD — stacked windows resolve the
+# per-group median into a projection, so the deviation pass needs NO
+# join and NO broadcast table. Oracle: the same two grouped
+# quantile_cont passes plus the same double fence arithmetic (3.0 *
+# 1.4826 evaluated in DOUBLE in both engines — a DECIMAL product would
+# differ in the last ulp from the Spark-side float scale).
 _Q171_SQL = """
     WITH e AS (
       SELECT user_id, value FROM events

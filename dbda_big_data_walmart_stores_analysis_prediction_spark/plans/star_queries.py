@@ -576,7 +576,8 @@ def q16_histogram_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q17_quartiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: per-group five-number summary (the reference's boxplot stats,
-    Scripts/eda.py:103-146, computed exactly on full data)."""
+    Scripts/eda.py:103-146, computed exactly on full data by the grouped
+    rank-pick: one exchange + one within-partition sort)."""
     orders = _t(spark, sf_dir, "orders")
     out = group_quartiles(orders, "o_orderpriority", "o_totalprice")
     return out.select(

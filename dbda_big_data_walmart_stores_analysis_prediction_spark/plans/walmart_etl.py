@@ -97,21 +97,15 @@ def join_and_impute(
     fact: DataFrame,
     stores: DataFrame,
     features: DataFrame,
-    stats: ImputeStats | None = None,
 ) -> DataFrame:
-    """Fact ⟕ stores ⟕ features(-IsHoliday), then impute.
-
-    ``stats=None`` reproduces the reference's independent-stats behavior
-    (compute on this frame); passing train stats gives the leak-free
-    variant.
-    """
+    """Fact ⟕ stores ⟕ features(-IsHoliday), then impute with statistics
+    computed on this frame — the reference's independent train/test
+    statistics."""
     joined = star_join(
         fact,
         [(stores, "Store"), (features.drop("IsHoliday"), ["Store", "Date"])],
     )
-    if stats is None:
-        stats = fit_stats(joined)
-    return apply_stats(joined, stats)
+    return apply_stats(joined, fit_stats(joined))
 
 
 def add_features(df: DataFrame) -> DataFrame:
@@ -135,24 +129,11 @@ def walmart_etl(
     test: DataFrame,
     stores: DataFrame,
     features: DataFrame,
-    share_train_stats: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full reference-parity ETL for both frames.
-
-    ``share_train_stats=True`` is the production-sane mode (impute test with
-    train statistics); default False mirrors the reference.
-    """
-    merged_train = join_and_impute(train, stores, features, stats=None)
-    if share_train_stats:
-        stats = fit_stats(
-            star_join(
-                train,
-                [(stores, "Store"), (features.drop("IsHoliday"), ["Store", "Date"])],
-            )
-        )
-        merged_test = join_and_impute(test, stores, features, stats=stats)
-    else:
-        merged_test = join_and_impute(test, stores, features, stats=None)
+    """Full reference-parity ETL for both frames; each frame is imputed
+    with its own statistics, as the reference does."""
+    merged_train = join_and_impute(train, stores, features)
+    merged_test = join_and_impute(test, stores, features)
     return add_features(merged_train), add_features(merged_test)
 
 

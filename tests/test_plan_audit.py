@@ -856,20 +856,21 @@ def test_q162_salted_join_executes_salt_exchange(spark):
 
 
 def test_group_median_highcard_single_exchange_single_sort(spark):
-    """The high-cardinality grouped median's whole point: ONE exchange
+    """The high-cardinality grouped median's whole point
+    (group_quantiles_highcard at p = 0.5, q166's operator): ONE exchange
     on the group key, ONE within-partition sort (both windows share
     it), and the final aggregate reuses the window's partitioning —
     audited on the raw operator (the registered q166 adds a display
     orderBy)."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        group_median_highcard,
+        group_quantiles_highcard,
     )
 
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
         "user_id", "value"
     )
     plan = (
-        group_median_highcard(ev, "user_id", "value")
+        group_quantiles_highcard(ev, "user_id", "value", [0.5])
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -924,6 +925,45 @@ def test_group_mad_highcard_single_exchange_no_join(spark):
     assert "Exchange rangepartitioning" not in plan
     assert "Join" not in plan, plan
     assert "LocalTableScan" not in plan, plan
+
+
+def test_grouped_quantile_operators_are_lazy(spark):
+    """The grouped exact-quantile operators build one lazy plan: calling
+    group_quartiles, the MAD fences or group_quantile_bins starts no
+    Spark job (no driver collect, no driver-built table) until the
+    result is collected, and group_quartiles' plan is ONE exchange on
+    the group key + ONE within-partition sort."""
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
+        group_mad_outlier_bounds_highcard,
+        group_quantile_bins,
+        group_quartiles,
+    )
+
+    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
+        "user_id", "event_type", "value"
+    )
+    sc = spark.sparkContext
+    group = "audit-grouped-quantiles-lazy"
+    sc.setJobGroup(group, "grouped quantile laziness audit")
+    try:
+        frames = [
+            group_quartiles(ev, "event_type", "value"),
+            group_mad_outlier_bounds_highcard(ev, "event_type", "value"),
+            group_quantile_bins(ev, "event_type", "value"),
+        ]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+        assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+        assert "Join" not in plan, plan
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        for f in frames:
+            assert f.collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
 
 def test_q169_interval_overlap_no_nested_loop(spark):

@@ -89,7 +89,7 @@ def test_exact_quantiles_match_python(spark, xs):
     )
 
     df = spark.createDataFrame([(x,) for x in xs], "x double")
-    got = exact_quantiles(df, "x", [0.25, 0.5, 0.75], n_ranges=3)
+    got = exact_quantiles(df, "x", [0.25, 0.5, 0.75])
     s = sorted(xs)
     for g, p in zip(got, [0.25, 0.5, 0.75]):
         r = (len(s) - 1) * p
@@ -179,7 +179,7 @@ def test_exact_quantiles_bucket_order_independence(spark):
 
 
 def test_group_quartiles_null_and_empty_groups(spark):
-    """group_quartiles on the shared scan: a NULL group key, a constant
+    """group_quartiles on the grouped rank-pick: a NULL group key, a constant
     group, and a group whose values are ALL null (must still emit its
     all-null row) alongside a normal group."""
     rows = [(None, float(i)) for i in range(11)] + [("c", 7.0)] * 5
@@ -213,6 +213,11 @@ def test_group_quartiles_match_python(spark):
         xs = [((i * 37 + g * 11) % 97) / 7.0 for i in range(50 + g * 30)]
         data[g] = sorted(xs)
         rows += [(g, x) for x in xs]
+    # group 3: a spike — ~90% of the values are one repeated value (an
+    # imputed median), so every quartile rank lands inside the run
+    spike = [1234.5] * 180 + [((i * 29) % 53) * 41.0 for i in range(20)]
+    data[3] = sorted(spike)
+    rows += [(3, x) for x in spike]
     df = spark.createDataFrame(rows, "g int, x double")
     got = {r["g"]: r for r in group_quartiles(df, "g", "x").collect()}
     for g, s in data.items():
@@ -1148,7 +1153,7 @@ def test_group_mad_outlier_bounds_python_twin(spark):
     import statistics
 
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        group_mad_outlier_bounds,
+        group_mad_outlier_bounds_highcard,
     )
 
     data = {
@@ -1159,7 +1164,10 @@ def test_group_mad_outlier_bounds_python_twin(spark):
     rows = [(g, x) for g, xs in data.items() for x in xs]
     rows += [("a", None), ("empty", None)]
     df = spark.createDataFrame(rows, "g string, x double")
-    got = {r["g"]: r for r in group_mad_outlier_bounds(df, "g", "x", k=3.0).collect()}
+    got = {
+        r["g"]: r
+        for r in group_mad_outlier_bounds_highcard(df, "g", "x", k=3.0).collect()
+    }
     assert set(got) == {"a", None, "c"}  # 'empty' absent
     for g, xs in data.items():
         med = statistics.median(xs)
@@ -1178,13 +1186,13 @@ def test_group_mad_outlier_bounds_python_twin(spark):
 
 
 def test_group_median_highcard_python_twin(spark):
-    """Rank-arithmetic median == statistics.median per group (odd and
-    even n, duplicate values, null group, NaN/null values excluded;
-    all-null groups absent)."""
+    """Rank-arithmetic median (group_quantiles_highcard at p = 0.5) ==
+    statistics.median per group (odd and even n, duplicate values, null
+    group, NaN/null values excluded; all-null groups absent)."""
     import statistics
 
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        group_median_highcard,
+        group_quantiles_highcard,
     )
 
     data = {
@@ -1197,8 +1205,8 @@ def test_group_median_highcard_python_twin(spark):
     rows += [("odd", None), ("odd", float("nan")), ("gone", None)]
     df = spark.createDataFrame(rows, "g string, x double")
     got = {
-        r["g"]: (r["n"], r["median"])
-        for r in group_median_highcard(df, "g", "x").collect()
+        r["g"]: (r["n"], r["p50"])
+        for r in group_quantiles_highcard(df, "g", "x", [0.5]).collect()
     }
     assert set(got) == {"odd", "even", "dups", None}
     for g, xs in data.items():
@@ -1252,11 +1260,11 @@ def test_group_quantiles_highcard_python_twin(spark):
 
 
 def test_group_mad_highcard_python_twin(spark):
-    """Stacked-window MAD fences == the bounded-group
-    group_mad_outlier_bounds semantics computed in pure Python: same
-    median/MAD interpolation, same k·1.4826 fence arithmetic, n counts
-    non-null non-NaN values, null group is a group, all-null groups
-    absent, and a constant group collapses to mad=0 with lo==hi."""
+    """Stacked-window MAD fences == the MAD-fence semantics computed in
+    pure Python: same median/MAD interpolation, same k·1.4826 fence
+    arithmetic, n counts non-null non-NaN values, null group is a group,
+    all-null groups absent, and a constant group collapses to mad=0
+    with lo==hi."""
     import statistics
 
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
@@ -1377,13 +1385,13 @@ def test_group_median_highcard_interpolation_no_overflow(spark):
     interpolation form, not (lo+hi)/2 — two near-max doubles overflow
     the sum to inf."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        group_median_highcard,
+        group_quantiles_highcard,
     )
 
     big = 1.5e308
     df = spark.createDataFrame([("a", big), ("a", big)], "g string, x double")
-    got = group_median_highcard(df, "g", "x").first()
-    assert got["median"] == big  # not inf
+    got = group_quantiles_highcard(df, "g", "x", [0.5]).first()
+    assert got["p50"] == big  # not inf
 
 
 def test_funnel_steps_python_twin(spark):
