@@ -10,134 +10,60 @@ from __future__ import annotations
 
 import math
 from itertools import combinations
+from operator import itemgetter
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _refine_ranks(
-    melted: DataFrame,
-    pending: list[dict],
-    bins: int,
-    collect_limit: int,
-    max_depth: int,
-) -> dict:
-    """Shared histogram-refinement engine over a melted ``(name, v)`` frame.
+# The global exact-quantile engine's sizes: module constants, not options
+# (tests monkeypatch them to force the multi-round paths on tiny frames).
+_SUB_BUCKETS = 16  # mantissa slices per binary exponent (``_log_bucket``)
+_BINS = 1024  # uniform bins a split cell is cut into
+_COLLECT_LIMIT = 65536  # a rank cell this small is collected as (value, count)
+_MAX_ROUNDS = 6  # split rounds before a cell is collected whatever its size
 
-    ``pending`` brackets are dicts with ``key`` (result key), ``cond`` (a
-    Column predicate over the melted frame selecting the bracket's rows),
-    ``lo``/``hi`` (value range for bucket arithmetic), ``below`` (global
-    rank offset), ``count`` and ``ranks`` (0-based global ranks to
-    resolve). Returns ``{key: {rank: value}}``. See
-    ``exact_quantiles_multi`` for the algorithm and scale rationale.
-    """
-    resolved: dict = {}
-    for b in pending:
-        resolved.setdefault(b["key"], {})
 
-    def bucket_of(lo: float, hi: float):
-        raw = F.floor((F.col("v") - F.lit(float(lo))) / F.lit(float(hi) - float(lo)) * bins)
-        return F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1))
+def _merge_spans(cells) -> list[tuple]:
+    """Order ``(n, mn, mx)`` cells by their EXACT value spans and merge
+    overlapping ones: after the merge no two spans
+    overlap, so cumulative counts give ranks and ``v between mn and mx``
+    selects exactly one merged cell's rows. Cell-code order is never
+    trusted (``_log_bucket`` codes slip near powers of two)."""
+    merged: list[tuple] = []
+    for cell in sorted(cells, key=itemgetter(1, 2)):
+        if merged and cell[1] <= merged[-1][2]:
+            n, mn, mx = merged[-1]
+            merged[-1] = (n + cell[0], mn, max(mx, cell[2]))
+        else:
+            merged.append(cell)
+    return merged
 
-    finals: list[dict] = []
-    depth = 0
-    while pending:
-        big: list[dict] = []
-        for b in pending:
-            # an infinite span (values straddling ±~1e308) would turn the
-            # child bounds into inf*0 = NaN — such a bracket goes straight
-            # to the final collect instead of subdividing
-            span = b["hi"] - b["lo"]
-            splittable = (
-                b["hi"] > b["lo"] and math.isfinite(span) and span / bins > 0
-            )
-            if b["count"] <= collect_limit or not splittable or depth >= max_depth:
-                finals.append(b)
-            else:
-                big.append(b)
-        pending = []
-        if not big:
+
+def _walk_ranks(spans, ranks, below: int, what: str) -> list[tuple]:
+    """Place 0-based global ``ranks`` in consecutive ``(n, mn, mx)``
+    spans whose first row has rank ``below``. Returns ``(span, cum,
+    taken)`` for every span that takes a rank, ``cum`` the global rank
+    of the span's first row. A rank no span holds means the counts
+    disagree with the ranks' source: raised, never guessed."""
+    kranks = sorted(ranks)
+    ki, cum = 0, below
+    placed = []
+    for span in spans:
+        if ki == len(kranks):
             break
-        sel_bid = None
-        sel_bucket = None
-        for i, b in enumerate(big):
-            expr = bucket_of(b["lo"], b["hi"])
-            sel_bid = F.when(b["cond"], i) if sel_bid is None else sel_bid.when(b["cond"], i)
-            sel_bucket = (
-                F.when(b["cond"], expr) if sel_bucket is None else sel_bucket.when(b["cond"], expr)
-            )
-        # Arrow toPandas, not collect(): these results can run to tens of
-        # thousands of rows and Row-object materialization was measured at
-        # ~30k rows/s vs ~ms for an Arrow batch
-        hist_rows = (
-            melted.select(sel_bid.alias("bid"), sel_bucket.alias("bucket"))
-            .where(F.col("bid").isNotNull())
-            .groupBy("bid", "bucket")
-            .count()
-            .toPandas()
+        taken = []
+        while ki < len(kranks) and cum <= kranks[ki] < cum + span[0]:
+            taken.append(kranks[ki])
+            ki += 1
+        if taken:
+            placed.append((span, cum, taken))
+        cum += span[0]
+    if ki != len(kranks):
+        raise RuntimeError(
+            f"{what}: lost ranks {kranks[ki:]} (n={cum - below})"
         )
-        counts: dict[int, dict[int, int]] = {}
-        for bid, bucket, cnt in hist_rows.itertuples(index=False):
-            counts.setdefault(int(bid), {})[int(bucket)] = int(cnt)
-        for i, b in enumerate(big):
-            span = b["hi"] - b["lo"]
-            cnts = counts.get(i, {})
-            cum = b["below"]
-            children: dict[int, dict] = {}
-            kranks = sorted(b["ranks"])
-            ki = 0
-            for k in sorted(cnts):
-                cnt = cnts[k]
-                while ki < len(kranks) and cum <= kranks[ki] < cum + cnt:
-                    child = children.get(k)
-                    if child is None:
-                        child = children[k] = {
-                            "key": b["key"],
-                            "cond": b["cond"] & (bucket_of(b["lo"], b["hi"]) == k),
-                            "lo": b["lo"] + span * k / bins,
-                            "hi": b["lo"] + span * (k + 1) / bins,
-                            "below": cum,
-                            "count": cnt,
-                            "ranks": set(),
-                        }
-                    child["ranks"].add(kranks[ki])
-                    ki += 1
-                cum += cnt
-            if ki != len(kranks):
-                raise RuntimeError(
-                    f"histogram pass lost ranks for {b['key']}: {kranks[ki:]}"
-                )
-            pending.extend(children.values())
-        depth += 1
-
-    if finals:
-        sel_fid = None
-        for i, b in enumerate(finals):
-            sel_fid = F.when(b["cond"], i) if sel_fid is None else sel_fid.when(b["cond"], i)
-        val_rows = (
-            melted.select(sel_fid.alias("fid"), "v")
-            .where(F.col("fid").isNotNull())
-            .groupBy("fid", "v")
-            .count()
-            .toPandas()
-        )
-        groups: dict[int, list[tuple[float, int]]] = {}
-        for fid, v, cnt in val_rows.itertuples(index=False):
-            groups.setdefault(int(fid), []).append((float(v), int(cnt)))
-        for i, b in enumerate(finals):
-            cum = b["below"]
-            kranks = sorted(b["ranks"])
-            ki = 0
-            for v, cnt in sorted(groups.get(i, [])):
-                while ki < len(kranks) and cum <= kranks[ki] < cum + cnt:
-                    resolved[b["key"]][kranks[ki]] = v
-                    ki += 1
-                cum += cnt
-            if ki != len(kranks):
-                raise RuntimeError(
-                    f"final pass lost ranks for {b['key']}: {kranks[ki:]}"
-                )
-    return resolved
+    return placed
 
 
 def _log_bucket(v, sub_buckets: int):
@@ -147,10 +73,10 @@ def _log_bucket(v, sub_buckets: int):
     bounds, so a histogram over it needs NO prior min/max pass.
 
     Near powers of two a faithfully-rounded ``log2`` can land the exponent
-    one off; the clamps below keep the code well-defined there, and
-    ``_grouped_quantile_scan`` never assumes code order matches value
-    order — cells are re-ordered and merged by their EXACT per-cell
-    (min, max) spans, so a boundary slip costs at most a merged cell,
+    one off; the clamps below keep the code well-defined there, and no
+    reader assumes code order matches value order — cells are re-ordered
+    and merged by their EXACT per-cell (min, max) spans
+    (``_merge_spans``), so a boundary slip costs at most a merged cell,
     never a wrong answer. ±inf saturates the mantissa clamp; 0 is its own
     bucket; NaN/null in → null out (callers exclude them from counts).
     """
@@ -167,132 +93,6 @@ def _log_bucket(v, sub_buckets: int):
     return F.when(v == 0, F.lit(0)).otherwise(
         (F.signum(v) * code).cast("long")
     )
-
-
-def _grouped_quantile_scan(
-    melted: DataFrame,
-    bins: int,
-    collect_limit: int,
-    max_depth: int,
-    sub_buckets: int = 16,
-) -> tuple[dict, dict]:
-    """ONE whole-stage-codegen hash aggregate over
-    ``(name, _log_bucket(v))`` yields, per column name, exact moments
-    (count / sum / sum² / min / max folded from the cells on the driver)
-    AND a histogram whose cells carry their exact value spans — so the
-    moments pass and the first histogram pass of the old design collapse
-    into a single job, and the common case (every rank cell under
-    ``collect_limit``) finishes in ONE more job (``_refine_ranks``' final
-    collect). Cells with min == max (duplicate spikes) resolve with no
-    second job at all.
-
-    Driver state is one row per (column, active bucket) — ≤ ~2k buckets
-    per column for doubles spanning a typical data range (the bucketing
-    is log-spaced: exponents × ``sub_buckets``). Returns
-    ``(stats, resolve)`` where ``stats[name] = (n, sum, sum2, min, max)``
-    and ``resolve(ranks_by_key)`` resolves the requested 0-based global
-    ranks (keys are the melted frame's ``name`` strings). Grouped
-    quantiles do not come here: see ``_group_rank_pick``.
-    """
-    # the bucket code feeds ONLY this one aggregate: the refinement/final
-    # pass re-selects bracket rows on the UN-bucketed melted frame by
-    # name + exact value span (resolve() below), so the code is never
-    # recomputed downstream — and keeping the span predicates off the
-    # computed column avoids Catalyst's project-collapse inlining the
-    # log2/pow chain into every bracket branch (measured ~10x the cost
-    # of the plain value comparisons)
-    bucketed = melted.select(
-        "name", F.col("v"), _log_bucket(F.col("v"), sub_buckets).alias("b")
-    )
-    cell_df = bucketed.groupBy("name", "b").agg(
-        F.count("v").alias("n"),
-        F.sum("v").alias("s"),
-        F.sum(F.col("v") * F.col("v")).alias("s2"),
-        F.min("v").alias("mn"),
-        F.max("v").alias("mx"),
-    )
-    # toArrow, not collect(): (columns x active cells) result rows, and
-    # Row materialization runs ~30k rows/s
-    rows = cell_df.toArrow().to_pylist()
-    cells: dict = {}
-    stats: dict = {}
-    for r in rows:
-        k = r["name"]
-        zn, zs, zs2, zmn, zmx = stats.get(k, (0, 0.0, 0.0, None, None))
-        if r["n"]:
-            zn += r["n"]
-            zs += r["s"]
-            zs2 += r["s2"]
-            zmn = r["mn"] if zmn is None else min(zmn, r["mn"])
-            zmx = r["mx"] if zmx is None else max(zmx, r["mx"])
-            cells.setdefault(k, []).append((r["b"], r["n"], r["mn"], r["mx"]))
-        stats[k] = (zn, zs, zs2, zmn, zmx)
-
-    def resolve(ranks_by_key: dict) -> dict:
-        resolved: dict = {k: {} for k in ranks_by_key}
-        pending: list[dict] = []
-        for k, ranks in ranks_by_key.items():
-            kranks = sorted(ranks)
-            ki = 0
-            # order and merge cells by their EXACT value spans (code order
-            # is only approximate near power-of-two boundaries)
-            merged: list[list] = []  # [n, mn, mx]
-            for _code, n, mn, mx in sorted(
-                cells.get(k, []), key=lambda c: (c[2], c[3])
-            ):
-                if merged and mn <= merged[-1][2]:
-                    merged[-1][0] += n
-                    merged[-1][2] = max(merged[-1][2], mx)
-                else:
-                    merged.append([n, mn, mx])
-            cum = 0
-            for n, mn, mx in merged:
-                take: set[int] = set()
-                while ki < len(kranks) and cum <= kranks[ki] < cum + n:
-                    take.add(kranks[ki])
-                    ki += 1
-                if take:
-                    if mn == mx:
-                        for rk in take:
-                            resolved[k][rk] = mn
-                    else:
-                        # membership by VALUE SPAN, not bucket codes: after
-                        # merging, no other cell's span overlaps [mn, mx],
-                        # so `name matches AND v between mn and mx` selects
-                        # exactly this group's rows
-                        pending.append(
-                            {
-                                "key": k,
-                                "lo": mn,
-                                "hi": mx,
-                                "below": cum,
-                                "count": n,
-                                "ranks": take,
-                            }
-                        )
-                cum += n
-            if ki != len(kranks):
-                raise RuntimeError(
-                    f"bucket scan lost ranks for {k}: {kranks[ki:]} (n={cum})"
-                )
-
-        # membership predicates are plain comparisons — a broadcast-join
-        # lookup-table form (plan-stable, codegen-cached) was built and
-        # measured too: the broadcast build job cost more than the ~0.4 s
-        # of literal-when-chain recompilation it saved
-        for b in pending:
-            b["cond"] = (
-                (F.col("name") == F.lit(b["key"]))
-                & (F.col("v") >= F.lit(float(b["lo"])))
-                & (F.col("v") <= F.lit(float(b["hi"])))
-            )
-        for k, d in _refine_ranks(
-            melted, pending, bins, collect_limit, max_depth
-        ).items():
-            resolved[k].update(d)
-        return resolved
-
-    return stats, resolve
 
 
 def exact_quantiles(df: DataFrame, col: str, probs: list[float]) -> list[float]:
@@ -317,39 +117,43 @@ def exact_quantiles_multi(
     columns: list[str],
     probs: list[float],
     return_stats: bool = False,
-    bins: int = 1024,
-    collect_limit: int = 65536,
-    max_depth: int = 6,
-    sub_buckets: int = 16,
 ):
     """Exact quantiles for SEVERAL columns, never shuffling or caching the
-    data rows — typically TWO jobs total regardless of column count.
+    data rows — typically TWO aggregate rounds regardless of column count.
 
-    1. The columns are melted with ``stack`` (a projection, not a shuffle)
-       and ONE whole-stage-codegen hash aggregate over
-       ``(column, _log_bucket(v))`` computes count / sum / sum² / min /
-       max per magnitude cell. The driver folds the cells into exact
-       per-column moments AND already knows which cell every target rank
-       ``floor/ceil((n-1)·p)`` falls in — the separate moments pass and
-       first histogram pass of the earlier design were fused away (a
-       ``percentile_approx`` rider was measured first and REJECTED: the
+    The columns are melted with ``stack`` (a projection, not a shuffle)
+    and every round is one hash aggregate whose cells carry an exact
+    span ``(n, mn, mx)``:
+
+    1. Round 0 is the log-bucket cell table (``quantile_cells_by`` over
+       ``(column, _log_bucket(v))``); its count / sum / sum² / min / max
+       fold into exact per-column moments on the driver (a
+       ``percentile_approx`` rider was measured and REJECTED: the
        ObjectHashAggregate it forces evicts the moments from codegen and
        costs more than the job it saves).
-    2. Rank cells with min == max (duplicate spikes) resolve immediately.
-       The rest go to ``_refine_ranks`` with their exact (min, max) spans:
-       a final ``(value, count)`` collect when the cell holds ≤
-       ``collect_limit`` rows (the common case — log-bucketing keeps cells
-       ~n/(active buckets)), else uniform ``bins``-way subdivision rounds
-       (each round divides the population by up to ``bins``, so even
-       10^12-row columns resolve in 2-3 extra rounds).
+    2. Every round the driver merges each column's (or bracket's) cells
+       by exact span (``_merge_spans``) and places the target ranks
+       ``floor/ceil((n-1)·p)`` (``_walk_ranks``). A rank cell with
+       mn == mx (a duplicate spike) resolves at once; one with ≤
+       ``_COLLECT_LIMIT`` rows (the common case — log-bucketing keeps
+       cells ~n/(active buckets)) is collected as ``(value, count)``
+       cells in the next round, which resolve the same way; a larger one
+       is cut into ``_BINS`` uniform bins in the next round, each again
+       with its exact span. Rows of a rank cell are selected by the flat
+       predicate ``name == column AND v between mn and mx``.
 
-    Bucket membership is re-derived from the same deterministic value
-    expression in every pass, so no persist() is needed for cross-job
+    A spike therefore resolves in the round whose cell first isolates it,
+    and each split divides the population by up to ``_BINS``.
+    Termination guards: after ``_MAX_ROUNDS`` splits, or for a
+    span that is infinite or underflows when divided into bins (values
+    straddling ±~1e308, subnormal gaps), the cell is collected whatever
+    its size. Membership is re-derived from deterministic value
+    predicates in every pass, so no persist() is needed for cross-job
     consistency. NaNs are excluded (count, mean, quantiles) — matching
     SQL ``quantile_cont`` semantics.
 
     With ``return_stats=True`` also returns per-column
-    ``(n, mean, stddev, min, max)`` assembled from step 1's moments —
+    ``(n, mean, stddev, min, max)`` assembled from round 0's moments —
     ``describe``-style stats then cost zero extra scans. Returns
     ``quantiles`` or ``(quantiles, stats)``.
 
@@ -362,25 +166,92 @@ def exact_quantiles_multi(
         f"stack({len(columns)}, {stack_expr}) as (name, raw)"
     ).select("name", F.when(~F.isnan("raw"), F.col("raw")).alias("v"))
 
-    cell_stats, resolve = _grouped_quantile_scan(
-        melted, bins, collect_limit, max_depth, sub_buckets
-    )
-    totals = {c: cell_stats.get(c, (0,))[0] for c in columns}
+    # toArrow, not collect(): these results can run to tens of thousands
+    # of rows and Row materialization runs ~30k rows/s; columns convert
+    # with to_numpy().tolist(), ~25x faster than to_pylist() at 40k rows
+    t = quantile_cells_by(melted, "name", "v").toArrow()
+    cells: dict = {}
+    moments: dict = {}
+    for k, n, s, s2, mn, mx in zip(
+        *(t.column(c).to_numpy().tolist() for c in ("name", "n", "s", "s2", "mn", "mx"))
+    ):
+        zn, zs, zs2, zmn, zmx = moments.get(k, (0, 0.0, 0.0, mn, mx))
+        moments[k] = (zn + n, zs + s, zs2 + s2, min(zmn, mn), max(zmx, mx))
+        cells.setdefault(k, []).append((n, mn, mx))
+    totals = {c: moments.get(c, (0,))[0] for c in columns}
 
-    resolved: dict[str, dict[int, float]] = {c: {} for c in columns}
-    ranks_by_key: dict = {}
+    # pending: (column, rank of the first row, ranks to place, cells)
+    pending = []
     for c in columns:
         n = totals[c]
-        if n == 0:
-            continue
-        ranks: set[int] = set()
-        for p in probs:
-            r = (n - 1) * p
-            ranks.add(math.floor(r))
-            ranks.add(math.ceil(r))
-        ranks_by_key[c] = ranks
-    for k, d in resolve(ranks_by_key).items():
-        resolved[k].update(d)
+        if n:
+            targets = [(n - 1) * p for p in probs]
+            ranks = {math.floor(r) for r in targets} | {math.ceil(r) for r in targets}
+            pending.append((c, 0, ranks, cells[c]))
+    resolved: dict[str, dict[int, float]] = {c: {} for c in columns}
+    rounds = 0
+    while pending:
+        split, collect = [], []
+        for key, below, ranks, kcells in pending:
+            for (n, mn, mx), cum, taken in _walk_ranks(
+                _merge_spans(kcells), ranks, below, f"exact_quantiles {key}"
+            ):
+                span = mx - mn
+                if mn == mx:
+                    resolved[key].update(dict.fromkeys(taken, mn))
+                elif (
+                    n <= _COLLECT_LIMIT
+                    or rounds >= _MAX_ROUNDS
+                    or not (math.isfinite(span) and span / _BINS > 0)
+                ):
+                    collect.append((key, cum, taken, mn, mx))
+                else:
+                    split.append((key, cum, taken, mn, mx))
+        brackets = split + collect
+        if not brackets:
+            break
+        # membership predicates are plain comparisons — a broadcast-join
+        # lookup-table form (plan-stable, codegen-cached) was built and
+        # measured too: the broadcast build job cost more than the ~0.4 s
+        # of literal-when-chain recompilation it saved
+        bid = None
+        for i, (key, _, _, mn, mx) in enumerate(brackets):
+            cond = (F.col("name") == F.lit(key)) & F.col("v").between(
+                F.lit(float(mn)), F.lit(float(mx))
+            )
+            bid = F.when(cond, i) if bid is None else bid.when(cond, i)
+        # a split bracket's rows group by uniform bin, a collected one's by
+        # value; the bins read the bracket id, so the membership chain is
+        # evaluated once per row
+        cell = None
+        for i, (_, _, _, mn, mx) in enumerate(split):
+            cut = F.floor(
+                (F.col("v") - F.lit(float(mn))) / F.lit(float(mx - mn)) * _BINS
+            )
+            hit = F.col("bid") == i
+            cell = F.when(hit, cut) if cell is None else cell.when(hit, cut)
+        cell = F.col("v") if cell is None else cell.otherwise(F.col("v"))
+        t = (
+            melted.select(bid.alias("bid"), "v")
+            .where(F.col("bid").isNotNull())
+            .groupBy("bid", cell.alias("cell"))
+            .agg(
+                F.count("v").alias("n"),
+                F.min("v").alias("mn"),
+                F.max("v").alias("mx"),
+            )
+            .toArrow()
+        )
+        by_bid: dict[int, list] = {}
+        for i, n, mn, mx in zip(
+            *(t.column(c).to_numpy().tolist() for c in ("bid", "n", "mn", "mx"))
+        ):
+            by_bid.setdefault(i, []).append((n, mn, mx))
+        pending = [
+            (key, cum, taken, by_bid.get(i, []))
+            for i, (key, cum, taken, _, _) in enumerate(brackets)
+        ]
+        rounds += 1
 
     def assemble_stats() -> dict[str, tuple]:
         stats: dict[str, tuple] = {}
@@ -389,7 +260,7 @@ def exact_quantiles_multi(
             if n == 0:
                 stats[c] = (0, None, None, None, None)
                 continue
-            _, s, s2, mn, mx = cell_stats[c]
+            _, s, s2, mn, mx = moments[c]
             mean = s / n
             # sample stddev from raw moments; the tiny catastrophic-
             # cancellation risk is irrelevant at the 4dp describe rounds
@@ -415,19 +286,16 @@ def exact_quantiles_multi(
 
 def describe_plus(df: DataFrame, columns: list[str]) -> DataFrame:
     """A5/A6: count / mean / stddev / min / max / exact quartiles per column,
-    one aggregate job for all columns (vs ``df.describe()`` + a separate
-    pandas quantile pass in the reference, ``Scripts/eda.py:58,77-81``).
+    from ONE ``exact_quantiles_multi`` call over all columns (vs
+    ``df.describe()`` + a separate pandas quantile pass in the reference,
+    ``Scripts/eda.py:58,77-81``).
 
     Output: one row per column — (column, n, mean, stddev, min, q1, median,
-    q3, max). Uses exact ``percentile``; swap to ``percentile_approx`` when
-    the column cardinality is huge.
+    q3, max). The quartiles are exact ``quantile_cont`` values (never the
+    builtin ``percentile`` aggregate, see ``exact_quantiles``); the
+    moments ride along in the engine's first aggregate, so there is no
+    separate wide-stats job and no second table scan.
     """
-    # ONE melted scan serves everything: the rank-selection quantile pass
-    # (see exact_quantiles — the builtin percentile() aggregate is a
-    # session-degrading GC bomb on high-cardinality columns and a
-    # single-buffer funnel at scale) already aggregates per range slice, so
-    # count/mean/stddev/min/max ride along as extra moments in that same
-    # aggregate — no separate wide-stats job, no second table scan.
     quartiles, stats = exact_quantiles_multi(
         df, columns, [0.25, 0.5, 0.75], return_stats=True
     )
@@ -592,12 +460,12 @@ def group_quartiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     )
 
 
-def quantile_cells(
-    df: DataFrame, col: str, sub_buckets: int = 16
-) -> DataFrame:
+def quantile_cells(df: DataFrame, col: str) -> DataFrame:
     """The log-bucket engine's cell table as a VALUE: one codegen hash
     aggregate over ``_log_bucket(v)`` → ``(b, n, s, s2, mn, mx)`` rows
-    (≤ ~2k active cells for doubles spanning a typical range). The cell
+    (≤ ~2k active cells for doubles spanning a typical range) — the
+    ungrouped ``quantile_cells_by``, whose keyed form is also
+    ``exact_quantiles_multi``'s first round. The cell
     table is a MERGEABLE quantile/moments sketch: cells of two disjoint
     batches merge cellwise (sum n/s/s2, min mn, max mx), and the merge
     of batch cells equals the one-shot cells over the union — the
@@ -605,28 +473,13 @@ def quantile_cells(
     streaming_quantile_ingest``). Read estimates with
     ``cells_quantile_estimate``; NaN/null values are excluded, exactly
     like ``exact_quantiles``."""
-    v = F.col(col).cast("double")
-    v = F.when(~F.isnan(v), v)
-    return (
-        df.select(v.alias("v"))
-        .where(F.col("v").isNotNull())
-        .select("v", _log_bucket(F.col("v"), sub_buckets).alias("b"))
-        .groupBy("b")
-        .agg(
-            F.count("v").alias("n"),
-            F.sum("v").alias("s"),
-            F.sum(F.col("v") * F.col("v")).alias("s2"),
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-        )
-    )
+    return quantile_cells_by(df, [], col)
 
 
 def quantile_cells_by(
     df: DataFrame,
     group_cols: list[str] | str,
     value_col: str,
-    sub_buckets: int = 16,
 ) -> DataFrame:
     """``quantile_cells`` KEYED: one codegen hash aggregate over
     ``(groups..., _log_bucket(v))`` → per-group mergeable quantile/
@@ -646,10 +499,7 @@ def quantile_cells_by(
     return (
         df.select(*groups, v.alias("__v"))
         .where(F.col("__v").isNotNull())
-        .select(
-            *groups, "__v", _log_bucket(F.col("__v"), sub_buckets).alias("b")
-        )
-        .groupBy(*groups, "b")
+        .groupBy(*groups, _log_bucket(F.col("__v"), _SUB_BUCKETS).alias("b"))
         .agg(
             F.count("__v").alias("n"),
             F.sum("__v").alias("s"),
@@ -797,38 +647,27 @@ def cells_quantile_estimate(
     ``[(estimate, lo, hi), ...]``; empty state → all
     ``(None, None, None)``. Driver cost: one bounded collect (the cell
     table), never the values."""
-    rows = [tuple(r) for r in cells.select("b", "n", "mn", "mx").collect()]
-    merged: list[list] = []
-    for _b, n, mn, mx in sorted(rows, key=lambda c: (c[2], c[3])):
-        if merged and mn <= merged[-1][2]:
-            merged[-1][0] += n
-            merged[-1][2] = max(merged[-1][2], mx)
-        else:
-            merged.append([n, mn, mx])
+    merged = _merge_spans(
+        tuple(r) for r in cells.select("n", "mn", "mx").collect()
+    )
     total = sum(m[0] for m in merged)
-
-    def locate(rank: int) -> tuple[float, float, float]:
-        """(estimate, lo, hi) for one INTEGER rank: its cell's span is
-        the bound; the estimate places the rank uniformly inside."""
-        cum = 0
-        for n, mn, mx in merged:
-            if cum <= rank < cum + n:
-                frac_in = (rank - cum) / n
-                return (mn + (mx - mn) * frac_in, mn, mx)
-            cum += n
-        n, mn, mx = merged[-1]
-        return (mx, mn, mx)
-
+    if total == 0:
+        return [(None, None, None)] * len(probs)
+    targets = [(total - 1) * p for p in probs]
+    ranks = {math.floor(r) for r in targets} | {math.ceil(r) for r in targets}
+    # (estimate, lo, hi) per INTEGER rank: its cell's span is the bound;
+    # the estimate places the rank uniformly inside
+    at = {}
+    for (n, mn, mx), cum, taken in _walk_ranks(
+        merged, ranks, 0, "cells_quantile_estimate"
+    ):
+        for rank in taken:
+            at[rank] = (mn + (mx - mn) * ((rank - cum) / n), mn, mx)
     out: list[tuple] = []
-    for p in probs:
-        if total == 0:
-            out.append((None, None, None))
-            continue
-        rk = (total - 1) * p
-        lo_r, hi_r = math.floor(rk), math.ceil(rk)
+    for rk in targets:
+        lo_r = math.floor(rk)
         frac = rk - lo_r
-        e1, l1, h1 = locate(lo_r)
-        e2, l2, h2 = locate(hi_r)
+        (e1, l1, h1), (e2, l2, h2) = at[lo_r], at[math.ceil(rk)]
         out.append(
             (
                 e1 + (e2 - e1) * frac,
@@ -899,7 +738,8 @@ def quantile_fence_alerts(
     (``n_above_hi``) exceed the ``breach_num/breach_den`` rate,
     ``'clear'`` only when even the POSSIBLE breaches (``n_above_lo``)
     don't, and ``'margin'`` when the cell span straddles the decision
-    (tighten with more ``sub_buckets`` at fold time). Batch groups with
+    (its bounds are one cell's exact value span: at most 1/16 of a binary
+    magnitude, ``_SUB_BUCKETS`` mantissa slices). Batch groups with
     no folded baseline report ``'no_baseline'`` (fences null); baseline
     groups absent from the batch emit nothing (nothing to alert on).
     Null/NaN batch values are excluded, like the fold itself.
@@ -1100,9 +940,15 @@ def outlier_bounds(df: DataFrame, col: str, k: float = 1.5) -> tuple[float, floa
     """A6/P10: IQR outlier fence (reference computes it on the pandas sample,
     ``Scripts/eda.py:77-84``). Returns (lo, hi); filter Spark-side with
     ``df.where((c < lo) | (c > hi))``."""
-    qs = exact_quantiles(df, col, [0.25, 0.75])
-    _require_values(col, "outlier_bounds", qs)
-    q1, q3 = qs
+    return iqr_fence(col, exact_quantiles(df, col, [0.25, 0.75]), k)
+
+
+def iqr_fence(col: str, quartiles: list, k: float = 1.5) -> tuple[float, float]:
+    """``outlier_bounds``' fence from already-computed ``(q1, q3)`` — e.g.
+    a ``describe_plus`` row — so a caller holding the quartiles pays no
+    second quantile pass."""
+    _require_values(col, "outlier_bounds", quartiles)
+    q1, q3 = quartiles
     iqr = q3 - q1
     return q1 - k * iqr, q3 + k * iqr
 

@@ -19,6 +19,7 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics 
     describe_plus,
     group_quartiles,
     histogram,
+    iqr_fence,
     outlier_bounds,
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.cleaning import (
@@ -64,7 +65,14 @@ def eda_report(
     """
     from pyspark.sql import functions as F
 
-    lo, hi = outlier_bounds(df, value_col)
+    describe = describe_plus(df, numeric_cols)
+    if value_col in numeric_cols:
+        # the describe row holds the same engine's q1/q3 for this column,
+        # so the fence needs no second quantile pass
+        q = describe.where(F.col("column") == value_col).first()
+        lo, hi = iqr_fence(value_col, [q["q1"], q["q3"]])
+    else:
+        lo, hi = outlier_bounds(df, value_col)
     top = (
         df.groupBy(group_col)
         .agg(F.avg(value_col).alias(f"avg_{value_col}"))
@@ -75,7 +83,7 @@ def eda_report(
         n_rows=df.count(),
         schema=df.dtypes,
         nulls=null_counts(df),
-        describe=describe_plus(df, numeric_cols),
+        describe=describe,
         histogram=histogram(df, value_col, n_bins=n_bins),
         correlations=correlations(df, numeric_cols, target=value_col),
         top_groups=top,

@@ -434,7 +434,6 @@ def streaming_quantile_ingest(
     stream: DataFrame,
     state_dir: str,
     value_col: str,
-    sub_buckets: int = 16,
     checkpoint_dir: str | None = None,
     keep_versions: int = 3,
 ):
@@ -454,7 +453,7 @@ def streaming_quantile_ingest(
     )
 
     def fold(standing: DataFrame, batch: DataFrame) -> DataFrame:
-        fresh = quantile_cells(batch, value_col, sub_buckets)
+        fresh = quantile_cells(batch, value_col)
         return (
             standing.unionByName(fresh)
             .groupBy("b")
@@ -528,7 +527,6 @@ def streaming_quantile_by_ingest(
     state_dir: str,
     group_cols: list[str] | str,
     value_col: str,
-    sub_buckets: int = 16,
     checkpoint_dir: str | None = None,
     keep_versions: int = 3,
     on_commit=None,
@@ -555,7 +553,7 @@ def streaming_quantile_by_ingest(
     _check_cell_group_names(groups, "streaming_quantile_by_ingest")
 
     def fold(standing: DataFrame, batch: DataFrame) -> DataFrame:
-        fresh = quantile_cells_by(batch, groups, value_col, sub_buckets)
+        fresh = quantile_cells_by(batch, groups, value_col)
         return (
             standing.unionByName(fresh)
             .groupBy(*groups, "b")
@@ -595,7 +593,6 @@ def streaming_fence_monitor_ingest(
     prob: float = 0.99,
     breach_num: int = 1,
     breach_den: int = 100,
-    sub_buckets: int = 16,
     checkpoint_dir: str | None = None,
     keep_versions: int = 3,
 ):
@@ -651,7 +648,6 @@ def streaming_fence_monitor_ingest(
         state_dir,
         groups,
         value_col,
-        sub_buckets,
         checkpoint_dir,
         keep_versions,
         on_commit=on_commit,

@@ -111,25 +111,26 @@ def test_approx_distinct_within_rsd(spark):
         assert abs(r["approx_users"] - exact) <= max(1, 0.1 * exact), r
 
 
-def test_exact_quantiles_skewed_multi_round(spark):
-    """Force the histogram-refinement recursion: ``sub_buckets=1`` collapses
-    every same-exponent value into one log-bucket cell, and a tiny
-    collect_limit makes the [1,2) cell (160 rows, 60 of them a duplicate
-    spike) overflow — so subdivision rounds, the duplicate-run depth exit,
-    and the instant min==max resolution (the 42.0 mass) all run."""
+def test_exact_quantiles_skewed_multi_round(spark, monkeypatch):
+    """Force the histogram-refinement recursion: one mantissa slice
+    (``_SUB_BUCKETS = 1``) collapses every same-exponent value into one
+    log-bucket cell, and a tiny ``_COLLECT_LIMIT`` makes the [1,2) cell
+    (160 rows, 60 of them a duplicate spike) overflow — so subdivision
+    rounds and the instant min==max resolution (the 42.0 mass) all run."""
     import math
 
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        exact_quantiles_multi,
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators import (
+        analytics as A,
     )
 
+    monkeypatch.setattr(A, "_BINS", 8)
+    monkeypatch.setattr(A, "_COLLECT_LIMIT", 50)
+    monkeypatch.setattr(A, "_MAX_ROUNDS", 6)
+    monkeypatch.setattr(A, "_SUB_BUCKETS", 1)
     xs = [1 + i / 101.0 for i in range(100)] + [1.5] * 60 + [42.0] * 900
     df = spark.createDataFrame([(x,) for x in xs], "x double")
     probs = [0.02, 0.05, 0.1, 0.5, 0.9]
-    got, stats = exact_quantiles_multi(
-        df, ["x"], probs, return_stats=True, bins=8, collect_limit=50, max_depth=6,
-        sub_buckets=1,
-    )
+    got, stats = A.exact_quantiles_multi(df, ["x"], probs, return_stats=True)
     s = sorted(xs)
     for g, p in zip(got["x"], probs):
         r = (len(s) - 1) * p
@@ -229,26 +230,71 @@ def test_group_quartiles_match_python(spark):
         assert got[g]["min"] == s[0] and got[g]["max"] == s[-1]
 
 
-def test_exact_quantiles_extreme_magnitudes(spark):
+def test_exact_quantiles_extreme_magnitudes(spark, monkeypatch):
     """Values straddling ±1e308 make the root bracket span overflow to inf;
     the engine must fall back to a final collect instead of producing NaN
     child bounds."""
     import math
 
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        exact_quantiles_multi,
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators import (
+        analytics as A,
     )
 
+    monkeypatch.setattr(A, "_COLLECT_LIMIT", 50)
     xs = [-1.0e308, -5.0, 0.0, 5.0, 1.0e308] * 40
     df = spark.createDataFrame([(x,) for x in xs], "x double")
     probs = [0.25, 0.5, 0.75]
-    got = exact_quantiles_multi(df, ["x"], probs, collect_limit=50)["x"]
+    got = A.exact_quantiles_multi(df, ["x"], probs)["x"]
     s = sorted(xs)
     for g, p in zip(got, probs):
         r = (len(s) - 1) * p
         lo, hi = math.floor(r), math.ceil(r)
         want = s[lo] + (s[hi] - s[lo]) * (r - lo)
         assert g == want and math.isfinite(g), (p, g, want)
+
+
+def test_exact_quantiles_spike_resolves_early(spark, monkeypatch):
+    """A run of equal values inside a wider cell (an imputed median)
+    resolves in the round whose cell first isolates it, not after the
+    round cap: 3,000 copies of 1040.0 among 1,000 values spread over
+    [1024, 1084) share one log-bucket cell, every quartile rank lands in
+    the run, and the run is far above ``_COLLECT_LIMIT``. Each aggregate
+    round is two jobs (AQE runs the shuffle map stage as its own job), so
+    at most 3 rounds pass, where the round cap alone would allow 8."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators import (
+        analytics as A,
+    )
+
+    monkeypatch.setattr(A, "_COLLECT_LIMIT", 500)
+    spread = [1024.0 + i * 0.06 + 1e-7 for i in range(1000)]
+    xs = [1040.0] * 3000 + spread
+    df = spark.range(4000).select(
+        F.when(F.col("id") < 3000, F.lit(1040.0))
+        .otherwise(F.lit(1024.0) + (F.col("id") - 3000) * F.lit(0.06) + F.lit(1e-7))
+        .alias("x")
+    )
+    probs = [0.25, 0.5, 0.75]
+    sc = spark.sparkContext
+    group = "exact-quantiles-spike"
+    sc.setJobGroup(group, "spike rounds")
+    try:
+        got = A.exact_quantiles_multi(df, ["x"], probs)["x"]
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    s = sorted(xs)
+    for g, p in zip(got, probs):
+        r = (len(s) - 1) * p
+        lo, hi = math.floor(r), math.ceil(r)
+        want = s[lo] + (s[hi] - s[lo]) * (r - lo)
+        assert g == want == 1040.0, (p, g, want)
+    assert len(jobs) <= 6, jobs
 
 
 # word pool kept tiny so random docs actually collide (exact + near dups)

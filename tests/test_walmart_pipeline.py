@@ -240,6 +240,36 @@ def test_save_plots_layer(spark, tmp_path):
             save_plots(report, str(tmp_path / "plots"))
 
 
+def test_eda_report_fence_matches_outlier_bounds(spark):
+    """eda_report takes the IQR fence from the describe quartiles when the
+    value column is described and from outlier_bounds otherwise; both
+    read the same engine's quartiles, so fence and outlier count agree
+    exactly."""
+    from pyspark.sql import functions as F
+
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
+        describe_plus,
+        iqr_fence,
+        outlier_bounds,
+    )
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.eda_report import (
+        eda_report,
+    )
+
+    rows = [
+        (i % 3, float(i % 17) + (400.0 if i % 29 == 0 else 0.0), float(i))
+        for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, "g int, x double, y double")
+    lo, hi = outlier_bounds(df, "x")
+    d = describe_plus(df, ["y", "x"]).where(F.col("column") == "x").first()
+    assert iqr_fence("x", [d["q1"], d["q3"]]) == (lo, hi)
+    want = df.where((F.col("x") < lo) | (F.col("x") > hi)).count()
+    assert want > 0
+    for numeric in (["y", "x"], ["y"]):
+        assert eda_report(df, "x", numeric, "g").outlier_count == want, numeric
+
+
 def test_clean_na_sentinels_survives_dirty_non_sentinel_values(spark):
     # ANSI mode: a plain cast of "n/a" would throw CAST_INVALID_INPUT —
     # the cleaner must null it out instead of killing the scan
