@@ -6,7 +6,6 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.cleaning i
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.hashing import (
     md5_int64,
-    minhash_seed_hash,
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.vectors import (
     cosine_similarity_col,
@@ -18,7 +17,6 @@ __all__ = [
     "add_date_parts",
     "clean_na_sentinels",
     "md5_int64",
-    "minhash_seed_hash",
     "cosine_similarity_col",
     "dot_col",
     "l2_norm_col",

@@ -17,13 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Mersenne prime 2^61 - 1: modulus for the (a*x + b) % p universal hash
-# family used by MinHash permutations. Products of 60-bit hashes with 32-bit
-# coefficients overflow int64, so the permutation math routes through
-# double-free integer ops below.
-MERSENNE_61 = (1 << 61) - 1
-
-
 def md5_int64(col: Column | str) -> Column:
     """Deterministic 60-bit non-negative int64 hash of a string column,
     reproducible in DuckDB (see module docstring)."""
@@ -48,13 +41,3 @@ def md5_int64_sql(x: str) -> str:
     for the sketch builders, not a general-purpose public helper."""
     return f"CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 
-
-def minhash_seed_hash(col: Column | str, seed: int) -> Column:
-    """One MinHash permutation: md5 of the value with a seed prefix.
-
-    Using a seeded re-hash instead of the classic ``(a*h + b) mod p``
-    sidesteps int64 overflow entirely and stays expressible in portable SQL
-    (the oracle writes the identical ``md5(seed || ':' || s)`` expression).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return md5_int64(F.concat(F.lit(f"{seed}:"), c))

@@ -27,13 +27,9 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.clustering
     assign_clusters,
     cluster_embeddings,
     fit_kmeans,
-    load_kmeans_artifact,
-    save_kmeans_artifact,
     semdedup,
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.maintenance import (
-    compact_small_files,
-    delete_keys,
     merge_upsert,
     snapshot_diff,
     word_distribution_drift,
@@ -85,8 +81,6 @@ __all__ = [
     "assign_clusters",
     "cluster_embeddings",
     "fit_kmeans",
-    "load_kmeans_artifact",
-    "save_kmeans_artifact",
     "semdedup",
     "bm25_scores",
     "bm25_topk",
@@ -112,8 +106,6 @@ __all__ = [
     "histogram",
     "outlier_bounds",
     "merge_upsert",
-    "delete_keys",
-    "compact_small_files",
     "snapshot_diff",
     "pack_sequences",
     "pack_sequences_ffd",

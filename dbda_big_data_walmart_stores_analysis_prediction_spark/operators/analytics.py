@@ -14,6 +14,7 @@ from operator import itemgetter
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 # The global exact-quantile engine's sizes: module constants, not options
@@ -284,6 +285,26 @@ def exact_quantiles_multi(
     return (out, assemble_stats()) if return_stats else out
 
 
+def _local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-held result rows as a local relation: an inline ``VALUES``
+    table whose cells are bound parameters, cast to ``schema``. Reading
+    it starts no Spark job, where ``createDataFrame(rows)`` is an RDD
+    scan that runs jobs on every read (and a pandas frame would turn NaN
+    into null). Parameters keep every double bit-identical, NaN as NaN
+    and None as null."""
+    target = StructType.fromDDL(schema)
+    args: dict = {}
+    values = []
+    for i, row in enumerate(rows):
+        names = [f"v{i}_{j}" for j in range(len(row))]
+        args.update(zip(names, row))
+        values.append("(" + ", ".join(f":{n}" for n in names) + ")")
+    cols = ", ".join(f"`{f.name}`" for f in target.fields)
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(values)} AS t({cols})", args=args
+    ).to(target)
+
+
 def describe_plus(df: DataFrame, columns: list[str]) -> DataFrame:
     """A5/A6: count / mean / stddev / min / max / exact quartiles per column,
     from ONE ``exact_quantiles_multi`` call over all columns (vs
@@ -308,7 +329,7 @@ def describe_plus(df: DataFrame, columns: list[str]) -> DataFrame:
         "column string, n bigint, mean double, stddev double, min double, "
         "q1 double, median double, q3 double, max double"
     )
-    return df.sparkSession.createDataFrame(rows, schema)
+    return _local_frame(df.sparkSession, rows, schema)
 
 
 def correlations(df: DataFrame, columns: list[str], target: str | None = None) -> DataFrame:
@@ -337,7 +358,7 @@ def correlations(df: DataFrame, columns: list[str], target: str | None = None) -
     ]
     wide = df.agg(*aggs).collect()[0]
     rows = [(a, b, wide[f"{a}__{b}"]) for a, b in pairs]
-    return df.sparkSession.createDataFrame(rows, "col_a string, col_b string, pearson double")
+    return _local_frame(df.sparkSession, rows, "col_a string, col_b string, pearson double")
 
 
 def histogram(
@@ -460,38 +481,18 @@ def group_quartiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     )
 
 
-def quantile_cells(df: DataFrame, col: str) -> DataFrame:
-    """The log-bucket engine's cell table as a VALUE: one codegen hash
-    aggregate over ``_log_bucket(v)`` → ``(b, n, s, s2, mn, mx)`` rows
-    (≤ ~2k active cells for doubles spanning a typical range) — the
-    ungrouped ``quantile_cells_by``, whose keyed form is also
-    ``exact_quantiles_multi``'s first round. The cell
-    table is a MERGEABLE quantile/moments sketch: cells of two disjoint
-    batches merge cellwise (sum n/s/s2, min mn, max mx), and the merge
-    of batch cells equals the one-shot cells over the union — the
-    streaming fold's state (see ``streaming/stats.py::
-    streaming_quantile_ingest``). Read estimates with
-    ``cells_quantile_estimate``; NaN/null values are excluded, exactly
-    like ``exact_quantiles``."""
-    return quantile_cells_by(df, [], col)
-
-
 def quantile_cells_by(
     df: DataFrame,
     group_cols: list[str] | str,
     value_col: str,
 ) -> DataFrame:
-    """``quantile_cells`` KEYED: one codegen hash aggregate over
-    ``(groups..., _log_bucket(v))`` → per-group mergeable quantile/
-    moments state at groups × ≤~2k rows — per-segment latency
-    quantiles for an unbounded value stream, the keyed complement of
-    the global cell sketch exactly as ``hll_registers_by`` keys
-    ``hll_registers``. Cells of disjoint batches merge per (group,
-    cell) (sum n/s/s2, min mn, max mx) == the one-shot cells over the
-    union; fold it live with ``streaming/stats.py::
-    streaming_quantile_by_ingest`` and read per-group bounded-error
-    estimates with ``cells_quantile_estimate_by``. NaN/null values are
-    excluded; null group keys are a group like any other."""
+    """The log-bucket cell table, keyed: one codegen hash aggregate over
+    ``(groups..., _log_bucket(v))`` → ``(groups..., b, n, s, s2, mn, mx)``
+    rows, groups × ≤~2k cells for doubles spanning a typical range.
+    ``exact_quantiles_multi``'s first round, keyed by column name: the
+    exact ``(n, mn, mx)`` spans place the ranks and ``s``/``s2`` fold into
+    the moments. NaN/null values are excluded; null group keys are a
+    group like any other."""
     groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     _check_cell_group_names(groups, "quantile_cells_by")
     v = F.col(value_col).cast("double")
@@ -521,288 +522,6 @@ def _check_cell_group_names(groups: list[str], op: str) -> None:
             "cell-table schema (b, n, s, s2, mn, mx) — rename them before "
             "keying the sketch"
         )
-
-
-def cells_quantile_estimate_by(
-    cells: DataFrame,
-    group_cols: list[str] | str,
-    probs: list[float],
-) -> DataFrame:
-    """``cells_quantile_estimate`` DISTRIBUTED over unbounded group
-    cardinality: per-group bounded-error quantiles read off a
-    ``quantile_cells_by`` table (or any cellwise merge of them) with NO
-    driver state — the global reader collects its ≤~2k cells; a
-    per-segment table at millions of groups cannot.
-
-    Same algorithm, window form: per group the cells sort by their
-    exact value spans and overlapping spans merge into ISLANDS (a
-    running max of span ends over the sort; an island starts where a
-    span's mn exceeds it — identical to the driver reader's span-merge,
-    so correctness never assumes bucket-code order matches value
-    order), a cumulative count locates each target rank's island, and
-    the estimate interpolates inside the island's exact (mn, mx) span.
-    Fractional ranks interpolate FLOOR and CEIL ranks separately
-    (bimodal-gap rule, same as the driver reader). One exchange on the
-    group key; everything after reuses its partitioning.
-
-    Output: ``(groups..., n, p<pct>, p<pct>_lo, p<pct>_hi, ...)`` with
-    the per-answer guarantee ``p<pct>_lo <= true quantile_cont <=
-    p<pct>_hi``; groups with no cells are absent (they had no values).
-    """
-    if not probs:
-        raise ValueError("cells_quantile_estimate_by: probs must be non-empty")
-    groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    _check_cell_group_names(groups, "cells_quantile_estimate_by")
-    names = [f"p{round(p * 100)}" for p in probs]
-    if len(set(names)) != len(names):
-        raise ValueError(
-            f"cells_quantile_estimate_by: probs {probs} collide after "
-            f"percent naming ({names}); use more-separated probs"
-        )
-    w_ord = Window.partitionBy(*groups).orderBy("mn", "mx", "b")
-    prev_end = F.max("mx").over(
-        w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = cells.select(
-        *groups,
-        "b",
-        "n",
-        "mn",
-        "mx",
-        F.when(prev_end.isNull() | (F.col("mn") > prev_end), 1)
-        .otherwise(0)
-        .alias("__new"),
-    ).withColumn(
-        "__island",
-        F.sum("__new").over(w_ord.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    islands = marked.groupBy(*groups, "__island").agg(
-        F.sum("n").alias("__n"),
-        F.min("mn").alias("__mn"),
-        F.max("mx").alias("__mx"),
-    )
-    w2 = Window.partitionBy(*groups).orderBy("__mn")
-    wp = Window.partitionBy(*groups)
-    loc = islands.select(
-        *groups,
-        "__n",
-        "__mn",
-        "__mx",
-        F.coalesce(
-            F.sum("__n").over(w2.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("__cum"),
-        F.sum("__n").over(wp).alias("__tot"),
-    )
-
-    def pick(rank):
-        """Per-island conditional (est, lo, hi) for one integer rank
-        column; exactly one island satisfies the containment, so the
-        group-level min() collapses to it."""
-        contains = (F.col("__cum") <= rank) & (rank < F.col("__cum") + F.col("__n"))
-        est = F.col("__mn") + (F.col("__mx") - F.col("__mn")) * (
-            (rank - F.col("__cum")) / F.col("__n")
-        )
-        return (
-            F.min(F.when(contains, est)),
-            F.min(F.when(contains, F.col("__mn"))),
-            F.min(F.when(contains, F.col("__mx"))),
-        )
-
-    aggs = [F.max("__tot").alias("n")]
-    for i, p in enumerate(probs):
-        rk = F.lit(float(p)) * (F.col("__tot") - 1)
-        lo_r, hi_r = F.floor(rk), F.ceil(rk)
-        for tag, r in (("lo", lo_r), ("hi", hi_r)):
-            e, l, h = pick(r)
-            aggs += [
-                e.alias(f"__e_{tag}{i}"),
-                l.alias(f"__l_{tag}{i}"),
-                h.alias(f"__h_{tag}{i}"),
-            ]
-    agg = loc.groupBy(*groups).agg(*aggs)
-    outs = []
-    for i, (p, name) in enumerate(zip(probs, names)):
-        rk = F.lit(float(p)) * (F.col("n") - 1)
-        frac = rk - F.floor(rk)
-        for part, col in (("", "__e"), ("_lo", "__l"), ("_hi", "__h")):
-            a, b2 = F.col(f"{col}_lo{i}"), F.col(f"{col}_hi{i}")
-            outs.append((a + (b2 - a) * frac).alias(f"{name}{part}"))
-    return agg.select(*groups, F.col("n").cast("bigint").alias("n"), *outs)
-
-
-def cells_quantile_estimate(
-    cells: DataFrame, probs: list[float]
-) -> list[tuple[float, float, float]]:
-    """Bounded-error quantiles off a ``quantile_cells`` table (or any
-    cellwise merge of them): for each prob, the rank's cell is located
-    by cumulative count and the estimate interpolates inside the cell's
-    exact (mn, mx) span — so every answer carries its own guarantee,
-    ``lo <= true quantile <= hi``. A fractional rank interpolates the
-    FLOOR and CEIL integer ranks separately (they can land in different
-    cells — a bimodal gap between them would otherwise put the true
-    ``quantile_cont`` value outside a single cell's span), and the
-    bounds interpolate the two cells' spans with the same weights, so
-    the guarantee holds for any distribution. Returns
-    ``[(estimate, lo, hi), ...]``; empty state → all
-    ``(None, None, None)``. Driver cost: one bounded collect (the cell
-    table), never the values."""
-    merged = _merge_spans(
-        tuple(r) for r in cells.select("n", "mn", "mx").collect()
-    )
-    total = sum(m[0] for m in merged)
-    if total == 0:
-        return [(None, None, None)] * len(probs)
-    targets = [(total - 1) * p for p in probs]
-    ranks = {math.floor(r) for r in targets} | {math.ceil(r) for r in targets}
-    # (estimate, lo, hi) per INTEGER rank: its cell's span is the bound;
-    # the estimate places the rank uniformly inside
-    at = {}
-    for (n, mn, mx), cum, taken in _walk_ranks(
-        merged, ranks, 0, "cells_quantile_estimate"
-    ):
-        for rank in taken:
-            at[rank] = (mn + (mx - mn) * ((rank - cum) / n), mn, mx)
-    out: list[tuple] = []
-    for rk in targets:
-        lo_r = math.floor(rk)
-        frac = rk - lo_r
-        (e1, l1, h1), (e2, l2, h2) = at[lo_r], at[math.ceil(rk)]
-        out.append(
-            (
-                e1 + (e2 - e1) * frac,
-                l1 + (l2 - l1) * frac,
-                h1 + (h2 - h1) * frac,
-            )
-        )
-    return out
-
-
-def _check_fence_alert_args(
-    group_cols: list[str] | str,
-    breach_num: int,
-    breach_den: int,
-    op: str,
-) -> list[str]:
-    """Shared fail-fast validation for the fence-alert family — also
-    called by ``streaming/stats.py::streaming_fence_monitor_ingest`` at
-    SETUP, so a bad group name or breach rate raises before the query
-    starts instead of wrapped in a StreamingQueryException after the
-    first batch's offsets are written. Returns the normalized group
-    list. ``batch_version`` is reserved for the streaming monitor's
-    history tag."""
-    if breach_num < 0 or breach_den <= 0:
-        raise ValueError(
-            f"{op}: breach rate must have breach_num >= 0 "
-            f"and breach_den > 0 (got {breach_num}/{breach_den})"
-        )
-    groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    _check_cell_group_names(groups, op)
-    reserved = (
-        {
-            "n_baseline", "fence_lo", "fence_hi", "n_batch",
-            "n_above_hi", "n_above_lo", "status", "batch_version", "__v",
-        }
-        | {f"__fg{i}" for i in range(len(groups))}
-    ) & set(groups)
-    if reserved:
-        raise ValueError(
-            f"{op}: group column(s) {sorted(reserved)} "
-            "collide with the output schema — rename them first"
-        )
-    return groups
-
-
-def quantile_fence_alerts(
-    cells: DataFrame,
-    batch: DataFrame,
-    group_cols: list[str] | str,
-    value_col: str,
-    prob: float = 0.99,
-    breach_num: int = 1,
-    breach_den: int = 100,
-) -> DataFrame:
-    """The monitor composition over the streaming quantile state: classify
-    a fresh batch's per-group values against the STANDING fence a folded
-    ``quantile_cells_by`` table (``streaming/stats.py::
-    streaming_quantile_by_ingest``'s state) defines — "alert when this
-    hour's values breach the baseline p99" without ever re-scanning the
-    baseline. The fence comes from ``cells_quantile_estimate_by``, whose
-    per-answer guarantee (``fence_lo <= true quantile <= fence_hi``)
-    makes the classification sound despite the bounded error:
-
-      ``n_above_hi <= (count of batch values above the TRUE baseline
-      quantile) <= n_above_lo``
-
-    so ``status`` is ``'alert'`` only when even the DEFINITE breaches
-    (``n_above_hi``) exceed the ``breach_num/breach_den`` rate,
-    ``'clear'`` only when even the POSSIBLE breaches (``n_above_lo``)
-    don't, and ``'margin'`` when the cell span straddles the decision
-    (its bounds are one cell's exact value span: at most 1/16 of a binary
-    magnitude, ``_SUB_BUCKETS`` mantissa slices). Batch groups with
-    no folded baseline report ``'no_baseline'`` (fences null); baseline
-    groups absent from the batch emit nothing (nothing to alert on).
-    Null/NaN batch values are excluded, like the fold itself.
-
-    Scale shape: the fence table is groups-sized (the estimator's single
-    group-keyed exchange over the cell state); the batch joins it on the
-    group key (null-safe — a null group is a group) and the rollup
-    reuses the join's partitioning — ONE exchange over the batch, no
-    driver state at any group cardinality. Rate decisions are integer
-    cross-multiplications (``n*den > num*total``), never float division.
-    """
-    groups = _check_fence_alert_args(
-        group_cols, breach_num, breach_den, "quantile_fence_alerts"
-    )
-    name = f"p{round(prob * 100)}"
-    fences = cells_quantile_estimate_by(cells, groups, [prob]).select(
-        *[F.col(g).alias(f"__fg{i}") for i, g in enumerate(groups)],
-        F.col("n").alias("n_baseline"),
-        F.col(f"{name}_lo").alias("fence_lo"),
-        F.col(f"{name}_hi").alias("fence_hi"),
-    )
-    v = F.col(value_col).cast("double")
-    v = F.when(~F.isnan(v), v)
-    b = batch.select(*groups, v.alias("__v")).where(F.col("__v").isNotNull())
-    cond = None
-    for i, g in enumerate(groups):
-        c = F.col(g).eqNullSafe(F.col(f"__fg{i}"))
-        cond = c if cond is None else (cond & c)
-    j = b.join(fences, cond, "left")
-    num, den = F.lit(breach_num), F.lit(breach_den)
-    agg = j.groupBy(*groups).agg(
-        F.first("n_baseline").alias("n_baseline"),
-        F.first("fence_lo").alias("fence_lo"),
-        F.first("fence_hi").alias("fence_hi"),
-        F.count("__v").cast("bigint").alias("n_batch"),
-        F.sum(F.when(F.col("__v") > F.col("fence_hi"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_above_hi"),
-        F.sum(F.when(F.col("__v") > F.col("fence_lo"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_above_lo"),
-    )
-    status = (
-        F.when(F.col("fence_lo").isNull(), F.lit("no_baseline"))
-        .when(
-            F.col("n_above_hi") * den > num * F.col("n_batch"), F.lit("alert")
-        )
-        .when(
-            F.col("n_above_lo") * den <= num * F.col("n_batch"),
-            F.lit("clear"),
-        )
-        .otherwise(F.lit("margin"))
-    )
-    return agg.select(
-        *groups,
-        "n_baseline",
-        "fence_lo",
-        "fence_hi",
-        "n_batch",
-        "n_above_hi",
-        "n_above_lo",
-        status.alias("status"),
-    )
 
 
 def group_quantiles_highcard(

@@ -288,9 +288,8 @@ def assign_clusters(
     """(id, cluster, cent_cos): nearest-centroid assignment — one
     Arrow-batched scan, zero shuffle. Works unchanged on a STREAMING
     ``df`` (a stateless projection: no shuffle, no aggregation, no state
-    store — replay == batch is pinned in tests), so a saved artifact
-    (`save_kmeans_artifact`/`load_kmeans_artifact`) routes live traffic
-    to clusters fitted offline."""
+    store — replay == batch is pinned in tests), so a model fitted
+    offline routes live traffic to clusters."""
     return _assigned(
         df, id_col, vec_col, model.centroids, with_nv=False
     ).withColumnRenamed("id", id_col)
@@ -365,55 +364,9 @@ def cluster_embeddings(
 ) -> DataFrame:
     """Fit + assign in one call: (id, cluster, cent_cos) for every
     well-formed input row. ``fit_kmeans``/``assign_clusters`` are the
-    split form for fit-once / assign-many (the S5 artifact pattern)."""
+    split form for fit-once / assign-many."""
     model = fit_kmeans(df, n_clusters, iters, id_col, vec_col, salt)
     return assign_clusters(df, model, id_col, vec_col)
-
-
-_KMEANS_ARTIFACT_COLS = ("cluster", "centroid", "salt", "iters")
-
-
-def save_kmeans_artifact(spark, model: KMeansModel, path: str) -> None:
-    """Persist a fitted `KMeansModel` as parquet — the clustering
-    family's member of the model sink/source contract (SURVEY S5; same
-    pattern as `plans.tokenizer.save_tokenizer_artifact`): fit once,
-    ship the bounded centroid table, assign on any cluster. One row per
-    centroid: (cluster, centroid array<double>, salt, iters)."""
-    rows = [
-        (cid, list(map(float, c)), model.salt, int(model.iters))
-        for cid, c in enumerate(model.centroids)
-    ]
-    spark.createDataFrame(
-        rows, "cluster int, centroid array<double>, salt string, iters int"
-    ).write.mode("overwrite").parquet(path)
-
-
-def load_kmeans_artifact(spark, path: str) -> KMeansModel:
-    """Reload a `save_kmeans_artifact` parquet, re-validating the schema
-    contract (a path mix-up fails loudly here, not as a garbage
-    assignment on a different cluster)."""
-    df = spark.read.parquet(path)
-    if not set(_KMEANS_ARTIFACT_COLS) <= set(df.columns):
-        raise ValueError(
-            f"load_kmeans_artifact: {path} has columns {sorted(df.columns)}"
-            f" — not a saved k-means artifact {_KMEANS_ARTIFACT_COLS}"
-        )
-    rows = df.orderBy("cluster").collect()
-    if not rows:
-        raise ValueError(
-            f"load_kmeans_artifact: {path} has the artifact schema but "
-            "zero rows — artifact is corrupt or partially written"
-        )
-    if [r["cluster"] for r in rows] != list(range(len(rows))):
-        raise ValueError(
-            f"load_kmeans_artifact: {path} cluster ids are not the dense "
-            "0..k-1 range — artifact is corrupt or partially written"
-        )
-    return KMeansModel(
-        centroids=[list(r["centroid"]) for r in rows],
-        salt=rows[0]["salt"],
-        iters=rows[0]["iters"],
-    )
 
 
 def _pair_dot():

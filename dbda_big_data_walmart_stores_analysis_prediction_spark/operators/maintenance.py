@@ -47,15 +47,13 @@ def merge_upsert(
 #   root/_slices/s{n}/<part>=X/...  slice n: the partitions commit n rewrote
 #   root/_manifests/m{n}.json       pointer manifest: dir name -> location
 #
-# Commit protocol — the ``streaming/stats.py::versioned_fold_ingest``
-# crash-ordering discipline applied to partition directories: data is only
-# ever CREATED (a fresh slice directory), never renamed or deleted in
-# place, and the single commit point is the manifest flip. A crash at ANY
-# point leaves the snapshot readable at the previous manifest: an
-# uncommitted slice is referenced by nothing (the next commit clears
-# artifacts numbered above the latest committed manifest, exactly like the
-# fold's orphan-base rule), and a torn manifest file fails the reader's
-# parse guard and is skipped. No rename of data ever happens, so the
+# Commit protocol — data is only ever CREATED (a fresh slice
+# directory), never renamed or deleted in place, and the single commit
+# point is the manifest flip. A crash at ANY point leaves the snapshot
+# readable at the previous manifest: an uncommitted slice is referenced
+# by nothing (the next commit clears artifacts numbered above the latest
+# committed manifest), and a torn manifest file fails the reader's parse
+# guard and is skipped. No rename of data ever happens, so the
 # protocol is safe on object stores, where rename is copy+delete. The
 # staging-swap predecessor additionally needed a repair pass that moved
 # staged data back into the live snapshot — the r14 _SUCCESS-gating hole
@@ -186,12 +184,6 @@ def _committed_manifests(spark, root: str) -> dict[int, dict]:
     return out
 
 
-def snapshot_versions(spark, snapshot_dir: str) -> list[int]:
-    """COMMITTED manifest versions under the snapshot root, ascending.
-    Empty for a legacy plain parquet directory."""
-    return sorted(_committed_manifests(spark, snapshot_dir.rstrip("/")))
-
-
 def _read_pointer_layout(
     spark, root: str, man: dict
 ) -> DataFrame:
@@ -269,10 +261,10 @@ def read_snapshot(spark, snapshot_dir: str, version: int | None = None) -> DataF
 
 
 def _clear_crash_orphans(spark, root: str, latest: int) -> None:
-    """Clear artifacts ABOVE the latest committed manifest FIRST (the
-    versioned_fold_ingest orphan rule): an uncommitted slice or torn/tmp
-    manifest from a crashed run is invisible to every reader, and
-    removing it keeps slice numbering aligned with manifest numbering."""
+    """Clear artifacts ABOVE the latest committed manifest FIRST: an
+    uncommitted slice or torn/tmp manifest from a crashed run is
+    invisible to every reader, and removing it keeps slice numbering
+    aligned with manifest numbering."""
     import re
 
     for nm in _fs_child_dirs(spark, f"{root}/_slices"):
@@ -700,17 +692,6 @@ def vacuum_snapshot(
     return stats
 
 
-def delete_keys(
-    current: DataFrame, tombstones: DataFrame, keys: list[str] | str
-) -> DataFrame:
-    """Delete-by-key: anti join against the tombstone set — same
-    broadcast-anti shape as ``merge_upsert``'s survivor side."""
-    key_list = [keys] if isinstance(keys, str) else list(keys)
-    return current.join(
-        tombstones.select(*key_list).distinct(), key_list, "left_anti"
-    )
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
@@ -799,48 +780,6 @@ def snapshot_diff(
         .otherwise(F.lit("changed"))
     )
     return joined.select(*key_list, status.alias("status"))
-
-
-def compact_small_files(
-    spark,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into ~``target_file_bytes`` files —
-    the small-file compaction every long-lived lake table needs (a 100 TB
-    table accreting 10k tiny files per refresh turns scans into metadata
-    storms and starves scan parallelism).
-
-    File count = ceil(total_bytes / target). Unpartitioned output uses
-    ``repartition(n)`` (round-robin — even file sizes); partitioned output
-    repartitions BY the partition columns so each output directory is
-    written by the tasks owning that partition's rows, avoiding the
-    classic one-file-per-task-per-partition explosion. Writes a NEW
-    snapshot directory (plain-files lakes swap pointers, same contract as
-    ``merge_upsert``). Returns the target file count.
-    """
-    import math
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    n = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    if partition_cols:
-        writer = (
-            df.repartition(n, *[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-        )
-    else:
-        writer = df.repartition(n).write.mode("overwrite")
-    writer.parquet(out_path)
-    return n
 
 
 def word_distribution_drift(
@@ -934,9 +873,9 @@ def embedding_drift(
 ) -> DataFrame:
     """Per-group embedding-distribution drift between two snapshots —
     `word_distribution_drift`'s sibling for the vector axis, and the
-    re-embed / re-fit trigger behind the serving index
-    (`streaming_index_ingest` grows the index under a FROZEN cell model;
-    this is the monitor that says when that stops being sound): for each
+    re-embed / re-fit trigger behind the serving index (the index is
+    grown under a FROZEN cell model; this is the monitor that says when
+    that stops being sound): for each
     ``by_col`` group, the cosine between the snapshots' mean vectors and
     the ratio of their norms. A direction swing (cos well below 1) means
     the group's content moved; a norm collapse (ratio toward 0) means it

@@ -1,12 +1,11 @@
-"""Multimodal (image/audio/video) column operators — Spark plumbing real,
-codec layer stubbed (north-star surface; this container has no image/audio
-libraries, per the build contract the decode step is a clearly-marked stub).
+"""Multimodal (image/audio/video) column operators — the Spark plumbing
+around media bytes; no codec is involved (features are byte-level).
 
 Design for 100 TB of media:
 
 * media is an opaque ``binary`` column + typed metadata struct — never
   parsed by Catalyst, so shuffles move bytes, not decoded frames;
-* decode / resize / frame-sample run as ``mapInPandas`` stages: Arrow
+* featurize / frame-sample run as ``mapInPandas`` stages: Arrow
   batches of (id, payload) go to Python ONCE, all per-item work happens
   inside the batch loop, and the output schema is fixed up front;
 * partitioning contract: operators repartition by id hash when asked so a
@@ -23,28 +22,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-try:  # real codecs, absent in this container — plumbing is codec-agnostic
-    import PIL.Image  # noqa: F401
-
-    HAVE_PIL = True
-except Exception:  # pragma: no cover
-    HAVE_PIL = False
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-    ]
 )
 
 FEATURE_SCHEMA = StructType(
@@ -71,22 +53,6 @@ def attach_blob(
         F.lit(media_type).alias("media_type"),
         F.length(payload).cast("long").alias("n_bytes"),
     )
-
-
-def decode_image(payload: bytes) -> object:
-    """STUB: real image decode requires PIL/cv2, absent in this container.
-
-    The Spark-side plumbing (schema, batching, partitioning) is real and
-    tested through ``extract_features``'s deterministic byte-level path.
-    """
-    if not HAVE_PIL:
-        raise NotImplementedError(
-            "image decode needs PIL/cv2 (not in this environment); "
-            "byte-level features below exercise the same mapInPandas plumbing"
-        )
-    import io
-
-    return PIL.Image.open(io.BytesIO(payload))  # pragma: no cover
 
 
 def extract_features(
@@ -142,47 +108,6 @@ def extract_features(
 
     return media.select("media_id", "payload", "media_type").mapInPandas(
         batches, FEATURE_SCHEMA
-    )
-
-
-def resize_media(
-    media: DataFrame, target_w: int = 224, target_h: int = 224
-) -> DataFrame:
-    """Resize stage: mapInPandas with the exact shape of a real image
-    resize (payload in → transformed payload + dims out). The pixel
-    transform itself is a STUB — with no codec in this container the
-    deterministic stand-in truncates/pads the payload to ``w*h`` bytes —
-    but schema, Arrow batching, and output contract are the real thing;
-    swapping in PIL's ``Image.resize`` touches only the inner loop
-    (see ``decode_image``).
-    """
-    target_bytes = target_w * target_h
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                b = bytes(payload or b"")
-                resized = b[:target_bytes].ljust(target_bytes, b"\x00")
-                out.append((mid, mtype, resized, target_w, target_h))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "media_type", "payload", "width", "height"],
-            )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("media_type", StringType()),
-            StructField("payload", BinaryType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-        ]
-    )
-    return media.select("media_id", "payload", "media_type").mapInPandas(
-        batches, schema
     )
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.vectors import (
@@ -89,36 +89,6 @@ def _plane_coeff(table: int, plane: int, d: int) -> float:
     codegen time when built as Catalyst expressions)."""
     h = int(hashlib.md5(f"{table}:{plane}:{d}".encode()).hexdigest()[:15], 16)
     return float(h % 2001 - 1000)
-
-
-def _sign_lsh_signature_reference(
-    vec_col: Column | str, n_planes: int, dim: int, table: int = 0
-) -> Column:
-    """ORACLE/TEST-ONLY reference implementation — do NOT wire into a hot
-    path. The per-plane ``zip_with``/``aggregate`` lambdas run on Spark's
-    interpreted expression path (measured ~30x slower than the Arrow
-    batch-matmul path ``_all_table_signatures``, which is the production
-    default everywhere). Kept because it is the executable documentation
-    of the signature semantics: an r-bit sign signature from deterministic
-    md5-seeded hyperplanes (``_plane_coeff``), reproducible in any SQL
-    engine with no stored model. ``table`` seeds independent plane sets
-    for multi-table LSH. Tests assert it agrees with the Arrow path."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = []
-    for p in range(n_planes):
-        coeffs = F.array(
-            *[F.lit(_plane_coeff(table, p, d)) for d in range(dim)]
-        )
-        dot = F.aggregate(
-            F.zip_with(v.cast("array<double>"), coeffs, lambda x, c: x * c),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig.cast("bigint")
 
 
 def _all_table_signatures(
@@ -380,30 +350,20 @@ def embedding_near_dup_pairs(
     n_planes: int = 6,
     dim: int = 64,
     exact: bool = False,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine ≥ threshold).
 
     ``exact=True`` scores ALL pairs (O(n²) — oracle/verification mode);
     default buckets by sign-LSH first (scale mode; near-identical vectors
-    almost always share all sign bits).
-
-    Signatures come from the Arrow-batched numpy path by default — the
-    per-plane zip_with/aggregate expression form (``use_arrow=False``) runs
-    interpreted and costs ~30x more at sf0.1. Both derive the same
-    md5-seeded integer hyperplanes, so the bucket ids agree (a divergence
-    would need |dot| within float ulp of 0)."""
+    almost always share all sign bits). The bucket is an r-bit sign
+    signature over md5-seeded integer hyperplanes (``_plane_coeff``),
+    computed by the Arrow-batched numpy path ``_all_table_signatures``."""
     if exact:
         a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
         b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
         pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
     else:
-        if use_arrow:
-            sig = F.element_at(
-                _all_table_signatures(vec_col, n_planes, 1, dim), 1
-            )
-        else:
-            sig = _sign_lsh_signature_reference(vec_col, n_planes, dim)
+        sig = F.element_at(_all_table_signatures(vec_col, n_planes, 1, dim), 1)
         banded = df.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sig.alias("bucket")
         )
@@ -465,9 +425,9 @@ def random_projection(
     would null-pad a short vector into silent NULL proj_values while the
     Arrow path raised on the ragged batch.
 
-    Two physical forms, one semantics (the `_sign_lsh_signature_reference`
-    split): ``exact=False`` (default) is ONE Arrow-batched numpy matmul —
-    the production path, milliseconds per batch; ``exact=True`` builds
+    Two physical forms, one semantics: ``exact=False`` (default) is ONE
+    Arrow-batched numpy matmul — the production path, milliseconds per
+    batch; ``exact=True`` builds
     ``out_dim`` sequential ``zip_with``/``aggregate`` folds whose
     summation order matches SQL dot products bit-for-bit — the
     oracle/audit path (interpreted HOFs, ~30x slower; identical up to

@@ -1714,7 +1714,7 @@ def q76_quality_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # ONE staged-regex feature pass shared by fit and transform (r16:
-    # the fit lineage and score_documents each used to run the q22
+    # the fit lineage and the scoring transform each used to run the q22
     # battery over the corpus — the persist halves the scans; values
     # identical, pinned by the q76 behavior tests).
     feats = add_text_features(docs, "text").persist()
@@ -1854,7 +1854,7 @@ def q73_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q37_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 30-min-gap sessions, gaps-and-islands form: the lag window,
     the cumulative boundary sum, and the final agg all share ONE shuffle on
-    user_id. (The streaming session_window twin lives in streaming/.)"""
+    user_id."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.streaming.events import (
         sessionize,
     )
@@ -7119,7 +7119,7 @@ def q164_hll_distinct_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct users per event_type as groups x 4096 map-side-combinable
     register rows — never the every-(group,key)-pair shuffle exact
     count(DISTINCT) pays; the per-group registers merge across batches
-    by bucket-max like the streaming fold's state. Estimates hash-check
+    by bucket-max. Estimates hash-check
     bit-for-bit against the DuckDB replication (q93's argument, keyed)."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.sketches import (
         hll_distinct_by,
@@ -8259,18 +8259,13 @@ def q180_event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("step_1", "step_2", "step_3")
 
 
-# q181: quantile fence monitor — the batch twin of the streaming
-# composition `streaming_quantile_by_ingest` → `quantile_fence_alerts`
-# ("alert when the current window's values breach the standing
-# per-group fence"): baseline = everything before the last calendar
-# day, fence = the baseline's per-type quantile, current = the last
-# day, alert when breaches exceed the fence's own tail rate. This
-# registered form computes the fence EXACTLY via
-# group_quantiles_highcard (the q167 oracle idiom) so the decision is
-# hash-checkable; the cells-path twin — whose fence bounds are
-# engine-internal by design — is pinned against this exact fence in
-# tests/test_streaming.py (fold==batch + bracketing + classification
-# consistency). prob=0.875 is dyadic (7/8): the rank arithmetic
+# q181: quantile fence monitor ("alert when the current window's values
+# breach the standing per-group fence"): baseline = everything before
+# the last calendar day, fence = the baseline's per-type quantile,
+# current = the last day, alert when breaches exceed the fence's own
+# tail rate. The fence is computed EXACTLY via group_quantiles_highcard
+# (the q167 oracle idiom) so the decision is hash-checkable.
+# prob=0.875 is dyadic (7/8): the rank arithmetic
 # 0.875*(n-1) is exact in both engines, per group_quantiles_highcard's
 # own cross-engine recommendation. Both engines compare against the
 # 6dp-ROUNDED fence, and the alert is an integer cross-multiplication
@@ -8339,10 +8334,7 @@ def q181_quantile_fence_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the fence table is bounded by event-type cardinality — broadcast,
     # so the current-day side never shuffles for the join and the
-    # breach rollup's groupBy is the big side's ONLY exchange (the
-    # generic quantile_fence_alerts leaves the strategy to Catalyst
-    # because its groups can be unbounded; here the dimension is small
-    # by domain)
+    # breach rollup's groupBy is the big side's ONLY exchange
     j = cur.join(
         F.broadcast(fences), F.col("event_type").eqNullSafe(F.col("__ft"))
     )

@@ -67,8 +67,7 @@ def train_quality_scorer(
     below is applied to whichever frame is used.
 
     Returns a ``PipelineModel`` whose ``transform`` expects the
-    `add_text_features` columns (use `score_documents`, which attaches
-    them).
+    `add_text_features` columns (`attach_quality_prob` applies it).
     """
     from pyspark.ml import Pipeline
     from pyspark.ml.classification import LogisticRegression
@@ -106,22 +105,12 @@ def train_quality_scorer(
     return Pipeline(stages=[assembler, lr]).fit(feats)
 
 
-def score_documents(
-    model, docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Attach ``quality_prob`` (P(keep), rounded 6dp) to ``docs``.
-
-    One `add_text_features` projection + the model's codegen'd transform;
-    the ML vector columns never leave this function (vector types don't
-    serialize to parquet sinks or oracle comparisons).
-    """
-    return attach_quality_prob(model, add_text_features(docs, text_col))
-
-
 def attach_quality_prob(model, scored_feats: DataFrame) -> DataFrame:
-    """`score_documents` for a frame that ALREADY carries the
-    `add_text_features` columns (corpus-prep reuses its scored frame
-    rather than re-deriving the regex projections)."""
+    """Attach ``quality_prob`` (P(keep), rounded 6dp) to a frame that
+    ALREADY carries the `add_text_features` columns (corpus-prep reuses
+    its scored frame rather than re-deriving the regex projections). The
+    ML vector columns never leave this function (vector types don't
+    serialize to parquet sinks or oracle comparisons)."""
     from pyspark.ml.functions import vector_to_array
 
     out = model.transform(scored_feats)

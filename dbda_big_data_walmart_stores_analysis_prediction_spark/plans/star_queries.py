@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
@@ -640,8 +640,8 @@ def q19_outlier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Events: JSON + event-time windows (SURVEY §2.10 — batch event-time now,
-# structured streaming variants in streaming/)
+# Events: JSON + event-time windows (SURVEY §2.10; the event-time
+# operators live in streaming/events.py)
 # ---------------------------------------------------------------------------
 
 

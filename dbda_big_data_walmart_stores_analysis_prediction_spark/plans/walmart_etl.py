@@ -27,7 +27,6 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.dates import (
     add_date_parts,

@@ -1,7 +1,6 @@
 from dbda_big_data_walmart_stores_analysis_prediction_spark.sources.catalog import (
     STAR_TABLES,
     load_star_table,
-    load_star_tables,
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.sources.io import (
     read_csv,
@@ -18,7 +17,6 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.sources.schemas impo
 __all__ = [
     "STAR_TABLES",
     "load_star_table",
-    "load_star_tables",
     "read_csv",
     "read_parquet",
     "write_parquet",

@@ -24,12 +24,6 @@ STAR_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Dimension tables small enough to always broadcast — at any scale factor the
-# TPC-H-ish dims stay orders of magnitude under the fact tables.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "customer", "part"})
-
 # NOTE on small-file scan fan-out: a blanket catalog-level repartition of
 # "CPU-heavy" tables was tried and REVERTED — it helped the shingle
 # family (whose explode+md5 stage was serialized behind a 1-task scan at
@@ -72,8 +66,3 @@ def load_star_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def load_star_tables(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = STAR_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_star_table(spark, sf_dir, name) for name in names}

@@ -56,143 +56,3 @@ def write_parquet(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed + sorted managed table (parquet): rows are hash-partitioned
-    into ``n_buckets`` files per partition BY WRITE, so later equi-joins
-    and aggregations on ``bucket_cols`` between co-bucketed tables need no
-    Exchange at read time — the pre-shuffle is paid once at write. This is
-    the 100 TB idiom for fact tables joined repeatedly on the same key
-    (e.g. bucket lineitem and orders by orderkey; every downstream join is
-    then shuffle-free on both sides).
-
-    Bucketing requires the table catalog (``saveAsTable``) — plain
-    ``.parquet(path)`` writes can't record bucket metadata.
-    """
-    writer = (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(name)
-
-
-def read_json(
-    spark: SparkSession, path: str, schema: StructType
-) -> DataFrame:
-    """JSON-lines scan with explicit schema — never schema inference, which
-    at scale re-reads the dataset once just to guess types (and guesses
-    differently across dirty partitions)."""
-    return spark.read.schema(schema).json(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (interchange format; ~3-5x larger than parquet at
-    rest — use for handoff to non-columnar consumers, not storage)."""
-    df.write.mode(mode).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same columnar pushdown/pruning properties as parquet;
-    exists for interop with Hive-era lakes."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    header: bool = True,
-    null_value: str = "NA",
-) -> None:
-    """CSV sink, mirroring ``read_csv``'s sentinel convention so a
-    write→read round-trip is lossless for null-bearing columns. Complex
-    types (arrays/structs) are not CSV-representable — project them out
-    first."""
-    (
-        df.write.mode(mode)
-        .option("header", header)
-        .option("nullValue", null_value)
-        .csv(path)
-    )
-
-
-def read_media_dir(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    media_type: str = "application/octet-stream",
-) -> DataFrame:
-    """Ingest raw media files through Spark's built-in ``binaryFile``
-    source into the opaque media schema (operators/multimodal.py) — the
-    real ingestion route the fixture's text-as-bytes stand-in mimics.
-
-    Each file becomes one row (media_id = md5-int64 of its path, payload =
-    file bytes, n_bytes = length); downstream mapInPandas stages consume
-    the same schema either way. ``binaryFile`` streams file content
-    lazily per task and supports ``pathGlobFilter`` pushdown, so a
-    100 TB media lake reads only matching files and never materializes
-    payloads on the driver.
-    """
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.hashing import (
-        md5_int64,
-    )
-    from pyspark.sql import functions as F
-
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
-    return raw.select(
-        md5_int64(F.col("path")).alias("media_id"),
-        F.col("content").alias("payload"),
-        F.lit(media_type).alias("media_type"),
-        F.col("length").cast("long").alias("n_bytes"),
-        F.col("path").alias("source_path"),
-    )
-
-
-def read_text_corpus(
-    spark: SparkSession, path: str, whole_files: bool = False
-) -> DataFrame:
-    """Ingest raw text into the ``documents`` shape (doc_id, text) via the
-    built-in ``text`` source: one doc per LINE by default, or one doc per
-    FILE with ``whole_files=True``.
-
-    doc_id is the md5-int64 of the content — stable across re-reads and
-    partitionings (a positional id like monotonically_increasing_id would
-    renumber on every layout change, breaking dedup joins between runs).
-    Identical lines therefore collapse to one id: exactly the semantics
-    exact-dedup wants from a raw corpus.
-    """
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.hashing import (
-        md5_int64,
-    )
-    from pyspark.sql import functions as F
-
-    raw = spark.read.text(path, wholetext=whole_files)
-    return raw.select(
-        md5_int64(F.col("value")).alias("doc_id"),
-        F.col("value").alias("text"),
-    ).where(F.length(F.trim("text")) > 0)

@@ -1,15 +1,9 @@
 from dbda_big_data_walmart_stores_analysis_prediction_spark.streaming.events import (
     sessionize,
     sliding_window_counts,
-    streaming_hourly_counts,
-    streaming_sessionize,
-    tumbling_window_counts,
 )
 
 __all__ = [
     "sessionize",
     "sliding_window_counts",
-    "tumbling_window_counts",
-    "streaming_hourly_counts",
-    "streaming_sessionize",
 ]

@@ -1,44 +1,20 @@
-"""Event-time windowing — batch semantics + Structured Streaming variants.
+"""Event-time windowing, sessionization, attribution and dedup over the
+driver's ``events`` table (event_id, ts, user_id, event_type, value,
+props). The reference has no event-time surface at all (SURVEY.md §2.10).
 
-The reference has no streaming at all (SURVEY.md §2.10); the driver's
-``events`` table (event_id, ts, user_id, event_type, value, props) is the
-fixture for the streaming-shaped surface. Every operator exists twice:
-
-* a BATCH form whose semantics are portable SQL (oracle-checkable), and
-* a STREAMING form over ``readStream`` with watermarks, exercised in tests
-  through the rate/memory sources.
-
-Sessionization deliberately uses the gaps-and-islands formulation (lag +
-cumulative boundary sum) for batch — identical in any SQL engine — while
-the streaming form uses Spark's native ``session_window`` (whose
-[start, last+gap) end-semantics differ from island bounds; both are exposed,
-tests pin each).
+Sessionization uses the gaps-and-islands formulation (lag + cumulative
+boundary sum), identical in any SQL engine, so its answers are
+oracle-checkable; Spark's native ``session_window`` (whose
+[start, last+gap) end semantics differ from island bounds) is kept as
+the reference the tests compare it with. The click → purchase
+attribution join carries watermarks and two-sided event-time bounds, so
+the same expression also runs on a ``readStream`` frame.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def tumbling_window_counts(
-    events: DataFrame, size: str = "1 hour"
-) -> DataFrame:
-    """Tumbling event-time window aggregate (batch). ``window()`` keeps the
-    plan shape identical to the streaming variant."""
-    return (
-        events.groupBy(F.window("ts", size).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
 
 
 def sliding_window_counts(
@@ -94,8 +70,9 @@ def sessionize(
 def native_session_windows(
     events: DataFrame, gap: str = "30 minutes"
 ) -> DataFrame:
-    """Spark's native ``session_window`` (batch form of the streaming
-    operator). End bound = last event + gap (differs from island max(ts))."""
+    """Spark's native ``session_window`` sessions, the built-in that
+    ``sessionize`` is tested against. End bound = last event + gap
+    (differs from island max(ts)); the per-user session count agrees."""
     return (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
@@ -106,32 +83,6 @@ def native_session_windows(
             "n_events",
             "total_value",
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Structured Streaming variants
-# ---------------------------------------------------------------------------
-
-
-def streaming_hourly_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """readStream → watermark → tumbling window agg. Late events beyond the
-    watermark are dropped; state is bounded by watermark horizon x window
-    count — the 100 TB/day streaming-safe shape."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
-    )
-
-
-def streaming_sessionize(stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """readStream sessionization with ``session_window`` — merging session
-    state per user, closed when the watermark passes start+gap."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
     )
 
 
@@ -187,55 +138,6 @@ def streaming_click_purchase_join(
     )
 
 
-def streaming_user_lifetime_stats(stream: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    lifetime aggregate (event count, value total, latest event time) carried
-    across micro-batches in explicit group state — the arbitrary-state API
-    for semantics the built-in windowed aggregates can't express (running
-    per-key accumulators, custom eviction, model-ish per-key state).
-
-    State is one fixed-width tuple per user — bounded by |users|, not
-    event volume, so it holds at 100 TB/day ingest; keys partition across
-    executors by the groupBy hash. Emits the refreshed per-user row each
-    micro-batch (``update`` output mode). For time-bounded state swap
-    ``NoTimeout`` for ``GroupStateTimeout.EventTimeTimeout`` plus a
-    watermark and drop keys in the timeout branch.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "user_id bigint, n_events bigint, total_value double, last_ts timestamp"
-    )
-    state_schema = "n bigint, total double, last_us bigint"
-
-    def update(key: tuple, pdfs, state: GroupState):
-        n, total, last_us = state.get if state.exists else (0, 0.0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            if len(pdf):
-                batch_last = int(pdf["ts"].astype("int64").max()) // 1000
-                last_us = max(last_us, batch_last)
-        state.update((n, total, last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "last_ts": [pd.to_datetime(last_us, unit="us")],
-            }
-        )
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def dedup_events(
     events: DataFrame,
     key_cols: tuple[str, ...] = ("event_id",),
@@ -274,19 +176,3 @@ def dedup_events(
         .select(*events.columns)
     )
 
-
-def streaming_dedup_events(
-    stream: DataFrame,
-    key_cols: tuple[str, ...] = ("event_id",),
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exactly-once dedup — ``dropDuplicatesWithinWatermark`` on
-    the idempotency key. State holds one entry per key seen within the
-    watermark horizon and is EVICTED as event time advances past it: the
-    only dedup formulation whose state is bounded on an unbounded stream
-    (plain ``dropDuplicates`` on a stream retains every key forever).
-    At-scale retry storms (the usual source of stream duplicates) land
-    well inside any sane watermark."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )

@@ -211,29 +211,6 @@ def test_semdedup_merges_cross_pair_components(spark):
     assert sum(rows[i]["keep"] for i in (1, 2, 3)) == 1
 
 
-def test_kmeans_artifact_roundtrip(spark, sf_dir, tmp_path):
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.clustering import (
-        load_kmeans_artifact,
-        save_kmeans_artifact,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    model = fit_kmeans(emb, n_clusters=4, iters=2, salt=SALT)
-    path = str(tmp_path / "kmeans_artifact")
-    save_kmeans_artifact(spark, model, path)
-    loaded = load_kmeans_artifact(spark, path)
-    assert loaded == model
-
-    direct = assign_clusters(emb, model).collect()
-    via = assign_clusters(emb, loaded).collect()
-    assert sorted(map(tuple, direct)) == sorted(map(tuple, via))
-
-    # a non-artifact parquet must fail loudly at load time
-    emb.limit(1).write.mode("overwrite").parquet(str(tmp_path / "not_model"))
-    with pytest.raises(ValueError, match="not a saved k-means artifact"):
-        load_kmeans_artifact(spark, str(tmp_path / "not_model"))
-
-
 def test_streaming_assignment_matches_batch(spark, sf_dir, tmp_path):
     # assign_clusters is a stateless projection: replay == batch.
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -359,18 +336,16 @@ def test_semdedup_blockwise_equals_join_mode(spark, sf_dir):
         semdedup(emb, pair_mode="matmul", **kw)
 
 
-def test_fit_kmeans_contract_errors(spark, tmp_path):
+def test_fit_kmeans_contract_errors(spark):
     """Review-pass contracts: n_clusters < 1 and an all-malformed corpus
-    fail loudly at fit time; a zero-row artifact (schema-valid but
-    corrupt) fails loudly at load time instead of IndexError; a float
-    NaN embedding CELL (a pandas-conversion representation of null) is
-    dropped per-row like None, not a task-killing TypeError."""
+    fail loudly at fit time; a float NaN embedding CELL (a
+    pandas-conversion representation of null) is dropped per-row like
+    None, not a task-killing TypeError."""
     import pytest
 
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.clustering import (
         _clean_matrix,
         fit_kmeans,
-        load_kmeans_artifact,
     )
 
     df = spark.createDataFrame(
@@ -383,14 +358,6 @@ def test_fit_kmeans_contract_errors(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="well-formed"):
         fit_kmeans(bad, n_clusters=2)
-
-    empty = spark.createDataFrame(
-        [], "cluster int, centroid array<double>, salt string, iters int"
-    )
-    path = str(tmp_path / "empty_artifact")
-    empty.write.parquet(path)
-    with pytest.raises(ValueError, match="zero rows"):
-        load_kmeans_artifact(spark, path)
 
     import math
 

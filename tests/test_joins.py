@@ -73,35 +73,6 @@ def test_salted_join_matches_plain(spark):
         assert got == want, f"salted {how} join diverged"
 
 
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.sources.io import (
-        write_bucketed_table,
-    )
-
-    a = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("a"))
-    b = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("b"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        write_bucketed_table(a, "bkt_a", ["k"], n_buckets=4, sort_cols=["k"])
-        write_bucketed_table(b, "bkt_b", ["k"], n_buckets=4, sort_cols=["k"])
-        # force the shuffle-join path (tiny fixture would broadcast) so the
-        # assertion exercises what matters at scale: both sides too big to
-        # broadcast, bucketing must eliminate the hash-partition Exchange
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, (
-            "co-bucketed join still shuffles:\n" + plan
-        )
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def test_range_join_binned_numeric_matches_naive(spark):
     from pyspark.sql import functions as F
 

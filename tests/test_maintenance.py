@@ -4,9 +4,14 @@
 from __future__ import annotations
 
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.maintenance import (
-    delete_keys,
+    _committed_manifests,
     merge_upsert,
 )
+
+
+def snapshot_manifests(spark, snap: str) -> list[int]:
+    """Committed manifest versions under a snapshot root, ascending."""
+    return sorted(_committed_manifests(spark, snap.rstrip("/")))
 
 
 def _frames(spark):
@@ -30,38 +35,6 @@ def test_merge_upsert_semantics(spark):
         3: ("c", 30.0),   # untouched survivor
         4: ("d", 40.0),   # new key inserted
     }
-
-
-def test_delete_keys_semantics(spark):
-    current, _ = _frames(spark)
-    tombstones = spark.createDataFrame([(1,), (3,), (99,)], "k int")
-    got = {r["k"] for r in delete_keys(current, tombstones, "k").collect()}
-    assert got == {2}
-
-
-def test_compact_small_files(spark, tmp_path):
-    """200 tiny files compact to the computed target count with identical
-    row multiset."""
-    import glob
-
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.maintenance import (
-        compact_small_files,
-    )
-
-    src = str(tmp_path / "frag")
-    dst = str(tmp_path / "compact")
-    df = spark.range(0, 2000).withColumnRenamed("id", "k")
-    df.repartition(200).write.mode("overwrite").parquet(src)
-    assert len(glob.glob(f"{src}/*.parquet")) == 200
-
-    total = sum(
-        __import__("os").path.getsize(p) for p in glob.glob(f"{src}/*.parquet")
-    )
-    n = compact_small_files(spark, src, dst, target_file_bytes=total // 3)
-    files = glob.glob(f"{dst}/*.parquet")
-    assert len(files) == n <= 4
-    got = sorted(r["k"] for r in spark.read.parquet(dst).collect())
-    assert got == list(range(2000))
 
 
 def test_snapshot_diff_semantics(spark):
@@ -148,7 +121,6 @@ def test_merge_upsert_partitioned_prunes_and_preserves(spark, tmp_path):
         merge_upsert,
         merge_upsert_partitioned,
         read_snapshot,
-        snapshot_versions,
     )
 
     snap = str(tmp_path / "snap")
@@ -180,7 +152,7 @@ def test_merge_upsert_partitioned_prunes_and_preserves(spark, tmp_path):
 
     touched = merge_upsert_partitioned(spark, snap, updates, "doc_id", "part")
     assert touched == ["p0"]
-    assert snapshot_versions(spark, snap) == [1]
+    assert snapshot_manifests(spark, snap) == [1]
     got = sorted(
         tuple(r) for r in read_snapshot(spark, snap).select(*cols).collect()
     )
@@ -233,7 +205,7 @@ def test_merge_upsert_partitioned_prunes_and_preserves(spark, tmp_path):
         )
     # idempotent second apply: new version, same content, legacy intact
     merge_upsert_partitioned(spark, snap, updates, "doc_id", "part")
-    assert snapshot_versions(spark, snap) == [1, 2]
+    assert snapshot_manifests(spark, snap) == [1, 2]
     assert sorted(
         tuple(r) for r in read_snapshot(spark, snap).select(*cols).collect()
     ) == want
@@ -252,7 +224,6 @@ def test_merge_upsert_partitioned_crash_orderings(spark, tmp_path):
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.maintenance import (
         merge_upsert_partitioned,
         read_snapshot,
-        snapshot_versions,
     )
 
     snap = str(tmp_path / "snap")
@@ -282,7 +253,7 @@ def test_merge_upsert_partitioned_crash_orderings(spark, tmp_path):
         [(2, "p0", "LOST-CRASH")], "doc_id long, part string, body string"
     )
     u2.write.partitionBy("part").parquet(f"{snap}/_slices/s2")
-    assert snapshot_versions(spark, snap) == [1]
+    assert snapshot_manifests(spark, snap) == [1]
     assert content() == v1_content  # reader never sees the orphan
 
     # crash ordering B: torn manifest (truncated JSON) — parse guard
@@ -290,7 +261,7 @@ def test_merge_upsert_partitioned_crash_orderings(spark, tmp_path):
     os.makedirs(f"{snap}/_manifests", exist_ok=True)
     with open(f"{snap}/_manifests/m2.json", "w") as f:
         f.write('{"version": 2, "entries": {"part=p0": "s2"')
-    assert snapshot_versions(spark, snap) == [1]
+    assert snapshot_manifests(spark, snap) == [1]
     assert content() == v1_content
 
     # the next run clears BOTH orphans and commits cleanly on top
@@ -298,7 +269,7 @@ def test_merge_upsert_partitioned_crash_orderings(spark, tmp_path):
         [(2, "p0", "EDITED-2")], "doc_id long, part string, body string"
     )
     merge_upsert_partitioned(spark, snap, u3, "doc_id", "part")
-    assert snapshot_versions(spark, snap) == [1, 2]
+    assert snapshot_manifests(spark, snap) == [1, 2]
     got = content()
     bodies = {t[2] for t in got}
     assert "EDITED-2" in bodies and "LOST-CRASH" not in bodies
@@ -319,7 +290,6 @@ def test_merge_upsert_partitioned_uri_scheme_and_bootstrap(spark, tmp_path):
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.maintenance import (
         merge_upsert_partitioned,
         read_snapshot,
-        snapshot_versions,
     )
 
     snap = "file://" + str(tmp_path / "snap")
@@ -332,7 +302,7 @@ def test_merge_upsert_partitioned_uri_scheme_and_bootstrap(spark, tmp_path):
         "0010",
         "7",
     ]
-    assert snapshot_versions(spark, snap) == [1]
+    assert snapshot_manifests(spark, snap) == [1]
     u2 = spark.createDataFrame(
         [(1, "0010", "a2"), (3, "0010", "c")],
         "doc_id long, part string, body string",
@@ -481,7 +451,6 @@ def test_drop_partitions_retention(spark, tmp_path):
         drop_partitions,
         merge_upsert_partitioned,
         read_snapshot,
-        snapshot_versions,
         vacuum_snapshot,
     )
 
@@ -501,7 +470,7 @@ def test_drop_partitions_retention(spark, tmp_path):
         [(0, "2024-01", "EDIT")], "doc_id long, month string, body string"
     )
     merge_upsert_partitioned(spark, snap, u, "doc_id", "month")
-    pre_drop = snapshot_versions(spark, snap)[-1]
+    pre_drop = snapshot_manifests(spark, snap)[-1]
 
     dropped = drop_partitions(spark, snap, ["2024-01", "ghost"], "month")
     assert dropped == ["2024-01"]
@@ -514,9 +483,9 @@ def test_drop_partitions_retention(spark, tmp_path):
     assert os.path.isdir(f"{snap}/month=2024-01")
 
     # idempotent re-run: nothing dropped, no new manifest committed
-    before = snapshot_versions(spark, snap)
+    before = snapshot_manifests(spark, snap)
     assert drop_partitions(spark, snap, ["2024-01"], "month") == []
-    assert snapshot_versions(spark, snap) == before
+    assert snapshot_manifests(spark, snap) == before
     with pytest.raises(ValueError, match="missing_ok=False"):
         drop_partitions(
             spark, snap, ["2024-01"], "month", missing_ok=False
@@ -556,7 +525,6 @@ def test_vacuum_snapshot_reclaims_superseded_slices(spark, tmp_path):
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.maintenance import (
         merge_upsert_partitioned,
         read_snapshot,
-        snapshot_versions,
         vacuum_snapshot,
     )
 
@@ -571,7 +539,7 @@ def test_vacuum_snapshot_reclaims_superseded_slices(spark, tmp_path):
             [(0, "p0", f"EDIT-{n}")], "doc_id long, part string, body string"
         )
         merge_upsert_partitioned(spark, snap, u, "doc_id", "part")
-    assert snapshot_versions(spark, snap) == [1, 2, 3]
+    assert snapshot_manifests(spark, snap) == [1, 2, 3]
     want = sorted(
         tuple(r)
         for r in read_snapshot(spark, snap)
@@ -582,7 +550,7 @@ def test_vacuum_snapshot_reclaims_superseded_slices(spark, tmp_path):
     stats = vacuum_snapshot(spark, snap, keep_manifests=1)
     # manifests m1/m2 dropped; slices s1/s2 superseded by s3 for p0
     assert stats == {"manifests_deleted": 2, "slices_deleted": 2}
-    assert snapshot_versions(spark, snap) == [3]
+    assert snapshot_manifests(spark, snap) == [3]
     assert sorted(
         tuple(r)
         for r in read_snapshot(spark, snap)

@@ -1,6 +1,6 @@
 """Multimodal plumbing tests (operators/multimodal.py): schema contracts,
-deterministic byte-level features, resize/frame-sample shapes. The codec
-layer is stubbed by design — these pin the Spark-side batch plumbing."""
+deterministic byte-level features, frame-sample shapes — the Spark-side
+batch plumbing around opaque media bytes."""
 
 from __future__ import annotations
 
@@ -12,10 +12,8 @@ from pyspark.sql import functions as F
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.multimodal import (
     FEATURE_SCHEMA,
     attach_blob,
-    decode_image,
     extract_features,
     frame_sample_plan,
-    resize_media,
 )
 
 
@@ -70,27 +68,12 @@ def test_extract_features_null_payload(spark):
     assert rows[2]["byte_entropy"] == 0.0
 
 
-def test_resize_media_contract(media):
-    out = resize_media(media, target_w=8, target_h=4)
-    rows = {r["media_id"]: r for r in out.collect()}
-    for r in rows.values():
-        assert r["width"] == 8 and r["height"] == 4
-        assert len(r["payload"]) == 32  # truncate/pad to w*h
-    assert bytes(rows[1]["payload"])[:4] == b"abcd"
-    assert bytes(rows[3]["payload"]) == b"\x00" * 32
-
-
 def test_frame_sample_counts(media):
     out = frame_sample_plan(media, every_n_bytes=64, max_frames=8)
     rows = {r["media_id"]: r for r in out.collect()}
     # 400 bytes / 64 -> 7 frames (6 full + 1 partial); empty payload -> 0
     assert rows[1]["n_frames"] == 7
     assert rows[3]["n_frames"] == 0
-
-
-def test_decode_image_stub_raises():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG...")
 
 
 def test_binary_blob_features_use_full_byte_range(spark):

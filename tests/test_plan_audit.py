@@ -966,6 +966,55 @@ def test_grouped_quantile_operators_are_lazy(spark):
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
 
+def test_eda_result_frames_are_local_relations(spark):
+    """describe_plus and correlations hand back rows the driver already
+    holds, as local relations: eda_report's fence read
+    (``describe.where(column == value_col).first()``) and a collect of
+    the correlations start no Spark job, and the frame keeps NaN as NaN,
+    None as null and every double bit-for-bit."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
+        _local_frame,
+        correlations,
+        describe_plus,
+    )
+
+    df = spark.createDataFrame(
+        [(1.0, 2.0, 7.0), (2.0, 1.0, 7.0), (3.5, 5.0, 7.0), (None, 1.0, 7.0)],
+        "x double, y double, c double",
+    )
+    describe = describe_plus(df, ["x", "y", "c"])
+    corr = correlations(df, ["x", "y", "c"], target="y")
+    sc = spark.sparkContext
+    group = "audit-eda-local-frames"
+    sc.setJobGroup(group, "eda result frames are local relations")
+    try:
+        fence = describe.where(F.col("column") == "y").first()
+        pearson = {r["col_a"]: r["pearson"] for r in corr.collect()}
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert (fence["n"], fence["q1"], fence["q3"]) == (4, 1.0, 2.75)
+    assert set(pearson) == {"x", "c"} and pearson["c"] is None
+
+    rows = [
+        ("a", 3, float("nan"), None),
+        ("b", 1, 0.1 + 0.2, float("inf")),
+        ("c", 2, -0.0, 5e-324),
+    ]
+    local = _local_frame(spark, rows, "k string, n bigint, u double, w double")
+    assert local.schema.simpleString() == "struct<k:string,n:bigint,u:double,w:double>"
+    got = local.orderBy("k").collect()
+    assert math.isnan(got[0]["u"]) and got[0]["w"] is None
+    assert [tuple(r) for r in got[1:]] == rows[1:]
+    assert math.copysign(1.0, got[2]["u"]) == -1.0
+
+
 def test_q169_interval_overlap_no_nested_loop(spark):
     plan = _plan(spark, "q169_session_incident_overlap")
     assert "CartesianProduct" not in plan, plan
@@ -1024,31 +1073,3 @@ def test_cohort_retention_two_exchanges_no_join(spark):
     assert "Join" not in plan, plan
 
 
-def test_cells_estimate_by_single_exchange(spark):
-    """The distributed per-group quantile reader's point: everything
-    after the one group-keyed exchange (island windows, island
-    aggregate, rank windows, final aggregate) reuses its partitioning —
-    a second exchange would mean the island merge or the rollup
-    re-shuffles the cell table."""
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        cells_quantile_estimate_by,
-        quantile_cells_by,
-    )
-
-    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
-        "user_id", "value"
-    )
-    # checkpoint the cell table: the audit is about the ESTIMATOR's own
-    # shape (a live state table arrives materialized from parquet), not
-    # the producer's (user_id, b) aggregate exchange
-    cells = quantile_cells_by(ev, "user_id", "value").localCheckpoint(
-        eager=True
-    )
-    plan = (
-        cells_quantile_estimate_by(cells, "user_id", [0.5, 0.9])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
-    assert "Join" not in plan, plan

@@ -1405,27 +1405,6 @@ def test_gap_fill_policies_python_twin(spark):
         gap_fill(df, "k", "t", "v", 3600, fill="nope")
 
 
-def test_cells_quantile_estimate_bimodal_gap_bounds(spark):
-    """Review-pass regression: a fractional rank straddling two MERGED
-    cells (bimodal gap) must still honor lo <= quantile_cont <= hi —
-    the floor-rank cell alone cannot bound an interpolation whose ceil
-    rank lives across the gap."""
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
-        cells_quantile_estimate,
-        exact_quantiles,
-        quantile_cells,
-    )
-
-    xs = [0.0, 1.0, 100.0, 101.0]  # rk(0.5)=1.5 straddles the gap
-    df = spark.createDataFrame([(x,) for x in xs], "x double")
-    cells = quantile_cells(df, "x")
-    (e, lo, hi), = cells_quantile_estimate(cells, [0.5])
-    want = exact_quantiles(df, "x", [0.5])[0]
-    assert want == 50.5
-    assert lo <= want <= hi, (lo, want, hi)
-    assert lo <= e <= hi
-
-
 def test_group_median_highcard_interpolation_no_overflow(spark):
     """Review-pass regression: the even-n median must use quantile_cont's
     interpolation form, not (lo+hi)/2 — two near-max doubles overflow
@@ -1537,12 +1516,14 @@ def test_cohort_retention_python_twin(spark):
 
 
 def test_cells_quantile_estimate_by_matches_driver_reader(spark):
-    """The distributed per-group estimator must agree with the driver
-    reader (same span-merge + rank arithmetic) group by group, and its
-    island merge may NOT rely on bucket-code order — monkeypatching the
-    bucketing to a hash must leave every bound containing the exact
-    quantile."""
+    """The keyed cell table the exact-quantile engine starts from: per
+    group (a null group included) the cells' counts, sums and exact
+    spans add up to the group's own count, sum, min and max, NaN and
+    null values are excluded, and a group column named like a cell
+    column is rejected rather than silently shadowed."""
     import math
+
+    import pytest
 
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators import (
         analytics as A,
@@ -1554,58 +1535,21 @@ def test_cells_quantile_estimate_by_matches_driver_reader(spark):
         None: [3.0],
     }
     rows = [(g, x) for g, xs in data.items() for x in xs]
+    rows += [("a", float("nan")), ("b", None)]
     df = spark.createDataFrame(rows, "g string, x double")
-    probs = [0.1, 0.5, 0.9]
-    cells = A.quantile_cells_by(df, "g", "x")
-    got = {
-        r["g"]: r for r in A.cells_quantile_estimate_by(cells, "g", probs).collect()
-    }
+    cells: dict = {}
+    for r in A.quantile_cells_by(df, "g", "x").collect():
+        cells.setdefault(r["g"], []).append(r)
+    assert set(cells) == set(data)
     for g, xs in data.items():
-        single = spark.createDataFrame([(x,) for x in xs], "x double")
-        driver = A.cells_quantile_estimate(A.quantile_cells(single, "x"), probs)
-        assert got[g]["n"] == len(xs)
-        for (e, lo, hi), name in zip(driver, ("p10", "p50", "p90")):
-            r = got[g]
-            for a, b in ((r[name], e), (r[f"{name}_lo"], lo), (r[f"{name}_hi"], hi)):
-                assert math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-12), (
-                    g, name, a, b,
-                )
-
-    def qcont(xs, p):
-        s = sorted(xs)
-        r = (len(s) - 1) * p
-        lo, hi = math.floor(r), math.ceil(r)
-        return s[lo] + (s[hi] - s[lo]) * (r - lo)
-
-    orig = A._log_bucket
-    try:
-        A._log_bucket = lambda v, k: F.pmod(F.hash(v), F.lit(5)).cast("long")
-        hashed = {
-            r["g"]: r
-            for r in A.cells_quantile_estimate_by(
-                A.quantile_cells_by(df, "g", "x"), "g", probs
-            ).collect()
-        }
-    finally:
-        A._log_bucket = orig
-    for g, xs in data.items():
-        for p, name in zip(probs, ("p10", "p50", "p90")):
-            want = qcont(xs, p)
-            r = hashed[g]
-            assert r[f"{name}_lo"] <= want <= r[f"{name}_hi"], (g, name)
-
-    import pytest
-
-    with pytest.raises(ValueError, match="non-empty"):
-        A.cells_quantile_estimate_by(cells, "g", [])
-    with pytest.raises(ValueError, match="collide"):
-        A.cells_quantile_estimate_by(cells, "g", [0.501, 0.502])
-    # group names the cell-table schema owns must be rejected, not
-    # silently shadowed (review-pass finding)
+        cs = cells[g]
+        assert sum(c["n"] for c in cs) == len(xs), g
+        assert min(c["mn"] for c in cs) == min(xs), g
+        assert max(c["mx"] for c in cs) == max(xs), g
+        assert math.isclose(sum(c["s"] for c in cs), sum(xs), rel_tol=1e-12), g
+        assert all(c["mn"] <= c["mx"] for c in cs), g
     with pytest.raises(ValueError, match="cell-table schema"):
         A.quantile_cells_by(df.withColumnRenamed("g", "n"), "n", "x")
-    with pytest.raises(ValueError, match="cell-table schema"):
-        A.cells_quantile_estimate_by(cells.withColumnRenamed("g", "mx"), "mx", [0.5])
 
 
 def test_event_transitions_python_twin(spark):
