@@ -1,25 +1,16 @@
 """Vector math over ``array<float>`` columns, JVM-side.
 
 Embedding similarity (north-star surface; the reference has no vector ops)
-runs without any Python UDF in the hot path. Two forms:
-
-* ``dim=None`` — ``zip_with`` + ``aggregate`` higher-order functions.
-  Correct for any length, but Spark evaluates HOF lambdas on the
-  interpreted expression path (they are excluded from whole-stage
-  codegen), which costs ~10-30x on wide candidate sets.
-* ``dim=k`` — the dot/norm is UNROLLED into ``k`` ``GetArrayItem``
-  multiply-adds, plain codegen-able arithmetic. Summation is the same
-  left-to-right fold as the HOF form (and DuckDB's ``list_dot_product``),
-  so results are bit-identical. CAUTION: only worth it for SMALL dims —
-  a 64-dim cosine inside a join stage pushes the generated doConsume
-  method past Janino's 64 KB limit, and the resulting whole-stage codegen
-  fallback is slower than the HOF form (measured). The wide-vector hot
-  path belongs in an Arrow-batched numpy UDF instead.
+runs without any Python UDF in the hot path: the dot product and norms are
+``zip_with`` + ``aggregate`` higher-order functions. They are correct for
+any length, but Spark evaluates HOF lambdas on the interpreted expression
+path (they are excluded from whole-stage codegen), which costs ~10-30x on
+wide candidate sets. The wide-vector hot path belongs in an Arrow-batched
+numpy UDF instead. Summation is a left-to-right fold, the same as DuckDB's
+``list_dot_product``.
 
 Arrays are cast to double first so accumulation order effects stay in the
-last ulp instead of float32 noise. With ``dim=k``, vectors shorter than
-``k`` yield NULL (out-of-range ``GetArrayItem``), which the NULL-safe
-cosine then drops — same contract as a malformed embedding.
+last ulp instead of float32 noise.
 """
 
 from __future__ import annotations
@@ -33,32 +24,18 @@ def _as_double_array(col: Column | str) -> Column:
     return c.cast("array<double>")
 
 
-def dot_col(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Dot product of two array columns; unrolled codegen form if ``dim``."""
-    aa, bb = _as_double_array(a), _as_double_array(b)
-    if dim is not None:
-        s = aa[0] * bb[0]
-        for d in range(1, dim):
-            s = s + aa[d] * bb[d]
-        return s
-    prod = F.zip_with(aa, bb, lambda x, y: x * y)
+def dot_col(a: Column | str, b: Column | str) -> Column:
+    """Dot product of two array columns."""
+    prod = F.zip_with(_as_double_array(a), _as_double_array(b), lambda x, y: x * y)
     return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def l2_norm_col(a: Column | str, dim: int | None = None) -> Column:
-    arr = _as_double_array(a)
-    if dim is not None:
-        s = arr[0] * arr[0]
-        for d in range(1, dim):
-            s = s + arr[d] * arr[d]
-        return F.sqrt(s)
-    sq = F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x * x)
+def l2_norm_col(a: Column | str) -> Column:
+    sq = F.aggregate(_as_double_array(a), F.lit(0.0), lambda acc, x: acc + x * x)
     return F.sqrt(sq)
 
 
-def cosine_similarity_col(
-    a: Column | str, b: Column | str, dim: int | None = None
-) -> Column:
+def cosine_similarity_col(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; NULL-safe on zero-norm vectors (returns NULL)."""
-    denom = l2_norm_col(a, dim) * l2_norm_col(b, dim)
-    return F.when(denom > 0, dot_col(a, b, dim) / denom)
+    denom = l2_norm_col(a) * l2_norm_col(b)
+    return F.when(denom > 0, dot_col(a, b) / denom)

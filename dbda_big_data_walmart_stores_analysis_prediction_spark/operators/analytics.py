@@ -361,17 +361,12 @@ def correlations(df: DataFrame, columns: list[str], target: str | None = None) -
     return _local_frame(df.sparkSession, rows, "col_a string, col_b string, pearson double")
 
 
-def histogram(
-    df: DataFrame, col: str, n_bins: int = 50, lo: float | None = None, hi: float | None = None
-) -> DataFrame:
+def histogram(df: DataFrame, col: str, n_bins: int = 50) -> DataFrame:
     """A10: fixed-width histogram as a groupBy on the bin index — a single
     partial+final hash aggregate (the reference histograms a pandas sample,
-    ``Scripts/eda.py:67``). Bounds default to the column min/max (one extra
-    tiny agg job). Values == hi land in the last bin."""
-    if lo is None or hi is None:
-        bounds = df.agg(F.min(col).cast("double"), F.max(col).cast("double")).first()
-        lo = bounds[0] if lo is None else lo
-        hi = bounds[1] if hi is None else hi
+    ``Scripts/eda.py:67``). Bounds are the column min/max (one extra tiny
+    agg job). Values == max land in the last bin."""
+    lo, hi = df.agg(F.min(col).cast("double"), F.max(col).cast("double")).first()
     width = (hi - lo) / n_bins or 1.0
     bin_idx = F.least(
         F.floor((F.col(col).cast("double") - F.lit(lo)) / F.lit(width)),

@@ -21,14 +21,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def null_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+def null_counts(df: DataFrame) -> DataFrame:
     """Per-column null counts in one aggregate pass (P1/A3).
 
     Output: single row, one column per input column (bigint counts).
     """
-    cols = columns or df.columns
     return df.select(
-        [F.count(F.when(F.col(c).isNull(), c)).alias(c) for c in cols]
+        [F.count(F.when(F.col(c).isNull(), c)).alias(c) for c in df.columns]
     )
 
 

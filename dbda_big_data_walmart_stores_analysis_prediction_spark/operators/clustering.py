@@ -41,8 +41,7 @@ both JVM forms were built and MEASURED first (PERF.md round 11):
   iteration a ~5 s job on a 2,000-row fixture;
 * the dim-unrolled codegen form (8×64 multiply-adds) blows past
   Janino's method limits at dim 64 — whole-stage codegen falls back and
-  the interpreted giant tree is slower still (the
-  ``functions/vectors.py`` caution, reproduced here).
+  the interpreted giant tree is slower still.
 
 The Arrow stage moves each batch once through one matmul; per-row cost
 is nanoseconds and the oracle contract is unchanged (dots round to 6 dp
@@ -369,25 +368,6 @@ def cluster_embeddings(
     return assign_clusters(df, model, id_col, vec_col)
 
 
-def _pair_dot():
-    """Arrow-batched row-wise dot of two array<double> columns (pair
-    scoring inside the cluster-keyed join — the q30 `_cosine_arrow`
-    pattern on already-normalized vectors). The ``pair_mode="join"``
-    slow path; see `_blockwise_pairs`."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    def f(a, b):
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        ma = np.asarray(a.tolist(), dtype=np.float64)
-        mb = np.asarray(b.tolist(), dtype=np.float64)
-        return pd.Series((ma * mb).sum(axis=1))
-
-    return pandas_udf(f, "double")
-
-
 def _blockwise_pairs(
     feats: DataFrame, threshold: float, row_block: int = 2048
 ) -> DataFrame:
@@ -438,7 +418,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     salt: str = "kmeans",
-    pair_mode: str = "blockwise",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023), the cluster-bounded form: k-means
     clusters → WITHIN-cluster cosine pairs ≥ ``threshold`` → connected
@@ -455,13 +434,12 @@ def semdedup(
     O(Σ cluster_size²) dot products and never all-pairs, the published
     trick that makes SemDeDup run at LAION scale; cluster granularity
     (``n_clusters`` ~ corpus_size / desired_cluster_size) bounds the
-    quadratic term. ``pair_mode="blockwise"`` (default) evaluates those
-    dots as per-cluster numpy matmuls (`_blockwise_pairs`: each vector
-    crosses Arrow once per cluster, row-blocked for bounded memory);
-    ``pair_mode="join"`` is the self-join reference form (each candidate
-    pair ships both vectors — measured 3.3x slower at the 5x stress
-    point on q112, 3.6x on q113; PERF.md r11 "blockwise SemDeDup
-    pairs"). Both emit identical round-6-thresholded pairs.
+    quadratic term. Those dots are per-cluster numpy matmuls
+    (`_blockwise_pairs`: each vector crosses Arrow once per cluster,
+    row-blocked for bounded memory); the self-join form, which ships both
+    vectors per candidate pair, measured 3.3x slower at the 5x stress
+    point on q112 and 3.6x on q113 (PERF.md r11 "blockwise SemDeDup
+    pairs") and is kept only as the test reference.
     The component closure reuses the size-gated union-find /
     star-contraction machinery every other dedup family goes through
     (`operators.dedup.connected_components`).
@@ -477,38 +455,11 @@ def semdedup(
         connected_components,
     )
 
-    if pair_mode not in ("blockwise", "join"):
-        raise ValueError(
-            f"semdedup: pair_mode must be 'blockwise' or 'join', got "
-            f"{pair_mode!r}"
-        )
     model = fit_kmeans(df, n_clusters, iters, id_col, vec_col, salt)
     feats = _assigned(
         df, id_col, vec_col, model.centroids, with_nv=True
     ).localCheckpoint(eager=False)
-    if pair_mode == "blockwise":
-        pairs = _blockwise_pairs(feats, threshold)
-    else:
-        a = feats.select(
-            F.col("id").alias("id_a"),
-            F.col("cluster"),
-            F.col("nv").alias("nv_a"),
-        )
-        b = feats.select(
-            F.col("id").alias("id_b"),
-            F.col("cluster"),
-            F.col("nv").alias("nv_b"),
-        )
-        dot = _pair_dot()
-        pairs = (
-            a.join(b, "cluster")
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(
-                F.round(dot(F.col("nv_a"), F.col("nv_b")), DOT_DP)
-                >= threshold
-            )
-            .select("id_a", "id_b")
-        )
+    pairs = _blockwise_pairs(feats, threshold)
     comp = connected_components(pairs, "id_a", "id_b")
     labeled = feats.join(comp, "id", "left").select(
         F.col("id"),

@@ -191,7 +191,6 @@ def shingle_sets(
     text_col: str = "text",
     k: int = 3,
     max_doc_freq: int | None = None,
-    hashed: bool = True,
 ) -> DataFrame:
     """Per-doc shingle sets flattened with their size attached:
     ``(doc, sz, sh)`` where ``sz`` = that doc's distinct-shingle count over
@@ -208,11 +207,11 @@ def shingle_sets(
     distinct it replaces). Per-doc set state is bounded by document length,
     not corpus size, so the aggregate is skew-safe wherever docs are.
 
-    ``hashed`` (default True) carries shingles as md5-int64 — see
-    `_shingle_rows` for why every join-on-shingle consumer wants this;
-    sizes and shared counts are hash-collision-equal to the string form.
+    Shingles are carried as md5-int64 — see `_shingle_rows` for why every
+    join-on-shingle consumer wants this; sizes and shared counts are
+    hash-collision-equal to the string form.
     """
-    rows = _shingle_rows(df, id_col, text_col, k, hashed)
+    rows = _shingle_rows(df, id_col, text_col, k, hashed=True)
     if max_doc_freq is not None:
         keep = (
             rows.groupBy("sh")
@@ -727,10 +726,9 @@ def dedup_near_by(
     id_col: str = "doc_id",
     pair_a: str = "doc_a",
     pair_b: str = "doc_b",
-    descending: bool = True,
 ) -> DataFrame:
     """``dedup_near`` with an explicit survivor policy: each near-dup
-    cluster keeps its best row by ``prefer_col`` (descending by default,
+    cluster keeps its best row by ``prefer_col`` (highest value,
     ascending-id tiebreak) instead of the min id.
 
     The policy that matters for training corpora: near-dup clusters often
@@ -753,10 +751,7 @@ def dedup_near_by(
     )
     from pyspark.sql.window import Window
 
-    order = [
-        F.col(prefer_col).desc() if descending else F.col(prefer_col).asc(),
-        F.col(id_col).asc(),
-    ]
+    order = [F.col(prefer_col).desc(), F.col(id_col).asc()]
     members = df.join(comp, df[id_col] == F.col("__cc_id"), "inner")
     best = (
         members.withColumn(
@@ -780,7 +775,6 @@ def dedup_incremental(
     k: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    corpus_shingles: DataFrame | None = None,
     bloom_prefilter: bool = False,
     bloom_m_bits: int = 1 << 20,
     bloom_k: int = 7,
@@ -809,12 +803,8 @@ def dedup_incremental(
     Scale shape: candidate generation is the shingle inverted-index join
     with the NEW side as the probe — the pair space is bounded by the
     batch's shingles, never corpus x corpus. The corpus shingle table is
-    the only corpus-wide derivation, and a precomputed/stored one can be
-    passed as ``corpus_shingles`` (columns ``doc, sh`` with ``sh`` the
-    md5-int64 hashed form, i.e. ``shingle_table(..., hashed=True)`` —
-    string shingles would never match the batch side's hashed keys) so
-    steady-state daily runs touch the corpus zero times. ``max_doc_freq`` caps
-    boilerplate fan-out across the union space (`cap_shingle_doc_freq`).
+    the only corpus-wide derivation. ``max_doc_freq`` caps boilerplate
+    fan-out across the union space (`cap_shingle_doc_freq`).
 
     Ids must be unique within each side; a corpus id may numerically
     collide with a batch id (sides are tagged, never mixed by id).
@@ -893,21 +883,7 @@ def dedup_incremental(
     # below dedups per (doc, is_new) anyway, so the two per-side distinct
     # exchanges the old shingle_table union paid are pure waste here
     sh_n = _shingle_rows(surv, id_col, text_col, k, hashed=True)
-    if corpus_shingles is not None:
-        # Fail fast on the string-form table earlier releases produced:
-        # the union below would otherwise coerce the batch side's int64
-        # hashes to string (or die mid-job in an ANSI cast) and the
-        # anti-join would silently never match.
-        sh_type = corpus_shingles.schema["sh"].dataType.simpleString()
-        if sh_type not in ("bigint", "int", "long"):
-            raise TypeError(
-                f"corpus_shingles.sh must be the md5-int64 HASHED form "
-                f"(shingle_table(..., hashed=True)), got {sh_type!r}; "
-                "re-derive the stored table with hashed=True"
-            )
-        sh_c = corpus_shingles.select(F.col("doc"), F.col("sh"))
-    else:
-        sh_c = _shingle_rows(corpus, id_col, text_col, k, hashed=True)
+    sh_c = _shingle_rows(corpus, id_col, text_col, k, hashed=True)
     sh_all = sh_c.withColumn("is_new", F.lit(False)).unionByName(
         sh_n.withColumn("is_new", F.lit(True))
     )
@@ -1808,7 +1784,6 @@ def jaccard_pairs_prefix(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    k_shingle: int | None = 3,
 ) -> DataFrame:
     """EXACT set-Jaccard pairs at a threshold via PREFIX FILTERING (the
     PPJoin family, Xiao et al. 2008) — the third member of the
@@ -1826,43 +1801,27 @@ def jaccard_pairs_prefix(
     pair's token arrays travel to one `array_intersect` projection —
     candidate-sized, never corpus-sized.
 
-    Sets are hashed k-word shingles by default (``k_shingle=3`` — the
-    family's near-dup representation: shingle rarity is what makes the
-    prefix SELECTIVE; plain words on natural language co-occur so
-    broadly that word-level prefixes barely prune — measured 25 s vs
-    ~2 s on the same corpus). ``k_shingle=None`` switches to distinct
-    words (the engine's portable lower + non-alphanumeric split) for
-    keyword-set inputs. ``ceil`` carries a −1e-9 slack so a
+    Sets are hashed 3-word shingles — the family's near-dup
+    representation: shingle rarity is what makes the prefix SELECTIVE;
+    plain words on natural language co-occur so broadly that word-level
+    prefixes barely prune (measured 25 s vs ~2 s on the same corpus).
+    ``ceil`` carries a −1e-9 slack so a
     floating-point ``t·n`` landing one ulp ABOVE an exact integer
     cannot shorten the prefix below the theorem's length (errs toward
-    a longer prefix — more candidates, never a missed pair). Docs with
-    no tokens pair with nothing. Output: ``(doc_a, doc_b, jaccard)``
-    (a < b, rounded 6 dp), every pair with J ≥ threshold.
+    a longer prefix — more candidates, never a missed pair). Null-text
+    docs have no shingles and pair with nothing. Output: ``(doc_a, doc_b,
+    jaccard)`` (a < b, rounded 6 dp), every pair with J ≥ threshold.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(
             f"jaccard_pairs_prefix: threshold must be in (0, 1], got {threshold}"
         )
-    if k_shingle is not None:
-        rows = _shingle_rows(df, id_col, text_col, k=k_shingle, hashed=True)
-        toks = rows.select("doc", F.col("sh").alias("tok")).distinct()
-    else:
-        toks = _fan_out_small_scan(
-            df.where(F.col(text_col).isNotNull()).select(
-                F.col(id_col).alias("doc"), F.col(text_col).alias("__t")
-            )
-        ).select(
-            "doc",
-            F.explode(
-                F.array_distinct(
-                    F.filter(
-                        F.split(F.lower(F.col("__t")), "[^a-z0-9]+"),
-                        lambda t: t != "",
-                    )
-                )
-            ).alias("tok"),
-        )
-    toks = toks.localCheckpoint(eager=False)  # consumers: doc-freq + arrays
+    toks = (
+        _shingle_rows(df, id_col, text_col, k=3, hashed=True)
+        .select("doc", F.col("sh").alias("tok"))
+        .distinct()
+        .localCheckpoint(eager=False)  # consumers: doc-freq + arrays
+    )
     freq = toks.groupBy("tok").agg(F.count("*").alias("__df"))
     arrs = (
         toks.join(freq, "tok")

@@ -19,29 +19,22 @@ def star_join(
     fact: DataFrame,
     dims: list[tuple[DataFrame, list[str] | str]],
     how: str = "left",
-    broadcast_dims: bool = True,
-    drop_ambiguous: bool = True,
 ) -> DataFrame:
-    """Join a fact table against small dimensions.
+    """Join a fact table against small, broadcast dimensions.
 
     ``dims`` is ``[(dim_df, join_keys), ...]``. USING-style keys (list/str)
-    dedupe the key columns automatically; ``drop_ambiguous`` additionally
-    drops non-key dim columns that collide with fact columns BEFORE joining
-    (the reference handles one such collision by hand-dropping
-    ``features.IsHoliday`` at ``Scripts/etl.py:108-109``).
+    dedupe the key columns automatically; non-key dim columns that collide
+    with fact columns are dropped BEFORE joining (the reference handles one
+    such collision by hand-dropping ``features.IsHoliday`` at
+    ``Scripts/etl.py:108-109``).
     """
     out = fact
     for dim, keys in dims:
         key_list = [keys] if isinstance(keys, str) else list(keys)
-        if drop_ambiguous:
-            collide = [
-                c for c in dim.columns if c in out.columns and c not in key_list
-            ]
-            if collide:
-                dim = dim.drop(*collide)
-        if broadcast_dims:
-            dim = F.broadcast(dim)
-        out = out.join(dim, on=key_list, how=how)
+        collide = [c for c in dim.columns if c in out.columns and c not in key_list]
+        if collide:
+            dim = dim.drop(*collide)
+        out = out.join(F.broadcast(dim), on=key_list, how=how)
     return out
 
 
@@ -95,9 +88,9 @@ def range_join_binned(
     hi_col: str,
     bin_seconds: int = 3600,
     keys: list[str] | None = None,
-    inclusive_hi: bool = True,
 ) -> DataFrame:
-    """Point-in-interval join that scales when BOTH sides are big.
+    """Point-in-interval join (inclusive ends) that scales when BOTH sides
+    are big.
 
     The naive form (``points JOIN intervals ON p BETWEEN lo AND hi``) has no
     equi-key, so Spark executes it as BroadcastNestedLoopJoin — O(|P|·|I|)
@@ -138,13 +131,9 @@ def range_join_binned(
         ),
     )
     joined = p.join(i, key_list + ["__bin"]).drop("__bin")
-    in_range = F.col(point_col) >= F.col(lo_col)
-    in_range = in_range & (
-        F.col(point_col) <= F.col(hi_col)
-        if inclusive_hi
-        else F.col(point_col) < F.col(hi_col)
+    return joined.where(
+        (F.col(point_col) >= F.col(lo_col)) & (F.col(point_col) <= F.col(hi_col))
     )
-    return joined.where(in_range)
 
 
 def interval_overlap_join(
@@ -154,7 +143,6 @@ def interval_overlap_join(
     l_hi: str,
     r_lo: str,
     r_hi: str,
-    keys: list[str] | None = None,
     bin_seconds: int = 3600,
     max_bins_per_interval: int = 10_000,
 ) -> DataFrame:
@@ -162,7 +150,7 @@ def interval_overlap_join(
     when BOTH sides are big — `range_join_binned`'s two-sided sibling.
     The naive ``ON l_lo <= r_hi AND r_lo <= l_hi`` has no equi-key
     (BroadcastNestedLoopJoin); here both sides explode to the bins they
-    span and meet in an ordinary equi-join on (keys..., bin).
+    span and meet in an ordinary equi-join on the bin.
 
     A pair overlapping several shared bins would duplicate once per
     bin; the dedup costs NO distinct: every overlapping pair is emitted
@@ -173,7 +161,7 @@ def interval_overlap_join(
 
     Rows with null bounds or inverted intervals (hi < lo — Spark's
     ``sequence`` would silently DESCEND) are dropped. Non-key column
-    names must be disjoint (alias before joining). Pick ``bin_seconds``
+    Column names must be disjoint (alias before joining). Pick ``bin_seconds``
     near the typical interval length, exactly as in
     ``range_join_binned``.
 
@@ -188,8 +176,7 @@ def interval_overlap_join(
     """
     from pyspark.sql.types import NumericType, TimestampType
 
-    key_list = list(keys or [])
-    clash = (set(left.columns) & set(right.columns)) - set(key_list)
+    clash = set(left.columns) & set(right.columns)
     if clash:
         raise ValueError(
             f"interval_overlap_join: columns {sorted(clash)} exist on both "
@@ -256,9 +243,7 @@ def interval_overlap_join(
             ),
         )
 
-    j = binned(left, l_lo, l_hi).join(
-        binned(right, r_lo, r_hi), key_list + ["__bin"]
-    )
+    j = binned(left, l_lo, l_hi).join(binned(right, r_lo, r_hi), ["__bin"])
     overlap = (F.col(l_lo) <= F.col(r_hi)) & (F.col(r_lo) <= F.col(l_hi))
     lo_num = F.unix_micros(F.greatest(F.col(l_lo), F.col(r_lo))).cast(
         "double"
@@ -274,7 +259,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: list[str],
-    tolerance_seconds: int | None = None,
 ) -> DataFrame:
     """Backward as-of join: for each left row, attach the right row with the
     greatest ``right_ts`` <= ``left_ts`` within the same ``on`` keys (left
@@ -293,8 +277,6 @@ def asof_join(
     Ties: a right row at exactly ``left_ts`` matches (inclusive). Multiple
     right rows at the same timestamp resolve to the last under the sort
     ``(ts, is_left, right_cols)`` — deterministic given distinct payloads.
-    ``tolerance_seconds`` nulls out matches staler than the given horizon
-    (pandas ``merge_asof(tolerance=...)`` semantics).
     """
     key_list = [on] if isinstance(on, str) else list(on)
     out_right = set(right_cols) | {f"asof_{right_ts}"}
@@ -333,24 +315,16 @@ def asof_join(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     carried = F.last("__payload", ignorenulls=True).over(w)
-    out = (
+    return (
         r.unionByName(l)
         .withColumn("__carried", carried)
         .where(F.col("__is_left") == 1)
-    )
-    if tolerance_seconds is not None:
-        fresh = (
-            F.unix_micros(F.col("__ts"))
-            - F.unix_micros(F.col("__carried.__asof_ts"))
-        ) <= tolerance_seconds * 1_000_000
-        out = out.withColumn(
-            "__carried", F.when(fresh, F.col("__carried"))
+        .select(
+            *key_list,
+            *[c for c in left.columns if c not in key_list],
+            F.col("__carried.__asof_ts").alias(f"asof_{right_ts}"),
+            *[F.col(f"__carried.{c}").alias(c) for c in right_cols],
         )
-    return out.select(
-        *key_list,
-        *[c for c in left.columns if c not in key_list],
-        F.col("__carried.__asof_ts").alias(f"asof_{right_ts}"),
-        *[F.col(f"__carried.{c}").alias(c) for c in right_cols],
     )
 
 

@@ -55,17 +55,13 @@ def attach_blob(
     )
 
 
-def extract_features(
-    media: DataFrame, n_bins: int = 16, repartition_to: int | None = None
-) -> DataFrame:
+def extract_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
     """Per-item byte-level features via ``mapInPandas`` (Arrow-batched).
 
     byte_entropy + a 16-bin byte histogram — a deterministic stand-in with
     the exact shape of a real decode-and-featurize stage (one Python pass
     per Arrow batch, fixed output schema, column-pruned input).
     """
-    if repartition_to:
-        media = media.repartition(repartition_to, "media_id")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math

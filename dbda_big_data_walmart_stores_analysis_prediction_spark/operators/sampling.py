@@ -187,7 +187,6 @@ def dsir_log_weights(
     id_col: str,
     text_col: str,
     n_buckets: int = 4096,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw document
@@ -280,11 +279,6 @@ def dsir_log_weights(
     # join), and `scored` has two (the corpus mean + the output).
     # Without the cut, Spark re-executes the full explode+md5 lineage per
     # consumer.
-    def _cut(frame: DataFrame) -> DataFrame:
-        # ``checkpoint=False`` keeps the whole plan in ONE lazy tree
-        # (plan audits, engines with cheap recompute); the default cuts it
-        return frame.localCheckpoint(eager=False) if checkpoint else frame
-
     # SINGLE PASS over the raw corpus: pre-aggregate the gram stream to
     # (doc, bucket, multiplicity) once — map-side combinable, bounded by
     # docs x min(2·tokens-1, n_buckets) rows — and derive BOTH the bucket
@@ -293,11 +287,21 @@ def dsir_log_weights(
     # executed twice: once under the stats aggregate and once under the
     # scoring join — two full corpus scans where one suffices (the r6
     # verdict's q80 finding).
-    raw_doc_buckets = _cut(
-        raw_grams.groupBy("doc", "b").agg(F.count("*").alias("n"))
+    raw_doc_buckets = (
+        raw_grams.groupBy("doc", "b")
+        .agg(F.count("*").alias("n"))
+        .localCheckpoint(eager=False)
     )
-    raw_stats = _cut(raw_doc_buckets.groupBy("b").agg(F.sum("n").alias("cr")))
-    tgt_stats = _cut(tgt_grams.groupBy("b").agg(F.count("*").alias("ct")))
+    raw_stats = (
+        raw_doc_buckets.groupBy("b")
+        .agg(F.sum("n").alias("cr"))
+        .localCheckpoint(eager=False)
+    )
+    tgt_stats = (
+        tgt_grams.groupBy("b")
+        .agg(F.count("*").alias("ct"))
+        .localCheckpoint(eager=False)
+    )
     # scalar totals, broadcast like temperature_mix's __N
     # coalesce: sum over an EMPTY stats frame is null, and a null total
     # would null out every weight (an all-empty target must still score)
@@ -342,7 +346,7 @@ def dsir_log_weights(
         )
     )
     # per-doc frame (4 narrow columns), consumed twice — cheap to hold
-    scored = _cut(scored)
+    scored = scored.localCheckpoint(eager=False)
     # derived entirely from already-rounded values so an external oracle
     # lands on the identical mean (up to its own 6-dp rounding)
     mean_ratio = scored.agg(

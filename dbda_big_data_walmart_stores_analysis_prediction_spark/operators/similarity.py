@@ -37,19 +37,12 @@ def knn_bruteforce(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set against the corpus.
+    A vector is never its own neighbor.
 
     Output: (query_id, neighbor_id, cosine, rank). Deterministic ties:
     (cosine DESC, neighbor_id ASC).
-
-    ``dim`` forwards to ``cosine_similarity_col``: ``None`` (default) uses
-    the length-agnostic HOF form; a small ``dim`` unrolls the dot product
-    into codegen arithmetic. Mind the Janino caveat in functions/vectors.py
-    — wide dims (≈64+) inside this join stage break whole-stage codegen
-    and end up slower than the HOF form.
     """
     q = F.broadcast(
         queries.select(
@@ -57,13 +50,11 @@ def knn_bruteforce(
         )
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    pairs = q.crossJoin(c)
-    if exclude_self:
-        pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
+    pairs = q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        F.round(cosine_similarity_col("q_vec", "c_vec", dim), 6).alias("cosine"),
+        F.round(cosine_similarity_col("q_vec", "c_vec"), 6).alias("cosine"),
     # zero-norm vectors have no direction: cosine_similarity_col yields
     # NULL for them (guarded division), DuckDB clamps to an arbitrary
     # -1.0 — exclude the pair on both sides rather than rank an undefined
@@ -134,9 +125,8 @@ def _all_table_signatures(
 
 def _cosine_arrow():
     """Arrow-batched cosine over candidate PAIRS (two vector columns in,
-    double out) — one numpy einsum per batch. The JVM alternative is either
-    interpreted HOFs (~10-30x slower per pair) or a 64-dim unrolled
-    expression that breaks whole-stage codegen (see functions/vectors.py).
+    double out) — one numpy einsum per batch. The JVM alternative,
+    interpreted HOFs (functions/vectors.py), is ~10-30x slower per pair.
     Null-safe: zero-norm vectors yield real NULLs (not NaN — Spark orders
     NaN above every number, which would pass a ``>= threshold`` filter)."""
     import numpy as np
@@ -168,10 +158,10 @@ def knn_lsh(
     n_planes: int = 5,
     n_tables: int = 12,
     dim: int = 64,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k: multi-table sign-LSH bucketing, exact
-    cosine re-rank only within shared buckets.
+    cosine re-rank only within shared buckets. A vector is never its own
+    neighbor.
 
     ONE table of r sign bits has terrible recall for moderate-similarity
     neighbors (P[all r planes agree] ~ (1 - θ/π)^r — measured 0.04
@@ -193,11 +183,11 @@ def knn_lsh(
         F.col(vec_col).alias("q_vec"),
         F.posexplode(sig_arr).alias("tbl", "sig"),
     )
-    pairs = q.join(c, ["tbl", "sig"]).select(
-        "query_id", "q_vec", "neighbor_id", "c_vec"
+    pairs = (
+        q.join(c, ["tbl", "sig"])
+        .select("query_id", "q_vec", "neighbor_id", "c_vec")
+        .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    if exclude_self:
-        pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
     # candidate pairs collide in several tables — dedupe BEFORE the cosine
     pairs = pairs.dropDuplicates(["query_id", "neighbor_id"])
     cos = _cosine_arrow()
@@ -225,7 +215,6 @@ def knn_ivf(
     n_centroids: int = 16,
     n_probe: int = 4,
     seed: int = 42,
-    exclude_self: bool = True,
     train_sample: int = 8192,
     lloyd_iters: int = 8,
     dim: int | None = None,
@@ -249,7 +238,8 @@ def knn_ivf(
     3. Each query probes its ``n_probe`` closest centroids (same batched
        matmul), explodes to (query, cell), and joins corpus on the cell
        id.
-    4. Exact cosine re-ranks only the probed cells' vectors.
+    4. Exact cosine re-ranks only the probed cells' vectors. A vector is
+       never its own neighbor.
 
     Scale shape: corpus-side work is one bounded sample pass + one
     assignment pass + one shuffle keyed by cell id; query fan-out is
@@ -321,11 +311,11 @@ def knn_ivf(
         F.col(vec_col).alias("q_vec"),
         F.explode(probes(F.col(vec_col))).alias("cell"),
     )
-    pairs = q.join(assigned, "cell").select(
-        "query_id", "q_vec", "neighbor_id", "c_vec"
+    pairs = (
+        q.join(assigned, "cell")
+        .select("query_id", "q_vec", "neighbor_id", "c_vec")
+        .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    if exclude_self:
-        pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
     cos = _cosine_arrow()
     scored = pairs.select(
         "query_id",
@@ -349,34 +339,25 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     n_planes: int = 6,
     dim: int = 64,
-    exact: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine ≥ threshold).
 
-    ``exact=True`` scores ALL pairs (O(n²) — oracle/verification mode);
-    default buckets by sign-LSH first (scale mode; near-identical vectors
-    almost always share all sign bits). The bucket is an r-bit sign
-    signature over md5-seeded integer hyperplanes (``_plane_coeff``),
-    computed by the Arrow-batched numpy path ``_all_table_signatures``."""
-    if exact:
-        a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-        b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-        pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    else:
-        sig = F.element_at(_all_table_signatures(vec_col, n_planes, 1, dim), 1)
-        banded = df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sig.alias("bucket")
-        )
-        pairs = (
-            banded.toDF("id_a", "v_a", "bucket")
-            .join(banded.toDF("id_b", "v_b", "bucket"), "bucket")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "v_a", "id_b", "v_b")
-        )
-    if exact:
-        score = F.round(cosine_similarity_col("v_a", "v_b"), 6)
-    else:
-        score = F.round(_cosine_arrow()(F.col("v_a"), F.col("v_b")), 6)
+    Buckets by sign-LSH first (near-identical vectors almost always share
+    all sign bits), then scores only pairs within a bucket. The bucket is
+    an r-bit sign signature over md5-seeded integer hyperplanes
+    (``_plane_coeff``), computed by the Arrow-batched numpy path
+    ``_all_table_signatures``."""
+    sig = F.element_at(_all_table_signatures(vec_col, n_planes, 1, dim), 1)
+    banded = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sig.alias("bucket")
+    )
+    pairs = (
+        banded.toDF("id_a", "v_a", "bucket")
+        .join(banded.toDF("id_b", "v_b", "bucket"), "bucket")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "v_a", "id_b", "v_b")
+    )
+    score = F.round(_cosine_arrow()(F.col("v_a"), F.col("v_b")), 6)
     return pairs.select(
         "id_a",
         "id_b",
@@ -545,7 +526,6 @@ def knn_quantized(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k over int8-QUANTIZED vectors: both sides run
     through `quantize_embeddings`, are dequantized (``q_i * scale``) and
@@ -576,7 +556,6 @@ def knn_quantized(
         k=k,
         id_col=id_col,
         vec_col=vec_col,
-        exclude_self=exclude_self,
     )
 
 

@@ -423,16 +423,13 @@ def hll_distinct_by(
 _TWO_60 = 1 << 60  # the md5_int64 hash-space size (q82's Gumbel constant)
 
 
-def kmv_mins(
-    df: DataFrame, key_col: str, k: int, checkpoint: bool = True
-) -> DataFrame:
+def kmv_mins(df: DataFrame, key_col: str, k: int) -> DataFrame:
     """A side's KMV sketch: the k smallest DISTINCT ``md5_int64`` hashes
     of ``key_col`` as one ``h`` column — a distinct hash aggregate under
     a TakeOrderedAndProject (per-partition heaps; the corpus hash space
-    is never fully sorted). ``checkpoint=False`` keeps the lazy tree for
-    plan audits (the default materializes once for `theta_overlap`'s
-    multiple consumers)."""
-    s = (
+    is never fully sorted), materialized once for `theta_overlap`'s
+    multiple consumers."""
+    return (
         df.where(F.col(key_col).isNotNull())
         .select(md5_int64(F.col(key_col).cast("string")).alias("h"))
         .groupBy("h")
@@ -440,8 +437,8 @@ def kmv_mins(
         .select("h")
         .orderBy("h")
         .limit(k)
+        .localCheckpoint(eager=False)
     )
-    return s.localCheckpoint(eager=False) if checkpoint else s
 
 
 def theta_overlap(

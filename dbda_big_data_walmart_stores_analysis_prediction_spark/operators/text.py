@@ -388,24 +388,22 @@ def bigram_lm_scores(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    reference: DataFrame | None = None,
 ) -> DataFrame:
     """CCNet-style LM quality signal: per-document average bigram
     cross-entropy ``(id, n_bigrams, avg_neg_logprob)`` under an add-one-
     smoothed bigram model — low means fluent/in-distribution text, high
     means gibberish, boilerplate soup, or out-of-domain noise. CCNet uses
     a pretrained Wikipedia KenLM; with no model artifacts in the engine's
-    environment, the model here is trained IN-PLAN on ``reference``
-    (default: the scored corpus itself — self-perplexity, which still
-    separates degenerate from fluent documents because smoothing
-    penalizes rare transitions).
+    environment, the model here is trained IN-PLAN on the scored corpus
+    itself — self-perplexity, which still separates degenerate from fluent
+    documents because smoothing penalizes rare transitions.
 
-    ``P(w2|w1) = (c(w1,w2) + 1) / (c(w1) + V)`` with ``V`` the reference
+    ``P(w2|w1) = (c(w1,w2) + 1) / (c(w1) + V)`` with ``V`` the corpus
     vocabulary size; ``avg_neg_logprob = round(avg(-ln P), 4)`` over the
     doc's bigrams. Docs with fewer than 2 tokens (or null text) emit no
     row — they have no bigrams to judge; gate them on length instead.
 
-    Scale shape: training is two hash aggregates over the reference's
+    Scale shape: training is two hash aggregates over the corpus's
     token stream (map-side combinable; V is a 1-row broadcast); scoring
     joins each doc bigram against the count tables on the token keys —
     shuffle-hash on md5-uniform-ish word keys, no sorts, no windows, no
@@ -413,7 +411,6 @@ def bigram_lm_scores(
     coalesce their counts to 0 and smoothing covers them.
     """
     spark_norm = F.split(norm_text_col(text_col), r"\s+")
-    ref = reference if reference is not None else df
 
     def bigrams(frame: DataFrame) -> DataFrame:
         base = frame.where(F.col(text_col).isNotNull()).select(
@@ -426,14 +423,14 @@ def bigram_lm_scores(
             F.element_at("__w", F.col("__i") + 2).alias("w2"),
         )
 
-    # ONE materialization of the reference bigram stream feeds everything
-    # downstream — uni, bi, vocab, and (in the default self-scoring mode)
-    # the scoring probe itself; without it the tokenize+explode stage, the
-    # dominant cost at corpus scale, re-executes once per consumer.
-    ref_bi = bigrams(ref).localCheckpoint(eager=False)
-    uni = ref_bi.groupBy("w1").agg(F.count("*").alias("__c1"))
-    bi = ref_bi.groupBy("w1", "w2").agg(F.count("*").alias("__c2"))
-    # V counts DISTINCT words anywhere in the reference (both bigram
+    # ONE materialization of the bigram stream feeds everything downstream
+    # — uni, bi, vocab, and the scoring probe itself; without it the
+    # tokenize+explode stage, the dominant cost at corpus scale,
+    # re-executes once per consumer.
+    doc_bi = bigrams(df).localCheckpoint(eager=False)
+    uni = doc_bi.groupBy("w1").agg(F.count("*").alias("__c1"))
+    bi = doc_bi.groupBy("w1", "w2").agg(F.count("*").alias("__c2"))
+    # V counts DISTINCT words anywhere in the corpus (both bigram
     # slots), matching the usual vocabulary definition — derived from the
     # ALREADY-AGGREGATED count tables (every w1 survives into uni and
     # every w2 into bi), never from a fresh corpus scan
@@ -442,7 +439,6 @@ def bigram_lm_scores(
         .unionByName(bi.select(F.col("w2").alias("w")))
         .agg(F.countDistinct("w").alias("__V"))
     )
-    doc_bi = ref_bi if reference is None else bigrams(df)
     scored = (
         doc_bi.join(bi.hint("shuffle_hash"), ["w1", "w2"], "left")
         .join(uni.hint("shuffle_hash"), "w1", "left")
@@ -580,7 +576,6 @@ def c4_rules(
     id_col: str = "doc_id",
     min_words_per_line: int = 3,
     min_sentences: int = 5,
-    passthrough: bool = False,
 ) -> DataFrame:
     """The C4 cleaning rules (Raffel et al. 2020 §2.2 — the filter that
     built the corpus T5 trained on): line-level REWRITING plus page-level
@@ -599,11 +594,7 @@ def c4_rules(
     keep)``; ``clean_text`` is the kept lines rejoined with newlines (the
     rewritten page a downstream tokenizer would consume), whether or not
     the page survives — like every scorer here, a projection, not a
-    silent filter. Null docs keep a zero row. ``passthrough=True``
-    retains every input column alongside the rule columns (for pipeline
-    composition — `prepare_training_corpus(c4_clean=True)`); the caller
-    owns avoiding collisions with the five output columns AND the
-    ``__bad`` intermediate (`prepare_training_corpus` raises on all six).
+    silent filter. Null docs keep a zero row.
 
     One codegen projection per row (array lambdas over the line split —
     the lambda operates on the BOUND line element, so there is no
@@ -629,9 +620,8 @@ def c4_rules(
         | F.col(text_col).contains("{"),
         F.lit(True),
     )
-    head = [F.col(c) for c in df.columns] if passthrough else [F.col(id_col)]
     m = df.select(
-        *head,
+        F.col(id_col),
         clean.alias("clean_text"),
         F.coalesce(F.size(lines), F.lit(0)).cast("bigint").alias("n_lines"),
         F.coalesce(F.size(kept), F.lit(0)).cast("bigint").alias("n_lines_kept"),
@@ -640,14 +630,12 @@ def c4_rules(
         ).cast("bigint").alias("n_sentences"),
         page_bad.alias("__bad"),
     )
-    out_cols = (df.columns if passthrough else [id_col]) + [
+    return m.select(
+        id_col,
         "clean_text",
         "n_lines",
         "n_lines_kept",
         "n_sentences",
-    ]
-    return m.select(
-        *out_cols,
         (~F.col("__bad") & (F.col("n_sentences") >= min_sentences)).alias("keep"),
     )
 

@@ -29,17 +29,13 @@ def add_lag_features(
     partition_by: list[str],
     order_by: list[str],
     lags: tuple[int, ...] = (1, 4),
-    fill: float | None = None,
     prefix: str | None = None,
 ) -> DataFrame:
     """W2/W3: lag features in one projection over one shared window."""
     w = series_window(partition_by, order_by)
     name = prefix or value_col
     cols = [F.lag(value_col, k).over(w).alias(f"{name}_lag{k}") for k in lags]
-    out = df.select("*", *cols)
-    if fill is not None:
-        out = out.fillna({f"{name}_lag{k}": fill for k in lags})
-    return out
+    return df.select("*", *cols)
 
 
 def add_rolling_mean(
@@ -48,22 +44,14 @@ def add_rolling_mean(
     partition_by: list[str],
     order_by: list[str],
     n_rows: int = 4,
-    include_current: bool = False,
-    fill: float | None = None,
     out_col: str | None = None,
 ) -> DataFrame:
-    """W4: trailing-N-ROWS mean. ``include_current=False`` reproduces the
-    reference's ``rowsBetween(-4, -1)`` frame (current row excluded); ROWS
-    (not RANGE) semantics — gaps in the time column still count N physical
-    rows."""
-    upper = 0 if include_current else -1
-    lower = -n_rows if include_current else -n_rows
-    w = series_window(partition_by, order_by).rowsBetween(lower, upper)
+    """W4: trailing-N-ROWS mean over the reference's ``rowsBetween(-4, -1)``
+    frame (current row excluded); ROWS (not RANGE) semantics — gaps in the
+    time column still count N physical rows."""
+    w = series_window(partition_by, order_by).rowsBetween(-n_rows, -1)
     name = out_col or f"{value_col}_roll{n_rows}"
-    out = df.select("*", F.avg(value_col).over(w).alias(name))
-    if fill is not None:
-        out = out.fillna({name: fill})
-    return out
+    return df.select("*", F.avg(value_col).over(w).alias(name))
 
 
 def top_k_per_group(

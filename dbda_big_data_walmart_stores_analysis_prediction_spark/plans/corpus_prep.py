@@ -30,8 +30,6 @@ def prepare_training_corpus(
     keep_langs: tuple[str, ...] = ("en",),
     near_dup_threshold: float = 0.5,
     max_doc_freq: int | None = 10_000,
-    quality_scorer=None,
-    c4_clean: bool = False,
 ) -> DataFrame:
     """Filter + dedup a raw document table into a training-ready corpus.
 
@@ -48,25 +46,9 @@ def prepare_training_corpus(
     shingle's worst-case fan-out at 10⁸ comparable-key rows (a few tasks'
     work) while touching only shingles that appear in >10k documents —
     pure boilerplate by any definition, whose Jaccard contribution is
-    noise. Pass ``None`` for exact full-space semantics on curated/small
-    corpora (the q56 oracle-checked query does, to stay SQL-replicable).
-
-    ``quality_scorer``: an optional trained model from
-    `plans.quality_model.train_quality_scorer`. When given, the quality
-    gate filters on the model's calibrated ``quality_prob`` (≥
-    ``min_quality``) instead of the heuristic ``quality_score``, and the
-    survivors carry ``quality_prob`` too. The transform is an assembler
-    projection + 6-weight dot product over the feature columns the
-    pipeline computes anyway — no extra scan, shuffle, or Python.
-
-    ``c4_clean=True`` prepends the C4 rule battery (`operators.text.
-    c4_rules`) as stage zero: pages failing the page gates are dropped,
-    surviving pages have their text REWRITTEN to the kept lines before
-    scoring/language-ID/dedup see it — the web-crawl shape where
-    boilerplate lines would otherwise poison the quality score and the
-    shingle space. Off by default (the oracle-checked q56/q70 plans are
-    unchanged); zero extra shuffle when on (the rules are a projection
-    fused into the scan).
+    noise. The oracle-checked q56/q70 queries keep the default cap: it
+    cannot bind on the 500- and 5,000-document fixtures, so their SQL
+    oracles need no cap. Pass ``None`` for exact full-space semantics.
 
     The composition-boundary materialization (see the inline persist note)
     is ``DataFrame.persist()``'s default level, ``MEMORY_AND_DISK_DESER``:
@@ -98,40 +80,10 @@ def prepare_training_corpus(
     # count job per run (measured r16 at sf0.1: q70 scored persist+count
     # was 1.55 s against 0.88 s for the same lineage through noop; q56
     # 5.6 → 4.3 s, q70 5.5 → 4.2 s in-session end to end).
-    if c4_clean:
-        from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.text import (
-            c4_rules,
-        )
-
-        reserved = {
-            "clean_text", "n_lines", "n_lines_kept", "n_sentences",
-            "keep", "__bad",
-        }
-        clash = sorted(reserved & set(docs.columns))
-        if clash:
-            raise ValueError(
-                f"c4_clean=True reserves columns {clash} (c4_rules "
-                "passthrough output); rename or drop them on the input "
-                "frame first"
-            )
-        docs = (
-            c4_rules(docs, text_col, id_col, passthrough=True)
-            .where(F.col("keep"))
-            .drop(text_col, "n_lines", "n_lines_kept", "n_sentences", "keep")
-            .withColumnRenamed("clean_text", text_col)
-        )
     scored = language_id(add_text_features(docs, text_col), text_col)
-    if quality_scorer is not None:
-        from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.quality_model import (
-            attach_quality_prob,
-        )
-
-        scored = attach_quality_prob(quality_scorer, scored)
-        quality_gate = F.col("quality_prob") >= min_quality
-    else:
-        quality_gate = F.col("quality_score") >= min_quality
     filtered = scored.where(
-        quality_gate & (F.col("lang_pred").isin(*keep_langs))
+        (F.col("quality_score") >= min_quality)
+        & (F.col("lang_pred").isin(*keep_langs))
     )
     exact = dd.dedup_exact(filtered, id_col, text_col).persist()
     exact.count()

@@ -49,11 +49,10 @@ def incremental_encode(
     model: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    counts_only: bool = True,
 ) -> DataFrame:
-    """Encode the new snapshot, reusing ``prev_encoded`` for every doc
-    `snapshot_diff` marks unchanged; see the module docstring for the
-    contract and the scale argument.
+    """Encode the new snapshot (token counts only), reusing
+    ``prev_encoded`` for every doc `snapshot_diff` marks unchanged; see
+    the module docstring for the contract and the scale argument.
 
     Plan shape: the diff's two fingerprint exchanges + its full-outer
     join, the ids-only anti-join (the prev-gap completeness check), two
@@ -77,16 +76,13 @@ def incremental_encode(
         .unionByName(gap_ids)
     )
     fresh_src = new_docs.join(fresh_ids, id_col, "left_semi")
-    fresh = encode_with_artifact(
-        fresh_src, model, text_col, id_col, counts_only=counts_only
-    )
+    fresh = encode_with_artifact(fresh_src, model, text_col, id_col, counts_only=True)
     if set(prev_encoded.columns) != set(fresh.columns):
         raise ValueError(
             "incremental_encode: prev_encoded columns "
             f"{sorted(prev_encoded.columns)} do not match this artifact's "
             f"encode output {sorted(fresh.columns)} — pass the previous "
-            "run's output for the SAME tokenizer family and counts_only "
-            "setting"
+            "run's counts-only output for the SAME tokenizer family"
         )
     carried = prev_encoded.join(
         unchanged_ids, id_col, "left_semi"

@@ -824,10 +824,9 @@ def q31_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs on the sign-LSH bucketed SCALE path
     (pair fan-out = per-bucket, not O(n²)); the oracle reproduces the
     md5-derived hyperplanes and bucketing exactly, so even the approximate
-    path is value-checked. Exact mode (``exact=True``) exists for
-    verification and stays O(n²) by design."""
+    path is value-checked."""
     emb = _t(spark, sf_dir, "embeddings")
-    return sim.embedding_near_dup_pairs(emb, threshold=0.25, exact=False)
+    return sim.embedding_near_dup_pairs(emb, threshold=0.25)
 
 
 @_register("q32_knn_lsh")  # approximate: rows-only check, no oracle
@@ -1440,7 +1439,7 @@ def q72_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding-cosine pairs, not just text shingles — the same
     `dedup_near` collapse accepts pairs from any generator."""
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = sim.embedding_near_dup_pairs(emb, threshold=0.25, exact=False)
+    pairs = sim.embedding_near_dup_pairs(emb, threshold=0.25)
     return dd.dedup_near(emb.select("vec_id"), pairs, "vec_id", "id_a", "id_b")
 
 
@@ -1703,7 +1702,7 @@ def q76_quality_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, quality_score, quality_prob, keep_pred). Rows-only by nature
     (SURVEY §5: ML internals — coefficients are solver output, not
     SQL-expressible); the local suite pins behavior (separation between
-    the weak classes, corpus-prep pluggability)."""
+    the weak classes)."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.text import (
         add_text_features,
     )
@@ -7505,9 +7504,7 @@ def q170_jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = dd.dedup_exact(docs, "doc_id", "text").localCheckpoint(
         eager=False
     )
-    return dd.jaccard_pairs_prefix(
-        surv, "doc_id", "text", threshold=_Q170_T, k_shingle=3
-    )
+    return dd.jaccard_pairs_prefix(surv, "doc_id", "text", threshold=_Q170_T)
 
 
 # q171: per-user robust outlier fences at HIGH cardinality —

@@ -3,8 +3,7 @@ feature vector, closing the loop between the MLlib surface
 (plans/ml_pipeline.py — the reference's StringIndexer→Assembler→model
 shape, cf. reference Scripts/model.py) and the LLM-pipeline operators:
 the heuristic `quality_score` (operators/text.py) becomes the WEAK LABEL
-for a calibrated model, and the model becomes a pluggable corpus-prep
-filter (`prepare_training_corpus(quality_scorer=...)`).
+for a calibrated model (q76's `quality_prob`).
 
 Why this shape at 100 TB: training reads a bounded SAMPLE (a model with 6
 features needs thousands of rows, not the corpus), while SCORING is one
@@ -13,11 +12,8 @@ product, whole-stage-codegen'd by MLlib's transform, no shuffle, no
 Python. The expensive part of scoring is `add_text_features`' staged
 regex projections, which the heuristic filter pays anyway.
 
-With gold labels (human-rated or distilled judgments in ``label_col``)
-this is the standard quality-classifier stage of a web-corpus pipeline
-(GPT-3's LR-against-curated-reference rule); without them it distills
-the heuristic into a calibrated probability — useful for threshold
-transfer and as the trainable slot tests exercise end-to-end.
+It distills the heuristic into a calibrated probability — useful for
+threshold transfer and as the trainable slot tests exercise end-to-end.
 """
 
 from __future__ import annotations
@@ -45,7 +41,6 @@ _ML_COLS = ("__q_features", "rawPrediction", "probability", "prediction")
 def train_quality_scorer(
     docs: DataFrame,
     text_col: str = "text",
-    label_col: str | None = None,
     weak_label_threshold: float = 0.5,
     max_iter: int = 50,
     reg_param: float = 0.01,
@@ -53,9 +48,8 @@ def train_quality_scorer(
 ):
     """Fit assembler→LogisticRegression on the text-feature vector.
 
-    ``label_col``: binary gold labels (1.0 = keep). When None, weak
-    labels are distilled from the heuristic: ``quality_score >=
-    weak_label_threshold``. Train on a bounded sample at scale
+    Labels are weak labels distilled from the heuristic: ``quality_score
+    >= weak_label_threshold``. Train on a bounded sample at scale
     (``docs.sample(...)``) — the model is 7 doubles; the corpus-sized
     work belongs to transform, not fit.
 
@@ -84,18 +78,16 @@ def train_quality_scorer(
         )
     else:
         feats = feats.where(F.col(text_col).isNotNull())
-    if label_col is None:
-        label_col = "__weak_label"
-        feats = feats.withColumn(
-            label_col,
-            (F.col("quality_score") >= F.lit(weak_label_threshold)).cast("double"),
-        )
+    feats = feats.withColumn(
+        "__weak_label",
+        (F.col("quality_score") >= F.lit(weak_label_threshold)).cast("double"),
+    )
     assembler = VectorAssembler(
         inputCols=QUALITY_FEATURES, outputCol="__q_features", handleInvalid="keep"
     )
     lr = LogisticRegression(
         featuresCol="__q_features",
-        labelCol=label_col,
+        labelCol="__weak_label",
         maxIter=max_iter,
         regParam=reg_param,
         # the features span 4 orders of magnitude (n_tokens vs ratios);
@@ -107,8 +99,8 @@ def train_quality_scorer(
 
 def attach_quality_prob(model, scored_feats: DataFrame) -> DataFrame:
     """Attach ``quality_prob`` (P(keep), rounded 6dp) to a frame that
-    ALREADY carries the `add_text_features` columns (corpus-prep reuses
-    its scored frame rather than re-deriving the regex projections). The
+    ALREADY carries the `add_text_features` columns (callers reuse their
+    scored frame rather than re-deriving the regex projections). The
     ML vector columns never leave this function (vector types don't
     serialize to parquet sinks or oracle comparisons)."""
     from pyspark.ml.functions import vector_to_array

@@ -113,9 +113,7 @@ def add_features(df: DataFrame) -> DataFrame:
     out = add_date_parts(df, "Date")
     if LABEL in df.columns:
         out = out.na.drop(subset=[LABEL])
-        out = add_lag_features(
-            out, LABEL, ["Store", "Dept"], ["Date"], lags=(1, 4), fill=None
-        )
+        out = add_lag_features(out, LABEL, ["Store", "Dept"], ["Date"], lags=(1, 4))
         out = add_rolling_mean(
             out, LABEL, ["Store", "Dept"], ["Date"], n_rows=4, out_col=f"{LABEL}_roll4"
         )

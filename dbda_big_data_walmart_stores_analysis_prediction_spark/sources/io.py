@@ -19,12 +19,11 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    header: bool = True,
     null_value: str | None = "NA",
 ) -> DataFrame:
-    """CSV scan with explicit schema (S1). ``null_value`` maps the sentinel
-    string straight to typed NULLs at scan time."""
-    reader = spark.read.schema(schema).option("header", header)
+    """CSV scan (with a header row) and explicit schema (S1). ``null_value``
+    maps the sentinel string straight to typed NULLs at scan time."""
+    reader = spark.read.schema(schema).option("header", True)
     if null_value is not None:
         reader = reader.option("nullValue", null_value)
     return reader.csv(path)
@@ -41,17 +40,13 @@ def write_parquet(
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
 ) -> None:
     """Parquet sink (S3/S4) at natural parallelism.
 
     ``partition_by`` gives directory-level partition pruning for downstream
-    readers (e.g. ``Year`` for the Walmart pipeline). ``max_records_per_file``
-    bounds file sizes without a repartition shuffle.
+    readers (e.g. ``Year`` for the Walmart pipeline).
     """
     writer = df.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -7,7 +7,18 @@ Usage:
     python scripts/ab_medians.py q60_incremental_dedup q65_contamination_report
     python scripts/ab_medians.py --sessions 3 --reps 5 q87_pretrain_capstone
     python scripts/ab_medians.py --multifile 8 q15_describe_lineitem
-    python scripts/ab_medians.py one <name> <reps>        (internal)
+    python scripts/ab_medians.py --parent /path/to/parent-checkout q171_mad_highcard
+    python scripts/ab_medians.py one <name> <reps> <checkout>   (internal)
+
+``--parent PATH`` compares two checkouts: PATH (the parent commit, e.g.
+made with ``git archive``) against this script's own checkout (the
+change). Every session runs each query once per side, each side in its
+own subprocess importing its own checkout's code, and sessions alternate
+which side runs first, so machine drift lands on both sides instead of
+reading as a win for whichever ran last (two runs minutes apart read
+q181 as 2.45 -> 4.74 s on unchanged code). It prints per-side
+``spark_med``, the per-session ``[parent, change]`` median pairs and
+how many sessions the change won.
 
 ``--multifile N`` re-writes every sf table as N parquet files under
 ``.bench_scale/<sf>_Nf/`` (built once, reused) and runs BOTH sides
@@ -82,7 +93,8 @@ def ensure_multifile(n_files: int) -> str:
     return dest
 
 
-def one(name: str, reps: int) -> None:
+def one(name: str, reps: int, checkout: str) -> None:
+    sys.path.insert(0, checkout)
     import __spark_entry__ as entry
 
     from dbda_big_data_walmart_stores_analysis_prediction_spark.session import get_spark
@@ -123,13 +135,40 @@ def oracle_times(name: str, reps: int) -> list[float]:
     return times
 
 
+def schedule(
+    names: list[str], sessions: int, sides: list[str]
+) -> list[tuple[int, str, str]]:
+    """``(session, query, side)`` in run order. Time-major round-robin (the
+    round-8 interleaving protocol): session k of EVERY query runs before
+    session k+1 of any, so drift lands on all queries equally. Within a
+    session each query runs once per side, and odd sessions reverse the
+    side order so neither side always runs first."""
+    return [
+        (k, name, side)
+        for k in range(sessions)
+        for name in names
+        for side in (sides if k % 2 == 0 else sides[::-1])
+    ]
+
+
+def _summary(per_session_medians: list[float], all_times: list[float]) -> dict:
+    return {
+        "spark_med": round(statistics.median(per_session_medians), 3),
+        "spark_session_medians": [round(t, 3) for t in per_session_medians],
+        "spark_min": round(min(all_times), 3),
+        "spark_max": round(max(all_times), 3),
+    }
+
+
 def main() -> None:
     args = sys.argv[1:]
     if args and args[0] == "one":
-        one(args[1], int(args[2]))
+        one(args[1], int(args[2]), args[3])
         return
     sessions = 3
     reps = 5
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    checkouts = {"change": repo}
     if "--sessions" in args:
         i = args.index("--sessions")
         sessions = int(args[i + 1])
@@ -137,6 +176,10 @@ def main() -> None:
     if "--reps" in args:
         i = args.index("--reps")
         reps = int(args[i + 1])
+        del args[i : i + 2]
+    if "--parent" in args:
+        i = args.index("--parent")
+        checkouts = {"parent": os.path.abspath(args[i + 1]), "change": repo}
         del args[i : i + 2]
     if "--multifile" in args:
         i = args.index("--multifile")
@@ -146,43 +189,34 @@ def main() -> None:
         SF_DIR = ensure_multifile(n_files)
         # Subprocess sessions (and their oracle views) follow via env.
         os.environ["SPARK_GRAFT_SF_DIR"] = SF_DIR
-    # Time-major round-robin across the named queries (the round-8
-    # interleaving protocol): session k of EVERY query runs before session
-    # k+1 of any, so machine drift within the run lands on all queries
-    # equally instead of reading as a fake win for whichever ran last.
-    per_query: dict[str, tuple[list[float], list[float]]] = {
-        name: ([], []) for name in args
+    # (query, side) -> (per-session medians, every rep's time)
+    runs: dict[tuple[str, str], tuple[list[float], list[float]]] = {
+        (name, side): ([], []) for name in args for side in checkouts
     }
-    for _ in range(sessions):
-        for name in args:
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "one", name, str(reps)],
-                capture_output=True,
-                text=True,
-                check=True,
-            )
-            times = json.loads(out.stdout.strip().splitlines()[-1])
-            per_query[name][0].append(statistics.median(times))
-            per_query[name][1].extend(times)
-    for name in args:
-        per_session_medians, all_times = per_query[name]
-        od = oracle_times(name, reps)
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "spark_med": round(statistics.median(per_session_medians), 3),
-                    "spark_session_medians": [
-                        round(t, 3) for t in per_session_medians
-                    ],
-                    "spark_min": round(min(all_times), 3),
-                    "spark_max": round(max(all_times), 3),
-                    "oracle_med": round(statistics.median(od), 3) if od else None,
-                    "sf_dir": SF_DIR,
-                }
-            ),
-            flush=True,
+    for _, name, side in schedule(args, sessions, list(checkouts)):
+        out = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "one", name, str(reps), checkouts[side]],
+            cwd=checkouts[side],
+            capture_output=True,
+            text=True,
+            check=True,
         )
+        times = json.loads(out.stdout.strip().splitlines()[-1])
+        runs[name, side][0].append(statistics.median(times))
+        runs[name, side][1].extend(times)
+    for name in args:
+        od = oracle_times(name, reps)
+        record = {"query": name}
+        if len(checkouts) == 1:
+            record |= _summary(*runs[name, "change"])
+        else:
+            parent, change = runs[name, "parent"][0], runs[name, "change"][0]
+            record |= {side: _summary(*runs[name, side]) for side in checkouts}
+            record["pairs"] = [[round(p, 3), round(c, 3)] for p, c in zip(parent, change)]
+            record["change_wins"] = sum(c < p for p, c in zip(parent, change))
+        record["oracle_med"] = round(statistics.median(od), 3) if od else None
+        record["sf_dir"] = SF_DIR
+        print(json.dumps(record), flush=True)
 
 
 if __name__ == "__main__":

@@ -19,7 +19,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.clustering import (
+    DOT_DP,
     KMeansModel,
+    _assigned,
+    _blockwise_pairs,
     assign_clusters,
     cluster_embeddings,
     fit_kmeans,
@@ -324,16 +327,51 @@ def test_null_id_rows_are_dropped(spark):
     assert [r["vec_id"] for r in sd.collect()] == [1]
 
 
-def test_semdedup_blockwise_equals_join_mode(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    kw = dict(n_clusters=4, iters=1, threshold=0.4, salt=SALT)
-    blockwise = sorted(map(tuple, semdedup(emb, **kw).collect()))
-    join = sorted(
-        map(tuple, semdedup(emb, pair_mode="join", **kw).collect())
+def _pair_dot():
+    """Arrow-batched row-wise dot of two array<double> columns: the
+    self-join reference's pair scorer."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.pandas.functions import pandas_udf
+
+    def f(a, b):
+        if len(a) == 0:
+            return pd.Series([], dtype="float64")
+        ma = np.asarray(a.tolist(), dtype=np.float64)
+        mb = np.asarray(b.tolist(), dtype=np.float64)
+        return pd.Series((ma * mb).sum(axis=1))
+
+    return pandas_udf(f, "double")
+
+
+def _join_pairs(feats, threshold):
+    """Within-cluster pairs ≥ threshold by a cluster-keyed self-join that
+    ships both vectors per candidate pair: the reference form."""
+    a = feats.select(
+        F.col("id").alias("id_a"), F.col("cluster"), F.col("nv").alias("nv_a")
     )
+    b = feats.select(
+        F.col("id").alias("id_b"), F.col("cluster"), F.col("nv").alias("nv_b")
+    )
+    dot = _pair_dot()
+    return (
+        a.join(b, "cluster")
+        .where(F.col("id_a") < F.col("id_b"))
+        .where(F.round(dot(F.col("nv_a"), F.col("nv_b")), DOT_DP) >= threshold)
+        .select("id_a", "id_b")
+    )
+
+
+def test_semdedup_blockwise_equals_join_mode(spark, sf_dir):
+    """`semdedup`'s per-cluster matmul pairs equal the self-join
+    reference's over the same assigned features."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    model = fit_kmeans(emb, n_clusters=4, iters=1, salt=SALT)
+    feats = _assigned(emb, "vec_id", "embedding", model.centroids, with_nv=True)
+    blockwise = sorted(map(tuple, _blockwise_pairs(feats, 0.4).collect()))
+    join = sorted(map(tuple, _join_pairs(feats, 0.4).collect()))
+    assert blockwise
     assert blockwise == join
-    with pytest.raises(ValueError, match="pair_mode"):
-        semdedup(emb, pair_mode="matmul", **kw)
 
 
 def test_fit_kmeans_contract_errors(spark):

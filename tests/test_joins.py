@@ -1,6 +1,6 @@
 """Unit semantics for operators/joins.py::asof_join (q45's oracle parity
 covers the bulk path; these pin the edge semantics DuckDB can't express as
-cleanly: exact-timestamp ties, tolerance horizon, and output-name clashes)."""
+cleanly: exact-timestamp ties and output-name clashes)."""
 
 from __future__ import annotations
 
@@ -42,17 +42,6 @@ def test_asof_backward_inclusive(spark, frames):
     assert out.count() == left.count()
 
 
-def test_asof_tolerance(spark, frames):
-    left, right = frames
-    out = asof_join(
-        left, right, on="k", left_ts="lts", right_ts="rts",
-        right_cols=["rv"], tolerance_seconds=300,
-    )
-    got = {r["tag"]: r["rv"] for r in out.collect()}
-    # 12:10 is 600s after 12:00 -> staler than the 300s horizon -> nulled.
-    assert got == {"a": 10.0, "b": None, "c": 20.0, "d": None}
-
-
 def test_salted_join_matches_plain(spark):
     from pyspark.sql import functions as F
 
@@ -81,22 +70,19 @@ def test_range_join_binned_numeric_matches_naive(spark):
         [(i, float(i * 37), float(i * 37 + 25)) for i in range(30)],
         "iv_id int, lo double, hi double",
     )
-    for inclusive in (True, False):
-        got = sorted(
-            (r["p"], r["iv_id"])
-            for r in range_join_binned(
-                points, intervals, "p", "lo", "hi",
-                bin_seconds=10, inclusive_hi=inclusive,
-            ).collect()
-        )
-        op = "<=" if inclusive else "<"
-        want = sorted(
-            (r["p"], r["iv_id"])
-            for r in points.join(
-                intervals, (F.col("p") >= F.col("lo")) & F.expr(f"p {op} hi")
-            ).collect()
-        )
-        assert got == want, f"binned range join diverged (inclusive={inclusive})"
+    got = sorted(
+        (r["p"], r["iv_id"])
+        for r in range_join_binned(
+            points, intervals, "p", "lo", "hi", bin_seconds=10
+        ).collect()
+    )
+    want = sorted(
+        (r["p"], r["iv_id"])
+        for r in points.join(
+            intervals, (F.col("p") >= F.col("lo")) & (F.col("p") <= F.col("hi"))
+        ).collect()
+    )
+    assert got == want
 
 
 def test_asof_name_clash_rejected(spark, frames):

@@ -272,10 +272,9 @@ def test_round6_review_regressions(spark):
     """Pins the round-6 code-review fixes: (a) q75 rejects k > min_tokens
     instead of silently missing short spans; (b) an already-star graph
     converges in ONE contraction round (the un-seeded fixpoint check used
-    to need a confirming round and raised falsely at max_iter=1); (c) a
-    string-form corpus_shingles table fails fast with an actionable
-    TypeError instead of a mid-job cast error; (d) training the quality
-    scorer on a corpus containing null-text docs does not crash."""
+    to need a confirming round and raised falsely at max_iter=1); (c)
+    training the quality scorer on a corpus containing null-text docs
+    does not crash."""
     import pytest
 
     from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.quality_model import (
@@ -297,13 +296,6 @@ def test_round6_review_regressions(spark):
     }
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1}
 
-    with pytest.raises(TypeError, match="hashed"):
-        dd.dedup_incremental(
-            docs,
-            docs,
-            corpus_shingles=dd.shingle_table(docs, "doc_id", hashed=False),
-        ).collect()
-
     model = train_quality_scorer(_docs(spark).select("doc_id", "text").unionAll(docs.where("doc_id = 2")), weak_label_threshold=0.9)
     assert model is not None
 
@@ -311,11 +303,7 @@ def test_round6_review_regressions(spark):
 def test_quality_model_trains_scores_and_plugs_into_corpus_prep(spark):
     """The trained scorer must (a) separate the weak classes it distilled
     from (mean prob of heuristic-good docs > heuristic-bad docs), (b)
-    score every doc in [0,1], (c) slot into prepare_training_corpus as
-    the quality gate with survivors carrying quality_prob."""
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.corpus_prep import (
-        prepare_training_corpus,
-    )
+    score every doc in [0,1]."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.text import (
         add_text_features,
     )
@@ -335,13 +323,6 @@ def test_quality_model_trains_scores_and_plugs_into_corpus_prep(spark):
     assert 0.0 <= stats[0] <= stats[1] <= 1.0
     assert stats[2] > stats[3], "no separation between weak classes"
     assert scored.count() == docs.count()
-
-    kept = prepare_training_corpus(
-        docs, min_quality=0.5, quality_scorer=model, max_doc_freq=None
-    )
-    rows = kept.collect()
-    assert 0 < len(rows) < docs.count()
-    assert all(r["quality_prob"] >= 0.5 for r in rows)
 
 
 def test_exact_substring_spans_hand_computed(spark):
@@ -494,21 +475,6 @@ def test_incremental_dedup_id_collision_across_sides(spark):
     )
     out = dd.dedup_incremental(corpus, new, "doc_id", "text", threshold=0.6)
     assert {r["doc_id"] for r in out.collect()} == {1}
-
-
-def test_incremental_dedup_precomputed_corpus_shingles(spark):
-    docs = _docs(spark).select("doc_id", "text")
-    corpus = docs.where(F.col("doc_id") % 5 != 0)
-    new = docs.where(F.col("doc_id") % 5 == 0)
-    base = {r["doc_id"] for r in dd.dedup_incremental(corpus, new).collect()}
-    # the documented contract: precomputed corpus shingles must be the
-    # HASHED form so they join against the batch side's md5-int64 keys
-    pre = dd.shingle_table(corpus, "doc_id", "text", 3, hashed=True)
-    via_pre = {
-        r["doc_id"]
-        for r in dd.dedup_incremental(corpus, new, corpus_shingles=pre).collect()
-    }
-    assert base == via_pre and len(base) > 0
 
 
 def test_stratified_sample_exact_quotas_and_determinism(spark):
@@ -1044,39 +1010,6 @@ def test_c4_rules_line_and_page_semantics(spark):
     assert not out[8]["keep"]
 
 
-def test_corpus_prep_c4_clean_stage(spark):
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.corpus_prep import (
-        prepare_training_corpus,
-    )
-
-    five = (
-        "the first check passed here. the second check passed again. "
-        "the third check passed at last. the fourth check passed as well. "
-        "the fifth check passed too."
-    )
-    body = "the quick brown fox jumps over the lazy dog again and again. " * 5
-    df = spark.createDataFrame(
-        [
-            (1, f"{body}\n{five}"),
-            (2, f"{body}\nlorem ipsum"),              # page-killed by C4
-            (3, f"{body}\nthis trailing line has no terminal punctuation"),
-        ],
-        "doc_id long, text string",
-    )
-    out = prepare_training_corpus(
-        df, min_quality=0.0, keep_langs=("en",), c4_clean=True
-    )
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert 2 not in rows                      # killed page never scored
-    assert set(rows) == {1, 3}
-    # the rewritten text dropped the unpunctuated trailing line
-    assert "no terminal punctuation" not in rows[3]["text"]
-    assert rows[1]["text"].endswith("passed too.")
-    # default path unchanged: without the flag, doc 2 survives scoring
-    base = prepare_training_corpus(df, min_quality=0.0, keep_langs=("en",))
-    assert {r["doc_id"] for r in base.collect()} == {1, 2, 3}
-
-
 def test_bpe_train_matches_hand_computed_merges(spark):
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.bpe import (
         train_bpe,
@@ -1124,21 +1057,6 @@ def test_bpe_encode_roundtrip_and_compression(spark):
     assert out[1]["n_subword_tokens"] < len("lowlowlow") + 3
     # null text -> empty token row, not a dropped doc
     assert out[4]["bpe_tokens"] == [] and out[4]["n_subword_tokens"] == 0
-
-
-def test_corpus_prep_c4_clean_rejects_reserved_columns(spark):
-    import pytest
-
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.corpus_prep import (
-        prepare_training_corpus,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "the cat sat on the mat and slept.", True)],
-        "doc_id long, text string, keep boolean",
-    )
-    with pytest.raises(ValueError, match="c4_clean=True reserves"):
-        prepare_training_corpus(df, c4_clean=True)
 
 
 def test_gopher_repetition_signals(spark):
@@ -4664,51 +4582,44 @@ def test_jaccard_prefix_pairs_python_twin(spark):
     )
 
     texts = {
-        1: "alpha beta gamma delta",
-        2: "alpha beta gamma delta",        # J(1,2)=1.0
-        3: "alpha beta gamma delta epsilon",  # J(1,3)=4/5=0.8 exactly
-        4: "alpha beta zeta eta",            # J(1,4)=2/6
+        1: "alpha beta gamma delta epsilon zeta",
+        2: "Alpha  beta gamma delta epsilon zeta",  # J(1,2)=1.0 after norm
+        3: "alpha beta gamma delta epsilon zeta eta",  # J(1,3)=4/5 exactly
+        4: "alpha beta gamma theta iota kappa",  # J(1,4)=1/7
         5: "the the the common words only",
-        6: "common words only here",
+        6: "common words only here",  # J(5,6)=1/5
         7: "",
         8: None,
     }
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
 
-    def toks(t):
-        import re
+    def shingles(t):
+        # 3-word shingles of the normalized words; a doc of <= 3 words is
+        # one shingle
+        w = t.lower().split()
+        return {" ".join(w[i : i + 3]) for i in range(max(len(w) - 3, 0) + 1)}
 
-        return set(x for x in re.split(r"[^a-z0-9]+", (t or "").lower()) if x)
-
-    for t in (0.8, 0.5):
+    for t in (0.8, 0.5, 0.2):
         want = []
         for a, b in itertools.combinations(sorted(texts), 2):
-            sa, sb = toks(texts[a]), toks(texts[b])
-            if not sa or not sb:
+            if texts[a] is None or texts[b] is None:
                 continue
+            sa, sb = shingles(texts[a]), shingles(texts[b])
             j = len(sa & sb) / len(sa | sb)
             if j >= t:
                 want.append((a, b, round(j, 6)))
         got = sorted(
-            tuple(r)
-            for r in jaccard_pairs_prefix(
-                df, threshold=t, k_shingle=None
-            ).collect()
+            tuple(r) for r in jaccard_pairs_prefix(df, threshold=t).collect()
         )
         assert got == sorted(want), (t, got, want)
         if t == 0.8:
             # J == threshold boundary: the pair at exactly 0.8 survives
             # (the prefix-length and length-filter slacks err inclusive)
             assert (1, 3, 0.8) in got, got
+        if t == 0.2:
+            assert (5, 6, 0.2) in got, got
     with pytest.raises(ValueError, match="threshold"):
         jaccard_pairs_prefix(df, threshold=0.0)
-    # shingle mode (the default): exact dups pair at J=1.0, and the
-    # count matches the brute-force shingle-set computation
-    got_sh = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in jaccard_pairs_prefix(df, threshold=0.5).collect()
-    }
-    assert got_sh[(1, 2)] == 1.0
 
 
 def test_q182_snapshot_bootstrap_amortized_to_warmup(spark):

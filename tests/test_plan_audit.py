@@ -276,8 +276,17 @@ def test_driver_rotation_crashed_latest_outranks_green_ties(monkeypatch):
             entry_mod._check_rotation(demoted, last, {victim})
 
 
-def test_q80_dsir_stats_broadcast_no_cartesian(spark):
-    # audit the UNCUT plan (checkpoint=False keeps one lazy tree): the
+def _uncut(monkeypatch):
+    """Make ``localCheckpoint`` return its input, so an operator's plan
+    stays one lazy tree an audit can read end to end. The classic
+    ``DataFrame`` overrides the base method, so that is the one patched."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", lambda self, *a, **kw: self)
+
+
+def test_q80_dsir_stats_broadcast_no_cartesian(spark, monkeypatch):
+    # audit the UNCUT plan (localCheckpoint patched out): the
     # bucket-count tables must broadcast to the scoring join (they are
     # <=n_buckets rows at ANY corpus size), the zero-gram restore must be
     # a union (never a corpus-to-corpus join), nothing cartesian, and the
@@ -288,6 +297,7 @@ def test_q80_dsir_stats_broadcast_no_cartesian(spark):
         dsir_log_weights,
     )
 
+    _uncut(monkeypatch)
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     out = dsir_log_weights(
         docs,
@@ -295,7 +305,6 @@ def test_q80_dsir_stats_broadcast_no_cartesian(spark):
         "doc_id",
         "text",
         n_buckets=512,
-        checkpoint=False,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") >= 2, plan
@@ -372,7 +381,7 @@ def test_q92_cms_lookup_broadcasts_and_never_smj(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_q96_theta_sketch_take_ordered_bounded_joins(spark):
+def test_q96_theta_sketch_take_ordered_bounded_joins(spark, monkeypatch):
     """The theta sketch's scale contract, in two parts. (1) The sketch
     stage (audited UN-checkpointed — the composed q96 plan materializes
     its lazy checkpoints on plan access, hiding the subtree): a side
@@ -388,9 +397,11 @@ def test_q96_theta_sketch_take_ordered_bounded_joins(spark):
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    with monkeypatch.context() as m:
+        _uncut(m)
+        sketch = kmv_mins(docs, "text", 128)
     sketch_plan = (
-        kmv_mins(docs, "text", 128, checkpoint=False)
-        ._jdf.queryExecution()
+        sketch._jdf.queryExecution()
         .executedPlan()
         .toString()
     )

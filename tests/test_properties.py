@@ -75,7 +75,9 @@ def test_lag_null_prefix_then_filled(spark, xs):
         expect4 = None if i < 4 else xs[i - 4]
         assert got[i]["v_lag1"] == expect1
         assert got[i]["v_lag4"] == expect4
-    filled = add_lag_features(df, "v", ["g"], ["t"], lags=(1,), fill=0.0)
+    filled = add_lag_features(df, "v", ["g"], ["t"], lags=(1,)).fillna(
+        {"v_lag1": 0.0}
+    )
     assert filled.where(F.col("v_lag1").isNull()).count() == 0
 
 
