@@ -22,6 +22,12 @@ Split of labor, sized for 100 TB:
   an Arrow-batched pandas UDF (the multimodal slow-path convention —
   per-word loops are not expressible as built-in array ops).
 
+This module also holds the tokenizer family's shared core: `word_counts`,
+the merge loop `_pair_merge_loop` (BPE and WordPiece differ only in the
+pick rule and the merged-symbol rule they pass in) and the encode stage
+`_encode_docs` (BPE, WordPiece and unigram differ only in the per-word
+segmenter and the output column names).
+
 Everything is deterministic: pair argmax ties break to the
 lexicographically smallest pair, so the merge table is a pure function
 of (corpus, n_merges) and tests can assert it exactly.
@@ -29,8 +35,9 @@ of (corpus, n_merges) and tests can assert it exactly.
 
 from __future__ import annotations
 
-from collections import Counter
-from collections.abc import Iterator
+import operator
+from collections import Counter, defaultdict
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -65,12 +72,16 @@ def word_counts(
     )
 
 
-def _merge_word(syms: tuple[str, ...], left: str, right: str) -> tuple[str, ...]:
+def _merge_word(
+    syms: tuple[str, ...], left: str, right: str, new: str
+) -> tuple[str, ...]:
+    """Rewrite every ``(left, right)`` occurrence in ``syms`` to ``new``,
+    scanning left to right (so ``a a a`` merges the first pair only)."""
     out: list[str] = []
     i = 0
     while i < len(syms):
         if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-            out.append(left + right)
+            out.append(new)
             i += 2
         else:
             out.append(syms[i])
@@ -95,8 +106,6 @@ def train_bpe(
     early when no pair reaches ``min_pair_count`` (merging singleton
     noise would just memorize the corpus tail).
     """
-    from collections import defaultdict
-
     spark = df.sparkSession
     # Eager column contract (the pack_sequences convention), checked BEFORE
     # the zero-merge short-circuit: a wrong text_col must fail here with
@@ -119,55 +128,82 @@ def train_bpe(
         return spark.createDataFrame([], schema)
     rows = word_counts(df, text_col, max_vocab_rows).collect()
     vocab: list[list] = [[tuple(r["word"]) + (END,), r["n"]] for r in rows]
-    merges = _pair_merge_loop(vocab, n_merges, min_pair_count)
-    return spark.createDataFrame(merges, schema)
+    merges = _pair_merge_loop(
+        vocab, n_merges, min_pair_count, _most_frequent_pair, operator.add
+    )
+    return spark.createDataFrame(
+        [(rank, *m) for rank, m in enumerate(merges)], schema
+    )
+
+
+def _most_frequent_pair(
+    pair_counts: Counter, sym_counts: Counter, min_pair_count: int
+) -> tuple[str, str] | None:
+    """BPE's pick rule: the highest pair count, ties to the smallest
+    pair; None once no pair reaches ``min_pair_count``."""
+    top = max(pair_counts.values(), default=None)
+    if top is None or top < min_pair_count:
+        return None
+    return min(p for p, c in pair_counts.items() if c == top)
 
 
 def _pair_merge_loop(
     vocab: list[list],
     n_merges: int,
     min_pair_count: int,
-    start_rank: int = 0,
-) -> list[tuple[int, str, str, str, int]]:
-    """The driver-side Sennrich merge loop over a bounded
-    ``[symbols, count]`` vocabulary (mutated in place), emitting ranks
-    from ``start_rank`` — shared by `train_bpe` (fresh vocab, rank 0)
-    and `extend_bpe` (base-merged vocab, ranks continue). Incremental
-    pair maintenance (the subword-nmt optimization): a merge only
-    changes the pair counts of words CONTAINING the merged pair, so
-    each round touches index[best] words, not the whole vocabulary — at
-    the 1M-word gate bound the naive full recount costs ~vocab*len work
-    per merge (measured 8.8 s for 40 merges even on a 2k-word vocab at
-    sf0.1; the argmax scan, not the rewrite, is then the bound)."""
-    from collections import defaultdict
+    pick: Callable[[Counter, Counter, int], tuple[str, str] | None],
+    merge_sym: Callable[[str, str], str],
+) -> list[tuple[str, str, str, int]]:
+    """The driver-side merge loop over a bounded ``[symbols, count]``
+    vocabulary (mutated in place), shared by `train_bpe`, `extend_bpe`
+    and `wordpiece.train_wordpiece`: each round ``pick`` chooses a pair
+    from the live pair and symbol counts (BPE: most frequent;
+    WordPiece: best likelihood score), ``merge_sym`` names the merged
+    symbol, and every word containing the pair is rewritten. Returns
+    ``(left, right, new_symbol, pair_count)`` per merge, in order.
 
+    Incremental maintenance (the subword-nmt optimization): a merge only
+    changes the counts of words CONTAINING the merged pair, so each
+    round touches index[best] words, not the whole vocabulary — at the
+    1M-word gate bound the naive full recount costs ~vocab*len work per
+    merge (measured 8.8 s for 40 merges even on a 2k-word vocab at
+    sf0.1; the argmax scan, not the rewrite, is then the bound)."""
+    sym_counts: Counter = Counter()
     pair_counts: Counter = Counter()
     index: defaultdict = defaultdict(set)
-    for i, (syms, c) in enumerate(vocab):
+
+    def tally(i: int, syms: tuple[str, ...], c: int) -> None:
+        """Add (``c > 0``) or remove (``c < 0``) word ``i``'s counts."""
+        for s in syms:
+            sym_counts[s] += c
+            if sym_counts[s] <= 0:
+                del sym_counts[s]
         for p in zip(syms, syms[1:]):
             pair_counts[p] += c
-            index[p].add(i)
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(start_rank, start_rank + n_merges):
-        if not pair_counts:
-            break
-        top = max(pair_counts.values())
-        if top < min_pair_count:
-            break
-        left, right = min(p for p, c in pair_counts.items() if c == top)
-        merges.append((rank, left, right, left + right, int(top)))
-        for i in list(index[(left, right)]):
-            syms, c = vocab[i]
-            for p in zip(syms, syms[1:]):
-                pair_counts[p] -= c
-                if pair_counts[p] <= 0:
-                    del pair_counts[p]
-                index[p].discard(i)
-            new = _merge_word(syms, left, right)
-            vocab[i][0] = new
-            for p in zip(new, new[1:]):
-                pair_counts[p] += c
+            if pair_counts[p] <= 0:
+                del pair_counts[p]
+            if c > 0:
                 index[p].add(i)
+            else:
+                index[p].discard(i)
+
+    merges: list[tuple[str, str, str, int]] = []
+    if n_merges <= 0:
+        return merges
+    for i, (syms, c) in enumerate(vocab):
+        tally(i, syms, c)
+    for _ in range(n_merges):
+        best = pick(pair_counts, sym_counts, min_pair_count)
+        if best is None:
+            break
+        left, right = best
+        new = merge_sym(left, right)
+        merges.append((left, right, new, int(pair_counts[best])))
+        for i in list(index[best]):
+            syms, c = vocab[i]
+            tally(i, syms, -c)
+            vocab[i][0] = _merge_word(syms, left, right, new)
+            tally(i, vocab[i][0], c)
     return merges
 
 
@@ -236,11 +272,15 @@ def extend_bpe(
     # state after its first len(base) rounds on this corpus
     for _, left, right, _, _ in base_rows:
         for entry in vocab:
-            entry[0] = _merge_word(entry[0], left, right)
+            entry[0] = _merge_word(entry[0], left, right, left + right)
     merges = _pair_merge_loop(
-        vocab, n_new_merges, min_pair_count, start_rank=len(base_rows)
+        vocab, n_new_merges, min_pair_count, _most_frequent_pair, operator.add
     )
-    return spark.createDataFrame(base_rows + merges, schema)
+    return spark.createDataFrame(
+        base_rows
+        + [(rank, *m) for rank, m in enumerate(merges, start=len(base_rows))],
+        schema,
+    )
 
 
 def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
@@ -292,16 +332,39 @@ def bpe_encode(
     ranks = {
         (r["left"], r["right"]): r["merge_rank"] for r in merges.collect()
     }
-    id_field = df.schema[id_col]
-    id_type = id_field.dataType.simpleString()
-    if counts_only:
-        out_schema = f"{id_col} {id_type}, n_subword_tokens bigint"
-    else:
-        out_schema = (
-            f"{id_col} {id_type}, "
-            "bpe_tokens array<string>, n_subword_tokens bigint"
-        )
+    return _encode_docs(
+        df,
+        text_col,
+        id_col,
+        lambda word: _encode_word(word, ranks),
+        "bpe_tokens",
+        "n_subword_tokens",
+        counts_only,
+    )
 
+
+def _encode_docs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    segment: Callable[[str], list[str]],
+    tokens_col: str,
+    count_col: str,
+    counts_only: bool,
+) -> DataFrame:
+    """The one encode stage of the tokenizer family: ``(id, tokens_col
+    array<string>, count_col)`` per document, each normalized word split
+    by ``segment`` (the family's per-word rule with its collected model
+    in the closure). Null or empty text encodes to no tokens. One
+    Arrow-batched ``mapInPandas`` pass: no shuffle, scan-parallel.
+
+    ``counts_only`` emits ``(id, count_col)`` and never builds the token
+    arrays: Spark cannot column-prune THROUGH a ``mapInPandas``, so the
+    full form would build and serialize every token string just to have
+    the count read off and the array dropped."""
+    id_type = df.schema[id_col].dataType.simpleString()
+    tokens = "" if counts_only else f"{tokens_col} array<string>, "
+    out_schema = f"{id_col} {id_type}, {tokens}{count_col} bigint"
     # Zipf-head memoization cap: per-task distinct words are bounded by the
     # split's contents, not the corpus, so an uncapped dict could reach
     # hundreds of MB in a Python worker on wide-vocabulary partitions; the
@@ -309,54 +372,33 @@ def bpe_encode(
     cache_max = 262_144
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if counts_only:
-            ncache: dict[str, int] = {}
-            for pdf in batches:
-                counts = []
-                for text in pdf["__norm"]:
-                    if text is None or text == "":
-                        counts.append(0)
-                        continue
-                    c = 0
+        # the memo holds token lists, or their lengths when counts_only;
+        # `doc += enc` then extends a list or adds an int alike
+        cache: dict = {}
+        for pdf in batches:
+            docs = []
+            for text in pdf["__norm"]:
+                doc = 0 if counts_only else []
+                if text:
                     for word in text.split(" "):
                         if not word:
                             continue
-                        n = ncache.get(word)
-                        if n is None:
-                            n = len(_encode_word(word, ranks))
-                            if len(ncache) < cache_max:
-                                ncache[word] = n
-                        c += n
-                    counts.append(c)
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col], "n_subword_tokens": counts}
-                )
-            return
-        cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            toks = []
-            for text in pdf["__norm"]:
-                if text is None or text == "":
-                    toks.append([])
-                    continue
-                doc: list[str] = []
-                for word in text.split(" "):
-                    if not word:
-                        continue
-                    enc = cache.get(word)
-                    if enc is None:
-                        enc = _encode_word(word, ranks)
-                        if len(cache) < cache_max:
-                            cache[word] = enc
-                    doc.extend(enc)
-                toks.append(doc)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "bpe_tokens": toks,
-                    "n_subword_tokens": [len(t) for t in toks],
-                }
-            )
+                        enc = cache.get(word)
+                        if enc is None:
+                            enc = segment(word)
+                            if counts_only:
+                                enc = len(enc)
+                            if len(cache) < cache_max:
+                                cache[word] = enc
+                        doc += enc
+                docs.append(doc)
+            out = {id_col: pdf[id_col]}
+            if counts_only:
+                out[count_col] = docs
+            else:
+                out[tokens_col] = docs
+                out[count_col] = [len(t) for t in docs]
+            yield pd.DataFrame(out)
 
     src = df.select(F.col(id_col), norm_text_col(text_col).alias("__norm"))
     return src.mapInPandas(encode, out_schema)

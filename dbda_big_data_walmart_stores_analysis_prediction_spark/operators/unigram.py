@@ -17,8 +17,8 @@ the second member of the tokenizer family, sharing BPE's split of labor
   table, not the raw corpus).
 * **Encoding is distributed again**: the learned ``(piece, logprob)``
   table is a tiny broadcast and `unigram_encode` applies per-word
-  Viterbi segmentation in an Arrow-batched ``mapInPandas`` (the
-  bpe_encode convention).
+  Viterbi segmentation on the family's one Arrow-batched encode stage
+  (`bpe._encode_docs`).
 
 Determinism: every tie in the DP breaks to the lexicographically
 smallest piece sequence, seed caps order by (count desc, piece), and
@@ -38,16 +38,12 @@ is demonstrating.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.text import (
-    norm_text_col,
-)
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.bpe import (
+    _encode_docs,
     word_counts,
 )
 
@@ -188,70 +184,20 @@ def unigram_encode(
 ) -> DataFrame:
     """Tokenize documents with a trained unigram vocab: ``(id, pieces
     array<string>, n_pieces)`` via per-word Viterbi under the broadcast
-    ``(piece, logprob)`` table — Arrow-batched ``mapInPandas``, zero
-    shuffle, scan-parallel (the bpe_encode shape). Unseen characters
-    pass through as whole-word OOV pieces, so output always reassembles
-    the normalized text. ``counts_only=True`` emits ``(id, n_pieces)``
-    without materializing or Arrow-shipping the piece arrays — the
-    packing-path option, for the same cannot-prune-through-mapInPandas
-    reason as `bpe_encode`."""
+    ``(piece, logprob)`` table — the family's one encode stage
+    (`bpe._encode_docs`: Arrow-batched, zero shuffle, scan-parallel).
+    Unseen characters pass through as whole-word OOV pieces, so output
+    always reassembles the normalized text. ``counts_only=True`` emits
+    ``(id, n_pieces)`` without materializing or Arrow-shipping the piece
+    arrays — the packing-path option."""
     logp = {r["piece"]: r["logprob"] for r in vocab.collect()}
     max_len = max((len(p) for p in logp), default=1)
-    id_field = df.schema[id_col]
-    id_type = id_field.dataType.simpleString()
-    if counts_only:
-        out_schema = f"{id_col} {id_type}, n_pieces bigint"
-    else:
-        out_schema = f"{id_col} {id_type}, pieces array<string>, n_pieces bigint"
-    cache_max = 262_144  # the bpe_encode Zipf-head memoization cap
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if counts_only:
-            ncache: dict[str, int] = {}
-            for pdf in batches:
-                counts = []
-                for text in pdf["__norm"]:
-                    if text is None or text == "":
-                        counts.append(0)
-                        continue
-                    c = 0
-                    for word in text.split(" "):
-                        if not word:
-                            continue
-                        n = ncache.get(word)
-                        if n is None:
-                            n = len(_viterbi(word, logp, max_len))
-                            if len(ncache) < cache_max:
-                                ncache[word] = n
-                        c += n
-                    counts.append(c)
-                yield pd.DataFrame({id_col: pdf[id_col], "n_pieces": counts})
-            return
-        cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            out = []
-            for text in pdf["__norm"]:
-                if text is None or text == "":
-                    out.append([])
-                    continue
-                doc: list[str] = []
-                for word in text.split(" "):
-                    if not word:
-                        continue
-                    enc = cache.get(word)
-                    if enc is None:
-                        enc = _viterbi(word, logp, max_len)
-                        if len(cache) < cache_max:
-                            cache[word] = enc
-                    doc.extend(enc)
-                out.append(doc)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "pieces": out,
-                    "n_pieces": [len(t) for t in out],
-                }
-            )
-
-    src = df.select(F.col(id_col), norm_text_col(text_col).alias("__norm"))
-    return src.mapInPandas(encode, out_schema)
+    return _encode_docs(
+        df,
+        text_col,
+        id_col,
+        lambda word: _viterbi(word, logp, max_len),
+        "pieces",
+        "n_pieces",
+        counts_only,
+    )

@@ -16,8 +16,8 @@ sharing the split of labor BPE (operators/bpe.py) and unigram
 * **Encoding is distributed again**: the learned piece vocabulary is a
   tiny broadcast and `wordpiece_encode` applies greedy
   longest-match-first segmentation (the published WordPiece inference
-  rule, a.k.a. MaxMatch) in an Arrow-batched ``mapInPandas`` — the
-  `bpe_encode` convention, zero shuffle, scan-parallel.
+  rule, a.k.a. MaxMatch) on the family's one Arrow-batched encode
+  stage (`bpe._encode_docs`), zero shuffle, scan-parallel.
 
 Symbol scheme: the BERT convention — a word's first character is a
 word-start piece, every later character carries the ``##`` continuation
@@ -45,17 +45,13 @@ exactly by the from-scratch twin in tests/test_northstar.py.
 
 from __future__ import annotations
 
-from collections import Counter, defaultdict
-from collections.abc import Iterator
+from collections import Counter
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.text import (
-    norm_text_col,
-)
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.bpe import (
+    _encode_docs,
+    _pair_merge_loop,
     word_counts,
 )
 
@@ -71,6 +67,33 @@ def _merge_syms(left: str, right: str) -> str:
     """Merged symbol: left + right with the continuation prefix stripped
     from the right side (the merged piece inherits left's prefix status)."""
     return left + right[2:]
+
+
+def _best_score_pair(
+    pair_counts: Counter, sym_counts: Counter, min_pair_count: int
+) -> tuple[str, str] | None:
+    """WordPiece's pick rule over the pairs reaching ``min_pair_count``:
+    the highest ``count(ab) / (count(a) * count(b))``, compared exactly
+    by cross-multiplication, then the higher pair count, then the
+    smallest pair; None when no pair is eligible."""
+    best = None
+    for p, c in pair_counts.items():
+        if c < min_pair_count:
+            continue
+        if best is None:
+            best = p
+            continue
+        bl, br = sym_counts[best[0]], sym_counts[best[1]]
+        pl, pr = sym_counts[p[0]], sym_counts[p[1]]
+        # score(p) vs score(best): c_p/(pl*pr) vs c_b/(bl*br),
+        # compared exactly as c_p*bl*br vs c_b*pl*pr.
+        lhs = c * bl * br
+        rhs = pair_counts[best] * pl * pr
+        if lhs > rhs or (
+            lhs == rhs and (-c, p) < (-pair_counts[best], best)
+        ):
+            best = p
+    return best
 
 
 def train_wordpiece(
@@ -94,10 +117,10 @@ def train_wordpiece(
     tail), matching reference trainers' min-frequency filters; the loop
     stops early only when no eligible pair remains.
 
-    Pair AND symbol counts are maintained incrementally (the subword-nmt
-    optimization train_bpe uses): a merge only touches the words
-    containing the merged pair, so each round costs the argmax scan plus
-    ``index[best]`` rewrites, not a full vocabulary recount.
+    The merges run on `bpe._pair_merge_loop`, the loop train_bpe uses,
+    with WordPiece's pick rule and merged-symbol rule: pair AND symbol
+    counts are maintained incrementally, so each round costs the argmax
+    scan plus ``index[best]`` rewrites, not a full vocabulary recount.
     """
     spark = df.sparkSession
     # Eager column contract (the pack_sequences convention): a wrong
@@ -111,72 +134,10 @@ def train_wordpiece(
     rows = word_counts(df, text_col, max_vocab_rows).collect()
     vocab: list[list] = [[_word_symbols(r["word"]), r["n"]] for r in rows]
     base = sorted({s for syms, _ in vocab for s in syms})
-    pieces: list[str] = list(base)
-    if n_merges > 0:
-        sym_counts: Counter = Counter()
-        pair_counts: Counter = Counter()
-        index: defaultdict = defaultdict(set)
-        for i, (syms, c) in enumerate(vocab):
-            for s in syms:
-                sym_counts[s] += c
-            for p in zip(syms, syms[1:]):
-                pair_counts[p] += c
-                index[p].add(i)
-        for _ in range(n_merges):
-            best = None  # (left, right), best score held implicitly
-            for p, c in pair_counts.items():
-                if c < min_pair_count:
-                    continue
-                if best is None:
-                    best = p
-                    continue
-                bl, br = sym_counts[best[0]], sym_counts[best[1]]
-                pl, pr = sym_counts[p[0]], sym_counts[p[1]]
-                # score(p) vs score(best): c_p/(pl*pr) vs c_b/(bl*br),
-                # compared exactly as c_p*bl*br vs c_b*pl*pr.
-                lhs = c * bl * br
-                rhs = pair_counts[best] * pl * pr
-                if lhs > rhs or (
-                    lhs == rhs
-                    and (-c, p) < (-pair_counts[best], best)
-                ):
-                    best = p
-            if best is None:
-                break
-            left, right = best
-            new = _merge_syms(left, right)
-            pieces.append(new)
-            for i in list(index[best]):
-                syms, c = vocab[i]
-                for s in syms:
-                    sym_counts[s] -= c
-                    if sym_counts[s] <= 0:
-                        del sym_counts[s]
-                for p in zip(syms, syms[1:]):
-                    pair_counts[p] -= c
-                    if pair_counts[p] <= 0:
-                        del pair_counts[p]
-                    index[p].discard(i)
-                out: list[str] = []
-                j = 0
-                while j < len(syms):
-                    if (
-                        j + 1 < len(syms)
-                        and syms[j] == left
-                        and syms[j + 1] == right
-                    ):
-                        out.append(new)
-                        j += 2
-                    else:
-                        out.append(syms[j])
-                        j += 1
-                merged = tuple(out)
-                vocab[i][0] = merged
-                for s in merged:
-                    sym_counts[s] += c
-                for p in zip(merged, merged[1:]):
-                    pair_counts[p] += c
-                    index[p].add(i)
+    merges = _pair_merge_loop(
+        vocab, n_merges, min_pair_count, _best_score_pair, _merge_syms
+    )
+    pieces = base + [new for _, _, new, _ in merges]
     return spark.createDataFrame(
         [(p, r) for r, p in enumerate(pieces)], "piece string, wp_rank int"
     )
@@ -217,13 +178,12 @@ def wordpiece_encode(
 ) -> DataFrame:
     """Tokenize documents with a trained WordPiece vocabulary:
     ``(id, wp_tokens array<string>, n_wp_tokens)`` via greedy
-    longest-match-first per word over the shared normalization —
-    Arrow-batched ``mapInPandas``, zero shuffle, scan-parallel (the
-    bpe_encode shape). A word with any unmatchable position emits one
-    ``[UNK]`` token. ``counts_only=True`` emits ``(id, n_wp_tokens)``
+    longest-match-first per word over the shared normalization — the
+    family's one encode stage (`bpe._encode_docs`: Arrow-batched, zero
+    shuffle, scan-parallel). A word with any unmatchable position emits
+    one ``[UNK]`` token. ``counts_only=True`` emits ``(id, n_wp_tokens)``
     without materializing or Arrow-shipping the token arrays — the
-    packing-path option, for the same cannot-prune-through-mapInPandas
-    reason as `bpe_encode`.
+    packing-path option.
 
     The vocabulary (``|base| + n_merges`` rows) collects once and ships
     in the UDF closure — a broadcast-sized model artifact, same pattern
@@ -231,66 +191,12 @@ def wordpiece_encode(
     pieces = {r["piece"] for r in vocab.collect()}
     max_start = max((len(p) for p in pieces if not p.startswith("##")), default=1)
     max_cont = max((len(p) - 2 for p in pieces if p.startswith("##")), default=1)
-    id_type = df.schema[id_col].dataType.simpleString()
-    if counts_only:
-        out_schema = f"{id_col} {id_type}, n_wp_tokens bigint"
-    else:
-        out_schema = (
-            f"{id_col} {id_type}, wp_tokens array<string>, n_wp_tokens bigint"
-        )
-    cache_max = 262_144  # the bpe_encode Zipf-head memoization cap
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if counts_only:
-            ncache: dict[str, int] = {}
-            for pdf in batches:
-                counts = []
-                for text in pdf["__norm"]:
-                    if text is None or text == "":
-                        counts.append(0)
-                        continue
-                    c = 0
-                    for word in text.split(" "):
-                        if not word:
-                            continue
-                        n = ncache.get(word)
-                        if n is None:
-                            n = len(
-                                _greedy_match(word, pieces, max_start, max_cont)
-                            )
-                            if len(ncache) < cache_max:
-                                ncache[word] = n
-                        c += n
-                    counts.append(c)
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col], "n_wp_tokens": counts}
-                )
-            return
-        cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            toks = []
-            for text in pdf["__norm"]:
-                if text is None or text == "":
-                    toks.append([])
-                    continue
-                doc: list[str] = []
-                for word in text.split(" "):
-                    if not word:
-                        continue
-                    enc = cache.get(word)
-                    if enc is None:
-                        enc = _greedy_match(word, pieces, max_start, max_cont)
-                        if len(cache) < cache_max:
-                            cache[word] = enc
-                    doc.extend(enc)
-                toks.append(doc)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "wp_tokens": toks,
-                    "n_wp_tokens": [len(t) for t in toks],
-                }
-            )
-
-    src = df.select(F.col(id_col), norm_text_col(text_col).alias("__norm"))
-    return src.mapInPandas(encode, out_schema)
+    return _encode_docs(
+        df,
+        text_col,
+        id_col,
+        lambda word: _greedy_match(word, pieces, max_start, max_cont),
+        "wp_tokens",
+        "n_wp_tokens",
+        counts_only,
+    )

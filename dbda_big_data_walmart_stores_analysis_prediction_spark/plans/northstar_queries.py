@@ -9,6 +9,10 @@ verbatim in the DuckDB SQL so even the LSH pipelines hash-match end-to-end.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -3887,7 +3891,31 @@ def q107_recipe_v2_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Per-process scratch: q108's artifact dir and the q182-q184 orders
+# snapshots are made once per process and reused by every later call (the
+# bench's timed reps), then removed by one exit hook — an orders snapshot
+# is corpus-sized, and a process must not leave one behind.
+_SCRATCH_DIRS: list[str] = []
 _Q108_ARTIFACT_DIR = None
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp dir that `_remove_scratch_dirs` deletes at exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH_DIRS.append(path)
+    return path
+
+
+@atexit.register
+def _remove_scratch_dirs() -> None:
+    """Delete every `_scratch_dir` and forget the caches pointing into
+    them, so a later call in the same process bootstraps afresh."""
+    global _Q108_ARTIFACT_DIR
+    while _SCRATCH_DIRS:
+        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
+    _Q108_ARTIFACT_DIR = None
+    for cache in (_Q182_SNAPSHOTS, _Q183_SNAPSHOTS, _Q184_SNAPSHOTS):
+        cache.clear()
 
 
 @_register("q108_recipe_v2_trained")  # rows-only: merge loop + FFD
@@ -3903,20 +3931,18 @@ def q108_recipe_v2_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_northstar.py::test_recipe_v2_pinned_by_naive_reference
     and the distributed stages are oracled as q107 (end to end at the
     zero-merge point), q68, q103, q104, q88, and q106's twin."""
-    import tempfile
-
     from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.recipe import (
         recipe_v2,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     # ONE artifact dir per process, not per invocation: q108 is benched
-    # (LONGTAIL) and scale-tested with reps — a fresh mkdtemp each call
-    # would leak an artifact directory per rep. The overwrite-mode save
-    # makes reuse safe.
+    # (LONGTAIL) and scale-tested with reps — a fresh dir each call would
+    # write an artifact directory per rep. The overwrite-mode save makes
+    # reuse safe.
     global _Q108_ARTIFACT_DIR
     if _Q108_ARTIFACT_DIR is None:
-        _Q108_ARTIFACT_DIR = tempfile.mkdtemp(prefix="rv2_tok_")
+        _Q108_ARTIFACT_DIR = _scratch_dir("rv2_tok_")
     artifact = _Q108_ARTIFACT_DIR + "/bpe_artifact"
     return recipe_v2(
         docs,
@@ -8398,16 +8424,15 @@ def _orders_pointer_snapshot(
     benched with reps, and a fresh corpus-sized write per rep would
     drown the refresh being measured). ``vacuum`` bounds slice
     accumulation for queries whose re-runs COMMIT (upserts); retention
-    re-runs are no-ops and don't need it."""
-    import tempfile
-
+    re-runs are no-ops and don't need it. The snapshot lives in a
+    `_scratch_dir`, removed at process exit."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.maintenance import (
         vacuum_snapshot,
     )
 
     snap = cache.get(sf_dir)
     if snap is None:
-        snap = tempfile.mkdtemp(prefix=prefix) + "/orders"
+        snap = _scratch_dir(prefix) + "/orders"
         _t(spark, sf_dir, "orders").write.partitionBy(
             "o_orderpriority"
         ).parquet(snap)

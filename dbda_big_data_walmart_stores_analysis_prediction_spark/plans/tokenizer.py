@@ -59,6 +59,9 @@ would run twice.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -79,6 +82,9 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.text impor
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.unigram import (
     train_unigram,
     unigram_encode,
+)
+from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.wordpiece import (
+    wordpiece_encode,
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.sources import io
 
@@ -143,8 +149,7 @@ def tokenizer_corpus(
     ``out``, when given, receives the internal artifacts under
     ``{"clean": <cleaned corpus>, "merges": <merge table>, "encoded":
     <per-doc tokens>}`` — the instrumentation hook tests and callers who
-    need the shipped tokenizer artifact use (mirrors ``pretrain_corpus``'s
-    ``stages`` dict; no plan effect).
+    need the shipped tokenizer artifact use (no plan effect).
 
     Single-action assumption at ``n_merges=0``: the zero-merge trainer
     short-circuits, so the cleaned corpus is NOT checkpointed (nothing
@@ -257,9 +262,45 @@ def tokenizer_corpus_unigram(
     )
 
 
-_BPE_ARTIFACT_COLS = ("merge_rank", "left", "right", "new_symbol", "pair_count")
-_UNIGRAM_ARTIFACT_COLS = ("piece", "logprob")
-_WORDPIECE_ARTIFACT_COLS = ("piece", "wp_rank")
+class _Artifact(NamedTuple):
+    """One tokenizer family's row of the artifact-contract table."""
+
+    family: str  # how the contract is named in error messages
+    cols: tuple[str, ...]  # the trainer's output columns
+    order_by: str | None  # the rank column `load_tokenizer_artifact` sorts on
+    encode: Callable[..., DataFrame]
+    count_col: str  # the encoder's per-doc token-count column
+
+
+# Matched in order: a frame carrying several contracts' columns resolves to
+# the first (BPE, then WordPiece, then unigram).
+_ARTIFACTS = (
+    _Artifact(
+        "BPE merge-table",
+        ("merge_rank", "left", "right", "new_symbol", "pair_count"),
+        "merge_rank", bpe_encode, "n_subword_tokens",
+    ),
+    _Artifact(
+        "WordPiece vocab", ("piece", "wp_rank"),
+        "wp_rank", wordpiece_encode, "n_wp_tokens",
+    ),
+    _Artifact(
+        "unigram vocab", ("piece", "logprob"), None, unigram_encode, "n_pieces"
+    ),
+)
+
+
+def _artifact_family(cols: list[str], where: str) -> _Artifact:
+    """The `_ARTIFACTS` row whose columns ``cols`` carry; a frame that
+    carries none fails loudly with every contract spelled out."""
+    for art in _ARTIFACTS:
+        if set(art.cols).issubset(cols):
+            return art
+    contracts = ", ".join(f"the {a.family} contract {a.cols}" for a in _ARTIFACTS)
+    raise ValueError(
+        f"{where}: columns {sorted(cols)} are not a saved tokenizer "
+        f"artifact — they match none of {contracts}"
+    )
 
 
 def save_tokenizer_artifact(model: DataFrame, path: str) -> None:
@@ -269,48 +310,30 @@ def save_tokenizer_artifact(model: DataFrame, path: str) -> None:
     (``train_unigram`` output) — as parquet, the tokenizer family's
     member of the model sink/source contract (SURVEY S5: the ML pipeline
     ships a PipelineModel; a tokenizer pipeline ships this table). The
-    schema is validated eagerly so a wrong frame fails HERE with the
-    contract spelled out, not at load time on a different cluster.
+    schema is validated eagerly against `_ARTIFACTS` so a wrong frame
+    fails HERE with the contract spelled out, not at load time on a
+    different cluster.
 
     The artifact is a bounded table (``n_merges`` or ``vocab_size``
     rows) written at natural parallelism — the encode cluster reloads it
-    with `load_tokenizer_artifact` and broadcasts it into
-    ``bpe_encode``/``unigram_encode`` exactly as the in-session frame."""
-    cols = tuple(model.columns)
-    if not (
-        set(_BPE_ARTIFACT_COLS) <= set(cols)
-        or set(_UNIGRAM_ARTIFACT_COLS) <= set(cols)
-        or set(_WORDPIECE_ARTIFACT_COLS) <= set(cols)
-    ):
-        raise ValueError(
-            f"save_tokenizer_artifact: frame columns {cols} match none of "
-            f"the BPE merge-table contract {_BPE_ARTIFACT_COLS}, the "
-            f"unigram vocab contract {_UNIGRAM_ARTIFACT_COLS}, or the "
-            f"WordPiece vocab contract {_WORDPIECE_ARTIFACT_COLS}"
-        )
+    with `load_tokenizer_artifact` and broadcasts it into the family's
+    encoder (``bpe_encode``/``wordpiece_encode``/``unigram_encode``)
+    exactly as the in-session frame."""
+    _artifact_family(model.columns, "save_tokenizer_artifact")
     io.write_parquet(model, path)
 
 
 def load_tokenizer_artifact(spark, path: str) -> DataFrame:
     """Reload a tokenizer artifact written by `save_tokenizer_artifact`,
     re-validating the schema contract (a path mix-up loads loudly, not as
-    a silent empty-ranks encode). Returns the frame ready to feed
-    ``bpe_encode`` (merge table, ordered by ``merge_rank``) or
-    ``unigram_encode`` (piece vocab) — both encoders collect + broadcast
-    it, so load cost is one bounded scan."""
+    a silent empty-ranks encode). Returns the frame ready to feed its
+    family's encoder: a BPE merge table ordered by ``merge_rank``, a
+    WordPiece vocab ordered by ``wp_rank``, a unigram piece vocab as
+    stored. Every encoder collects + broadcasts it, so load cost is one
+    bounded scan."""
     model = io.read_parquet(spark, path)
-    cols = set(model.columns)
-    if set(_BPE_ARTIFACT_COLS) <= cols:
-        return model.orderBy("merge_rank")
-    if set(_WORDPIECE_ARTIFACT_COLS) <= cols:
-        return model.orderBy("wp_rank")
-    if set(_UNIGRAM_ARTIFACT_COLS) <= cols:
-        return model
-    raise ValueError(
-        f"load_tokenizer_artifact: {path} has columns {sorted(cols)} — "
-        "not a saved tokenizer artifact (expected a BPE merge table, a "
-        "WordPiece piece vocab, or a unigram piece vocab)"
-    )
+    art = _artifact_family(model.columns, f"load_tokenizer_artifact: {path}")
+    return model.orderBy(art.order_by) if art.order_by else model
 
 
 def encode_with_artifact(
@@ -321,40 +344,21 @@ def encode_with_artifact(
     counts_only: bool = False,
 ) -> DataFrame:
     """Tokenize documents with a trained artifact, dispatching on its
-    schema (`load_tokenizer_artifact`'s contract): a BPE merge table
-    runs ``bpe_encode``, a WordPiece vocab runs ``wordpiece_encode``,
-    a unigram piece vocab runs ``unigram_encode``. Output follows the
-    dispatched family (``bpe_tokens``/``n_subword_tokens`` vs
-    ``wp_tokens``/``n_wp_tokens`` vs ``pieces``/``n_pieces``).
+    schema through `_ARTIFACTS`: a BPE merge table runs ``bpe_encode``,
+    a WordPiece vocab runs ``wordpiece_encode``, a unigram piece vocab
+    runs ``unigram_encode``. Output follows the dispatched family
+    (``bpe_tokens``/``n_subword_tokens`` vs ``wp_tokens``/``n_wp_tokens``
+    vs ``pieces``/``n_pieces``).
 
-    Works unchanged on a STREAMING ``df``: both encoders are stateless
-    broadcast-model Arrow projections — no shuffle, no aggregation, no
+    Works unchanged on a STREAMING ``df``: every encoder is a stateless
+    broadcast-model Arrow projection — no shuffle, no aggregation, no
     watermark — so each micro-batch is encoded exactly as a batch frame
     would be (the model is a bounded BATCH frame, collected once at plan
     construction and shipped in the UDF closure). This is the encode
     half of the tokenizer family run continuously over crawl
     deliveries; `tests/test_streaming.py` pins replay == batch."""
-    cols = set(model.columns)
-    if set(_BPE_ARTIFACT_COLS) <= cols:
-        return bpe_encode(df, model, text_col, id_col, counts_only=counts_only)
-    if set(_WORDPIECE_ARTIFACT_COLS) <= cols:
-        from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.wordpiece import (
-            wordpiece_encode,
-        )
-
-        return wordpiece_encode(
-            df, model, text_col, id_col, counts_only=counts_only
-        )
-    if set(_UNIGRAM_ARTIFACT_COLS) <= cols:
-        return unigram_encode(
-            df, model, text_col, id_col, counts_only=counts_only
-        )
-    raise ValueError(
-        f"encode_with_artifact: model columns {sorted(cols)} match none of "
-        f"the BPE merge-table contract {_BPE_ARTIFACT_COLS}, the "
-        f"WordPiece vocab contract {_WORDPIECE_ARTIFACT_COLS}, or the "
-        f"unigram vocab contract {_UNIGRAM_ARTIFACT_COLS}"
-    )
+    art = _artifact_family(model.columns, "encode_with_artifact")
+    return art.encode(df, model, text_col, id_col, counts_only=counts_only)
 
 
 def tokenizer_audit(
@@ -365,9 +369,9 @@ def tokenizer_audit(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-domain tokenizer fit report: run a trained artifact over the
-    corpus (`encode_with_artifact`, counts only — token ARRAYS never
-    leave the Arrow stage) and aggregate, per ``by_col``, the numbers a
-    tokenizer rollout is judged on: doc count, total tokens, total raw
+    corpus (the `encode_with_artifact` dispatch, counts only — token
+    ARRAYS never leave the Arrow stage) and aggregate, per ``by_col``,
+    the numbers a tokenizer rollout is judged on: doc count, total tokens, total raw
     characters, and the chars-per-token compression ratio. A tokenizer
     trained on one mix always serves another — this is the audit that
     shows WHERE it fertilizes (web English at 4.2 chars/token) and where
@@ -375,8 +379,8 @@ def tokenizer_audit(
     standard go/no-go before re-training.
 
     Works with any artifact family (the `encode_with_artifact` schema
-    dispatch); the per-doc count column is whatever the dispatched
-    encoder emits (``n_subword_tokens`` / ``n_wp_tokens`` /
+    dispatch); the per-doc count column is the one the family's
+    `_ARTIFACTS` entry names (``n_subword_tokens`` / ``n_wp_tokens`` /
     ``n_pieces``). Every doc counts: the encoders emit 0 tokens for
     null/empty text (never drop rows), raw chars coalesce null text to
     0, the count join is null-SAFE so a null-id doc pairs with its own
@@ -399,22 +403,22 @@ def tokenizer_audit(
                 f"tokenizer_audit: {what} {need!r} is not a column of the "
                 f"input frame (has {df.columns})"
             )
-    enc = encode_with_artifact(
+    art = _artifact_family(model.columns, "tokenizer_audit")
+    enc = art.encode(
         df.select(id_col, text_col), model, text_col, id_col,
         counts_only=True,
     )
-    count_col = [c for c in enc.columns if c != id_col][-1]
     base = df.select(
         F.col(id_col),
         F.col(by_col),
         F.coalesce(F.length(F.col(text_col)), F.lit(0)).alias("__chars"),
     )
-    tok = F.sum(F.col(count_col)).cast("bigint")
+    tok = F.sum(F.col(art.count_col)).cast("bigint")
     chars = F.sum("__chars").cast("bigint")
     return (
         base.join(
             enc.select(
-                F.col(id_col).alias("__id_e"), F.col(count_col)
+                F.col(id_col).alias("__id_e"), F.col(art.count_col)
             ),
             F.col(id_col).eqNullSafe(F.col("__id_e")),
         )

@@ -11,7 +11,7 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.operators import (
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators import (
     similarity as sim,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO_ROOT, SF_SMOKE
 
 
 def _docs(spark):
@@ -1662,6 +1662,7 @@ def test_tokenizer_artifact_roundtrip(spark, tmp_path):
         unigram_encode,
     )
     from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.tokenizer import (
+        encode_with_artifact,
         load_tokenizer_artifact,
         save_tokenizer_artifact,
     )
@@ -1693,6 +1694,8 @@ def test_tokenizer_artifact_roundtrip(spark, tmp_path):
     df.write.mode("overwrite").parquet(str(tmp_path / "not_artifact"))
     with pytest.raises(ValueError, match="not a saved tokenizer artifact"):
         load_tokenizer_artifact(spark, str(tmp_path / "not_artifact"))
+    with pytest.raises(ValueError, match="contract"):
+        encode_with_artifact(df, df)
 
 
 def test_repeat_by_weight_pinned_by_naive_reference(spark):
@@ -4620,6 +4623,45 @@ def test_jaccard_prefix_pairs_python_twin(spark):
             assert (5, 6, 0.2) in got, got
     with pytest.raises(ValueError, match="threshold"):
         jaccard_pairs_prefix(df, threshold=0.0)
+
+
+def test_scratch_dirs_removed_by_exit_hook(spark, tmp_path):
+    """q108's artifact dir and the q182-q184 orders snapshots are
+    per-process scratch: the exit hook deletes every one of them and
+    resets the caches (a later call bootstraps afresh instead of reusing
+    a deleted path), and a plain interpreter exit runs it."""
+    import os
+    import subprocess
+    import sys
+
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans import (
+        northstar_queries as nq,
+    )
+
+    snap = nq._orders_pointer_snapshot(
+        spark, SF_SMOKE, nq._Q183_SNAPSHOTS, "q183_ret_"
+    )
+    probe = nq._scratch_dir("probe_")
+    dirs = list(nq._SCRATCH_DIRS)
+    assert os.path.isdir(snap) and os.path.isdir(probe)
+    nq._remove_scratch_dirs()
+    assert not any(os.path.exists(d) for d in dirs + [snap])
+    assert nq._SCRATCH_DIRS == [] and nq._Q183_SNAPSHOTS == {}
+    assert nq._Q108_ARTIFACT_DIR is None
+    again = nq._orders_pointer_snapshot(
+        spark, SF_SMOKE, nq._Q183_SNAPSHOTS, "q183_ret_"
+    )
+    assert again != snap and os.path.isdir(again)
+
+    out = tmp_path / "made.txt"
+    code = (
+        "from dbda_big_data_walmart_stores_analysis_prediction_spark.plans "
+        "import northstar_queries as nq\n"
+        f"open({str(out)!r}, 'w').write(nq._scratch_dir('exit_probe_'))\n"
+    )
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=REPO_ROOT)
+    made = out.read_text()
+    assert made and not os.path.exists(made), "exit hook must remove it"
 
 
 def test_q182_snapshot_bootstrap_amortized_to_warmup(spark):

@@ -643,9 +643,9 @@ def test_cms_one_sided_for_any_multiset(spark, occs):
 def test_encode_counts_only_matches_full_path(spark, texts):
     """counts_only must be a pure projection of the full encode — for any
     corpus, (id, count) from the counts path equals len(tokens/pieces)
-    from the full path, both families, trained on the same corpus. Pins
-    the round-10 counts_only fork against drift (two code paths, one
-    contract)."""
+    from the full path, for every family (BPE, unigram, WordPiece),
+    trained on the same corpus. Pins the counts_only form of the shared
+    encode stage against drift (two output forms, one contract)."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.bpe import (
         bpe_encode,
         train_bpe,
@@ -653,6 +653,10 @@ def test_encode_counts_only_matches_full_path(spark, texts):
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.unigram import (
         train_unigram,
         unigram_encode,
+    )
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.wordpiece import (
+        train_wordpiece,
+        wordpiece_encode,
     )
 
     rows = [(i, t) for i, t in enumerate(texts)] + [(len(texts), None)]
@@ -675,6 +679,17 @@ def test_encode_counts_only_matches_full_path(spark, texts):
         for r in unigram_encode(df, vocab, counts_only=True).collect()
     }
     assert ufast == ufull
+
+    wvocab = train_wordpiece(df, n_merges=3, min_pair_count=1)
+    wfull = {
+        r["doc_id"]: r["n_wp_tokens"]
+        for r in wordpiece_encode(df, wvocab).collect()
+    }
+    wfast = {
+        r["doc_id"]: r["n_wp_tokens"]
+        for r in wordpiece_encode(df, wvocab, counts_only=True).collect()
+    }
+    assert wfast == wfull
 
 
 def _java_norm(t: str) -> str:
