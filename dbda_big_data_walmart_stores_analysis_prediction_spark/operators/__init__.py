@@ -1,6 +1,5 @@
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.cleaning import (
-    impute_median,
-    impute_mode,
+    impute,
     null_counts,
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.joins import (
@@ -94,8 +93,7 @@ __all__ = [
     "winnow_fingerprints",
     "winnow_pairs",
     "null_counts",
-    "impute_median",
-    "impute_mode",
+    "impute",
     "star_join",
     "add_lag_features",
     "add_rolling_mean",

@@ -364,21 +364,28 @@ def correlations(df: DataFrame, columns: list[str], target: str | None = None) -
 def histogram(df: DataFrame, col: str, n_bins: int = 50) -> DataFrame:
     """A10: fixed-width histogram as a groupBy on the bin index — a single
     partial+final hash aggregate (the reference histograms a pandas sample,
-    ``Scripts/eda.py:67``). Bounds are the column min/max (one extra tiny
-    agg job). Values == max land in the last bin."""
-    lo, hi = df.agg(F.min(col).cast("double"), F.max(col).cast("double")).first()
-    width = (hi - lo) / n_bins or 1.0
+    ``Scripts/eda.py:67``). Bounds are the column min/max, a one-row
+    aggregate broadcast-joined into the plan, so building the frame runs no
+    job. Values == max land in the last bin; a constant column gets width
+    1.0, and an all-null column gives no rows."""
+    lo = F.min(col).cast("double")
+    width = (F.max(col).cast("double") - lo) / n_bins
+    bounds = df.agg(
+        lo.alias("__lo"),
+        F.when(width == 0, 1.0).otherwise(width).alias("__width"),
+    )
     bin_idx = F.least(
-        F.floor((F.col(col).cast("double") - F.lit(lo)) / F.lit(width)),
+        F.floor((F.col(col).cast("double") - F.col("__lo")) / F.col("__width")),
         F.lit(n_bins - 1),
     ).cast("bigint")
     return (
         df.where(F.col(col).isNotNull())
-        .groupBy(bin_idx.alias("bin"))
+        .crossJoin(F.broadcast(bounds))
+        .groupBy(bin_idx.alias("bin"), "__lo", "__width")
         .agg(F.count("*").alias("cnt"))
         .select(
             "bin",
-            (F.lit(lo) + F.col("bin") * F.lit(width)).alias("bin_lo"),
+            (F.col("__lo") + F.col("bin") * F.col("__width")).alias("bin_lo"),
             "cnt",
         )
         .orderBy("bin")

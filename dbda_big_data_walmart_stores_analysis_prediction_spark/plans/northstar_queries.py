@@ -2091,8 +2091,8 @@ def q43_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q44_median_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7/A2 with an oracle: null-injected column median-imputed using the
     EXACT distributed quantile (operators/analytics.exact_quantiles — the
-    production impute_median uses the approxQuantile sketch, which is
-    deliberately not oracle-compared)."""
+    production ``cleaning.impute`` uses the ``percentile_approx`` sketch,
+    which is deliberately not oracle-compared)."""
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
         exact_quantiles,
     )

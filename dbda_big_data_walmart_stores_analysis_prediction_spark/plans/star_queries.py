@@ -221,7 +221,7 @@ def q04_mode_orderpriority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q05_median_acctbal_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: exact interpolated median per group. (The imputation operator uses
-    the approxQuantile sketch — operators/cleaning.py — which is not
+    the ``percentile_approx`` sketch — ``cleaning.impute`` — which is not
     oracle-comparable; this pins the exact-percentile path.)"""
     cust = _t(spark, sf_dir, "customer")
     return cust.groupBy(F.col("c_nationkey").alias("nationkey")).agg(

@@ -8,23 +8,20 @@ the semantic level:
 * median-impute numeric feature columns, mode-impute categorical/boolean —
   statistics computed POST-JOIN on the fact grain, and INDEPENDENTLY for
   train and test (a deliberate reference quirk: ``Scripts/etl.py:112-113``
-  calls join_all per frame; real ML hygiene would reuse train stats —
-  ``fit_stats``/``apply_stats`` expose the clean variant too)
+  calls join_all per frame; real ML hygiene would reuse train stats)
 * drop rows with NULL label (train only) — ``Scripts/etl.py:45-46``
 * add Year/Month/WeekOfYear/DayOfWeek — ``Scripts/etl.py:49-52``
 * lag1/lag4/trailing-roll4 of Weekly_Sales over (Store, Dept) ordered by
   Date, NULL→0 backfill — train only — ``Scripts/etl.py:56-67``
 
-Plan differences from the reference (SURVEY.md §4 anti-patterns):
-ONE approxQuantile call for all medians (not one job per column), ONE
-aggregate for all modes (no global sorts), no ``coalesce(1)`` on write,
-single ``select`` for derived columns (no withColumn chains).
+Plan differences from the reference (SURVEY.md §4 anti-patterns): every
+median and mode is a column of ONE lazy aggregate row joined into the
+plan (``cleaning.impute``: no per-column jobs, no global sorts, nothing
+collected while the plan is built), no ``coalesce(1)`` on write, single
+``select`` for derived columns (no withColumn chains).
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
-from typing import Any
 
 from pyspark.sql import DataFrame
 
@@ -32,8 +29,7 @@ from dbda_big_data_walmart_stores_analysis_prediction_spark.functions.dates impo
     add_date_parts,
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.cleaning import (
-    compute_medians,
-    compute_modes,
+    impute,
 )
 from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.joins import (
     star_join,
@@ -67,31 +63,6 @@ LABEL = "Weekly_Sales"
 LAG_COLS = ["Weekly_Sales_lag1", "Weekly_Sales_lag4", "Weekly_Sales_roll4"]
 
 
-@dataclass
-class ImputeStats:
-    medians: dict[str, float] = field(default_factory=dict)
-    modes: dict[str, Any] = field(default_factory=dict)
-
-
-def fit_stats(
-    joined: DataFrame, relative_error: float = 0.01
-) -> ImputeStats:
-    """Compute imputation statistics on a (post-join) frame: one sketch job
-    for all medians + one aggregate job for all modes."""
-    med_cols = [c for c in NUMERIC_IMPUTE_COLS if c in joined.columns]
-    mode_cols = [c for c in CATEGORICAL_IMPUTE_COLS if c in joined.columns]
-    return ImputeStats(
-        medians=compute_medians(joined, med_cols, relative_error) if med_cols else {},
-        modes=compute_modes(joined, mode_cols) if mode_cols else {},
-    )
-
-
-def apply_stats(df: DataFrame, stats: ImputeStats) -> DataFrame:
-    fills = {**stats.medians, **stats.modes}
-    fills = {k: v for k, v in fills.items() if k in df.columns}
-    return df.fillna(fills) if fills else df
-
-
 def join_and_impute(
     fact: DataFrame,
     stores: DataFrame,
@@ -104,7 +75,7 @@ def join_and_impute(
         fact,
         [(stores, "Store"), (features.drop("IsHoliday"), ["Store", "Date"])],
     )
-    return apply_stats(joined, fit_stats(joined))
+    return impute(joined, NUMERIC_IMPUTE_COLS, CATEGORICAL_IMPUTE_COLS)
 
 
 def add_features(df: DataFrame) -> DataFrame:

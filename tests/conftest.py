@@ -37,3 +37,38 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle_dir() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def walmart_frames(spark, tmp_path_factory):
+    """``walmart_frames(seed)`` → ``(train, test, stores, features)``:
+    ``perfbench/walmart_gen`` CSVs at scale 0.01, read the way ``cli etl``
+    reads them (explicit schema, ``NA`` → NULL), written once per seed."""
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.sources import (
+        WALMART_FEATURES_SCHEMA,
+        WALMART_STORES_SCHEMA,
+        WALMART_TEST_SCHEMA,
+        WALMART_TRAIN_SCHEMA,
+        read_csv,
+    )
+    from perfbench.walmart_gen import generate
+
+    schemas = {
+        "train": WALMART_TRAIN_SCHEMA,
+        "test": WALMART_TEST_SCHEMA,
+        "stores": WALMART_STORES_SCHEMA,
+        "features": WALMART_FEATURES_SCHEMA,
+    }
+    made = {}
+
+    def frames(seed: int):
+        if seed not in made:
+            d = tmp_path_factory.mktemp(f"walmart_seed{seed}")
+            generate(str(d), seed, 0.01)
+            made[seed] = tuple(
+                read_csv(spark, str(d / f"{name}.csv"), schema)
+                for name, schema in schemas.items()
+            )
+        return made[seed]
+
+    return frames

@@ -977,6 +977,34 @@ def test_grouped_quantile_operators_are_lazy(spark):
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
 
+def test_etl_and_histogram_are_lazy(spark, walmart_frames):
+    """Building the Walmart ETL frames and a histogram starts no Spark
+    job: the imputation medians/modes and the histogram's min/max bounds
+    are one-row aggregates broadcast-joined into the plan, not values
+    collected to the driver. The jobs run when the frames are collected."""
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
+        histogram,
+    )
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.plans.walmart_etl import (
+        walmart_etl,
+    )
+
+    frames = walmart_frames(7)
+    sc = spark.sparkContext
+    group = "audit-etl-histogram-lazy"
+    sc.setJobGroup(group, "ETL and histogram laziness audit")
+    try:
+        merged_train, merged_test = walmart_etl(*frames)
+        hist = histogram(merged_train, "Weekly_Sales")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert hist.collect() and merged_test.limit(1).collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
 def test_eda_result_frames_are_local_relations(spark):
     """describe_plus and correlations hand back rows the driver already
     holds, as local relations: eda_report's fence read

@@ -27,15 +27,28 @@ values = st.lists(
 @settings(**SETTINGS)
 def test_impute_median_leaves_no_nulls(spark, xs):
     from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.cleaning import (
-        impute_median,
+        impute,
     )
 
     df = spark.createDataFrame([(x,) for x in xs], "x double")
-    out = impute_median(df, ["x"])
+    out = impute(df, ["x"], [])
     if any(x is not None for x in xs):
         assert out.where(F.col("x").isNull()).count() == 0
     else:  # all-null column: median undefined, column left as-is
         assert out.where(F.col("x").isNull()).count() == len(xs)
+
+
+def test_histogram_degenerate_columns(spark):
+    """An all-null column (null bounds) gives an empty histogram; a
+    constant column gets width 1.0, so every non-null row lands in bin 0
+    at the constant."""
+    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.analytics import (
+        histogram,
+    )
+
+    df = spark.createDataFrame([(None, 2.5), (None, 2.5), (None, None)], "n double, c double")
+    assert histogram(df, "n").collect() == []
+    assert [tuple(r) for r in histogram(df, "c", n_bins=4).collect()] == [(0, 2.5, 2)]
 
 
 @given(

@@ -41,8 +41,6 @@ KEEP = {
     "tune": "SURVEY ML5, the reference's CrossValidator stage; "
     "ROADMAP item 3 wires it into `cli model`",
     "feature_importances": "SURVEY ML5, read off the model `tune` selects",
-    "impute_median": "SURVEY A1, the reference's median imputation",
-    "impute_mode": "SURVEY A2, the reference's mode imputation",
     "clean_na_sentinels": "SURVEY P4, the reference's 'NA' sentinel cleaning",
     "native_session_windows": "the built-in `session_window` reference "
     "that `sessionize` is tested against",

@@ -12,6 +12,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.cleaning import impute
 from dbda_big_data_walmart_stores_analysis_prediction_spark.plans import walmart_etl as W
 from dbda_big_data_walmart_stores_analysis_prediction_spark.plans import ml_pipeline as M
 from dbda_big_data_walmart_stores_analysis_prediction_spark.sources import (
@@ -130,28 +131,69 @@ def test_etl_golden(spark, train, test_fact, stores, features):
     assert r2s2["Weekly_Sales_lag1"] == 510.0
 
 
+def _joined(fact, stores, features):
+    return W.star_join(
+        fact, [(stores, "Store"), (features.drop("IsHoliday"), ["Store", "Date"])]
+    )
+
+
 def test_mode_tie_deterministic(spark, train, stores, features):
     # Type mode over joined train grain: Store1 rows (A) vs Store2 rows (B)
-    # — construct a tie by trimming to equal counts, assert larger value wins
+    # — construct a tie by trimming to equal counts, assert larger value
+    # wins; Store 3 is missing from the dim, so its Type is the filled mode
     t = train.where(
         ((F.col("Store") == 1) & (F.col("Dept") == 1) & (F.col("Weekly_Sales") <= 1300.0))
-        | (F.col("Store") == 2)
+        | F.col("Store").isin(2, 3)
     )
-    joined = W.star_join(
-        t, [(stores, "Store"), (features.drop("IsHoliday"), ["Store", "Date"])]
+    joined = _joined(t, stores, features)
+    counts = dict(joined.groupBy("Type").count().collect())
+    assert counts["A"] == counts["B"] == 4 and counts[None] == 1
+    filled = impute(joined, [], ["Type"]).where(F.col("Store") == 3).collect()
+    assert [r["Type"] for r in filled] == ["B"]  # deterministic: larger value on tie
+
+
+def test_impute_fills_like_fillna(spark):
+    """``impute`` fills exactly what ``fillna`` with the reference's
+    statistics (``approxQuantile(c, [0.5], 0.01)`` medians, tie → larger
+    mode) fills: a NaN in a double median column too, the int Size column
+    with the median cast to int, and an all-null column not at all."""
+    df = spark.createDataFrame(
+        [
+            (1.0, 150000, "A", True, None),
+            (float("nan"), None, "B", False, None),
+            (None, 90001, None, None, None),
+            (5.0, None, "A", None, None),
+            (3.0, 120000, "B", False, None),
+        ],
+        "x double, Size int, Type string, IsHoliday boolean, z double",
     )
-    from dbda_big_data_walmart_stores_analysis_prediction_spark.operators.cleaning import (
-        compute_modes,
-    )
-    counts = dict(
-        joined.groupBy("Type").count().collect()
-    )
-    modes = compute_modes(joined, ["Type"])
-    a, b = counts.get("A", 0), counts.get("B", 0)
-    if a == b:
-        assert modes["Type"] == "B"  # deterministic: larger value on tie
-    else:
-        assert modes["Type"] == ("A" if a > b else "B")
+    out = impute(df, ["x", "Size", "z"], ["Type", "IsHoliday"])
+    (mx,), (ms,), z = df.approxQuantile(["x", "Size", "z"], [0.5], 0.01)
+    assert (mx, ms, z) == (3.0, 120000.0, [])
+    expected = df.fillna({"x": mx, "Size": ms, "Type": "B", "IsHoliday": False})
+    assert out.dtypes == df.dtypes
+    got = out.collect()
+    assert sorted(map(tuple, got), key=repr) == sorted(map(tuple, expected.collect()), key=repr)
+    assert [r["x"] for r in got] == [1.0, 3.0, 3.0, 5.0, 3.0]  # NaN filled
+    assert [r["Size"] for r in got] == [150000, 120000, 90001, 120000, 120000]
+    assert [r["z"] for r in got] == [None] * 5  # all-null: median undefined
+    assert [r["Type"] for r in got] == ["A", "B", "B", "A", "B"]  # A/B tie → B
+
+
+@pytest.mark.parametrize("seed", [1, 7])
+def test_percentile_approx_equals_approx_quantile(spark, walmart_frames, seed):
+    """Equal-collect proof for ``impute``'s median: on the joined train and
+    test frames of generated Walmart data, ``percentile_approx(c, 0.5,
+    100)`` returns exactly the reference's ``approxQuantile([c], [0.5],
+    0.01)`` for every imputed numeric column."""
+    train, test, stores, features = walmart_frames(seed)
+    cols = W.NUMERIC_IMPUTE_COLS
+    for fact in (train, test):
+        joined = _joined(fact, stores, features)
+        sketch = joined.agg(*[F.percentile_approx(c, 0.5, 100).alias(c) for c in cols]).first()
+        for c in cols:
+            (ref,) = joined.approxQuantile([c], [0.5], 0.01)
+            assert ref and float(sketch[c]) == ref[0], (c, sketch[c], ref)
 
 
 def test_cv_tuning_smoke(spark, train, test_fact, stores, features):
